@@ -11,6 +11,9 @@ extensions (dedup, similarity search, text analysis, multimodal columns)
 designed for 100 TB scale.
 """
 
+# first: every Python worker that unpickles an engine object imports the
+# package, and from then on its per-call import-cache reset stays cheap
+from mysql_cdc_table_spark import worker_imports  # noqa: F401
 from mysql_cdc_table_spark.session import get_spark
 
 __all__ = ["get_spark"]

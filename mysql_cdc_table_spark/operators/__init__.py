@@ -826,6 +826,16 @@ ROUND15_LATE_KEYS: tuple[str, ...] = (
 )
 
 
+def artifact_round(path) -> int:
+    """Round number of a driver artifact: the leading digits after
+    ``_r``, so a suffixed companion (``BENCH_r15_c8.json``, the 8-core
+    scaling run) counts toward its round."""
+    import re
+    from pathlib import Path
+
+    return int(re.match(r"\d+", Path(path).stem.split("_r", 1)[1]).group())
+
+
 def _last_seen_rounds() -> dict[str, int]:
     """key -> LATEST driver round with a CORRECTNESS row — the staleness
     metric the backfill sorts by. (First-seen is the wrong metric: a key
@@ -840,7 +850,7 @@ def _last_seen_rounds() -> dict[str, int]:
     root = Path(__file__).resolve().parents[2]
     seen: dict[str, int] = {}
     for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(path.stem.split("_r")[1])
+        rnd = artifact_round(path)
         try:
             rows = json.loads(path.read_text())
         except (OSError, ValueError):

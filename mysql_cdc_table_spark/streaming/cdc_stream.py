@@ -296,7 +296,11 @@ def streaming_dedup(
 
 
 def run_to_completion(writer, timeout_s: float = 120.0):
-    """Start an availableNow query and block until it drains."""
+    """Start an availableNow query and block until it drains. A query
+    still running after ``timeout_s`` is stopped and ``TimeoutError``
+    raised: a slow stream must not look drained."""
     q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.id} did not drain within {timeout_s}s")
     return q

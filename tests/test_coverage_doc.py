@@ -7,7 +7,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from mysql_cdc_table_spark.operators import all_oracles, all_queries
+from mysql_cdc_table_spark.operators import all_oracles, all_queries, artifact_round
 
 
 def test_coverage_doc_matches_registry():
@@ -91,7 +91,7 @@ def test_header_counts_and_driver_split_match_doc():
     # listed — only files the driver wrote after the doc may be absent
     newest_listed = max(int(r) for r in listed)
     for path in root.glob("CORRECTNESS_r*.json"):
-        rnd = int(path.stem.split("_r")[1])
+        rnd = artifact_round(path)
         if rnd < newest_listed:
             assert str(rnd).zfill(2) in listed or str(rnd) in listed, (
                 f"{path.name} predates the doc but is missing from "
@@ -204,10 +204,7 @@ def test_driver_artifacts_are_git_tracked():
         p.name
         for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json")
         for p in root.glob(pat)
-        # round number = leading digits only: the driver also drops
-        # suffixed companion artifacts (BENCH_r15_c8.json — the 8-core
-        # scaling run), which belong to the same round
-        if int(_re.match(r"\d+", p.stem.split("_r")[1]).group()) <= newest_seen
+        if artifact_round(p) <= newest_seen
         and p.name not in tracked
     )
     assert not stale_untracked, (
@@ -215,3 +212,11 @@ def test_driver_artifacts_are_git_tracked():
         "`git add` them (and update driver-history) before doing "
         "anything else this round"
     )
+
+
+def test_artifact_round_reads_leading_digits():
+    """A suffixed companion artifact parses to its round instead of
+    raising inside the registry's staleness sort."""
+    assert artifact_round("CORRECTNESS_r16_c8.json") == 16
+    assert artifact_round(Path("/x/BENCH_r09.json")) == 9
+    assert artifact_round("BENCH_LOCAL_r15_opt1b.json") == 15

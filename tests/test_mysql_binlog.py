@@ -767,6 +767,34 @@ def test_streaming_tail_incremental_with_store(spark, tmp_path):
     assert got == batch == {1: "a2"}
 
 
+def test_run_to_completion_times_out_loudly(spark, tmp_path):
+    """A tail stream that cannot drain within the timeout is stopped and
+    raises TimeoutError instead of returning as if it had drained."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        mysql_binlog_read_stream,
+    )
+    from mysql_cdc_table_spark.streaming.cdc_stream import (
+        materialize_latest_state_partitioned,
+        run_to_completion,
+    )
+
+    d = tmp_path / "logs"
+    d.mkdir()
+    (d / "binlog.000001").write_bytes(
+        build_binlog_file(
+            "d", "t", TARGET, [_txn(10, "w", [{"id": 1, "v": "a", "amt": Decimal("1.00")}])]
+        )
+    )
+    stream = mysql_binlog_read_stream(spark, str(d), TARGET, "d", "t")
+    writer = materialize_latest_state_partitioned(
+        stream, ["id"], str(tmp_path / "state.parquet"), str(tmp_path / "ckpt"), n_buckets=4
+    )
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="did not drain within 0.001s"):
+        run_to_completion(writer, timeout_s=0.001)
+    assert {q.id for q in spark.streams.active} == before
+
+
 _row_strategy = st.fixed_dictionaries(
     {
         "id": st.none() | st.integers(-(2**62), 2**62),
@@ -3364,6 +3392,46 @@ def test_format_reader_dir_listing_skips_index_file(spark, tmp_path):
         .load(str(d))
     )
     assert sorted(r["__gtid"] for r in got.collect()) == list(range(1, 10))
+
+
+def test_python_workers_use_stamped_zip_importer(spark, tmp_path):
+    """A worker that ran a format read and imports the package resolves
+    pyspark.zip through the stamped importer, so its per-call
+    importlib.invalidate_caches() does not re-read the archive."""
+    from mysql_cdc_table_spark.sources.datasource import register
+
+    register(spark)
+    (tmp_path / "binlog.000001").write_bytes(_two_source_blob(1, 5))
+    got = (
+        spark.read.format("mysql_binlog")
+        .option("schema_ddl", "id bigint, v string, amt decimal(10,2)")
+        .option("database", "d")
+        .option("table", "t")
+        .load(str(tmp_path))
+    )
+    assert sorted(r["__gtid"] for r in got.collect()) == list(range(1, 5))
+
+    def importer_of_pyspark_zip(batches):
+        import os
+        import sys
+
+        import pyarrow as pa
+
+        import mysql_cdc_table_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        zip_path = os.path.join(os.environ["SPARK_HOME"], "python", "lib", "pyspark.zip")
+        finder = sys.path_importer_cache.get(zip_path)
+        kind = type(finder)
+        yield pa.RecordBatch.from_pylist(
+            [{"importer": f"{kind.__module__}.{kind.__qualname__}"}]
+        )
+
+    seen = spark.range(2).mapInArrow(importer_of_pyspark_zip, "importer string").collect()
+    assert {r["importer"] for r in seen} == {
+        "mysql_cdc_table_spark.worker_imports.StampedZipImporter"
+    }
 
 
 def test_sink_abort_paths_clean_partial_output(tmp_path):
