@@ -34,23 +34,15 @@ def _stamp(archive: str) -> tuple | None:
 class StampedZipImporter(zipimport.zipimporter):
     """A zipimporter whose ``invalidate_caches`` re-reads only a changed archive."""
 
-    def __init__(self, path):
-        super().__init__(path)
-        # None when the directory came from a read we did not stamp: the
-        # next invalidate_caches re-reads it once
-        self._stamp = _read_stamps.get(self.archive)
-
     def invalidate_caches(self):
         stamp = _stamp(self.archive)
-        if stamp is not None and stamp == self._stamp:
-            return
         files = zipimport._zip_directory_cache.get(self.archive)
-        if stamp is not None and _read_stamps.get(self.archive) == stamp and files is not None:
-            self._files = files  # another importer already read this version
-        else:
+        if stamp is None or files is None or _read_stamps.get(self.archive) != stamp:
+            # changed, gone, or never read by this class: read it again
             super().invalidate_caches()
             _read_stamps[self.archive] = stamp
-        self._stamp = stamp
+        else:
+            self._files = files  # the directory read at this stamp
 
 
 def _install() -> None:

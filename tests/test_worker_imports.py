@@ -32,15 +32,15 @@ def read_counter(monkeypatch):
 
 
 @pytest.fixture
-def clean_import_state():
-    """Drop the finders and modules a test adds, so no later test sees them."""
-    finders = set(sys.path_importer_cache)
-    modules = set(sys.modules)
+def clean_import_state(tmp_path):
+    """Drop the finders and modules a test made under ``tmp_path``, so no
+    later test sees them."""
     yield
-    for path in set(sys.path_importer_cache) - finders:
+    for path in [p for p in sys.path_importer_cache if p.startswith(str(tmp_path))]:
         del sys.path_importer_cache[path]
-    for name in set(sys.modules) - modules:
-        del sys.modules[name]
+    for name, mod in list(sys.modules.items()):
+        if str(getattr(mod, "__file__", None)).startswith(str(tmp_path)):
+            del sys.modules[name]
 
 
 def _write_zip(archive, pkg, modules):
