@@ -16,18 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # ORDER MATTERS: the driver verifies the first ~50 registry keys per
-# round. Rounds 1-3 turned 139/144 driver-seen keys fully green (the 5
-# non-green are rows-only by design); green rows stand. Round 4
-# executes the recorded rotation: the 7 keys registered late in round 3
-# (never driver-seen) come first, then keys born in round 4, then
-# re-verify slots for operators whose implementation round 4 touches,
-# and the remaining slots backfill with the STALEST standing rows
-# (first seen in r01) so the oldest green rows get re-confirmed.
-#
-# Round-5 rule (window discipline, keep honest): any round-4 key that
-# comes up red in CORRECTNESS_r04 stays in the window for round 5;
-# otherwise the window is free for brand-new keys, with stale-first
-# backfill continuing (r02-first-seen rows are next in line).
+# round. The rotation rule (``_rotate``): the current window front
+# leads (the previous round's late-registered keys, then this round's
+# new keys, then re-verify slots for keys whose code this round
+# touches); every other key follows stalest-first by its latest
+# CORRECTNESS row, so the oldest confirmations are renewed first; keys
+# registered after the front budget fills are pinned at the tail and
+# lead the next round. A key that comes up red stays in the window.
 _MODULES = (
     "mysql_cdc_table_spark.cdc.queries",
     "mysql_cdc_table_spark.functions.dedup",
@@ -60,678 +55,6 @@ _MODULES = (
     "mysql_cdc_table_spark.operators.round14",
     "mysql_cdc_table_spark.operators.round15",
     "mysql_cdc_table_spark.operators.late",
-)
-
-# Round-3 window, kept for the record (CORRECTNESS_r03: 49 fully green,
-# 1 rows-only by design, zero red).
-_ROUND3_WINDOW = (
-    # -- never driver-seen: scalars/extras stragglers
-    "fn_json", "fn_array2", "fn_string2", "fn_bitwise", "fn_regex",
-    "fn_try_ops", "explode_outer_tokens",
-    # -- never driver-seen: corpus quality/curation module
-    "text_pii_scrub", "text_repetition_score", "corpus_mix_equalize",
-    "shard_manifest", "corpus_mix_temperature",
-    # -- never driver-seen: agg/join/window/set/sql stragglers
-    "agg_collect_sorted", "agg_histogram", "agg_string_agg", "agg_stats2",
-    "join_salted", "set_union_distinct", "set_intersect_all",
-    "window_nth_ignore_nulls", "sql_entrypoint_views",
-    # -- never driver-seen: analytics + pipeline compositions
-    "retention_cohorts", "sessionize_events", "corpus_prep_pipeline",
-    "ts_gap_fill", "funnel_conversion", "cdc_compacted_state",
-    # -- never driver-seen: TPC-H adaptations
-    "q2_min_cost_supplier", "q4_order_priority", "q6_forecast_revenue",
-    "q7_nation_volume", "q10_returned_items", "q12_priority_by_status",
-    "q13_customer_distribution", "q14_promo_share", "q15_top_supplier",
-    "q17_small_quantity_revenue", "q18_large_volume",
-    "q19_disjunctive_bands", "q21_sole_late_supplier",
-    "q22_idle_rich_customers",
-    # -- never driver-seen: late module (full value-hash oracles for the
-    #    real-binlog reader and the integer-LSH ANN tier)
-    "cdc_mysql_binlog_roundtrip", "cdc_binlog_latest_state",
-    "ann_lsh_rp_topk", "ann_ivf_pq_topk",
-    # -- re-verify: implementations change in round 3
-    "ann_knn_join",          # AQE-gated join strategy for the query side
-    "dedup_cluster_resolve", # convergence guard on the CC iteration cap
-    "cdc_packed_typed_roundtrip",  # GEOMETRY/WKB added to the codec matrix
-    # -- round-3-new (2 of 5 fit; q11/q16/q20 register out-of-window,
-    #    rotation candidates for round 4 alongside any red r3 key)
-    "q8_market_share",
-    "q9_product_profit",
-)
-
-# Registered during round 3 AFTER the window filled — got no r03 row;
-# they lead the round-4 window (judge-verified local-pass in round 3).
-ROUND3_LATE_KEYS = (
-    "q11_important_parts",
-    "q16_supplier_part_counts",
-    "q20_promo_part_suppliers",
-    "fn_variant",
-    "corpus_pack_sequences",
-    "join_lateral_topn",
-    "unpivot_metrics",
-)
-
-# Keys born in round 4 — in-window so they get a driver row immediately.
-ROUND4_NEW_KEYS: tuple[str, ...] = (
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_partial_json_roundtrip",
-    "cdc_binlog_schema_evolution",
-    "cdc_binlog_multi_table",
-    "sql_recursive_cte",
-    "ts_resample_ohlc",
-    "join_asof_nearest",
-    "agg_mode",
-    "fn_mysql_compat",
-    "emb_centroid_stats",
-    "fn_json_table",
-    "fn_datetime2",
-    "window_ntile_buckets",
-    "agg_bool_logic",
-    "set_except_distinct",
-    "agg_percentile_disc_group",
-    "emb_centroid_pairs",
-)
-
-# Operators whose implementation round 4 touches: their standing green
-# rows would otherwise mask a regression introduced by this round.
-ROUND4_REVERIFY = (
-    "cdc_mysql_binlog_roundtrip",  # tail skip-foreign-file + zstd fallback
-    "cdc_binlog_latest_state",     # same reader path
-    "mm_decode_features",          # stub -> real PPM/BMP decoder + oracle
-)
-
-_ROUND4_WINDOW_FRONT = ROUND3_LATE_KEYS + ROUND4_NEW_KEYS + ROUND4_REVERIFY
-
-# Keys born in round 5 — in-window so they get a driver row immediately.
-ROUND5_NEW_KEYS: tuple[str, ...] = (
-    "join_interval_overlap",
-    "window_interval_islands",
-    "cdc_gtid_gap_audit",
-    "corpus_split_hash",
-    "text_unigram_logprob",
-    "ts_interpolate_linear",
-    "join_dim_snapshot",
-    "emb_prefix_energy",
-    "cdc_orphan_audit",
-    "window_first_seen_cum",
-    "fn_string3",
-    "dedup_containment",
-    "ts_rate_of_change",
-    "corpus_length_histogram",
-    "subquery_not_in_null",
-)
-
-# Operators whose implementation round 5 touches: their standing green
-# rows would otherwise mask a regression introduced by this round.
-ROUND5_REVERIFY = (
-    "cdc_mysql_binlog_roundtrip",   # CRC32 verify-on-decode added
-    "cdc_binlog_latest_state",      # same reader path
-    "cdc_binlog_zstd_roundtrip",    # zstd dec: CONTENTSIZE_ERROR raise + alloc clamp
-    "cdc_binlog_multi_table",       # persist dropped (deterministic recompute)
-    "cdc_packed_typed_roundtrip",   # packed decoder inner loop vectorized
-    "mm_decode_features",           # PPM header parse bounded (truncation raise)
-    "emb_centroid_pairs",           # cent subtree localCheckpointed (1 fact scan)
-)
-
-# Round-5 window: new keys first, then this round's re-verify slots;
-# CORRECTNESS_r04 was 50/50 green so no red keys carry over. The
-# stalest-first backfill (below) then lands every spare slot on the 27
-# r01-standing rows — the round-4 verdict's recorded rotation — before
-# touching r02-first-seen rows.
-_ROUND5_WINDOW_FRONT = ROUND5_NEW_KEYS + ROUND5_REVERIFY
-
-# Registered late in round 5 AFTER the 50-slot window filled exactly
-# (15 new + 7 re-verify + 27 r01-standing + 1 backfill): pinned BEHIND
-# the window so they cannot evict the stalest standing rows; they lead
-# the round-6 window for their first driver rows — the same protocol
-# ROUND3_LATE_KEYS followed into round 4.
-ROUND5_LATE_KEYS: tuple[str, ...] = (
-    "cdc_apply_merge",
-    "window_rolling_median",
-    "cdc_binlog_parallel_roundtrip",
-    "corpus_dedup_cascade",
-)
-
-# --- round 6 -----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 4 ROUND5_LATE_KEYS lead
-# (first driver rows), then round-6 new keys, then the re-verify slots
-# for code round 6 touches — which include the r05 red carry-over
-# (`window_first_seen_cum`, oracle HUGEINT cast fixed this round; it
-# stays in-window for its green row per the window discipline). 42 keys
-# stand on r02 rows — more than the remaining slots, so the stalest
-# ~29 re-confirm now and the leftover (stream_*/udf_*/mm_* registry
-# tail, ~13 keys) lead the round-7 backfill. Honest gap, recorded
-# here.
-
-# Keys born in round 6 — in-window so they get a driver row immediately.
-ROUND6_NEW_KEYS: tuple[str, ...] = (
-    "corpus_ngram_novelty",
-    "corpus_phrase_boilerplate",
-    "text_char_entropy",
-    "window_zscore_anomaly",
-    "join_asof_forward",
-    "fn_datetime3",
-)
-
-# Operators whose implementation round 6 touches: their standing green
-# rows would otherwise mask a regression introduced by this round.
-ROUND6_REVERIFY: tuple[str, ...] = (
-    "window_first_seen_cum",  # r05 red: oracle sum cast BIGINT (round5.py)
-    "agg_approx_count_distinct",  # rows-only retired: error-bound oracle
-    # the real-binlog scan switched to the columnar numpy kernel
-    # (mysql_binlog_vec.py, mapInArrow) — every key on that read path
-    # re-verifies; cdc_binlog_parallel_roundtrip already leads the
-    # window as a ROUND5_LATE_KEY
-    "cdc_mysql_binlog_roundtrip",
-    "cdc_binlog_latest_state",
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_multi_table",
-    "cdc_binlog_partial_json_roundtrip",
-    "cdc_binlog_schema_evolution",
-    # the IVF tiers' registry outputs changed shape: rows-only retired
-    # via recall-bound oracles (exact top-k + floor boolean)
-    "ann_ivf_topk",
-    "ann_ivf_trained_topk",
-    "ann_ivf_pq_topk",
-)
-
-# Late-registration tail for round 6 (same pinned-behind protocol as
-# ROUND5_LATE_KEYS): registered AFTER the 50-slot window filled
-# (4 late + 6 new + 11 re-verify + 29 stalest backfill); pinned BEHIND
-# the window so they cannot evict the stalest standing rows, and lead
-# the round-7 window for their first driver rows. All nine locally
-# MATCH their oracles at sf0.01 (driver_sim).
-ROUND6_LATE_KEYS: tuple[str, ...] = (
-    "text_bigram_logprob",
-    "agg_mad_outlier",
-    "fn_higher_order",
-    "join_null_safe",
-    "mm_audio_pcm_stats",
-    "emb_knn_classify",
-    "corpus_cross_source_contamination",
-    "ts_seasonal_naive_error",
-    "fn_fuzzy_distance",
-    "agg_approx_quantile_bound",
-)
-
-# --- round 7 -----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 10 ROUND6_LATE_KEYS lead
-# (first driver rows — all judge-verified MATCH in the round-6 session),
-# then keys born in round 7, then re-verify slots for code round 7
-# touches. CORRECTNESS_r06 was 50/50 green, so no red carries over. The
-# backfill (stalest-first by last-seen round) lands first on the 11
-# keys still standing on r02 rows (the stream_*/udf_*/mm_* registry
-# tail that round 6's backfill could not fit) — after which EVERY
-# registry key has had a driver row — then re-confirms the stalest r03
-# rows with the remaining slots.
-
-# Keys born in round 7 — in-window so they get a driver row immediately.
-ROUND7_NEW_KEYS: tuple[str, ...] = (
-    "emb_knn_classify_ivf",
-    "agg_heavy_hitters_mg",
-    "ts_ewma_window",
-    "corpus_passage_dedup",
-)
-
-# Operators whose implementation round 7 touches: their standing green
-# rows would otherwise mask a regression introduced by this round.
-ROUND7_REVERIFY: tuple[str, ...] = (
-    # the columnar real-binlog kernel (mysql_binlog_vec.py) gains
-    # hour/minute/second + fractional bounds validation for
-    # DATETIME2/TIMESTAMP2, UTF-8 validation on vectorized VARCHAR
-    # arrays, and vectorized wide NEWDECIMAL (precision>18) — every
-    # key on that read path re-verifies
-    "cdc_mysql_binlog_roundtrip",
-    "cdc_binlog_latest_state",
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_multi_table",
-    "cdc_binlog_partial_json_roundtrip",
-    "cdc_binlog_schema_evolution",
-    "cdc_binlog_parallel_roundtrip",
-    # the packed kernel's wide-decimal per-cell fallback was replaced
-    # by the two-limb 128-bit varint path (packed_binlog.py)
-    "cdc_packed_typed_roundtrip",
-    # the recall-bound oracle now dedupes the approx side before
-    # counting recovered neighbours (advisor fix) — the three IVF
-    # tiers re-verify on the hardened oracle
-    "ann_ivf_topk",
-    "ann_ivf_trained_topk",
-    "ann_ivf_pq_topk",
-    # agg_approx_quantile_bound's oracle switches to tie-robust
-    # rank-interval bracketing (advisor fix) — already in-window as a
-    # ROUND6_LATE_KEY leading the front, so no extra slot needed.
-)
-
-# Late-registration tail for round 7 (same pinned-behind protocol as
-# ROUND5/6_LATE_KEYS): keys registered after the front hit its 25-slot
-# budget (10 late + 4 new + 11 re-verify); pinned BEHIND the window so
-# they cannot evict the stalest standing rows — they lead the round-8
-# window for their first driver rows.
-ROUND7_LATE_KEYS: tuple[str, ...] = (
-    "window_range_interval",
-    "agg_hll_union",
-    "cdc_binlog_rows_query_roundtrip",
-    "corpus_quality_rules",
-    "join_asof_tolerance",
-    "sql_pipe_syntax",
-    "cdc_binlog_full_metadata_roundtrip",
-    "text_cooccurrence_pmi",
-    "cdc_binlog_gtid_resume",
-    "ts_holt_linear",
-    "text_rake_keywords",
-    "emb_dim_variance",
-    "agg_count_min_sketch",
-    "ts_cusum_drift",
-    "cdc_binlog_pitr_window",
-    "agg_weighted_quantiles",
-    "fn_url_parse",
-    "window_drawdown_max",
-    "cdc_binlog_executed_set",
-    "agg_bloom_membership",
-    "cdc_binlog_multi_source_resume",
-    "agg_bitmap_distinct",
-    "ts_autocorr_exact",
-    "corpus_source_vocab_overlap",
-    "text_langid_confusion",
-    "sql_group_by_all",
-    "mm_image_ahash",
-    "join_interval_bucketed",
-    "dedup_minhash_eval",
-    "agg_ks_drift",
-    "ts_sma_crossover",
-    "cdc_binlog_txn_stats",
-    "fn_aes_roundtrip",
-    "window_rolling_mad_outlier",
-    "corpus_zipf_coverage",
-    "emb_centroid_drift",
-    "cdc_binlog_ddl_history",
-    "window_monotone_runs",
-    "agg_gini_revenue",
-    "cdc_binlog_event_census",
-)
-
-# --- round 8 -----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 40 ROUND7_LATE_KEYS lead
-# (first driver rows — all judge-verified MATCH in the round-7 session's
-# full 247-key sweep), then keys born in round 8, then re-verify slots
-# for code round 8 touches. CORRECTNESS_r07 was 50/50 green, so no red
-# carries over. 40 late + new + re-verify ≈ fills the window, so the
-# stalest r03/r04 backfill skips a round — recorded as acceptable in
-# the round-7 verdict ("What's missing" #1).
-
-# Keys born in round 8 — in-window so they get a driver row immediately
-# (budget: 50 − 40 late − len(ROUND8_REVERIFY); the rest register as
-# ROUND8_LATE_KEYS and lead round 9).
-ROUND8_NEW_KEYS: tuple[str, ...] = (
-    "cdc_binlog_unsigned_roundtrip",
-    "corpus_hash_sample",
-    "agg_chi2_independence",
-)
-
-# Operators whose implementation round 8 touches: their standing green
-# rows would otherwise mask a regression introduced by this round.
-ROUND8_REVERIFY: tuple[str, ...] = (
-    # round 8 touches the kernel and the walkers: TIME2 vectorized
-    # (the last fixed-width per-cell closure), UNSIGNED decode via
-    # SIGNEDNESS TLVs in both kernels, per-sid start bounds in the
-    # split scan, the strict same-second time-bound fix, the LRU
-    # split cache, and the boundary-parking initialOffset — every key
-    # on the real-binlog read path re-verifies; the resume/PITR/
-    # multi-source/executed-set keys sharing the walkers are already
-    # in-window as ROUND7_LATE_KEYS
-    "cdc_mysql_binlog_roundtrip",
-    "cdc_binlog_latest_state",
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_multi_table",
-    "cdc_binlog_partial_json_roundtrip",
-    "cdc_binlog_schema_evolution",
-    "cdc_binlog_parallel_roundtrip",
-)
-
-# Late-registration tail for round 8 (same pinned-behind protocol as
-# ROUND5/6/7_LATE_KEYS): keys registered after the front budget filled;
-# pinned BEHIND the window so they cannot evict standing rows — they
-# lead the round-9 window for their first driver rows.
-#
-# Round-9 arithmetic (recorded for the next session): these ~11 late
-# keys lead, then round-9 new keys + re-verify slots for what round 9
-# touches (if it touches the kernel/walkers, the 7 real-binlog keys
-# again — round 8 changed TIME2/SET vectorization, unsigned decode,
-# per-sid scan bounds, so they hold r08 rows), and the backfill
-# RESUMES the stalest r03/r04 rows that skipped round 8 (recorded in
-# the r07 verdict as acceptable).
-ROUND8_LATE_KEYS: tuple[str, ...] = (
-    "ts_theil_sen_slope",
-    "text_hashing_features",
-    "emb_quantize_error_stats",
-    "agg_entropy_decomp",
-    "agg_log2_histogram",
-    "window_weighted_moving_avg",
-    "stream_late_data_audit",
-    "agg_welch_t_pairs",
-    "cdc_binlog_sink_roundtrip",
-    "ts_mann_kendall",
-    "sql_parameterized",
-    "sql_scripting",
-    "cdc_incremental_agg",
-    "agg_mann_whitney_u",
-    "agg_kruskal_rank_sums",
-)
-
-# --- round 9 -----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 15 ROUND8_LATE_KEYS lead
-# (first driver rows — all judge-verified in the round-8 session's full
-# 265-key sweep at sf0.01, the 8 heaviest also at sf0.1), then the 7
-# keys born in round 9, then 2 re-verify slots for the binlog module
-# round 9 changed — leaving 26 backfill slots, which finally RESUME the
-# stalest r03 rows that skipped rounds 7-8 (the round-8 verdict's
-# "must actually happen this time" item: r03-standing keys are 4-5
-# rounds unconfirmed).
-
-# Keys born in round 9 — in-window for their first driver rows.
-ROUND9_NEW_KEYS: tuple[str, ...] = (
-    "agg_cramers_v",
-    "agg_cohens_kappa",
-    "agg_brown_forsythe",
-    "agg_spearman_corr",
-    "text_bm25_scores",
-    "ts_page_hinkley",
-    "cdc_binlog_overwrite_rewrite",
-)
-
-# Operators whose implementation round 9 touches: the mysql_binlog
-# module changed on BOTH sides — the sink (replay-safe seam links,
-# overwrite reclaim, uuid tmp names) and the batch/stream readers
-# (*.index exclusion moved into the binaryFile loads). The sink keys
-# are already in-window (cdc_binlog_sink_roundtrip leads as a late key;
-# cdc_binlog_overwrite_rewrite is new); these two re-verify the READ
-# path's standing rows on the changed module. (MW-U / Kruskal — the
-# other round-9 rewrite — also lead as late keys.)
-ROUND9_REVERIFY: tuple[str, ...] = (
-    "cdc_mysql_binlog_roundtrip",
-    "cdc_binlog_parallel_roundtrip",
-)
-
-# Late-registration tail for round 9 (same pinned-behind protocol):
-# keys registered after the front budget fills; they lead round 10.
-ROUND9_LATE_KEYS: tuple[str, ...] = (
-    "ts_changepoint_binseg",
-    "sql_pivot",
-    "emb_cosine_histogram",
-    "cdc_binlog_gno_gaps",
-    "corpus_term_enrichment",
-    "agg_mcnemar_paired",
-    "agg_benford_deviation",
-    "ts_ljung_box",
-)
-
-# --- round 10 ----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 8 ROUND9_LATE_KEYS lead
-# (first driver rows — all judge-verified in the round-9 session's full
-# 280-key sweep at sf0.01 AND the 12-key sf0.1 spot-check), then the
-# keys born in round 10, then re-verify slots for code round 10
-# touches — leaving ~25+ backfill slots that clear the 6 remaining
-# r03-standing rows first, then the stalest r04 rows (stalest-first,
-# enforced mechanically by test_driver_window_composition).
-
-# Keys born in round 10 — in-window for their first driver rows.
-ROUND10_NEW_KEYS: tuple[str, ...] = (
-    "cdc_binlog_relay_roundtrip",
-    "ts_dow_seasonality",
-    "text_ttr_profile",
-    "emb_dim_covariance",
-    "agg_ks_two_sample",
-    "agg_kendall_tau_grid",
-    "agg_gini_coefficient",
-    "stream_dropdup_watermark",
-    "agg_ab_conversion_wilson",
-    "join_fuzzy_blocked",
-    "stream_stream_join",
-    "sql_udf_scalar",
-    "sql_execute_immediate",
-    "stream_stream_outer_join",
-)
-
-# Operators whose implementation round 10 touches: the columnar
-# kernel gained the vectorized flat-scalar binary-JSON decoder
-# (mysql_binlog_vec.py) — the JSON-carrying real-binlog key re-verifies
-# on the changed decode path, and the flagship roundtrip re-verifies
-# the shared group-flush walk.
-ROUND10_REVERIFY: tuple[str, ...] = (
-    "cdc_binlog_partial_json_roundtrip",
-    "cdc_mysql_binlog_roundtrip",
-)
-
-# Late-registration tail for round 10 (same pinned-behind protocol):
-# keys registered after the front budget fills; they lead round 11.
-ROUND10_LATE_KEYS: tuple[str, ...] = (
-    "ts_markov_transitions",
-    "emb_centroid_silhouette",
-    "cdc_ivm_join_view",
-)
-
-# --- round 11 ----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 3 ROUND10_LATE_KEYS lead
-# (first driver rows — all judge-verified MATCH in the round-10 judge
-# session's independent sf0.01 oracle re-run), then keys born in round
-# 11, then re-verify slots for code round 11 touches — leaving 25+
-# backfill slots that clear ALL 22 remaining r04-standing rows (the
-# round-10 verdict's explicit ask), enforced mechanically by
-# test_driver_window_composition's stalest-prefix invariant.
-
-# Keys born in round 11 — in-window for their first driver rows.
-ROUND11_NEW_KEYS: tuple[str, ...] = (
-    "cdc_ivm_join_view_bidi",
-    "cdc_ivm_distinct_view",
-    "cdc_fk_orphan_audit",
-)
-
-# Round-11 re-verify slots. The original rationale here claimed round
-# 11 added the full-outer stream-stream join and the persisted-IVF
-# path; neither landed in round 11 (the r11 judge flagged the claim —
-# both ship in round 12), so these three slots re-checked UNCHANGED
-# code. The rows are green and harmless; the record is corrected.
-ROUND11_REVERIFY: tuple[str, ...] = (
-    "stream_stream_join",
-    "stream_stream_outer_join",
-    "ann_ivf_trained_topk",
-)
-
-# Late-registration tail for round 11 (same pinned-behind protocol):
-# keys registered after the front budget fills; they lead round 12.
-ROUND11_LATE_KEYS: tuple[str, ...] = ()
-
-# --- round 12 ----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): no round-11 late keys, so
-# the 19 round-12 new keys lead, then 4 re-verify slots for the code
-# round 12 ACTUALLY touches — leaving 27 backfill slots, still
-# clearing the 24 r05-stale rows (window/basic-relational family, the
-# r11 verdict's named target) and reaching into the r06 tail.
-
-# Keys born in round 12 — in-window for their first driver rows.
-ROUND12_NEW_KEYS: tuple[str, ...] = (
-    "stream_stream_full_outer",
-    "cdc_ivm_streaming_view",
-    "ann_ivf_persisted_topk",
-    "ann_ivf_upsert_topk",
-    "ann_ivf_stream_upsert_topk",
-    "dedup_incremental_minhash_pairs",
-    "emb_label_stats_ivm",
-    # second wave: the IVM aggregate algebra completed (MIN/MAX and
-    # top-k are the non-constant-state cases, both read off the
-    # signed-fold support table) and the two drift scores production
-    # monitoring reports (fixed-grid PSI, per-source Jensen-Shannon)
-    "cdc_ivm_minmax_view",
-    "cdc_ivm_topk_view",
-    "agg_psi_drift",
-    "agg_js_divergence",
-    # third wave: snapshot-isolation time travel over the versioned
-    # streaming-IVM state store (retain=None + a SQL-reproducible
-    # custkey%4 feed chop so any prefix has a batch oracle), and
-    # Holt-Winters additive (the seasonal recursion holt_linear
-    # cannot express; same bounded-frame fold idiom)
-    "cdc_ivm_view_time_travel",
-    "ts_holt_winters",
-    # fourth wave: the HOLISTIC aggregates (median, mode) — no
-    # constant-size state can maintain them, but the MIN/MAX key's
-    # support multiset is their sufficient statistic; both readouts
-    # run over the support grid, never events
-    "cdc_ivm_median_view",
-    "cdc_ivm_mode_view",
-    # Cramér–von Mises joins KS/PSI in the drift family: squared ECDF
-    # gap integrated over the fixed grid, per-bucket-term output (the
-    # order-free PSI discipline)
-    "agg_cvm_two_sample",
-    # the support table itself maintained across micro-batches with
-    # the versioned exactly-once store — one store, four readouts
-    # (MIN/MAX, top-k, median, mode), batch and streaming
-    "cdc_ivm_streaming_minmax",
-    # arbitrary quantiles off the same support grid (p10/p50/p90,
-    # one cumulative window, three thresholds) and Anderson–Darling
-    # (tail-weighted drift, completing the KS/CvM/PSI family)
-    "cdc_ivm_quantile_view",
-    "agg_ad_two_sample",
-)
-
-# Operators whose implementation round 12 touches: the full-outer key
-# generalizes the settled-horizon readout the inner/left-outer pair
-# shares (stream_stream keys re-verify); ann_ivf_persisted_topk builds
-# on the shared kmeans/centroid/search code (trained-IVF re-verifies);
-# the streaming IVM reuses cdc_ivm_join_view_bidi's feeds and algebra
-# (bidi re-verifies). These are the same three slots round 11 claimed
-# on work that had not landed — this round the code change is real.
-ROUND12_REVERIFY: tuple[str, ...] = (
-    "stream_stream_join",
-    "stream_stream_outer_join",
-    "ann_ivf_trained_topk",
-    "cdc_ivm_join_view_bidi",
-)
-
-# Late-registration tail for round 12 (same pinned-behind protocol):
-# keys registered after the front budget fills; they lead round 13.
-# The first four landed late in the round's first build session; the
-# rest are the SECOND session's wave (operators/round12b.py). Every
-# one verified at sf0.001/0.01/0.1 individually before registration,
-# and covered by the final full sweeps — 339/339 at sf0.01; 338/338
-# at sf0.1, which ran just before the last key
-# (corpus_split_leakage_audit) registered (that key's own sf0.1 check
-# was the individual pre-registration run; see COVERAGE.md). Each has
-# an sf1 SCALE.md row.
-ROUND12_LATE_KEYS: tuple[str, ...] = (
-    "dedup_lsh_scurve",       # the LSH banding design table (s-curve)
-    "ts_seasonal_decompose",  # naive additive trend/seasonal/residual
-    "cdc_scd2_streaming",     # SCD2 maintained across micro-batches
-    "cdc_binlog_scd2",        # real binlog v4 bytes -> type-2 dimension
-    # second build session of round 12 (operators/round12b.py):
-    "cdc_ivm_corr_view",      # second moments join the IVM algebra
-    "graph_pagerank_trade",   # aggregate once, iterate on the grid
-    "emb_pca_power_iter",     # exact Gram + fixed-point power iteration
-    "sample_weighted_priority",  # DLT priority sampling, deterministic u
-    "stream_static_enrich",   # stream-static broadcast join + windowed agg
-    "cdc_binlog_streaming_evolution",  # ALTER mid-stream, maintained store
-    "stream_stream_three_way",  # chained funnel: two stateful joins
-    "mm_image_resize",        # decode -> NN resize, gradient-exact
-    "stats_table_profile",    # ANALYZE-TABLE stats in one scan
-    "funnel_no_interference",  # A then B with NO C between (negation)
-    "cdc_ivm_streaming_corr",  # second moments streamed: add-only merge
-    "cdc_replication_lag",    # per-lane lag/watermark observability
-    "sort_zorder_layout",     # interleaved-bit clustering key (Z-order)
-    "emb_project_dominant",   # per-label stats along the PCA direction
-    "join_dpp_partition_pruned",  # dynamic partition pruning, hive layout
-    "corpus_split_leakage_audit",  # near-dups must not straddle splits
-)
-
-# --- round 13 ----------------------------------------------------------------
-#
-# Window arithmetic this round (50 slots): the 20 ROUND12_LATE_KEYS
-# lead — the only keys that have never had a driver row (the r12
-# verdict's #1 ask) — then 6 re-verify slots for the code round 13
-# actually touches (front = 26), leaving 24 backfill slots for the 37
-# r06-stale rows (stalest-first is mechanical; the remaining 13 lead
-# r14's backfill). Round-13 NEW keys all register late (4 of them:
-# the legacy-temporal and DDL-schema binlog keys, BPE training, the
-# column histograms) so the late-key debt clears first.
-
-# Keys born in round 13 — in-window for their first driver rows.
-ROUND13_NEW_KEYS: tuple[str, ...] = ()
-
-# Round-13 re-verify slots — code round 13 touches:
-# * the real-binlog codec gains fixed-width CHAR(n) decode (the r12
-#   verdict's #2 ask; previously raised at TABLE_MAP inference),
-#   TIME2 with fsp>0 (fractional seconds), and the legacy pre-5.6.4
-#   temporal wire formats — both roundtrip keys re-verify on any
-#   reader change, per the standing discipline;
-# * the IVF train path derives nlist from corpus size (~sqrt(N),
-#   capped) and the probe width ~sqrt(nlist) instead of the fixed
-#   nlist=8 / n_probe=3 — the trained tier (kmeans + derived probe)
-#   and the persisted tier (persist/load + format bump to v3 +
-#   derived probe) re-verify; the label-heuristic ann_ivf_topk is
-#   UNTOUCHED by the sizing change and stays in normal rotation.
-ROUND13_REVERIFY: tuple[str, ...] = (
-    "cdc_packed_typed_roundtrip",
-    "cdc_mysql_binlog_roundtrip",
-    # the zstd and parallel roundtrips share cdc_mysql_binlog_roundtrip's
-    # fixture (now carrying CHAR(2) + TIME(3) columns) — the parallel
-    # one drives the COLUMNAR kernel's new CHAR gather and the TIME2
-    # fsp>0 per-cell fallback
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_parallel_roundtrip",
-    "ann_ivf_trained_topk",
-    "ann_ivf_persisted_topk",
-)
-
-# Late-registration tail for round 13 (same pinned-behind protocol):
-# keys registered after the front budget fills; they lead round 14.
-ROUND13_LATE_KEYS: tuple[str, ...] = (
-    # pre-5.6.4 temporal wire formats (codes 7/11/12) through the
-    # real binlog framing — closes the last "missing" row of the r12
-    # verdict's reference-parity list
-    "cdc_binlog_legacy_temporal_roundtrip",
-    # BPE merge training on the word-frequency grid — corpus scanned
-    # once, k iterations on the vocabulary-bounded grid
-    "text_bpe_train_merges",
-    # the inference half: tokenize the corpus through the trained
-    # merges via ONE broadcast vocab join — per-source token budgets
-    "text_bpe_tokenize_apply",
-    # MySQL-8-style equi-height column histograms (the ANALYZE
-    # UPDATE HISTOGRAM surface the reference delegates to the server)
-    "stats_column_histogram",
-    # schema learned ONLY from CREATE/ALTER DDL in the log — the
-    # Debezium-style schema-history decode (sources/mysql_ddl.py)
-    "cdc_binlog_ddl_schema_decode",
-)
-
-# ---------------------------------------------------------------------------
-# Round 14 window. Arithmetic (50 slots): the 5 ROUND13_LATE_KEYS lead
-# (their first driver rows; all 5 judge-verified MATCH in the r13
-# verdict), then N re-verify slots for code round 14 actually touches,
-# then 41 stalest-first backfill slots — the 13 remaining r06-stale
-# rows all fit, plus 28 of the 41 r07 rows. Round-14 NEW keys all
-# register late (ROUND14_LATE_KEYS) so the backfill budget holds.
-
-ROUND14_NEW_KEYS: tuple[str, ...] = ()
-
-# Round-14 re-verify slots — code round 14 touches:
-# * charset-aware TEXT/CHAR decode (latin1 plumbed from DDL/declared
-#   schemas into both the scalar and columnar kernels) touches
-#   sources/mysql_binlog.py + mysql_binlog_vec.py — the standing
-#   discipline puts all four roundtrip keys back in re-verify slots
-#   (cdc_binlog_legacy_temporal_roundtrip, the fifth reader key,
-#   already leads the window as a ROUND13_LATE_KEY; the DDL-history
-#   key cdc_binlog_ddl_schema_decode — whose parser gains
-#   MODIFY/CHANGE/RENAME this round — likewise already leads).
-ROUND14_REVERIFY: tuple[str, ...] = (
-    "cdc_packed_typed_roundtrip",
-    "cdc_mysql_binlog_roundtrip",
-    "cdc_binlog_zstd_roundtrip",
-    "cdc_binlog_parallel_roundtrip",
 )
 
 # Late-registration tail for round 14 (same pinned-behind protocol):
@@ -859,42 +182,6 @@ def _last_seen_rounds() -> dict[str, int]:
             seen[key] = rnd
     return seen
 
-
-_ROUND6_WINDOW_FRONT = (
-    ROUND5_LATE_KEYS + ROUND6_NEW_KEYS + ROUND6_REVERIFY
-)
-
-_ROUND7_WINDOW_FRONT = (
-    ROUND6_LATE_KEYS + ROUND7_NEW_KEYS + ROUND7_REVERIFY
-)
-
-_ROUND8_WINDOW_FRONT = (
-    ROUND7_LATE_KEYS + ROUND8_NEW_KEYS + ROUND8_REVERIFY
-)
-
-_ROUND9_WINDOW_FRONT = (
-    ROUND8_LATE_KEYS + ROUND9_NEW_KEYS + ROUND9_REVERIFY
-)
-
-_ROUND10_WINDOW_FRONT = (
-    ROUND9_LATE_KEYS + ROUND10_NEW_KEYS + ROUND10_REVERIFY
-)
-
-_ROUND11_WINDOW_FRONT = (
-    ROUND10_LATE_KEYS + ROUND11_NEW_KEYS + ROUND11_REVERIFY
-)
-
-_ROUND12_WINDOW_FRONT = (
-    ROUND11_LATE_KEYS + ROUND12_NEW_KEYS + ROUND12_REVERIFY
-)
-
-_ROUND13_WINDOW_FRONT = (
-    ROUND12_LATE_KEYS + ROUND13_NEW_KEYS + ROUND13_REVERIFY
-)
-
-_ROUND14_WINDOW_FRONT = (
-    ROUND13_LATE_KEYS + ROUND14_NEW_KEYS + ROUND14_REVERIFY
-)
 
 _ROUND15_WINDOW_FRONT = (
     ROUND14_LATE_KEYS + ROUND15_NEW_KEYS + ROUND15_REVERIFY
