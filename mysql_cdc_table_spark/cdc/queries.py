@@ -331,23 +331,31 @@ CDC_KAFKA_ENVELOPE_DECODE_SQL = CDC_CHANGELOG_SCAN_SQL
 
 
 def cdc_packed_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end proof of the packed codec over the MySQL-only column
-    kinds (DECIMAL + ENUM + BIT + JSON + GEOMETRY — the reference's
-    Field::unpack type space, binlog_table_reader.cc:151-156): build a
-    typed changelog from ``orders``, encode it to packed binary events
-    and decode it back — both DISTRIBUTED mapInPandas stages, no driver
-    hop — then aggregate. The oracle computes the same aggregate
-    straight from ``orders``: any codec bit-rot (enum index off-by-one,
-    decimal scale, bitmask order, binary length framing) breaks the
-    value hash. GEOMETRY is an opaque SRID+WKB byte passthrough (SURVEY
-    §1.3); here the bytes are deterministic per key so their length sum
-    and distinct count land in the hash."""
+    """End-to-end proof of the binlog v4 codec over the MySQL-only
+    column kinds (DECIMAL + ENUM + BIT + JSON + GEOMETRY + CHAR — the
+    reference's Field::unpack type space, binlog_table_reader.cc:151-156):
+    build a typed changelog from ``orders`` (every key inserted once,
+    every 10th key also updated from ``price`` to ``price+1``), frame it
+    as binlog files with ``build_binlog_file`` and decode them through
+    the production columnar kernel (``_decode_files``) — both stages run
+    in the plan, no driver hop — then aggregate. The oracle computes the
+    same aggregate straight from ``orders``: any codec bit-rot (enum
+    index off-by-one, decimal scale, bitmask order, binary length
+    framing, CHAR padding) breaks the value hash. GEOMETRY is an opaque
+    SRID+WKB byte passthrough (SURVEY §1.3); here the bytes are
+    deterministic per key so their length sum and distinct count land
+    in the hash. The key name predates the v4 codec and is kept so the
+    registry stays stable."""
+    from decimal import Decimal
+
+    import pandas as pd
+    from pyspark import TaskContext
     from pyspark.sql import types as T
 
     from mysql_cdc_table_spark.operators._util import t
-    from mysql_cdc_table_spark.sources.packed_binlog import (
-        decode_packed,
-        encode_packed,
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        build_binlog_file,
     )
 
     target = T.StructType(
@@ -362,11 +370,6 @@ def cdc_packed_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("bits", T.LongType(), metadata={"mysql_type": "bit"}),
             T.StructField("props", T.StringType(), metadata={"mysql_type": "json"}),
             T.StructField("geo", T.BinaryType(), metadata={"mysql_type": "geometry"}),
-            # fixed-width CHAR(2): the packed frame stores every string
-            # kind length-prefixed, so CHAR rides the generic string
-            # codec — the metadata matters on the REAL binlog path
-            # (cdc_mysql_binlog_roundtrip), covered here for parity of
-            # the type matrix across both codecs
             T.StructField(
                 "flag",
                 T.StringType(),
@@ -390,32 +393,35 @@ def cdc_packed_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("flag"),
     )
 
-    def with_meta(df: DataFrame, op: int, gtid_off: int) -> DataFrame:
-        return df.select(
-            "*",
-            F.lit(op).alias("__op"),
-            (F.col("id") * 10 + gtid_off).alias("__gtid"),
-            F.lit("2024-01-01 00:00:00").cast("timestamp").alias("__tm"),
-            F.lit(0).alias("__file_seq"),
-            F.col("id").alias("__event_seq"),
-            F.lit(0).alias("__image_seq"),
-        )
-
-    upd = base.filter(F.col("id") % 10 == 0)
-    cl = (
-        with_meta(base, 1, 0)
-        .unionByName(with_meta(upd, 2, 1))
-        .unionByName(
-            with_meta(
-                upd.withColumn(
-                    "price", (F.col("price") + 1).cast("decimal(12,2)")
-                ),
-                3,
-                1,
-            )
-        )
+    file_schema = T.StructType(
+        [
+            T.StructField("path", T.StringType()),
+            T.StructField("content", T.BinaryType()),
+        ]
     )
-    back = decode_packed(encode_packed(cl, target, table_id=42), target, table_id=42)
+
+    def encode(batches):
+        part = TaskContext.get().partitionId()
+        for n, pdf in enumerate(batches):
+            txns = []
+            for row in pdf.to_dict("records"):
+                gno = int(row["id"]) * 10
+                txns.append({"gno": gno, "op": "w", "rows": [row]})
+                if row["id"] % 10 == 0:
+                    after = dict(row, price=row["price"] + Decimal(1))
+                    txns.append(
+                        {"gno": gno + 1, "op": "u", "rows": [(row, after)]}
+                    )
+            if txns:
+                blob = build_binlog_file(
+                    "tpch", "orders", target, txns, checksum=True
+                )
+                yield pd.DataFrame(
+                    {"path": [f"binlog.{part:04d}{n:06d}"], "content": [blob]}
+                )
+
+    files = base.mapInPandas(encode, schema=file_schema)
+    back = _decode_files(files, target, "tpch", "orders")
     return back.groupBy(
         F.col("status"), F.col("__op").alias("op")
     ).agg(

@@ -1,56 +1,22 @@
-"""Custom Spark DataSource for packed binlog files — the idiomatic
+"""Registration of the engine's Spark DataSources — the idiomatic
 analogue of the reference's storage-engine plugin registration
 (MYSQL_ADD_PLUGIN ... STORAGE_ENGINE, reference CMakeLists.txt:34,
 handlerton wiring binlogdb.cc:857-900): register once, then
 
-    spark.read.format("packed_binlog")
+    spark.read.format("mysql_binlog")
          .option("schema_ddl", "id bigint, v string, ...")
-         .option("table_id", "7")
          .load("/path/dir")
 
-yields the standard changelog DataFrame. The scan unit is a byte RANGE
-of a file (frame-aligned, via each file's footer sync index — see
-"splittable files" below), so the reference's file-at-a-time loop
-(binlog_table_reader.cc:75-96) becomes a parallel scan whose task count
-tracks data volume, not file count or upstream write skew.
-Unlike the reference's dead index-path advertisement (index_flags
-declared but every index read errors — binlogdb.cc:381-461, SURVEY
-§3.2), this source declares exactly what it implements: a scan.
-
-File format (each file, little-endian):
-    file  := frame* footer footer_len:u32le magic[8]
-    frame := varint(frame_len) body
-    body  := varint(gtid) varint(ts_s) varint(event_seq)
-             varint(image_base) packed_event
-    footer:= varint(n_sync) varint(delta_offset)*   (sync index; see
-             "splittable files" at write_packed_file)
-where packed_event is sources/packed_binlog.py's event encoding,
-image_base is the __image_seq of the event's FIRST image (so a re-written
-single-image after-row keeps __image_seq=1 and (gtid, event_seq,
-image_seq) ordering survives a write->read round trip), and file_seq
-comes from the trailing digits in the file name (binlog.000007).
+yields the standard changelog DataFrame (``format("mysql_binlog_tail")``
+is the streaming twin). Both sources live in sources/mysql_binlog.py;
+this module keeps the worker-safe DDL parser they share.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
-
-from mysql_cdc_table_spark.sources.packed_binlog import (
-    _decode_event,
-    _read_varint,
-    _write_varint,
-)
 
 # DataSource instances are (re)created inside Python workers where no
 # SparkSession exists, so StructType.fromDDL (JVM-backed) is off-limits:
@@ -71,16 +37,11 @@ _DDL_TYPES = {
     "timestamp": T.TimestampType(),
 }
 
-METADATA_DDL = (
-    "__op int, __gtid bigint, __tm timestamp, "
-    "__file_seq int, __event_seq bigint, __image_seq int"
-)
-
 
 def _parse_ddl(ddl: str) -> T.StructType:
     """Parse the source's simple DDL. Beyond the Spark scalar names this
     accepts the MySQL-only column kinds the reference's users hold
-    (SURVEY §1.2; wire forms in sources/packed_binlog.py):
+    (SURVEY §1.2; wire forms in sources/mysql_binlog.py):
 
         color enum(red,green,blue)   -> string + {"mysql_type": "enum"}
         flags set(a,b,c)             -> string + {"mysql_type": "set"}
@@ -117,455 +78,11 @@ def _parse_ddl(ddl: str) -> T.StructType:
     return T.StructType(fields)
 
 
-# ---- splittable files: footer sync index ------------------------------------
-#
-# A binlog file's natural scan unit is the file, but file sizes follow
-# upstream write skew — at 100 TB one hot-partition file must not become
-# one hot scan task. Files therefore carry a FOOTER indexing the byte
-# offset of every SYNC_EVERY-th frame (the parquet row-group idea):
-#
-#     file   := frame* footer footer_len:u32le magic[8]
-#     footer := varint(n_sync) varint(delta_offset)*   (delta-encoded)
-#
-# partitions() reads ONLY the trailer+footer per file (seek from the
-# end) and emits one InputPartition per group of sync intervals, so scan
-# parallelism tracks data volume, not file count. Files without the
-# magic trailer (foreign/legacy) degrade to one partition per file.
-#
-# The trailing magic doubles as the FORMAT VERSION: "PBLOGSY3" =
-# 4-varint frame header (gtid, ts, event_seq, image_base) + events that
-# carry their own column count (add-column evolution). Older layouts —
-# "PBLOGSYX" (no image_base varint) and "PBLOGSY2" (no per-event column
-# count) — would silently decode garbage under the current parser, so
-# they are REJECTED with a pointed error instead.
-
-_FOOTER_MAGIC = b"PBLOGSY3"
-_OLD_FOOTER_MAGICS = {
-    # PBLOGSYX spans TWO pre-ncols layouts (image_base was added while
-    # the magic was still PBLOGSYX), so the magic alone can't say which
-    # varint set a given file carries — one more reason rejection, not
-    # best-effort decoding, is the only safe answer for it.
-    b"PBLOGSYX": "pre-v3 packed frame layout (magic is ambiguous: with "
-    "or without the image_base varint, never a per-event column count)",
-    b"PBLOGSY2": "v2 packed frame layout (no per-event column count)",
-}
-SYNC_EVERY = 1024  # frames per sync point
-_SYNCS_PER_SPLIT = 32  # ~32k events per scan task
-
-
-def write_packed_file(path: str, frames: list[tuple]) -> None:
-    """Writer helper: frames = [(gtid, ts_s, event_seq, packed_event)] or
-    [(gtid, ts_s, event_seq, image_base, packed_event)] (4-tuples get
-    image_base=0 — a fresh multi-image event numbers its images 0..n-1).
-    Appends the sync footer (above) so the file is splittable."""
-    out = bytearray()
-    syncs: list[int] = []
-    for i, frame in enumerate(frames):
-        if i % SYNC_EVERY == 0:
-            syncs.append(len(out))
-        if len(frame) == 4:
-            gtid, ts_s, event_seq, payload = frame
-            image_base = 0
-        else:
-            gtid, ts_s, event_seq, image_base, payload = frame
-        body = bytearray()
-        _write_varint(gtid, body)
-        _write_varint(ts_s, body)
-        _write_varint(event_seq, body)
-        _write_varint(image_base, body)
-        body += payload
-        _write_varint(len(body), out)
-        out += body
-    footer = bytearray()
-    _write_varint(len(syncs), footer)
-    prev = 0
-    for off in syncs:
-        _write_varint(off - prev, footer)
-        prev = off
-    out += footer
-    out += len(footer).to_bytes(4, "little")
-    out += _FOOTER_MAGIC
-    with open(path, "wb") as f:
-        f.write(bytes(out))
-
-
-def _read_sync_footer(path: str) -> tuple[int, list[int]] | None:
-    """-> (data_end, absolute sync offsets), or None if the file has no
-    sync trailer (legacy/foreign file: treat as one unsplittable blob).
-    Reads only the trailer bytes — partitions() never touches frame data."""
-    size = os.path.getsize(path)
-    if size < 12:
-        return None
-    with open(path, "rb") as f:
-        f.seek(size - 12)
-        tail = f.read(12)
-        if tail[4:] in _OLD_FOOTER_MAGICS:
-            raise ValueError(
-                f"{path} was written with the "
-                f"{_OLD_FOOTER_MAGICS[tail[4:]]}; decoding it with the "
-                "current layout would misalign every frame — rewrite it "
-                "with the current writer"
-            )
-        if tail[4:] != _FOOTER_MAGIC:
-            return None
-        footer_len = int.from_bytes(tail[:4], "little")
-        data_end = size - 12 - footer_len
-        f.seek(data_end)
-        footer = f.read(footer_len)
-    n, pos = _read_varint(footer, 0)
-    offs, cur = [], 0
-    for _ in range(n):
-        d, pos = _read_varint(footer, pos)
-        cur += d
-        offs.append(cur)
-    return data_end, offs
-
-
-def _file_splits(path: str) -> list[tuple[int, int]]:
-    """Byte ranges (start, end) for one file, each starting on a frame
-    boundary and spanning ~_SYNCS_PER_SPLIT sync intervals."""
-    info = _read_sync_footer(path)
-    if info is None:
-        return [(0, os.path.getsize(path))]
-    data_end, offs = info
-    starts = offs[::_SYNCS_PER_SPLIT] or [0]
-    bounds = [*starts, data_end]
-    return [
-        (bounds[i], bounds[i + 1])
-        for i in range(len(bounds) - 1)
-        if bounds[i] < bounds[i + 1]
-    ]
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, file_seq: int, start: int = 0, end: int | None = None):
-        self.path = path
-        self.file_seq = file_seq
-        self.start = start
-        self.end = end  # None = to end-of-data (auto-detect footer)
-
-
-def _iter_file_rows(
-    path: str,
-    file_seq: int,
-    target: T.StructType,
-    table_id: int,
-    start: int = 0,
-    end: int | None = None,
-):
-    """Walk one packed file (or a [start, end) byte range of it — ranges
-    from _file_splits always begin on a frame boundary), yielding
-    changelog row tuples — shared by the batch reader (which re-frames
-    into Arrow batches) and the stream reader (whose simple API wants
-    tuples)."""
-    import datetime as dt
-
-    if end is None:
-        info = _read_sync_footer(path)
-        end = info[0] if info else os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(start)
-        buf = f.read(end - start)
-    pos = 0
-    last_s = None
-    tm = None
-    from_ts = dt.datetime.fromtimestamp
-    utc = dt.timezone.utc
-    while pos < len(buf):
-        frame_len, pos = _read_varint(buf, pos)
-        fend = pos + frame_len
-        gtid, pos = _read_varint(buf, pos)
-        ts_s, pos = _read_varint(buf, pos)
-        event_seq, pos = _read_varint(buf, pos)
-        image_base, pos = _read_varint(buf, pos)
-        payload = buf[pos:fend]
-        pos = fend
-        if ts_s != last_s:  # events cluster by second; memoize conversion
-            tm = from_ts(ts_s, tz=utc).replace(tzinfo=None)
-            last_s = ts_s
-        for idx, (op, vals) in enumerate(_decode_event(payload, target, table_id)):
-            yield (*vals, op, gtid, tm, file_seq, event_seq, image_base + idx)
-
-
-def _arrow_schema(struct: T.StructType):
-    """Spark StructType -> Arrow schema for the record-batch read path."""
-    import pyarrow as pa
-
-    simple = {
-        T.BooleanType: pa.bool_(),
-        T.ShortType: pa.int16(),
-        T.IntegerType: pa.int32(),
-        T.LongType: pa.int64(),
-        T.FloatType: pa.float32(),
-        T.DoubleType: pa.float64(),
-        T.StringType: pa.string(),
-        T.BinaryType: pa.binary(),
-        T.DateType: pa.date32(),
-        T.TimestampType: pa.timestamp("us"),
-    }
-    fields = []
-    for f in struct.fields:
-        if isinstance(f.dataType, T.DecimalType):
-            at = pa.decimal128(f.dataType.precision, f.dataType.scale)
-        else:
-            at = simple[type(f.dataType)]
-        fields.append(pa.field(f.name, at))
-    return pa.schema(fields)
-
-
-class PackedBinlogReader(DataSourceReader):
-    # rows per yielded Arrow batch: bounds worker memory on a huge file
-    BATCH_ROWS = 65_536
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.table_id = int(options.get("table_id", "0"))
-        self.target = _parse_ddl(options["schema_ddl"])
-
-    def _files(self) -> list[str]:
-        # ordered file listing = the reference's binlog.index contract
-        # (binlog_table_reader.cc:12-19)
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if not f.startswith(("_", "."))
-            )
-        return [self.path]
-
-    def partitions(self):
-        # one partition per ~_SYNCS_PER_SPLIT sync intervals, NOT per
-        # file: scan parallelism tracks data volume, so one hot-partition
-        # file upstream cannot become one hot scan task here. Only the
-        # footer trailer is read per file at planning time.
-        parts = []
-        for p in self._files():
-            m = re.search(r"(\d+)$", re.sub(r"\.[A-Za-z]+$", "", p))
-            seq = int(m.group(1)) if m else 0
-            for start, end in _file_splits(p):
-                parts.append(_FilePartition(p, seq, start, end))
-        return parts
-
-    def read(self, partition: _FilePartition):
-        """Yields Arrow RecordBatches (not tuples): the batch path skips
-        per-row pickling between the source and Spark's Arrow ingestion.
-        When every field type has a vectorized decoder the whole value
-        section decodes via numpy gathers (decode_buffer_columnar) — the
-        only per-frame Python is the frame-length walk; otherwise fall
-        back to the per-event closure walk."""
-        import datetime as dt
-
-        import pyarrow as pa
-
-        from mysql_cdc_table_spark.sources.packed_binlog import (
-            _vec_plan,
-            decode_buffer_columnar,
-        )
-
-        out_struct = T.StructType(
-            list(self.target.fields) + list(_parse_ddl(METADATA_DDL).fields)
-        )
-        schema = _arrow_schema(out_struct)
-
-        if _vec_plan(self.target) is not None:
-            end = partition.end
-            if end is None:
-                info = _read_sync_footer(partition.path)
-                end = info[0] if info else os.path.getsize(partition.path)
-            with open(partition.path, "rb") as f:
-                f.seek(partition.start)
-                buf = f.read(end - partition.start)
-            for n_rows, arrays in decode_buffer_columnar(
-                buf,
-                self.target,
-                self.table_id,
-                partition.file_seq,
-                start=0,
-                end=len(buf),
-            ):
-                yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-            return
-
-        rows: list[tuple] = []
-
-        def flush():
-            cols = list(zip(*rows)) if rows else [[] for _ in schema]
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(list(col), type=field.type)
-                    for col, field in zip(cols, schema)
-                ],
-                schema=schema,
-            )
-
-        for row in _iter_file_rows(
-            partition.path,
-            partition.file_seq,
-            self.target,
-            self.table_id,
-            partition.start,
-            partition.end,
-        ):
-            rows.append(row)
-            if len(rows) >= self.BATCH_ROWS:
-                yield flush()
-                rows = []
-        if rows:
-            yield flush()
-
-
-class PackedBinlogStreamReader(SimpleDataSourceStreamReader):
-    """Incremental consumption with offsets = count of (sorted) files
-    consumed — the checkpointable cursor the reference never had (it
-    rescans from file 0 on every query, reference binlogdb.cc:487)."""
-
-    def __init__(self, options: dict):
-        self._batch = PackedBinlogReader(dict(options))
-
-    def _files(self):
-        return self._batch._files()
-
-    def initialOffset(self):
-        return {"n_files": 0}
-
-    def read(self, start):
-        files = self._files()
-        n0 = start["n_files"]
-        rows = self._rows_for(files[n0:])
-        return iter(rows), {"n_files": len(files)}
-
-    def readBetweenOffsets(self, start, end):
-        files = self._files()
-        return iter(self._rows_for(files[start["n_files"] : end["n_files"]]))
-
-    def _rows_for(self, paths):
-        rows = []
-        for p in paths:
-            m = re.search(r"(\d+)$", re.sub(r"\.[A-Za-z]+$", "", p))
-            rows.extend(
-                _iter_file_rows(
-                    p,
-                    int(m.group(1)) if m else 0,
-                    self._batch.target,
-                    self._batch.table_id,
-                )
-            )
-        return rows
-
-
-class PackedBinlogWriter(DataSourceWriter):
-    """Write a changelog DataFrame back to packed binlog files: one file
-    per partition (``binlog.<write-token>.<partition>.bin``), one
-    single-image event per row-image (__op byte carried verbatim — the
-    decoder maps a 1-image op-2 event to a lone before-image and op-3 to
-    a lone after-image — and __image_seq carried as the frame's
-    image_base, so write->read round-trips every op AND the
-    (gtid, event_seq, image_seq) ordering key). The write path the
-    reference only pretends to have (its write_row silently discards —
-    reference binlogdb.cc:283-292).
-
-    The write token is minted once on the driver (millisecond timestamp +
-    random suffix), so (a) a second append never collides with an earlier
-    write's file names and (b) appended files sort AFTER earlier writes
-    in the ordered file listing. Overwrite semantics live in commit():
-    only after every task has written does the driver drop files from
-    previous writes (and abort() drops this write's partial output)."""
-
-    def __init__(self, options: dict, overwrite: bool):
-        import time
-        import uuid
-
-        self.path = options["path"]
-        self.table_id = int(options.get("table_id", "0"))
-        self.target = _parse_ddl(options["schema_ddl"])
-        self.overwrite = overwrite
-        self.token = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:6]}"
-
-    def write(self, rows) -> WriterCommitMessage:
-        import calendar
-
-        from pyspark import TaskContext
-
-        from mysql_cdc_table_spark.sources.packed_binlog import encode_event
-
-        pid = TaskContext.get().partitionId()
-        frames = []
-        for row in rows:
-            img = {f.name: row[f.name] for f in self.target.fields}
-            payload = encode_event(self.table_id, int(row["__op"]), [img], self.target)
-            ts_s = calendar.timegm(row["__tm"].timetuple())
-            frames.append(
-                (
-                    int(row["__gtid"]),
-                    ts_s,
-                    int(row["__event_seq"]),
-                    int(row["__image_seq"]),
-                    payload,
-                )
-            )
-        os.makedirs(self.path, exist_ok=True)
-        if frames:
-            write_packed_file(
-                os.path.join(
-                    self.path, f"binlog.{self.token}.{pid + 1:06d}.bin"
-                ),
-                frames,
-            )
-        return WriterCommitMessage()
-
-    def _stale_files(self) -> list[str]:
-        if not os.path.isdir(self.path):
-            return []
-        return [
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if not f.startswith(("_", ".")) and self.token not in f
-        ]
-
-    def commit(self, messages) -> None:
-        if self.overwrite:
-            for p in self._stale_files():
-                os.remove(p)
-
-    def abort(self, messages) -> None:
-        # drop this write's partial output; earlier writes stay intact
-        if os.path.isdir(self.path):
-            for f in os.listdir(self.path):
-                if self.token in f:
-                    os.remove(os.path.join(self.path, f))
-
-
-class PackedBinlogDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "packed_binlog"
-
-    def schema(self):
-        # built locally (no JVM needed) — a StructType, not DDL text,
-        # because enum(...)/set(...)/bit/json are NOT Spark DDL names
-        base = _parse_ddl(self.options["schema_ddl"])
-        meta = _parse_ddl(METADATA_DDL)
-        return T.StructType(list(base.fields) + list(meta.fields))
-
-    def reader(self, schema):
-        return PackedBinlogReader(dict(self.options))
-
-    def simpleStreamReader(self, schema):
-        return PackedBinlogStreamReader(dict(self.options))
-
-    def writer(self, schema, overwrite: bool):
-        return PackedBinlogWriter(dict(self.options), overwrite)
-
-
 def register(spark) -> None:
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        MysqlBinlogDataSource,
         MysqlBinlogTailDataSource,
     )
 
-    from mysql_cdc_table_spark.sources.mysql_binlog import (
-        MysqlBinlogDataSource,
-    )
-
-    spark.dataSource.register(PackedBinlogDataSource)
     spark.dataSource.register(MysqlBinlogTailDataSource)
     spark.dataSource.register(MysqlBinlogDataSource)

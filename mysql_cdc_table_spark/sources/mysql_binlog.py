@@ -5,9 +5,9 @@ files event by event — FORMAT_DESCRIPTION, GTID, TABLE_MAP, and the
 ROWS_EVENT v2 family — resolving row-image layout from the TABLE_MAP's
 column types/metadata (reference ``binlog_table_reader.cc:173-429``;
 ``table_def`` construction at ``:393-408``). The repo's other ingest
-paths carry the same semantics over friendlier encodings (Debezium JSON
-envelopes, the splittable packed format); this module closes the last
-gap: a user holding genuine ``binlog.NNNNNN`` files.
+paths carry the same semantics over a friendlier encoding (Debezium
+JSON envelopes); this module closes the last gap: a user holding
+genuine ``binlog.NNNNNN`` files.
 
 Everything here derives from the public binlog event format (MySQL
 internals documentation; the same layout every open-source replication
@@ -53,10 +53,10 @@ raise instead of silently skipping.
 
 Scale: one binlog file is one sequential decode unit — the format is
 stateful (GTID and TABLE_MAP apply to subsequent events), exactly the
-reference's scan model (A2/A8). Parallelism is across files (MySQL
-rotates ~1 GiB); the decode itself is a ``mapInPandas`` batch walk with
-no shuffle. For splittable single-file parallelism use the packed
-format (footer sync index) — real binlog doesn't support it.
+reference's scan model (A2/A8). ``mysql_binlog_read`` parallelizes
+across files (MySQL rotates ~1 GiB) with no shuffle; for single-file
+parallelism ``mysql_binlog_read_parallel`` and ``format("mysql_binlog")``
+split each file into transaction-aligned byte ranges.
 """
 
 from __future__ import annotations
@@ -2909,66 +2909,39 @@ def _decode_files(
     database: str,
     table: str,
     gtid_format: str = "long",
-    columnar: bool = True,
     capture_query: bool = False,
 ) -> DataFrame:
     # binaryFile materializes each file whole, so per-task memory is
     # ~one binlog file (MySQL rotates at max_binlog_size, 1 GiB default
     # — bounded by server config, not by history length). The output is
-    # yielded per file; Arrow re-slices it downstream.
+    # yielded per file; Arrow re-slices it downstream. The event walk
+    # stays scalar (headers/CRC/state), but row-image VALUES decode
+    # through the numpy kernel and come out as Arrow batches with no
+    # Python row objects on the scan path.
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
+
     out_schema = _binlog_out_schema(target, gtid_format, capture_query)
 
-    if columnar:
-        # round 6: the event walk stays scalar (headers/CRC/state), but
-        # row-image VALUES decode through the numpy kernel and come out
-        # as Arrow batches with no Python row objects on the scan path
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
-        )
-
-        def walk_arrow(batches):
-            for batch in batches:
-                paths = batch.column("path")
-                contents = batch.column("content")
-                for i in range(batch.num_rows):
-                    yield from decode_binlog_record_batches(
-                        contents[i].as_py(),
-                        target,
-                        database,
-                        table,
-                        file_seq=_file_seq_of(str(paths[i].as_py())),
-                        gtid_format=gtid_format,
-                        capture_query=capture_query,
-                    )
-
-        return files.select("path", "content").mapInArrow(
-            walk_arrow, schema=out_schema
-        )
-
-    import pandas as pd
-
-    names = [f.name for f in out_schema.fields]
-    chunk = 200_000  # rows per yielded Arrow batch
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                rows = decode_binlog_bytes(
-                    bytes(content),
+    def walk_arrow(batches):
+        for batch in batches:
+            paths = batch.column("path")
+            contents = batch.column("content")
+            for i in range(batch.num_rows):
+                yield from decode_binlog_record_batches(
+                    contents[i].as_py(),
                     target,
                     database,
                     table,
-                    file_seq=_file_seq_of(str(fpath)),
+                    file_seq=_file_seq_of(str(paths[i].as_py())),
                     gtid_format=gtid_format,
                     capture_query=capture_query,
                 )
-                for i in range(0, len(rows), chunk):
-                    part = rows[i : i + chunk]
-                    yield pd.DataFrame(
-                        {n: [r.get(n) for r in part] for n in names}
-                    )
 
-    return files.select("path", "content").mapInPandas(walk, schema=out_schema)
+    return files.select("path", "content").mapInArrow(
+        walk_arrow, schema=out_schema
+    )
 
 
 def mysql_binlog_read(
@@ -2980,14 +2953,14 @@ def mysql_binlog_read(
     *,
     index_file: str | None = None,
     gtid_format: str = "long",
-    columnar: bool = True,
     capture_query: bool = False,
 ) -> DataFrame:
     """Batch-read real binlog files into the standard changelog
     DataFrame. One file = one decode task (the format is stateful per
     file); files are ordered by their rotation number like the
-    reference's index-file order (A1/A2). ``columnar=False`` forces the
-    scalar image walk (the parity reference for the numpy kernel).
+    reference's index-file order (A1/A2). Values decode through the
+    columnar kernel; ``decode_binlog_bytes`` is the driver-side scalar
+    reference it is tested against.
 
     ``index_file`` mirrors the reference's entry point exactly
     (``set_binlog_index_file`` — binlog_table_reader.cc:39-57, wired
@@ -3020,7 +2993,7 @@ def mysql_binlog_read(
             .where(~F.col("path").endswith(".index"))
         )
     return _decode_files(
-        files, target, database, table, gtid_format, columnar=columnar,
+        files, target, database, table, gtid_format,
         capture_query=capture_query,
     )
 
@@ -3188,7 +3161,6 @@ def mysql_binlog_read_ddl_history(
     database: str,
     table: str,
     *,
-    columnar: bool = True,
     gtid_format: str = "long",
 ) -> DataFrame:
     """Batch-read a ROTATED binlog series with the table layout learned
@@ -3207,10 +3179,10 @@ def mysql_binlog_read_ddl_history(
     task (the usual per-file parallelism), each seeding a
     ``SchemaHistory`` from its prefix; in-file DDL keeps folding
     mid-walk; rows remap from the FILE-final onto the SERIES-final
-    generation by column identity. ``columnar=True`` decodes values
-    through the Arrow kernel (per-generation batch groups, identity
-    placement + casts at flush), then renames/casts the file-final
-    batches onto the series-final schema."""
+    generation by column identity. Values decode through the Arrow
+    kernel (per-generation batch groups, identity placement + casts at
+    flush), then the file-final batches are renamed/cast onto the
+    series-final schema."""
     import os
 
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
@@ -3263,95 +3235,58 @@ def mysql_binlog_read_ddl_history(
             h.apply(stmt, default_db=db0 or None)
         return h
 
-    if columnar:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            _pa_type,
-            arrow_schema,
-            decode_binlog_record_batches,
-        )
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        _pa_type,
+        arrow_schema,
+        decode_binlog_record_batches,
+    )
 
-        pa_out = arrow_schema(out_schema)
+    pa_out = arrow_schema(out_schema)
 
-        def walk_arrow(batches):
-            for batch in batches:
-                bpaths = batch.column("path")
-                contents = batch.column("content")
-                for i in range(batch.num_rows):
-                    fseq = _file_seq_of(str(bpaths[i].as_py()))
-                    hist = seed(fseq)
-                    rbs = list(
-                        decode_binlog_record_batches(
-                            contents[i].as_py(), None, database, table,
-                            file_seq=fseq, gtid_format=gtid_format,
-                            schema_history=hist,
-                        )
-                    )  # bounded: one file's batches (file-at-a-time
-                    # memory is this reader's standing contract)
-                    fmap = {
-                        i_: n_ for n_, i_ in zip(hist.names, hist.ids)
-                    }
-                    for rb in rbs:
-                        arrays = []
-                        for n_, i_ in zip(fin_names, fin_ids):
-                            src = fmap.get(i_)
-                            t_pa = _pa_type(
-                                target[n_].dataType  # noqa: B023
-                            )
-                            if src is not None and src in rb.schema.names:
-                                arr = rb.column(src)
-                                if arr.type != t_pa:
-                                    arr = arr.cast(t_pa)
-                                arrays.append(arr)
-                            else:
-                                arrays.append(
-                                    pa.nulls(rb.num_rows, type=t_pa)
-                                )
-                        for mn in meta_names:
-                            arrays.append(rb.column(mn))
-                        yield pa.RecordBatch.from_arrays(
-                            arrays, schema=pa_out
-                        )
-
-        return files.select("path", "content").mapInArrow(
-            walk_arrow, schema=out_schema
-        )
-
-    import pandas as pd
-
-    names = [f.name for f in out_schema.fields]
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                fseq = _file_seq_of(str(fpath))
+    def walk_arrow(batches):
+        for batch in batches:
+            bpaths = batch.column("path")
+            contents = batch.column("content")
+            for i in range(batch.num_rows):
+                fseq = _file_seq_of(str(bpaths[i].as_py()))
                 hist = seed(fseq)
-                rows = decode_binlog_bytes(
-                    bytes(content), None, database, table,
-                    file_seq=fseq, gtid_format=gtid_format,
-                    schema_history=hist,
-                )
-                latest = dict(zip(fin_ids, fin_names))
-                ren = {
-                    n: latest.get(i)
-                    for n, i in zip(hist.names, hist.ids)
+                rbs = list(
+                    decode_binlog_record_batches(
+                        contents[i].as_py(), None, database, table,
+                        file_seq=fseq, gtid_format=gtid_format,
+                        schema_history=hist,
+                    )
+                )  # bounded: one file's batches (file-at-a-time
+                # memory is this reader's standing contract)
+                fmap = {
+                    i_: n_ for n_, i_ in zip(hist.names, hist.ids)
                 }
-                if any(k != v for k, v in ren.items()):
-                    for r in rows:
-                        moved = {}
-                        for n, nn in ren.items():
-                            if n in r:
-                                v = r.pop(n)
-                                if nn is not None:
-                                    moved[nn] = v
-                        r.update(moved)
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
-                )
+                for rb in rbs:
+                    arrays = []
+                    for n_, i_ in zip(fin_names, fin_ids):
+                        src = fmap.get(i_)
+                        t_pa = _pa_type(
+                            target[n_].dataType  # noqa: B023
+                        )
+                        if src is not None and src in rb.schema.names:
+                            arr = rb.column(src)
+                            if arr.type != t_pa:
+                                arr = arr.cast(t_pa)
+                            arrays.append(arr)
+                        else:
+                            arrays.append(
+                                pa.nulls(rb.num_rows, type=t_pa)
+                            )
+                    for mn in meta_names:
+                        arrays.append(rb.column(mn))
+                    yield pa.RecordBatch.from_arrays(
+                        arrays, schema=pa_out
+                    )
 
-    return files.select("path", "content").mapInPandas(
-        walk, schema=out_schema
+    return files.select("path", "content").mapInArrow(
+        walk_arrow, schema=out_schema
     )
 
 
@@ -4362,8 +4297,8 @@ def mysql_binlog_read_parallel(
     transaction starts, carried TABLE_MAP/GTID/checksum state replays
     first, and __event_seq stays the ABSOLUTE file offset — byte-
     identical rows, any split size. Stage 2 reopens paths with plain
-    ``open`` (same executor-local contract as the packed DataSource);
-    on object stores mount or use the packed source.
+    ``open``, so paths must be executor-local; on object stores mount
+    them first.
 
     ``capture_query=True`` surfaces ROWS_QUERY statements as __query —
     no extra carried state: ranges cut at GTID boundaries, exactly
@@ -5036,8 +4971,9 @@ def mysql_binlog_tail_stream(
 ) -> DataFrame:
     """readStream over the ``mysql_binlog_tail`` DataSource (register
     with ``sources.datasource.register``): sub-rotation-latency tail of
-    a live binlog directory. ``schema_ddl`` uses the same extended DDL
-    as the packed source (enum(...)/set(...)/bit/json/geometry).
+    a live binlog directory. ``schema_ddl`` uses the extended DDL of
+    ``sources.datasource._parse_ddl`` (enum(...)/set(...)/bit/json/
+    geometry).
     ``start_after_gno`` starts the FIRST micro-batch at the first
     transaction past a checkpointed GTID (head-pruned seek, same
     machinery as the batch resume) instead of the history's beginning;
@@ -6475,9 +6411,7 @@ def _cdc_binlog_ddl_decode(
         stage = _stage_binlog_series(
             spark, data_files.unionByName(ddl_files), f"{sf_dir}|ddlseries"
         )
-        decoded = mysql_binlog_read_ddl_history(
-            spark, stage, "tpch", "orders", columnar=vec
-        )
+        decoded = mysql_binlog_read_ddl_history(spark, stage, "tpch", "orders")
         return _ddl_fixture_agg(decoded)
 
     files = base.mapInPandas(encode, schema=file_schema)

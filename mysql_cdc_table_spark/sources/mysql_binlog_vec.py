@@ -1,22 +1,20 @@
 """Columnar (numpy + Arrow) value decode for REAL binlog v4 rows events.
 
-Round-6 port of the packed-binlog columnar kernel (packed_binlog.py
-``_make_vec_decoder``/``_decode_event_sections``) to the MySQL wire
-format. The sequential event walk (``decode_binlog_bytes``) keeps doing
-what is inherently serial and cheap per EVENT — 19-byte headers, CRC32
+The sequential event walk (``decode_binlog_bytes``) keeps doing what
+is inherently serial and cheap per EVENT — 19-byte headers, CRC32
 verify, GTID state, TABLE_MAP parsing, TRANSACTION_PAYLOAD unwrap — but
 the hot loop, row-image VALUE decode (per FIELD per IMAGE: ~5M Python
 calls for a 150k-event file), is claimed through the walker's
 ``_rows_sink`` hook and executed later as numpy per field per
 image-round across every event of a (table_def, present-bitmap) group.
 
-Image rounds (the packed kernel's trick): images are not length-
-prefixed, so image k+1's offset in an event body is only known after
-image k decodes — but the FIRST image of every event starts at a known
-offset. Round 0 therefore decodes image 0 of all events in one
-vectorized pass (mutating a per-event position array), after which
-every image-1 offset is known, and so on. Within a round, each column
-decodes with one numpy kernel across all events.
+Image rounds: images are not length-prefixed, so image k+1's offset
+in an event body is only known after image k decodes — but the FIRST
+image of every event starts at a known offset. Round 0 therefore
+decodes image 0 of all events in one vectorized pass (mutating a
+per-event position array), after which every image-1 offset is known,
+and so on. Within a round, each column decodes with one numpy kernel
+across all events.
 
 Per-cell scalar fallback (the shared ``_decode_col``) now covers ONE
 kind — binary JSON trees, the only genuinely variable-shape wire
@@ -92,12 +90,40 @@ from mysql_cdc_table_spark.sources.mysql_binlog import (
     _string_meta,
     decode_binlog_bytes,
 )
-from mysql_cdc_table_spark.sources.packed_binlog import (
-    _gather_bytes_vec,
-    _valid_buf,
-)
 
 _EPOCH_JDN = 2440588  # Julian day number of 1970-01-01
+
+
+def _gather_bytes_vec(u8, pos, lens):
+    """Gather variable-length runs [pos[i], pos[i]+lens[i]) into one
+    contiguous buffer + int32 offsets (Arrow varbinary layout)."""
+    import numpy as np
+
+    total = int(lens.sum())
+    # valid values are disjoint slices of the chunk buffer, so their
+    # total can never exceed it — this single bound kills both the
+    # corrupt-length OOM (sum of huge claimed lens allocating TBs of
+    # gather indices) and any int32 offset overflow (chunks are also
+    # byte-bounded by the caller, far below 2^31)
+    if total > len(u8):
+        raise ValueError(
+            "corrupt length prefixes in rows events: values claim "
+            f"{total} bytes, chunk has {len(u8)}"
+        )
+    offsets = np.zeros(len(pos) + 1, np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    src = np.repeat(pos, lens) + (np.arange(total) - np.repeat(offsets[:-1], lens))
+    return u8[np.minimum(src, len(u8) - 1)], offsets.astype(np.int32)
+
+
+def _valid_buf(valid):
+    """Arrow validity bitmap buffer from a bool array (None if no nulls)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if valid.all():
+        return None
+    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
 
 
 def _pa_type(dt):
@@ -358,8 +384,8 @@ def _days_from_ymd(y, mo, d):
 
 
 def _scalar_cell(col: _Col, pa_t):
-    """Per-cell closure fallback INSIDE the columnar walk, mirroring the
-    packed kernel's: only this column's non-null cells run Python (via
+    """Per-cell closure fallback INSIDE the columnar walk: only this
+    column's non-null cells run Python (via
     the shared scalar ``_decode_col``); the rest of the schema stays
     vectorized."""
     import numpy as np

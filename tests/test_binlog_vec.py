@@ -332,27 +332,45 @@ def test_columnar_corrupt_body_raises():
 
 
 def test_spark_columnar_equals_scalar_read(spark, tmp_path):
-    """End-to-end through the Spark scan: mysql_binlog_read default
-    (columnar mapInArrow) vs columnar=False (scalar mapInPandas)."""
-    (tmp_path / "binlog.000001").write_bytes(
-        build_binlog_file("d", "t", RICH, _mixed_txns(), checksum=True)
+    """End-to-end through the Spark scan: mysql_binlog_read (columnar
+    mapInArrow) vs the driver-side scalar walk ``decode_binlog_bytes``,
+    the reference the kernel is held to. The reference rows enter Spark
+    through createDataFrame so both sides collect with the same type
+    conversions."""
+    blob = build_binlog_file("d", "t", RICH, _mixed_txns(), checksum=True)
+    (tmp_path / "binlog.000001").write_bytes(blob)
+    df = mysql_binlog_read(spark, str(tmp_path), RICH, "d", "t")
+    ref = spark.createDataFrame(
+        [
+            tuple(r.get(n) for n in df.columns)
+            for r in decode_binlog_bytes(blob, RICH, "d", "t", file_seq=1)
+        ],
+        df.schema,
     )
     key = ["__event_seq", "__image_seq"]
-    a = (
-        mysql_binlog_read(spark, str(tmp_path), RICH, "d", "t")
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    b = (
-        mysql_binlog_read(
-            spark, str(tmp_path), RICH, "d", "t", columnar=False
-        )
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
+    a = df.toPandas().sort_values(key).reset_index(drop=True)
+    b = ref.toPandas().sort_values(key).reset_index(drop=True)
+    assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_gather_bytes_vec_corrupt_length_bound():
+    """Claimed value lengths that sum past the chunk raise before any
+    gather index is allocated (the corrupt-length OOM guard); honest
+    lengths gather into the Arrow varbinary layout."""
+    import numpy as np
+
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        _gather_bytes_vec,
+    )
+
+    u8 = np.frombuffer(b"abcdefgh", np.uint8)
+    data, offsets = _gather_bytes_vec(
+        u8, np.array([0, 5]), np.array([3, 2])
+    )
+    assert data.tobytes() == b"abcfg" and offsets.tolist() == [0, 3, 5]
+    with pytest.raises(ValueError, match="corrupt length prefixes"):
+        _gather_bytes_vec(u8, np.array([0, 1]), np.array([8, 1 << 40]))
 
 
 @settings(max_examples=25, deadline=None)

@@ -2915,6 +2915,61 @@ def test_mysql_binlog_writer_sink_contracts(spark, tmp_path):
         w.mode("overwrite").save(str(tmp_path / "b"))
 
 
+def test_parse_ddl_decimal_with_space():
+    """'decimal(10, 2)' (space after the comma) must parse — the field
+    splitter keeps parenthesized commas, so the name/type split must cut
+    on the FIRST whitespace run only (round-1 advisory)."""
+    from pyspark.sql import types as T
+
+    from mysql_cdc_table_spark.sources.datasource import _parse_ddl
+
+    st = _parse_ddl("id bigint, price decimal(10, 2), v string")
+    assert st["price"].dataType == T.DecimalType(10, 2)
+    assert st["id"].dataType == T.LongType()
+
+
+def test_mysql_binlog_format_reader_mysql_kinds(spark, tmp_path):
+    """format('mysql_binlog') accepts the extended enum(...)/set(...)/
+    bit/json/geometry DDL and decodes those wire types, plus a
+    DECIMAL(38,10) wider than int64 and an all-NULL image."""
+    from mysql_cdc_table_spark.sources.datasource import _parse_ddl, register
+
+    ddl = (
+        "id bigint, color enum(red,green,blue), flags set(a,b,c,d), "
+        "b bit, doc json, wide decimal(38, 10), geo geometry"
+    )
+    wkb = bytes.fromhex("e6100000010100000000000000000c400000000000001dc0")
+    img = {
+        "id": 1, "color": "blue", "flags": "a,d", "b": (1 << 62) + 5,
+        "doc": '{"x":1}', "wide": Decimal("12345678901234567890.1234567891"),
+        "geo": wkb,
+    }
+    nulls = {"id": 2, **{k: None for k in img if k != "id"}}
+    (tmp_path / "binlog.000001").write_bytes(
+        build_binlog_file(
+            "d", "t", _parse_ddl(ddl),
+            [_txn(10, "w", [img]), _txn(11, "w", [nulls])],
+            checksum=True,
+        )
+    )
+    register(spark)
+    rows = {
+        r["id"]: r
+        for r in spark.read.format("mysql_binlog")
+        .option("schema_ddl", ddl)
+        .option("database", "d")
+        .option("table", "t")
+        .load(str(tmp_path))
+        .collect()
+    }
+    r = rows[1]
+    assert r["color"] == "blue" and r["flags"] == "a,d"
+    assert r["b"] == (1 << 62) + 5 and r["doc"] == '{"x":1}'
+    assert r["wide"] == Decimal("12345678901234567890.1234567891")
+    assert bytes(r["geo"]) == wkb
+    assert all(rows[2][k] is None for k in img if k != "id")
+
+
 def test_mysql_binlog_format_reader_equals_function_api(spark, tmp_path):
     """spark.read.format('mysql_binlog') (round 8) must produce the
     exact frame of mysql_binlog_read_parallel — same split machinery,

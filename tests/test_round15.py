@@ -892,8 +892,8 @@ def test_read_ddl_history_series_both_kernels(spark, tmp_path):
     """A three-file rotated series whose DDL spans file boundaries:
     the zero-declaration reader learns each file's layout from the
     prefix of EARLIER files, decodes per file, and remaps onto the
-    series-final names — both kernels, equal to the whole-series
-    scalar walk."""
+    series-final names. The Spark read (columnar kernel) must equal
+    the whole-series scalar walk, so both kernels run."""
     import os
 
     from decimal import Decimal as _D
@@ -985,17 +985,14 @@ def test_read_ddl_history_series_both_kernels(spark, tmp_path):
     assert set(want) == {1, 2, 3, 4}
     assert want[1] == (_D("1.25"), "AA", None)  # pre-ALTER carried
 
-    for columnar in (True, False):
-        df = mysql_binlog_read_ddl_history(
-            spark, series, "d", "t", columnar=columnar
-        )
-        got = {
-            r["id"]: (r["price"], r["cflag"], r["status"])
-            for r in df.collect()
-        }
-        assert set(got) == set(want), columnar
-        for k, w in want.items():
-            assert got[k] == w, (columnar, k, got[k], w)
+    df = mysql_binlog_read_ddl_history(spark, series, "d", "t")
+    got = {
+        r["id"]: (r["price"], r["cflag"], r["status"])
+        for r in df.collect()
+    }
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert got[k] == w, (k, got[k], w)
 
 
 def test_read_ddl_history_no_create_raises(spark, tmp_path):
