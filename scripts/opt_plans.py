@@ -29,12 +29,10 @@ def main() -> None:
     spark = get_spark("opt-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench._stage_packed(spark, sf_dir)
     bench._stage_envelopes(spark, sf_dir)
     bench._stage_binlog(sf_dir, 0.1)
     bench._stage_ivf(spark, sf_dir)
     bench._stage_sink_input(spark, sf_dir)
-    queries["packed_binlog_scan"] = bench._packed_scan_query
     queries["cdc_envelope_decode"] = bench._envelope_decode_query
     queries["mysql_binlog_scan"] = bench._mysql_binlog_scan_query
     queries["binlog_gtid_resume"] = bench._binlog_gtid_resume_query
@@ -42,7 +40,7 @@ def main() -> None:
     queries["binlog_sink_write"] = bench._binlog_sink_write_query
 
     sweep = [
-        *bench.HEADLINE, "packed_binlog_scan", "mysql_binlog_scan",
+        *bench.HEADLINE, "mysql_binlog_scan",
         "binlog_gtid_resume", "ivf_pruned_search", "binlog_sink_write",
         "agg_kruskal_rank_sums", "agg_ks_two_sample",
         "join_fuzzy_blocked", "cdc_ivm_join_view_bidi",

@@ -486,25 +486,6 @@ def main() -> None:
         results[name] = rec
         print(json.dumps({name: rec}), flush=True)
 
-    # packed-binlog scan: stage sf1 packed files from the scaled orders,
-    # then time the columnar DataSource scan at both scales
-    import bench as _bench
-
-    for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-        _bench._stage_packed(spark, sf_dir)
-        samples = []
-        for _ in range(3):
-            t1 = time.perf_counter()
-            _bench._packed_scan_query(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.perf_counter() - t1)
-        results.setdefault("packed_binlog_scan", {})[label] = {
-            "sec": round(min(samples), 2)
-        }
-    pb = results["packed_binlog_scan"]
-    pb["ratio"] = round(pb["sf1"]["sec"] / pb["sf0.1"]["sec"], 1)
-    print(json.dumps({"packed_binlog_scan": pb}), flush=True)
     print(json.dumps({"stage": "done", "results": results}), flush=True)
 
 
