@@ -164,13 +164,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver table that exists under ``sf_dir``."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out
+    """Load every driver table that exists under ``sf_dir`` through
+    ``load_table`` — the one loading path (session confs, schema cache,
+    the events.ts nanos->micros fix)."""
+    return {
+        name: load_table(spark, sf_dir, name)
+        for name in TABLES
+        if os.path.exists(table_path(sf_dir, name))
+    }
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

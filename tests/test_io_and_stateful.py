@@ -39,6 +39,41 @@ def test_partitioned_parquet_roundtrip_and_pruning(spark, sf_dir, tmp_path):
     assert pruned.count() == want
 
 
+def test_register_views_loads_through_load_table(spark, tmp_path):
+    """The view catalog and ``load_table`` are one loading path: an
+    events.parquet whose ``ts`` is TIMESTAMP(NANOS) (read as a long
+    under nanosAsLong) must come back from the registered view as the
+    same microsecond timestamps ``load_table`` yields, not raw nanos."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mysql_cdc_table_spark.catalog import register_views
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_060_000_001_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    try:
+        register_views(spark, str(tmp_path))
+        view = spark.table("events")
+        direct = load_table(spark, str(tmp_path), "events")
+        assert view.schema == direct.schema
+        assert isinstance(view.schema["ts"].dataType, T.TimestampType)
+        got = sorted(tuple(r) for r in view.collect())
+        assert got == sorted(tuple(r) for r in direct.collect())
+        assert got[0][1] == dt.datetime(2023, 11, 14, 22, 13, 20, 123456)
+    finally:
+        spark.catalog.dropTempView("events")
+
+
 def test_csv_jsonl_roundtrip(spark, tmp_path):
     schema = T.StructType(
         [
