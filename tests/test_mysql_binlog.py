@@ -62,6 +62,9 @@ def test_file_read_orders_gtid_and_ops(spark, tmp_path):
     assert rows[2]["v"] == "a" and rows[3]["v"] == "a2"
     assert rows[3]["amt"] == Decimal("2.50")
     assert rows[2]["__event_seq"] == rows[3]["__event_seq"]
+    # __tm is the event header's whole-second commit timestamp (UTC)
+    assert rows[0]["__tm"] == dt.datetime(2023, 11, 14, 22, 13, 20)
+    assert rows[2]["__tm"] == dt.datetime(2023, 11, 14, 22, 13, 21)
     # decoded changelog drives latest_state unchanged
     from mysql_cdc_table_spark.cdc.ops import latest_state
 
