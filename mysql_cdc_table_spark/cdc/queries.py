@@ -349,12 +349,12 @@ def cdc_packed_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decimal import Decimal
 
     import pandas as pd
-    from pyspark import TaskContext
     from pyspark.sql import types as T
 
     from mysql_cdc_table_spark.operators._util import t
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         _decode_files,
+        _encode_files,
         build_binlog_file,
     )
 
@@ -393,34 +393,21 @@ def cdc_packed_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("flag"),
     )
 
-    file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-
-    def encode(batches):
-        part = TaskContext.get().partitionId()
-        for n, pdf in enumerate(batches):
-            txns = []
-            for row in pdf.to_dict("records"):
-                gno = int(row["id"]) * 10
-                txns.append({"gno": gno, "op": "w", "rows": [row]})
-                if row["id"] % 10 == 0:
-                    after = dict(row, price=row["price"] + Decimal(1))
-                    txns.append(
-                        {"gno": gno + 1, "op": "u", "rows": [(row, after)]}
-                    )
-            if txns:
-                blob = build_binlog_file(
-                    "tpch", "orders", target, txns, checksum=True
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for row in pdf.to_dict("records"):
+            gno = int(row["id"]) * 10
+            txns.append({"gno": gno, "op": "w", "rows": [row]})
+            if row["id"] % 10 == 0:
+                after = dict(row, price=row["price"] + Decimal(1))
+                txns.append(
+                    {"gno": gno + 1, "op": "u", "rows": [(row, after)]}
                 )
-                yield pd.DataFrame(
-                    {"path": [f"binlog.{part:04d}{n:06d}"], "content": [blob]}
-                )
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     back = _decode_files(files, target, "tpch", "orders")
     return back.groupBy(
         F.col("status"), F.col("__op").alias("op")

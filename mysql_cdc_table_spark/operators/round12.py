@@ -2830,18 +2830,17 @@ def cdc_binlog_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-ordered an update pair moves versions between the current and
     closed planes and breaks the hash. The oracle derives the same
     numbers from the fixture arithmetic in pure SQL. Scale: encode and
-    decode are per-partition mapInPandas (embarrassingly parallel),
-    the SCD2 fold is one keyed window, the rollup one hash aggregate."""
+    decode (the production columnar kernel) are per-partition
+    (embarrassingly parallel), the SCD2 fold is one keyed window, the rollup one hash aggregate."""
     from decimal import Decimal as _D
-    from typing import Iterator
 
     import pandas as pd
 
     from mysql_cdc_table_spark.cdc.ops import scd2
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-        decode_binlog_bytes,
     )
     from pyspark.sql import types as T
 
@@ -2868,61 +2867,40 @@ def cdc_binlog_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                base_row = {
-                    "id": int(r.id), "price": r.price, "status": r.status,
-                }
-                v1 = dict(base_row, price=base_row["price"] + _D(2))
-                txns.append({"gno": base_row["id"], "op": "w", "rows": [v1]})
-                last = v1
-                if base_row["id"] % 10 == 0:
-                    before = dict(base_row, price=base_row["price"] + _D(1))
-                    txns.append(
-                        {
-                            "gno": base_row["id"] + 500_000_000,
-                            "op": "u",
-                            "rows": [(before, base_row)],
-                        }
-                    )
-                    last = base_row
-                if base_row["id"] % 17 == 0:
-                    txns.append(
-                        {
-                            "gno": base_row["id"] + 1_000_000_000,
-                            "op": "d",
-                            "rows": [last],
-                        }
-                    )
-            yield pd.DataFrame(
-                {
-                    "file_bytes": [
-                        build_binlog_file("tpch", "orders", target, txns)
-                    ]
-                }
-            )
-
-    files = base.mapInPandas(encode, schema=file_schema)
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(
-                    bytes(blob), target, "tpch", "orders"
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            base_row = {
+                "id": int(r.id), "price": r.price, "status": r.status,
+            }
+            v1 = dict(base_row, price=base_row["price"] + _D(2))
+            txns.append({"gno": base_row["id"], "op": "w", "rows": [v1]})
+            last = v1
+            if base_row["id"] % 10 == 0:
+                before = dict(base_row, price=base_row["price"] + _D(1))
+                txns.append(
+                    {
+                        "gno": base_row["id"] + 500_000_000,
+                        "op": "u",
+                        "rows": [(before, base_row)],
+                    }
                 )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
+                last = base_row
+            if base_row["id"] % 17 == 0:
+                txns.append(
+                    {
+                        "gno": base_row["id"] + 1_000_000_000,
+                        "op": "d",
+                        "rows": [last],
+                    }
                 )
+        return build_binlog_file("tpch", "orders", target, txns)
 
-    dim = scd2(files.mapInPandas(decode, schema=out_schema), ["id"])
+    dim = scd2(
+        _decode_files(_encode_files(base, build), target, "tpch", "orders"),
+        ["id"],
+    )
     cents = (F.col("price") * 100).cast("long")
     cur = F.col("is_current")
     return (

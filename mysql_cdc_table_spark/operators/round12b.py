@@ -885,20 +885,18 @@ def cdc_binlog_streaming_evolution(
     import os
     import tempfile
     from decimal import Decimal as _D
-    from typing import Iterator
 
     import pandas as pd
 
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.operators.round12 import (
         _ivm_versions,
         stage_ordered_chunks,
     )
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-        decode_binlog_bytes,
     )
-    from pyspark.sql import types as T
 
     old_target, target = _evo_targets()
     base = t(spark, sf_dir, "orders").select(
@@ -909,69 +907,52 @@ def cdc_binlog_streaming_evolution(
         ).alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    file_schema = T.StructType(
-        [
-            T.StructField("chunk", T.IntegerType()),
-            T.StructField("file_bytes", T.BinaryType()),
-        ]
-    )
-
-    def enc(chunk: int):
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                txns = []
-                for r in pdf.itertuples(index=False):
-                    rid = int(r.id)
-                    if chunk in (0, 1):  # pre-ALTER inserts
-                        txns.append(
-                            {
-                                "gno": rid * 10,
-                                "op": "w",
-                                "rows": [{"id": rid, "price": r.price}],
-                            }
-                        )
-                    elif chunk == 2:  # post-ALTER updates (id%3==0)
-                        before = {
-                            "id": rid, "price": r.price, "status": None,
+    def build(chunk: int):
+        def run(pdf: pd.DataFrame) -> bytes:
+            txns = []
+            for r in pdf.itertuples(index=False):
+                rid = int(r.id)
+                if chunk in (0, 1):  # pre-ALTER inserts
+                    txns.append(
+                        {
+                            "gno": rid * 10,
+                            "op": "w",
+                            "rows": [{"id": rid, "price": r.price}],
                         }
-                        after = {
+                    )
+                elif chunk == 2:  # post-ALTER updates (id%3==0)
+                    before = {
+                        "id": rid, "price": r.price, "status": None,
+                    }
+                    after = {
+                        "id": rid,
+                        "price": r.price + _D(1),
+                        "status": r.status,
+                    }
+                    txns.append(
+                        {
+                            "gno": rid * 10 + 5,
+                            "op": "u",
+                            "rows": [(before, after)],
+                        }
+                    )
+                else:  # post-ALTER deletes (id%7==0)
+                    last = (
+                        {
                             "id": rid,
                             "price": r.price + _D(1),
                             "status": r.status,
                         }
-                        txns.append(
-                            {
-                                "gno": rid * 10 + 5,
-                                "op": "u",
-                                "rows": [(before, after)],
-                            }
-                        )
-                    else:  # post-ALTER deletes (id%7==0)
-                        last = (
-                            {
-                                "id": rid,
-                                "price": r.price + _D(1),
-                                "status": r.status,
-                            }
-                            if rid % 3 == 0
-                            else {
-                                "id": rid, "price": r.price, "status": None,
-                            }
-                        )
-                        txns.append(
-                            {"gno": rid * 10 + 7, "op": "d", "rows": [last]}
-                        )
-                schema = old_target if chunk in (0, 1) else target
-                yield pd.DataFrame(
-                    {
-                        "chunk": [chunk],
-                        "file_bytes": [
-                            build_binlog_file("tpch", "orders", schema, txns)
-                        ],
-                    }
-                )
+                        if rid % 3 == 0
+                        else {
+                            "id": rid, "price": r.price, "status": None,
+                        }
+                    )
+                    txns.append(
+                        {"gno": rid * 10 + 7, "op": "d", "rows": [last]}
+                    )
+            schema = old_target if chunk in (0, 1) else target
+            return build_binlog_file("tpch", "orders", schema, txns)
 
         return run
 
@@ -983,7 +964,9 @@ def cdc_binlog_streaming_evolution(
     ]
     blobs = None
     for i, part in enumerate(chunks):
-        b = part.coalesce(1).mapInPandas(enc(i), schema=file_schema)
+        b = _encode_files(part.coalesce(1), build(i)).withColumn(
+            "chunk", F.lit(i)
+        )
         blobs = b if blobs is None else blobs.unionByName(b)
 
     tag = hashlib.md5(
@@ -997,21 +980,8 @@ def cdc_binlog_streaming_evolution(
         spark, blobs, "chunk", 4, feed_dir, bounds=[0, 1, 2]
     )
 
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(
-                    bytes(blob), target, "tpch", "orders"
-                )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
-                )
-
     stream = (
-        spark.readStream.schema(file_schema)
+        spark.readStream.schema(blobs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
@@ -1019,7 +989,7 @@ def cdc_binlog_streaming_evolution(
     def body(batch_df: DataFrame, batch_id: int) -> None:
         evolution_apply_batch(
             spark,
-            batch_df.mapInPandas(decode, schema=out_schema),
+            _decode_files(batch_df, target, "tpch", "orders"),
             state_dir,
             batch_id,
         )

@@ -521,10 +521,10 @@ def cdc_binlog_streaming_ddl_migration(
     generation; file 4 deletes — consumed maxFilesPerTrigger=1 through
     foreachBatch. Per batch: the DDL statements are extracted from the
     blob (statement-count-bounded collect), the batch decodes through
-    ``decode_binlog_bytes(schema_history=...)`` seeded with the
-    statements of PRIOR batches (its own DDL folds in-walk), and the
-    store — which by the ALTER batch already holds two batches of
-    old-generation state — MIGRATES by column identity before the fold
+    the columnar kernel (``_decode_files(schema_history=...)``) seeded
+    with the statements of PRIOR batches (its own DDL folds in-walk),
+    and the store — which by the ALTER batch already holds two batches
+    of old-generation state — MIGRATES by column identity before the fold
     (rename carries values, retype casts, add widens NULL). The store
     is keyed under names the stream itself taught it; nothing is
     declared wide upfront. Readout groups the final version's alive
@@ -541,21 +541,20 @@ def cdc_binlog_streaming_ddl_migration(
 
     import pandas as pd
 
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.operators.round12 import (
         _ivm_versions,
         stage_ordered_chunks,
     )
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         binlog_bytes_ddl,
         build_binlog_file,
-        decode_binlog_bytes,
     )
     from mysql_cdc_table_spark.sources.mysql_ddl import (
         SchemaHistory,
         schema_from_ddl_history,
     )
-    from pyspark.sql import types as T
 
     gen0 = schema_from_ddl_history([_DDLMIG_CREATE], "tpch.orders")
     gen1 = schema_from_ddl_history(
@@ -573,76 +572,59 @@ def cdc_binlog_streaming_ddl_migration(
         ).alias("flag"),
         F.col("o_orderstatus").alias("status"),
     )
-    file_schema = T.StructType(
-        [
-            T.StructField("chunk", T.IntegerType()),
-            T.StructField("file_bytes", T.BinaryType()),
-        ]
-    )
-
-    def enc(chunk: int):
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                txns: list = []
-                if chunk == 0:
-                    txns.append({"gno": 1, "ddl": _DDLMIG_CREATE})
-                if chunk == 2:
-                    txns.append({"gno": 3, "ddl": _DDLMIG_ALTER})
-                for r in pdf.itertuples(index=False):
-                    rid = int(r.id)
-                    if chunk in (0, 1):  # CREATE-generation inserts
-                        txns.append(
-                            {
-                                "gno": rid * 10,
-                                "op": "w",
-                                "rows": [
-                                    {"id": rid, "price": r.price,
-                                     "flag": r.flag}
-                                ],
-                            }
-                        )
-                    elif chunk == 2:  # post-ALTER updates (id%3==0)
-                        before = {
-                            "id": rid, "price": r.price,
-                            "cflag": r.flag, "status": None,
+    def build(chunk: int):
+        def run(pdf: pd.DataFrame) -> bytes:
+            txns: list = []
+            if chunk == 0:
+                txns.append({"gno": 1, "ddl": _DDLMIG_CREATE})
+            if chunk == 2:
+                txns.append({"gno": 3, "ddl": _DDLMIG_ALTER})
+            for r in pdf.itertuples(index=False):
+                rid = int(r.id)
+                if chunk in (0, 1):  # CREATE-generation inserts
+                    txns.append(
+                        {
+                            "gno": rid * 10,
+                            "op": "w",
+                            "rows": [
+                                {"id": rid, "price": r.price,
+                                 "flag": r.flag}
+                            ],
                         }
-                        after_img = {
+                    )
+                elif chunk == 2:  # post-ALTER updates (id%3==0)
+                    before = {
+                        "id": rid, "price": r.price,
+                        "cflag": r.flag, "status": None,
+                    }
+                    after_img = {
+                        "id": rid, "price": r.price + _D(1),
+                        "cflag": r.flag, "status": r.status,
+                    }
+                    txns.append(
+                        {
+                            "gno": rid * 10 + 5,
+                            "op": "u",
+                            "rows": [(before, after_img)],
+                        }
+                    )
+                else:  # post-ALTER deletes (id%7==0)
+                    last = (
+                        {
                             "id": rid, "price": r.price + _D(1),
                             "cflag": r.flag, "status": r.status,
                         }
-                        txns.append(
-                            {
-                                "gno": rid * 10 + 5,
-                                "op": "u",
-                                "rows": [(before, after_img)],
-                            }
-                        )
-                    else:  # post-ALTER deletes (id%7==0)
-                        last = (
-                            {
-                                "id": rid, "price": r.price + _D(1),
-                                "cflag": r.flag, "status": r.status,
-                            }
-                            if rid % 3 == 0
-                            else {
-                                "id": rid, "price": r.price,
-                                "cflag": r.flag, "status": None,
-                            }
-                        )
-                        txns.append(
-                            {"gno": rid * 10 + 7, "op": "d", "rows": [last]}
-                        )
-                schema = gen0 if chunk in (0, 1) else gen1
-                yield pd.DataFrame(
-                    {
-                        "chunk": [chunk],
-                        "file_bytes": [
-                            build_binlog_file("tpch", "orders", schema, txns)
-                        ],
-                    }
-                )
+                        if rid % 3 == 0
+                        else {
+                            "id": rid, "price": r.price,
+                            "cflag": r.flag, "status": None,
+                        }
+                    )
+                    txns.append(
+                        {"gno": rid * 10 + 7, "op": "d", "rows": [last]}
+                    )
+            schema = gen0 if chunk in (0, 1) else gen1
+            return build_binlog_file("tpch", "orders", schema, txns)
 
         return run
 
@@ -661,7 +643,7 @@ def cdc_binlog_streaming_ddl_migration(
         # ordering plus the durable H-frame history seed the decoder
         # before their batches arrive; measured 6.8x faster fixture
         # staging at sf1 vs the single-partition encode
-        b = part.mapInPandas(enc(i), schema=file_schema)
+        b = _encode_files(part, build(i)).withColumn("chunk", F.lit(i))
         blobs = b if blobs is None else blobs.unionByName(b)
     # materialize the encode ONCE with full parallelism: the staging
     # write funnels through coalesce(1), which would otherwise pull
@@ -681,7 +663,7 @@ def cdc_binlog_streaming_ddl_migration(
 
     def extract_ddl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for blob in pdf["file_bytes"]:
+            for blob in pdf["content"]:
                 recs = binlog_bytes_ddl(bytes(blob))
                 yield pd.DataFrame(
                     {
@@ -690,25 +672,8 @@ def cdc_binlog_streaming_ddl_migration(
                     }
                 )
 
-    def make_decode(prior: list, names: list):
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for blob in pdf["file_bytes"]:
-                    h = SchemaHistory("orders", database="tpch")
-                    for s in prior:
-                        h.apply(s)
-                    rows = decode_binlog_bytes(
-                        bytes(blob), None, "tpch", "orders",
-                        schema_history=h,
-                    )
-                    yield pd.DataFrame(
-                        {n: [r.get(n) for r in rows] for n in names}
-                    )
-
-        return run
-
     stream = (
-        spark.readStream.schema(file_schema)
+        spark.readStream.schema(blobs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
@@ -748,10 +713,8 @@ def cdc_binlog_streaming_ddl_migration(
         after = SchemaHistory("orders", database="tpch")
         for s in prior + new_stmts:
             after.apply(s)
-        out_schema = changelog_schema(after.schema)
-        decoded = batch_df.mapInPandas(
-            make_decode(prior, [f.name for f in out_schema.fields]),
-            schema=out_schema,
+        decoded = _decode_files(
+            batch_df, after.schema, "tpch", "orders", schema_history=pre
         )
         _ddlmig_apply_batch(
             spark, decoded, state_dir, batch_id, pre, after,

@@ -57,11 +57,10 @@ def cdc_binlog_gbk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
         decode_binlog_bytes,
-    )
-    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-        decode_binlog_pandas,
     )
 
     target = T.StructType(
@@ -101,8 +100,6 @@ def cdc_binlog_gbk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
     def mk_row(rid: int, status: str) -> dict:
         # name: CJK - ASCII-trail char; tag: 2 CJK; memo: ascii run +
         # one CJK tail — all codepoint arithmetic the oracle recomputes
@@ -115,24 +112,20 @@ def cdc_binlog_gbk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "memo": "x" * (rid % 7) + chr(0x4E00 + (rid * 7) % 20000),
         }
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.id),
-                    "op": "w",
-                    "rows": [mk_row(int(r.id), r.status)],
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            blob = build_binlog_file(
-                "tpch", "orders_gbk", target, txns, checksum=True
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.id),
+                "op": "w",
+                "rows": [mk_row(int(r.id), r.status)],
+            }
+            for r in pdf.itertuples(index=False)
+        ]
+        return build_binlog_file(
+            "tpch", "orders_gbk", target, txns, checksum=True
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
 
     cols = ["id", "status", "name", "tag", "memo", "__gtid"]
     out_schema = T.StructType(
@@ -147,25 +140,22 @@ def cdc_binlog_gbk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scalar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                b = bytes(blob)
+            for blob in pdf["content"]:
                 rows = decode_binlog_bytes(
-                    b, target, "tpch", "orders_gbk"
+                    bytes(blob), target, "tpch", "orders_gbk"
                 )
                 scal = pd.DataFrame(
                     {n: [r.get(n) for r in rows] for n in cols}
                 )
                 scal.insert(0, "kernel", "scalar")
                 yield scal
-                vec = decode_binlog_pandas(
-                    b, target, "tpch", "orders_gbk"
-                )[cols].copy()
-                vec.insert(0, "kernel", "vec")
-                yield vec
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    vec = _decode_files(files, target, "tpch", "orders_gbk").select(
+        F.lit("vec").alias("kernel"), *cols
+    )
+    decoded = files.mapInPandas(scalar, schema=out_schema).unionByName(vec)
     cp = F.ascii  # full codepoint of the first char (JVM codePointAt)
     return decoded.groupBy("kernel", "status").agg(
         F.count("*").alias("n_rows"),
@@ -257,10 +247,10 @@ def cdc_binlog_table_rename_decode(
     changes n_rows AND the poisoned sums)."""
     import pandas as pd
 
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-        decode_binlog_bytes,
     )
     from mysql_cdc_table_spark.sources.mysql_ddl import (
         SchemaHistory,
@@ -292,103 +282,84 @@ def cdc_binlog_table_rename_decode(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(pdf: pd.DataFrame) -> bytes:
         from decimal import Decimal as _D
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pre: list = [{"gno": 1, "ddl": _RT_CREATE}]
-            gho: list = [{"gno": 2, "ddl": _RT_GHOST}]
-            post: list = []
-            parked: list = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                if rid % 3 == 0:  # generation-0 inserts
-                    pre.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price2,
-                                 "flag": r.flag}
-                            ],
-                        }
-                    )
-                elif rid % 3 == 1:  # post-cut-over inserts
-                    post.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price4,
-                                 "note": r.note, "flag": r.flag}
-                            ],
-                        }
-                    )
-                else:  # id%3==2: poisoned backfill + parked-table decoys
-                    gho.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "price": r.price4 + _D("1000"),
-                                    "note": "backfill-leak",
-                                    "flag": "XX",
-                                }
-                            ],
-                        }
-                    )
-                    parked.append(
-                        {
-                            "gno": rid * 100,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "price": r.price2 + _D("1000"),
-                                    "flag": "ZZ",
-                                }
-                            ],
-                        }
-                    )
-            gho.append({"gno": 3, "ddl": _RT_CUTOVER})
-            blob = build_binlog_file(
-                "tpch", "orders", gen0, pre, checksum=True
-            )
-            blob += build_binlog_file(
-                "tpch", "_orders_gho", ghost, gho, checksum=True
-            )[4:]
-            blob += build_binlog_file(
-                "tpch", "orders", ghost, post, checksum=True
-            )[4:]
-            blob += build_binlog_file(
-                "tpch", "_orders_del", gen0, parked, checksum=True
-            )[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(ghost)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                hist = SchemaHistory("orders", database="tpch")
-                rows = decode_binlog_bytes(
-                    bytes(blob), None, "tpch", "orders",
-                    schema_history=hist,
+        pre: list = [{"gno": 1, "ddl": _RT_CREATE}]
+        gho: list = [{"gno": 2, "ddl": _RT_GHOST}]
+        post: list = []
+        parked: list = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            if rid % 3 == 0:  # generation-0 inserts
+                pre.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {"id": rid, "price": r.price2,
+                             "flag": r.flag}
+                        ],
+                    }
                 )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
+            elif rid % 3 == 1:  # post-cut-over inserts
+                post.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {"id": rid, "price": r.price4,
+                             "note": r.note, "flag": r.flag}
+                        ],
+                    }
                 )
+            else:  # id%3==2: poisoned backfill + parked-table decoys
+                gho.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {
+                                "id": rid,
+                                "price": r.price4 + _D("1000"),
+                                "note": "backfill-leak",
+                                "flag": "XX",
+                            }
+                        ],
+                    }
+                )
+                parked.append(
+                    {
+                        "gno": rid * 100,
+                        "op": "w",
+                        "rows": [
+                            {
+                                "id": rid,
+                                "price": r.price2 + _D("1000"),
+                                "flag": "ZZ",
+                            }
+                        ],
+                    }
+                )
+        gho.append({"gno": 3, "ddl": _RT_CUTOVER})
+        blob = build_binlog_file(
+            "tpch", "orders", gen0, pre, checksum=True
+        )
+        blob += build_binlog_file(
+            "tpch", "_orders_gho", ghost, gho, checksum=True
+        )[4:]
+        blob += build_binlog_file(
+            "tpch", "orders", ghost, post, checksum=True
+        )[4:]
+        blob += build_binlog_file(
+            "tpch", "_orders_del", gen0, parked, checksum=True
+        )[4:]
+        return blob
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), ghost, "tpch", "orders",
+        schema_history=SchemaHistory("orders", database="tpch"),
+    )
     return decoded.groupBy(
         (F.col("id") % 3).cast("long").alias("gen")
     ).agg(
@@ -515,12 +486,10 @@ def cdc_binlog_charset_migration(
     pin both codecs and the boundary in the value hash."""
     import pandas as pd
 
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-    )
-    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-        decode_binlog_pandas,
     )
     from mysql_cdc_table_spark.sources.mysql_ddl import (
         SchemaHistory,
@@ -537,70 +506,54 @@ def cdc_binlog_charset_migration(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        t0: list = [{"gno": 1, "ddl": _CM_CREATE}]
+        t1: list = [{"gno": 2, "ddl": _CM_CONVERT}]
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            if rid % 2 == 0:  # latin1 generation
+                t0.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {
+                                "id": rid,
+                                "city": chr(0xC0 + rid % 24) + "v"
+                                + chr(0xA1 + rid % 16),
+                                "note": "n" + chr(0xE8 + rid % 8),
+                            }
+                        ],
+                    }
+                )
+            else:  # gbk generation (post-CONVERT)
+                t1.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {
+                                "id": rid,
+                                "city": chr(0x4E00 + rid % 20000),
+                                "note": chr(0x4E02 + rid % 93) + "x",
+                                "tag": chr(0x4E00 + rid % 26)
+                                + chr(0x4E00 + (rid // 26) % 26),
+                            }
+                        ],
+                    }
+                )
+        blob = build_binlog_file(
+            "tpch", "orders", gen0, t0, checksum=True
+        )
+        blob += build_binlog_file(
+            "tpch", "orders", gen1, t1, checksum=True
+        )[4:]
+        return blob
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t0: list = [{"gno": 1, "ddl": _CM_CREATE}]
-            t1: list = [{"gno": 2, "ddl": _CM_CONVERT}]
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                if rid % 2 == 0:  # latin1 generation
-                    t0.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "city": chr(0xC0 + rid % 24) + "v"
-                                    + chr(0xA1 + rid % 16),
-                                    "note": "n" + chr(0xE8 + rid % 8),
-                                }
-                            ],
-                        }
-                    )
-                else:  # gbk generation (post-CONVERT)
-                    t1.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "city": chr(0x4E00 + rid % 20000),
-                                    "note": chr(0x4E02 + rid % 93) + "x",
-                                    "tag": chr(0x4E00 + rid % 26)
-                                    + chr(0x4E00 + (rid // 26) % 26),
-                                }
-                            ],
-                        }
-                    )
-            blob = build_binlog_file(
-                "tpch", "orders", gen0, t0, checksum=True
-            )
-            blob += build_binlog_file(
-                "tpch", "orders", gen1, t1, checksum=True
-            )[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(gen1)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                hist = SchemaHistory("orders", database="tpch")
-                yield decode_binlog_pandas(
-                    bytes(blob), None, "tpch", "orders",
-                    schema_history=hist,
-                )[names]
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), gen1, "tpch", "orders",
+        schema_history=SchemaHistory("orders", database="tpch"),
+    )
     cp = F.ascii
     return decoded.groupBy(
         (F.col("id") % 2).cast("long").alias("gen")
@@ -684,10 +637,10 @@ def cdc_binlog_ddl_drop_recreate(
     its OWN metadata, never the stream)."""
     import pandas as pd
 
-    from mysql_cdc_table_spark.cdc.schema import changelog_schema
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-        decode_binlog_bytes,
     )
     from mysql_cdc_table_spark.sources.mysql_ddl import (
         SchemaHistory,
@@ -719,67 +672,48 @@ def cdc_binlog_ddl_drop_recreate(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t0: list = [{"gno": 1, "ddl": _DR_CREATE1}]
-            t1: list = [
-                {"gno": 2, "ddl": "DROP TABLE `tpch`.`orders`"},
-                {"gno": 3, "ddl": _DR_CREATE2},
-            ]
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                if rid % 3 == 0:
-                    t0.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price2,
-                                 "flag": r.flag}
-                            ],
-                        }
-                    )
-                elif rid % 3 == 1:
-                    t1.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price4,
-                                 "note": r.note}
-                            ],
-                        }
-                    )
-            blob = build_binlog_file(
-                "tpch", "orders", gen0, t0, checksum=True
-            )
-            blob += build_binlog_file(
-                "tpch", "orders", gen1, t1, checksum=True
-            )[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(gen1)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                hist = SchemaHistory("orders", database="tpch")
-                rows = decode_binlog_bytes(
-                    bytes(blob), None, "tpch", "orders",
-                    schema_history=hist,
+    def build(pdf: pd.DataFrame) -> bytes:
+        t0: list = [{"gno": 1, "ddl": _DR_CREATE1}]
+        t1: list = [
+            {"gno": 2, "ddl": "DROP TABLE `tpch`.`orders`"},
+            {"gno": 3, "ddl": _DR_CREATE2},
+        ]
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            if rid % 3 == 0:
+                t0.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {"id": rid, "price": r.price2,
+                             "flag": r.flag}
+                        ],
+                    }
                 )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
+            elif rid % 3 == 1:
+                t1.append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {"id": rid, "price": r.price4,
+                             "note": r.note}
+                        ],
+                    }
                 )
+        blob = build_binlog_file(
+            "tpch", "orders", gen0, t0, checksum=True
+        )
+        blob += build_binlog_file(
+            "tpch", "orders", gen1, t1, checksum=True
+        )[4:]
+        return blob
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), gen1, "tpch", "orders",
+        schema_history=SchemaHistory("orders", database="tpch"),
+    )
     return decoded.groupBy(
         (F.col("id") % 3).cast("long").alias("gen")
     ).agg(
@@ -1125,8 +1059,9 @@ def cdc_binlog_ddl_multi_table_decode(
     import pandas as pd
 
     from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _decode_files,
+        _encode_files,
         build_binlog_file,
-        decode_binlog_bytes,
     )
     from mysql_cdc_table_spark.sources.mysql_ddl import (
         SchemaHistory,
@@ -1153,113 +1088,89 @@ def cdc_binlog_ddl_multi_table_decode(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            segs: list[tuple] = [
-                ("heads", a0, [{"gno": 1, "ddl": _MT_A_CREATE}]),
-                ("lines", b0, [{"gno": 2, "ddl": _MT_B_CREATE}]),
-                ("heads", a1, [{"gno": 3, "ddl": _MT_A_ALTER}]),
-                (
-                    "linedata",
-                    b1,
-                    [
-                        {"gno": 4, "ddl": _MT_B_ALTER},
-                        {"gno": 5, "ddl": _MT_B_RENAME},
-                    ],
-                ),
-            ]
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                cls = rid % 4
-                if cls == 0:  # heads generation 0
-                    segs[0][2].append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [{"id": rid, "price": r.price}],
-                        }
-                    )
-                elif cls == 1:  # lines generation 0
-                    segs[1][2].append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [{"id": rid, "qty": int(r.qty)}],
-                        }
-                    )
-                elif cls == 2:  # heads generation 1 (has status)
-                    segs[2][2].append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price,
-                                 "status": r.status}
-                            ],
-                        }
-                    )
-                else:  # linedata generation 1 (renamed + retyped)
-                    segs[3][2].append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [{"id": rid, "quantity": int(r.qty)}],
-                        }
-                    )
-            blob = b""
-            for i, (tbl, sch, txns) in enumerate(segs):
-                part = build_binlog_file(
-                    "tpch", tbl, sch, txns, checksum=True
-                )
-                blob += part if i == 0 else part[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("tbl", T.StringType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("val", T.LongType()),
-            T.StructField("aux", T.LongType()),
-            T.StructField("gtid", T.LongType()),
+    def build(pdf: pd.DataFrame) -> bytes:
+        segs: list[tuple] = [
+            ("heads", a0, [{"gno": 1, "ddl": _MT_A_CREATE}]),
+            ("lines", b0, [{"gno": 2, "ddl": _MT_B_CREATE}]),
+            ("heads", a1, [{"gno": 3, "ddl": _MT_A_ALTER}]),
+            (
+                "linedata",
+                b1,
+                [
+                    {"gno": 4, "ddl": _MT_B_ALTER},
+                    {"gno": 5, "ddl": _MT_B_RENAME},
+                ],
+            ),
         ]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                b = bytes(blob)
-                ha = SchemaHistory("heads", database="tpch")
-                rows_a = decode_binlog_bytes(
-                    b, None, "tpch", "heads", schema_history=ha
-                )
-                hb = SchemaHistory("lines", database="tpch")
-                rows_b = decode_binlog_bytes(
-                    b, None, "tpch", "linedata", schema_history=hb
-                )
-                yield pd.DataFrame(
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            cls = rid % 4
+            if cls == 0:  # heads generation 0
+                segs[0][2].append(
                     {
-                        "tbl": ["A"] * len(rows_a) + ["B"] * len(rows_b),
-                        "id": [r["id"] for r in rows_a]
-                        + [r["id"] for r in rows_b],
-                        "val": [int(r["price"] * 100) for r in rows_a]
-                        + [int(r["quantity"]) for r in rows_b],
-                        "aux": [
-                            0 if r.get("status") is None else 1
-                            for r in rows_a
-                        ]
-                        + [0] * len(rows_b),
-                        "gtid": [r["__gtid"] - 10 for r in rows_a]
-                        + [r["__gtid"] - 10 for r in rows_b],
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [{"id": rid, "price": r.price}],
                     }
                 )
+            elif cls == 1:  # lines generation 0
+                segs[1][2].append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [{"id": rid, "qty": int(r.qty)}],
+                    }
+                )
+            elif cls == 2:  # heads generation 1 (has status)
+                segs[2][2].append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [
+                            {"id": rid, "price": r.price,
+                             "status": r.status}
+                        ],
+                    }
+                )
+            else:  # linedata generation 1 (renamed + retyped)
+                segs[3][2].append(
+                    {
+                        "gno": rid + 10,
+                        "op": "w",
+                        "rows": [{"id": rid, "quantity": int(r.qty)}],
+                    }
+                )
+        blob = b""
+        for i, (tbl, sch, txns) in enumerate(segs):
+            part = build_binlog_file(
+                "tpch", tbl, sch, txns, checksum=True
+            )
+            blob += part if i == 0 else part[4:]
+        return blob
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    files = _encode_files(base, build)
+    # each table decodes with its own history seed over the SAME bytes
+    heads = _decode_files(
+        files, a1, "tpch", "heads",
+        schema_history=SchemaHistory("heads", database="tpch"),
+    ).select(
+        F.lit("A").alias("tbl"),
+        "id",
+        (F.col("price") * 100).cast("long").alias("val"),
+        F.col("status").isNotNull().cast("long").alias("aux"),
+        (F.col("__gtid") - 10).alias("gtid"),
+    )
+    lines = _decode_files(
+        files, b1, "tpch", "linedata",
+        schema_history=SchemaHistory("lines", database="tpch"),
+    ).select(
+        F.lit("B").alias("tbl"),
+        "id",
+        F.col("quantity").cast("long").alias("val"),
+        F.lit(0).cast("long").alias("aux"),
+        (F.col("__gtid") - 10).alias("gtid"),
+    )
+    decoded = heads.unionByName(lines)
     return decoded.groupBy(
         "tbl", (F.col("id") % 4).cast("long").alias("cls")
     ).agg(

@@ -2858,8 +2858,18 @@ _FILE_NUM = re.compile(r"(\d+)(?:\.bin)?$")
 
 
 def _file_seq_of(path: str) -> int:
+    """The rotation number a binlog file name ends in; it becomes
+    ``__file_seq`` (IntegerType), so a number past int32 is refused
+    rather than wrapped."""
     m = _FILE_NUM.search(path)
-    return int(m.group(1)) if m else 0
+    if not m:
+        return 0
+    n = int(m.group(1))
+    if n > 0x7FFFFFFF:
+        raise ValueError(
+            f"{path}: binlog file number {n} does not fit __file_seq (int32)"
+        )
+    return n
 
 
 def _strip_file_scheme(path: str) -> str:
@@ -2910,7 +2920,12 @@ def _decode_files(
     table: str,
     gtid_format: str = "long",
     capture_query: bool = False,
+    schema_history=None,
 ) -> DataFrame:
+    """Decode ``(path, content)`` rows through the columnar kernel.
+    With ``schema_history`` (a ``mysql_ddl.SchemaHistory`` seed) each
+    file decodes from its own copy of the seed, folding the file's DDL
+    as it streams past; ``target`` is then the layout the fold ends at."""
     # binaryFile materializes each file whole, so per-task memory is
     # ~one binlog file (MySQL rotates at max_binlog_size, 1 GiB default
     # — bounded by server config, not by history length). The output is
@@ -2918,6 +2933,8 @@ def _decode_files(
     # stays scalar (headers/CRC/state), but row-image VALUES decode
     # through the numpy kernel and come out as Arrow batches with no
     # Python row objects on the scan path.
+    import copy
+
     from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
         decode_binlog_record_batches,
     )
@@ -2937,11 +2954,36 @@ def _decode_files(
                     file_seq=_file_seq_of(str(paths[i].as_py())),
                     gtid_format=gtid_format,
                     capture_query=capture_query,
+                    schema_history=copy.deepcopy(schema_history),
                 )
 
     return files.select("path", "content").mapInArrow(
         walk_arrow, schema=out_schema
     )
+
+
+def _encode_files(df: DataFrame, build, seq_base: int = 0) -> DataFrame:
+    """Encode ``df`` as binlog files: ``build(pdf) -> bytes`` frames each
+    non-empty batch as one file. Returns ``(path, content)`` rows, the
+    shape ``_decode_files`` and ``_stage_binlog_files`` read. Names are
+    ``binlog.p{partition}.{seq_base + n}``: unique for any partition
+    count, and only the per-partition counter reaches ``__file_seq``,
+    so it stays inside int32."""
+    import pandas as pd
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        n = seq_base
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            name = f"binlog.p{pid}.{n:06d}"
+            n += 1
+            yield pd.DataFrame({"path": [name], "content": [build(pdf)]})
+
+    return df.mapInPandas(run, schema="path string, content binary")
 
 
 def mysql_binlog_read(
@@ -5165,66 +5207,47 @@ def cdc_mysql_binlog_roundtrip(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                # keys already in MySQL's canonical (length, bytes) key
-                # order so decode(encode(text)) reproduces text exactly
-                props = (
-                    f'{{"k":{rid % 10007},"s":"{r.status}",'
-                    f'"arr":[{rid % 3},null,true]}}'
-                )
-                row = {
-                    "id": rid,
-                    "price": r.price,
-                    "status": r.status,
-                    "odate": r.odate,
-                    "props": props,
-                    "flag": r.flag,
-                    "took": r.took,
-                    "note": r.note,
-                }
-                if row["id"] % 10 == 0:
-                    before = dict(row, price=row["price"] + _D(1))
-                    txns.append({"gno": row["id"], "op": "u", "rows": [(before, row)]})
-                else:
-                    txns.append({"gno": row["id"], "op": "w", "rows": [row]})
-            # checksum=True mirrors MySQL 8's default binlog_checksum=
-            # CRC32, so the driver's value hash covers CRC write AND
-            # the reader's verify-on-decode (round 5)
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, payload_wrap=payload_wrap,
-                checksum=True,
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            # keys already in MySQL's canonical (length, bytes) key
+            # order so decode(encode(text)) reproduces text exactly
+            props = (
+                f'{{"k":{rid % 10007},"s":"{r.status}",'
+                f'"arr":[{rid % 3},null,true]}}'
             )
-            yield pd.DataFrame({"file_bytes": [blob]})
+            row = {
+                "id": rid,
+                "price": r.price,
+                "status": r.status,
+                "odate": r.odate,
+                "props": props,
+                "flag": r.flag,
+                "took": r.took,
+                "note": r.note,
+            }
+            if row["id"] % 10 == 0:
+                before = dict(row, price=row["price"] + _D(1))
+                txns.append({"gno": row["id"], "op": "u", "rows": [(before, row)]})
+            else:
+                txns.append({"gno": row["id"], "op": "w", "rows": [row]})
+        # checksum=True mirrors MySQL 8's default binlog_checksum=
+        # CRC32, so the driver's value hash covers CRC write AND
+        # the reader's verify-on-decode (round 5)
+        return build_binlog_file(
+            "tpch", "orders", target, txns, payload_wrap=payload_wrap,
+            checksum=True,
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
+    files = _encode_files(base, build)
 
     if _via == "parallel":
         decoded = _stage_and_read_parallel(
             spark, sf_dir, files, target, payload_wrap
         )
     else:
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for blob in pdf["file_bytes"]:
-                    rows = decode_binlog_bytes(
-                        bytes(blob), target, "tpch", "orders"
-                    )
-                    yield pd.DataFrame(
-                        {n: [r.get(n) for r in rows] for n in names}
-                    )
-
-        decoded = files.mapInPandas(decode, schema=out_schema)
+        decoded = _decode_files(files, target, "tpch", "orders")
 
     after = F.col("__op").isin(CDC_INSERT, CDC_UPDATE_AFTER)
     return decoded.groupBy("status").agg(
@@ -5288,20 +5311,18 @@ def cdc_mysql_binlog_roundtrip(
 def _stage_binlog_files(
     spark: SparkSession, files: DataFrame, tag_seed: str
 ) -> str:
-    """Write encoded binlog blobs (one ``file_bytes`` column) to a
-    per-application staging dir and return its path. (partition,
-    counter) file names — unique within a run for ANY partition count;
-    the dir is wiped before each invocation so partition-count changes
-    can't leave stale files, and an atexit hook removes it when the
-    driver exits. The trailing digits (= the per-partition counter)
-    become __file_seq; duplicates across partitions are harmless for
-    aggregates that never read ordering columns."""
+    """Write ``(path, content)`` rows (``_encode_files``) to a
+    per-application staging dir, each under its ``path`` name, and
+    return the dir. The dir is wiped before each invocation so a
+    changed partition count can't leave stale files, and an atexit
+    hook removes it when the driver exits."""
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from mysql_cdc_table_spark.sources import fs as _hfs
 
@@ -5315,72 +5336,14 @@ def _stage_binlog_files(
     if _hfs.exists(spark, stage):
         _hfs.delete(spark, stage)
     os.makedirs(stage, exist_ok=True)
-    import atexit
-    import shutil
-
     atexit.register(shutil.rmtree, stage, ignore_errors=True)
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        # "p{pid}." + counter names are unique for ANY partition id (a
-        # content-hash name could collide two distinct blobs and
-        # silently overwrite one file's transactions; concatenated
-        # digit runs stop being injective past 999 partitions). Only
-        # the trailing counter digits feed _file_seq_of, keeping
-        # __file_seq inside int32 regardless of partition count.
-        pid = TaskContext.get().partitionId()
-        counter = 0
         for pdf in batches:
-            for blob in pdf["file_bytes"]:
+            for path, blob in zip(pdf["path"], pdf["content"]):
                 b = bytes(blob)
-                name = f"binlog.p{pid}.{counter:06d}"
-                counter += 1
+                name = os.path.basename(str(path))
                 with open(os.path.join(stage, name), "wb") as fh:
-                    fh.write(b)
-                yield pd.DataFrame({"n": [len(b)]})
-
-    files.mapInPandas(write, schema="n long").agg(F.sum("n")).collect()
-    return stage
-
-
-def _stage_binlog_series(
-    spark: SparkSession, files: DataFrame, tag_seed: str
-) -> str:
-    """Stage (fseq, file_bytes) rows as a rotation-ordered binlog
-    SERIES: names are ``binlog.{fseq:06d}`` so the caller controls the
-    rotation order exactly (``_stage_binlog_files`` names by partition
-    + counter, which cannot express a cross-partition series). Same
-    wipe/atexit/per-application-dir contract."""
-    import hashlib
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_table_spark.sources import fs as _hfs
-
-    tag = hashlib.md5(
-        f"{tag_seed}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"cdc_series_binlogs_{tag}")
-    if _hfs.exists(spark, stage):
-        _hfs.delete(spark, stage)
-    os.makedirs(stage, exist_ok=True)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fseq, blob in zip(pdf["fseq"], pdf["file_bytes"]):
-                b = bytes(blob)
-                with open(
-                    os.path.join(stage, f"binlog.{int(fseq):06d}"), "wb"
-                ) as fh:
                     fh.write(b)
                 yield pd.DataFrame({"n": [len(b)]})
 
@@ -5447,45 +5410,29 @@ def cdc_binlog_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            row = {"id": int(r.id), "price": r.price, "status": r.status}
+            if row["id"] % 10 == 0:
+                before = dict(row, price=row["price"] + _D(1))
+                txns.append(
+                    {"gno": row["id"], "op": "u", "rows": [(before, row)]}
+                )
+            else:
+                txns.append({"gno": row["id"], "op": "w", "rows": [row]})
+            if row["id"] % 17 == 0:
+                txns.append(
+                    {
+                        "gno": row["id"] + 1_000_000_000,
+                        "op": "d",
+                        "rows": [row],
+                    }
+                )
+        return build_binlog_file("tpch", "orders", target, txns)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                row = {"id": int(r.id), "price": r.price, "status": r.status}
-                if row["id"] % 10 == 0:
-                    before = dict(row, price=row["price"] + _D(1))
-                    txns.append(
-                        {"gno": row["id"], "op": "u", "rows": [(before, row)]}
-                    )
-                else:
-                    txns.append({"gno": row["id"], "op": "w", "rows": [row]})
-                if row["id"] % 17 == 0:
-                    txns.append(
-                        {
-                            "gno": row["id"] + 1_000_000_000,
-                            "op": "d",
-                            "rows": [row],
-                        }
-                    )
-            yield pd.DataFrame(
-                {"file_bytes": [build_binlog_file("tpch", "orders", target, txns)]}
-            )
-
-    files = base.mapInPandas(encode, schema=file_schema)
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(bytes(blob), target, "tpch", "orders")
-                yield pd.DataFrame({n: [r.get(n) for r in rows] for n in names})
-
-    live = latest_state(files.mapInPandas(decode, schema=out_schema), ["id"])
+    files = _encode_files(base, build)
+    live = latest_state(_decode_files(files, target, "tpch", "orders"), ["id"])
     return live.groupBy("status").agg(
         F.count("*").alias("n_live"),
         F.sum((F.col("price") * 100).cast("long")).alias("cents_sum"),
@@ -5541,43 +5488,29 @@ def cdc_binlog_schema_evolution(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        old_txns, new_txns = [], []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            if rid % 2 == 0:  # pre-ALTER generation
+                old_txns.append(
+                    {"gno": rid, "op": "w",
+                     "rows": [{"id": rid, "price": r.price}]}
+                )
+            else:
+                new_txns.append(
+                    {"gno": rid, "op": "w",
+                     "rows": [{"id": rid, "price": r.price,
+                               "status": r.status}]}
+                )
+        blob = build_binlog_file("tpch", "orders", old_target, old_txns)
+        # the ALTER: a new TABLE_MAP generation in the same stream
+        blob += build_binlog_file("tpch", "orders", target, new_txns)[4:]
+        return blob
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            old_txns, new_txns = [], []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                if rid % 2 == 0:  # pre-ALTER generation
-                    old_txns.append(
-                        {"gno": rid, "op": "w",
-                         "rows": [{"id": rid, "price": r.price}]}
-                    )
-                else:
-                    new_txns.append(
-                        {"gno": rid, "op": "w",
-                         "rows": [{"id": rid, "price": r.price,
-                                   "status": r.status}]}
-                    )
-            blob = build_binlog_file("tpch", "orders", old_target, old_txns)
-            # the ALTER: a new TABLE_MAP generation in the same stream
-            blob += build_binlog_file("tpch", "orders", target, new_txns)[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(bytes(blob), target, "tpch", "orders")
-                yield pd.DataFrame({n: [r.get(n) for r in rows] for n in names})
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), target, "tpch", "orders"
+    )
     return decoded.groupBy(
         F.col("status").isNotNull().alias("post_alter")
     ).agg(
@@ -5646,61 +5579,34 @@ def cdc_binlog_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            o_txns, a_txns = [], []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                o_txns.append(
-                    {"gno": 2 * rid, "op": "w",
-                     "rows": [{"id": rid, "price": r.price}]}
-                )
-                a_txns.append(
-                    {"gno": 2 * rid + 1, "op": "w",
-                     "rows": [{"id": rid, "status": r.status,
-                               "note": f"n{rid % 97}"}]}
-                )
-            blob = build_binlog_file_multi(
-                [
-                    {"db": "tpch", "table": "orders", "target": orders_t,
-                     "table_id": 23, "txns": o_txns},
-                    {"db": "tpch", "table": "orders_audit", "target": audit_t,
-                     "table_id": 24, "txns": a_txns},
-                ]
+    def build(pdf: pd.DataFrame) -> bytes:
+        o_txns, a_txns = [], []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            o_txns.append(
+                {"gno": 2 * rid, "op": "w",
+                 "rows": [{"id": rid, "price": r.price}]}
             )
-            yield pd.DataFrame({"file_bytes": [blob]})
+            a_txns.append(
+                {"gno": 2 * rid + 1, "op": "w",
+                 "rows": [{"id": rid, "status": r.status,
+                           "note": f"n{rid % 97}"}]}
+            )
+        return build_binlog_file_multi(
+            [
+                {"db": "tpch", "table": "orders", "target": orders_t,
+                 "table_id": 23, "txns": o_txns},
+                {"db": "tpch", "table": "orders_audit", "target": audit_t,
+                 "table_id": 24, "txns": a_txns},
+            ]
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    def make_decoder(target: T.StructType, table: str, names: list[str]):
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for blob in pdf["file_bytes"]:
-                    rows = decode_binlog_bytes(
-                        bytes(blob), target, "tpch", table
-                    )
-                    yield pd.DataFrame(
-                        {n: [r.get(n) for r in rows] for n in names}
-                    )
-        return decode
-
-    o_schema = changelog_schema(orders_t)
-    a_schema = changelog_schema(audit_t)
-    o_names = [f.name for f in o_schema.fields]
-    a_names = [f.name for f in a_schema.fields]
+    files = _encode_files(base, build)
     # No persist: encode is deterministic, so letting each decode branch
     # recompute it costs one extra linear pass but leaks no cached
     # blocks across the bench's repeated invocations of this query.
-    orders_cl = files.mapInPandas(
-        make_decoder(orders_t, "orders", o_names), schema=o_schema
-    )
-    audit_cl = files.mapInPandas(
-        make_decoder(audit_t, "orders_audit", a_names), schema=a_schema
-    )
+    orders_cl = _decode_files(files, orders_t, "tpch", "orders")
+    audit_cl = _decode_files(files, audit_t, "tpch", "orders_audit")
     o_agg = orders_cl.agg(
         F.lit("orders").alias("src_table"),
         F.count("*").alias("n_rows"),
@@ -5796,56 +5702,41 @@ def cdc_binlog_partial_json_roundtrip(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            before = {
+                "id": rid,
+                "price": r.price,
+                "status": r.status,
+                "props": (
+                    f'{{"k":{rid % 10007},"s":"{r.status}",'
+                    f'"arr":[{rid % 3},null,true],"drop":"x"}}'
+                ),
+            }
+            after = {
+                "id": rid,
+                "price": r.price + _D(1),
+                "status": r.status,
+                # props deliberately absent: it travels as diffs
+            }
+            diffs = {
+                "props": [
+                    ("replace", "$.k", rid % 211),
+                    ("insert", "$.new", rid % 7),
+                    ("remove", "$.drop", None),
+                    ("replace", "$.arr[1]", rid % 5),
+                ]
+            }
+            txns.append(
+                {"gno": rid, "op": "pu", "rows": [(before, after, diffs)]}
+            )
+        return build_binlog_file("tpch", "orders", target, txns)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                before = {
-                    "id": rid,
-                    "price": r.price,
-                    "status": r.status,
-                    "props": (
-                        f'{{"k":{rid % 10007},"s":"{r.status}",'
-                        f'"arr":[{rid % 3},null,true],"drop":"x"}}'
-                    ),
-                }
-                after = {
-                    "id": rid,
-                    "price": r.price + _D(1),
-                    "status": r.status,
-                    # props deliberately absent: it travels as diffs
-                }
-                diffs = {
-                    "props": [
-                        ("replace", "$.k", rid % 211),
-                        ("insert", "$.new", rid % 7),
-                        ("remove", "$.drop", None),
-                        ("replace", "$.arr[1]", rid % 5),
-                    ]
-                }
-                txns.append(
-                    {"gno": rid, "op": "pu", "rows": [(before, after, diffs)]}
-                )
-            blob = build_binlog_file("tpch", "orders", target, txns)
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(bytes(blob), target, "tpch", "orders")
-                yield pd.DataFrame({n: [r.get(n) for r in rows] for n in names})
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), target, "tpch", "orders"
+    )
 
     bef = F.col("__op") == CDC_UPDATE_BEFORE
     aft = F.col("__op") == CDC_UPDATE_AFTER
@@ -6030,49 +5921,30 @@ def cdc_binlog_legacy_temporal_roundtrip(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.id),
+                "op": "w",
+                "rows": [
+                    {
+                        "id": int(r.id),
+                        "ts": r.ts,
+                        "dtm": r.dtm,
+                        "dur": r.dur,
+                        "status": r.status,
+                    }
+                ],
+            }
+            for r in pdf.itertuples(index=False)
+        ]
+        return build_binlog_file(
+            "tpch", "orders_legacy", target, txns, checksum=True
+        )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.id),
-                    "op": "w",
-                    "rows": [
-                        {
-                            "id": int(r.id),
-                            "ts": r.ts,
-                            "dtm": r.dtm,
-                            "dur": r.dur,
-                            "status": r.status,
-                        }
-                    ],
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            blob = build_binlog_file(
-                "tpch", "orders_legacy", target, txns, checksum=True
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(
-                    bytes(blob), target, "tpch", "orders_legacy"
-                )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
-                )
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), target, "tpch", "orders_legacy"
+    )
     return decoded.groupBy("status").agg(
         F.count("*").alias("n_rows"),
         F.sum(F.unix_timestamp("ts")).alias("ts_sum"),
@@ -6098,138 +5970,48 @@ def cdc_binlog_legacy_temporal_roundtrip(
     )
 
 
-def cdc_binlog_ddl_schema_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scalar-walk schema-history decode — see ``_cdc_binlog_ddl_decode``."""
-    return _cdc_binlog_ddl_decode(spark, sf_dir, vec=False)
+_DDL_CREATE = (
+    "CREATE TABLE `tpch`.`orders` (\n"
+    "  `id` BIGINT NOT NULL,\n"
+    "  `price` DECIMAL(12,2) DEFAULT '0.00',\n"
+    "  `flag` CHAR(2) COMMENT 'country, flag',\n"
+    "  `note` TEXT,\n"
+    "  PRIMARY KEY (`id`)\n"
+    ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4"
+)
+_DDL_ALTER = (
+    "ALTER TABLE `tpch`.`orders` "
+    "ADD COLUMN `status` ENUM('F','O','P') NOT NULL, "
+    "ADD COLUMN `took` TIME(3) NULL, "
+    "ADD INDEX `i_status` (`status`)"
+)
+_DDL_ALTER2 = (
+    "ALTER TABLE `tpch`.`orders` "
+    "MODIFY COLUMN `price` DECIMAL(14,4), "
+    "CHANGE COLUMN `flag` `cflag` CHAR(2), "
+    "RENAME COLUMN `note` TO `memo`"
+)
 
 
-def cdc_binlog_ddl_vec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME three-generation DDL-history fixture through the
-    COLUMNAR Arrow kernel (round 15; previously the one decode path
-    pinned to the scalar walk): ``decode_binlog_record_batches(
-    schema_history=...)`` pre-walks the log's DDL headers to learn the
-    final generation, batches each generation's rows vectorized, and
-    places columns by identity with type casts at flush. Shares
-    ``cdc_binlog_ddl_schema_decode``'s oracle verbatim — the two
-    kernels must produce identical aggregates from identical bytes."""
-    return _cdc_binlog_ddl_decode(spark, sf_dir, vec=True)
+def _ddl_generations() -> list[tuple[str, T.StructType]]:
+    """The DDL-history fixture's three ``(statement, layout)``
+    generations. The encode layouts come from the DDL itself — the
+    same replay the decode side performs (a mis-parse would break
+    encode and decode SYMMETRICALLY, which is why the value hash pins
+    raw column expressions, not a roundtrip identity)."""
+    from mysql_cdc_table_spark.sources.mysql_ddl import schema_from_ddl_history
+
+    ddls = [_DDL_CREATE, _DDL_ALTER, _DDL_ALTER2]
+    return [
+        (d, schema_from_ddl_history(ddls[: g + 1], "tpch.orders"))
+        for g, d in enumerate(ddls)
+    ]
 
 
-def cdc_binlog_ddl_split_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The SAME three-generation fixture decoded as PARALLEL
-    transaction-aligned byte ranges (round 15): every blob header-walks
-    into ~tens of small ranges (``scan_binlog_splits_ddl`` carries the
-    DDL prefix per range), each range decodes INDEPENDENTLY — a fresh
-    ``SchemaHistory`` seeded from its prefix, in-range DDL folding as
-    it streams past, rows remapped from the range-final onto the
-    FILE-final generation by column identity — and the union must
-    aggregate identically to the whole-file walk (the oracle is shared
-    verbatim). This closes the last pinned decode path: a 100 GB
-    multi-generation binlog now spreads across executors exactly like
-    the fixed-schema parallel scan, DDL and all."""
-    return _cdc_binlog_ddl_decode(spark, sf_dir, vec=False, split=True)
-
-
-def cdc_binlog_ddl_series_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The SAME three generations spread across a ROTATED THREE-FILE
-    series (round 15): binlog.000001 carries the CREATE + generation-0
-    rows, .000002 the ADD ALTER + its rows, .000003 the
-    MODIFY/CHANGE/RENAME ALTER + its rows — so the layout governing a
-    file's rows was declared in an EARLIER file, the cross-file half
-    of Debezium's schema-history contract. The read is the
-    zero-declaration entry point ``mysql_binlog_read_ddl_history``:
-    a seek-based driver pre-walk builds each file's DDL prefix and
-    the series-final layout, each file decodes in its own task through
-    the COLUMNAR kernel seeded with its prefix, and rows remap onto
-    the series-final names by column identity. Oracle shared verbatim
-    with the other three siblings. (The fixture keeps the encode
-    parallel by putting each generation's DDL in its own tiny rotation
-    file — as MySQL logs DDL transactions — followed by one DATA file
-    per partition carrying no DDL at all, so every data file's layout
-    genuinely comes from an EARLIER file.)"""
-    return _cdc_binlog_ddl_decode(spark, sf_dir, vec=True, series=True)
-
-
-def _cdc_binlog_ddl_decode(
-    spark: SparkSession,
-    sf_dir: str,
-    vec: bool,
-    split: bool = False,
-    series: bool = False,
-) -> DataFrame:
-    """Debezium-style schema-history decode: the stream's layout is
-    learned ONLY from the DDL statements in the log — a CREATE TABLE
-    Query_log_event opens the file, rows of that generation follow, an
-    ALTER TABLE ADD COLUMN Query event lands mid-stream, and the later
-    generation's rows carry the added columns. The decode stage calls
-    ``binlog_bytes_ddl`` -> ``schema_from_ddl_history``
-    (sources/mysql_ddl.py) to replay CREATE+ALTER into the latest
-    StructType — no user-declared schema, no binlog_row_metadata=FULL
-    TLVs (the path MINIMAL-metadata and pre-8.0.1 binlogs need; the
-    inference twin of ``cdc_binlog_full_metadata_roundtrip``). THREE
-    generations stream through one log: the CREATE's layout, an ALTER
-    ADD COLUMN generation (older TABLE_MAPs prefix-match, added
-    columns surface NULL), and — the round-14 surface — an ALTER
-    mixing MODIFY COLUMN (decimal widened (12,2)→(14,4)), CHANGE
-    COLUMN (rename + retype) and RENAME COLUMN, which NO latest-schema
-    prefix match can decode: the reader carries a ``SchemaHistory``
-    through the walk (``decode_binlog_bytes(schema_history=...)``),
-    resolves each TABLE_MAP against the generation in effect, and
-    joins old positions to the latest names on column IDENTITY. The
-    DDL text deliberately carries the traps a lazy parser trips on:
-    quoted identifiers, a quoted comma inside a COMMENT, DEFAULT
-    literals, PRIMARY KEY/INDEX clauses, a multi-op ALTER mixing ADD
-    COLUMNs with an ADD INDEX, ENGINE options. Any mis-parse
-    misaligns the positional decode and breaks the value hash (CHAR,
-    ENUM, TIME(3) with negative values all land in it). The reference
-    cannot see QUERY events at all (binlog_table_reader.cc:427-428)."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
+def _ddl_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_cdc_table_spark.operators._util import t
-    from mysql_cdc_table_spark.sources.mysql_ddl import (
-        SchemaHistory,
-        schema_from_ddl_history,
-    )
 
-    create_ddl = (
-        "CREATE TABLE `tpch`.`orders` (\n"
-        "  `id` BIGINT NOT NULL,\n"
-        "  `price` DECIMAL(12,2) DEFAULT '0.00',\n"
-        "  `flag` CHAR(2) COMMENT 'country, flag',\n"
-        "  `note` TEXT,\n"
-        "  PRIMARY KEY (`id`)\n"
-        ") ENGINE=InnoDB DEFAULT CHARSET=utf8mb4"
-    )
-    alter_ddl = (
-        "ALTER TABLE `tpch`.`orders` "
-        "ADD COLUMN `status` ENUM('F','O','P') NOT NULL, "
-        "ADD COLUMN `took` TIME(3) NULL, "
-        "ADD INDEX `i_status` (`status`)"
-    )
-    alter2_ddl = (
-        "ALTER TABLE `tpch`.`orders` "
-        "MODIFY COLUMN `price` DECIMAL(14,4), "
-        "CHANGE COLUMN `flag` `cflag` CHAR(2), "
-        "RENAME COLUMN `note` TO `memo`"
-    )
-    # the three generations' encode layouts come from the DDL itself —
-    # the same replay the decode side performs (a mis-parse would
-    # break encode and decode SYMMETRICALLY, which is why the value
-    # hash pins raw column expressions, not a roundtrip identity)
-    gen0 = schema_from_ddl_history([create_ddl], "tpch.orders")
-    gen1 = schema_from_ddl_history([create_ddl, alter_ddl], "tpch.orders")
-    target = schema_from_ddl_history(
-        [create_ddl, alter_ddl, alter2_ddl], "tpch.orders"
-    )
-    base = (
+    return (
         t(spark, sf_dir, "orders")
         .select(
             F.col("o_orderkey").alias("id"),
@@ -6256,214 +6038,223 @@ def _cdc_binlog_ddl_decode(
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns0: list = [{"gno": 1, "ddl": create_ddl}]
-            txns1: list = [{"gno": 2, "ddl": alter_ddl}]
-            txns2: list = [{"gno": 3, "ddl": alter2_ddl}]
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                if rid % 3 == 0:  # CREATE generation
-                    txns0.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {"id": rid, "price": r.price,
-                                 "flag": r.flag, "note": r.note}
-                            ],
-                        }
-                    )
-                elif rid % 3 == 1:  # post-ADD generation
-                    txns1.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "price": r.price,
-                                    "flag": r.flag,
-                                    "note": r.note,
-                                    "status": r.status,
-                                    "took": r.took,
-                                }
-                            ],
-                        }
-                    )
-                else:  # post-MODIFY/CHANGE/RENAME generation
-                    txns2.append(
-                        {
-                            "gno": rid + 10,
-                            "op": "w",
-                            "rows": [
-                                {
-                                    "id": rid,
-                                    "price": r.price,
-                                    "cflag": r.flag,
-                                    "memo": r.note,
-                                    "status": r.status,
-                                    "took": r.took,
-                                }
-                            ],
-                        }
-                    )
-            blob = build_binlog_file(
-                "tpch", "orders", gen0, txns0, checksum=True
+def _ddl_rows(pdf, g: int) -> list[dict]:
+    """Insert transactions for the batch's generation-``g`` keys
+    (id % 3 == g), framed under that generation's column names."""
+    txns = []
+    for r in pdf.itertuples(index=False):
+        rid = int(r.id)
+        if rid % 3 != g:
+            continue
+        if g == 0:  # CREATE generation
+            row = {"id": rid, "price": r.price, "flag": r.flag, "note": r.note}
+        elif g == 1:  # post-ADD generation
+            row = {
+                "id": rid, "price": r.price, "flag": r.flag, "note": r.note,
+                "status": r.status, "took": r.took,
+            }
+        else:  # post-MODIFY/CHANGE/RENAME generation
+            row = {
+                "id": rid, "price": r.price, "cflag": r.flag, "memo": r.note,
+                "status": r.status, "took": r.took,
+            }
+        txns.append({"gno": rid + 10, "op": "w", "rows": [row]})
+    return txns
+
+
+def _ddl_fixture(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, T.StructType]:
+    """Debezium-style schema-history fixture: the stream's layout is
+    learned ONLY from the DDL statements in the log — a CREATE TABLE
+    Query_log_event opens each file, rows of that generation follow, an
+    ALTER TABLE ADD COLUMN Query event lands mid-stream, and the later
+    generation's rows carry the added columns. No user-declared schema,
+    no binlog_row_metadata=FULL TLVs (the path MINIMAL-metadata and
+    pre-8.0.1 binlogs need; the inference twin of
+    ``cdc_binlog_full_metadata_roundtrip``). THREE generations stream
+    through one log: the CREATE's layout, an ALTER ADD COLUMN
+    generation (older TABLE_MAPs prefix-match, added columns surface
+    NULL), and an ALTER mixing MODIFY COLUMN (decimal widened
+    (12,2)→(14,4)), CHANGE COLUMN (rename + retype) and RENAME COLUMN,
+    which NO latest-schema prefix match can decode: the reader carries
+    a ``SchemaHistory`` through the walk, resolves each TABLE_MAP
+    against the generation in effect, and joins old positions to the
+    latest names on column IDENTITY. The DDL text deliberately carries
+    the traps a lazy parser trips on: quoted identifiers, a quoted
+    comma inside a COMMENT, DEFAULT literals, PRIMARY KEY/INDEX
+    clauses, a multi-op ALTER mixing ADD COLUMNs with an ADD INDEX,
+    ENGINE options. Any mis-parse misaligns the positional decode and
+    breaks the value hash (CHAR, ENUM, TIME(3) with negative values
+    all land in it). The reference cannot see QUERY events at all
+    (binlog_table_reader.cc:427-428). Returns the encoded ``(path,
+    content)`` files and the final layout."""
+    gens = _ddl_generations()
+
+    def build(pdf) -> bytes:
+        blob = b""
+        for g, (ddl, layout) in enumerate(gens):
+            part = build_binlog_file(
+                "tpch", "orders", layout,
+                [{"gno": g + 1, "ddl": ddl}] + _ddl_rows(pdf, g),
+                checksum=True,
             )
-            blob += build_binlog_file(
-                "tpch", "orders", gen1, txns1, checksum=True
-            )[4:]
-            blob += build_binlog_file(
-                "tpch", "orders", target, txns2, checksum=True
-            )[4:]
-            yield pd.DataFrame({"file_bytes": [blob]})
+            blob += part if g == 0 else part[4:]
+        return blob
 
-    if series:
-        # the rotated-series fixture: the DDL rides THREE tiny
-        # DDL-ONLY rotation files (1000/2000/3000, built driver-side
-        # — MySQL logs DDL as its own transaction anyway), and every
-        # partition writes its own DATA files per generation at
-        # 1001+pid / 2001+pid / 3001+pid — so the encode stays fully
-        # parallel while rotation order still puts each generation's
-        # DDL before every file of rows it governs (and those rows'
-        # files carry NO DDL of their own: the cross-file dependency
-        # is structural, not incidental)
-        def encode_series(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
+    return _encode_files(_ddl_base(spark, sf_dir), build), gens[-1][1]
 
-            pid = TaskContext.get().partitionId()
-            gens: list[list] = [[], [], []]
-            for pdf in batches:
-                for r in pdf.itertuples(index=False):
-                    rid = int(r.id)
-                    if rid % 3 == 0:
-                        gens[0].append(
-                            {"gno": rid + 10, "op": "w", "rows": [
-                                {"id": rid, "price": r.price,
-                                 "flag": r.flag, "note": r.note}
-                            ]}
-                        )
-                    elif rid % 3 == 1:
-                        gens[1].append(
-                            {"gno": rid + 10, "op": "w", "rows": [
-                                {"id": rid, "price": r.price,
-                                 "flag": r.flag, "note": r.note,
-                                 "status": r.status, "took": r.took}
-                            ]}
-                        )
-                    else:
-                        gens[2].append(
-                            {"gno": rid + 10, "op": "w", "rows": [
-                                {"id": rid, "price": r.price,
-                                 "cflag": r.flag, "memo": r.note,
-                                 "status": r.status, "took": r.took}
-                            ]}
-                        )
-            for g, (sch_, txns_) in enumerate(
-                zip((gen0, gen1, target), gens)
-            ):
-                if txns_:
-                    yield pd.DataFrame(
-                        {
-                            "fseq": [(g + 1) * 1000 + 1 + pid],
-                            "file_bytes": [
-                                build_binlog_file(
-                                    "tpch", "orders", sch_, txns_,
-                                    checksum=True,
-                                )
-                            ],
-                        }
-                    )
 
-        series_schema = T.StructType(
-            [
-                T.StructField("fseq", T.LongType()),
-                T.StructField("file_bytes", T.BinaryType()),
-            ]
-        )
-        data_files = base.mapInPandas(encode_series, schema=series_schema)
-        ddl_files = spark.createDataFrame(
-            [
-                (
-                    (g + 1) * 1000,
-                    build_binlog_file(
-                        "tpch", "orders", sch_,
-                        [{"gno": g + 1, "ddl": ddl_}], checksum=True,
-                    ),
-                )
-                for g, (sch_, ddl_) in enumerate(
-                    (
-                        (gen0, create_ddl),
-                        (gen1, alter_ddl),
-                        (target, alter2_ddl),
-                    )
-                )
-            ],
-            series_schema,
-        )
-        stage = _stage_binlog_series(
-            spark, data_files.unionByName(ddl_files), f"{sf_dir}|ddlseries"
-        )
-        decoded = mysql_binlog_read_ddl_history(spark, stage, "tpch", "orders")
-        return _ddl_fixture_agg(decoded)
+def cdc_binlog_ddl_schema_decode(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The ``_ddl_fixture`` log through the SCALAR walk
+    (``decode_binlog_bytes(schema_history=...)``): the reference model
+    the columnar twin ``cdc_binlog_ddl_vec_decode`` is held to — the
+    two share one oracle verbatim, so both kernels must produce
+    identical aggregates from identical bytes."""
+    import pandas as pd
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
+    files, target = _ddl_fixture(spark, sf_dir)
     out_schema = changelog_schema(target)
     names = [f.name for f in out_schema.fields]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                b = bytes(blob)
+            for blob in pdf["content"]:
                 # ONE pass: the history folds as the walk streams past
                 # the Query events; per-generation TABLE_MAPs resolve
                 # against the layout in effect, rows surface under the
                 # latest names via column identity
-                hist = SchemaHistory("orders", database="tpch")
-                if vec:
-                    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-                        decode_binlog_pandas,
-                    )
+                rows = decode_binlog_bytes(
+                    bytes(blob), None, "tpch", "orders",
+                    schema_history=SchemaHistory("orders", database="tpch"),
+                )
+                yield pd.DataFrame(
+                    {n: [r.get(n) for r in rows] for n in names}
+                )
 
-                    yield decode_binlog_pandas(
-                        b, None, "tpch", "orders", schema_history=hist
-                    )[names]
-                elif split:
-                    # target ~64 ranges per blob regardless of scale:
-                    # plenty of range starts inside every generation,
-                    # while per-range overhead (history seed + final
-                    # remap) stays amortized — a FIXED byte size would
-                    # grow range count linearly with data and measured
-                    # 5.0x at 10x; production uses 64 MB ranges where
-                    # the overhead vanishes entirely
-                    splits, ddl_all = scan_binlog_splits_ddl(
-                        b, max(8192, len(b) >> 6)
-                    )
-                    for sp in splits:  # each range fully independent
-                        rows = decode_binlog_range_history(
-                            b, sp, ddl_all, "tpch", "orders"
-                        )
-                        yield pd.DataFrame(
-                            {n: [r.get(n) for r in rows] for n in names}
-                        )
-                else:
-                    rows = decode_binlog_bytes(
-                        b, None, "tpch", "orders", schema_history=hist
+    return _ddl_fixture_agg(files.mapInPandas(decode, schema=out_schema))
+
+
+def cdc_binlog_ddl_vec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SAME three-generation DDL-history fixture through the
+    COLUMNAR Arrow kernel (``_decode_files(schema_history=...)``): the
+    kernel pre-walks each file's DDL headers to learn the final
+    generation, batches each generation's rows vectorized, and places
+    columns by identity with type casts at flush. Shares
+    ``cdc_binlog_ddl_schema_decode``'s oracle verbatim."""
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+
+    files, target = _ddl_fixture(spark, sf_dir)
+    return _ddl_fixture_agg(
+        _decode_files(
+            files, target, "tpch", "orders",
+            schema_history=SchemaHistory("orders", database="tpch"),
+        )
+    )
+
+
+def cdc_binlog_ddl_split_decode(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The SAME three-generation fixture decoded as PARALLEL
+    transaction-aligned byte ranges: every file header-walks into ~tens
+    of small ranges (``scan_binlog_splits_ddl`` carries the DDL prefix
+    per range), each range decodes INDEPENDENTLY
+    (``decode_binlog_range_history``) — a fresh ``SchemaHistory``
+    seeded from its prefix, in-range DDL folding as it streams past,
+    rows remapped from the range-final onto the FILE-final generation
+    by column identity — and the union must aggregate identically to
+    the whole-file walk (the oracle is shared verbatim). A 100 GB
+    multi-generation binlog spreads across executors exactly like the
+    fixed-schema parallel scan, DDL and all."""
+    import pandas as pd
+
+    files, target = _ddl_fixture(spark, sf_dir)
+    out_schema = changelog_schema(target)
+    names = [f.name for f in out_schema.fields]
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for blob in pdf["content"]:
+                b = bytes(blob)
+                # target ~64 ranges per file regardless of scale:
+                # plenty of range starts inside every generation,
+                # while per-range overhead (history seed + final
+                # remap) stays amortized — a FIXED byte size would
+                # grow range count linearly with data and measured
+                # 5.0x at 10x; production uses 64 MB ranges where
+                # the overhead vanishes entirely
+                splits, ddl_all = scan_binlog_splits_ddl(
+                    b, max(8192, len(b) >> 6)
+                )
+                for sp in splits:  # each range fully independent
+                    rows = decode_binlog_range_history(
+                        b, sp, ddl_all, "tpch", "orders"
                     )
                     yield pd.DataFrame(
                         {n: [r.get(n) for r in rows] for n in names}
                     )
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
-    return _ddl_fixture_agg(decoded)
+    return _ddl_fixture_agg(files.mapInPandas(decode, schema=out_schema))
+
+
+def cdc_binlog_ddl_series_decode(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The SAME three generations spread across a ROTATED series, so
+    the layout governing a file's rows was declared in an EARLIER
+    file — the cross-file half of Debezium's schema-history contract.
+    Each generation's DDL rides its own tiny DDL-only rotation file
+    (binlog.1000/2000/3000, built driver-side — MySQL logs DDL as its
+    own transaction anyway), and every partition writes its DATA files
+    per generation numbered just after that generation's DDL file
+    (``_encode_files(seq_base=...)``), so the encode stays fully
+    parallel while rotation order puts each generation's DDL before
+    every file of rows it governs, and the data files carry no DDL of
+    their own. The read is the zero-declaration entry point
+    ``mysql_binlog_read_ddl_history``: a seek-based driver pre-walk
+    builds each file's DDL prefix and the series-final layout, each
+    file decodes in its own task through the COLUMNAR kernel seeded
+    with its prefix, and rows remap onto the series-final names by
+    column identity. Oracle shared verbatim with the other three
+    siblings."""
+    gens = _ddl_generations()
+    base = _ddl_base(spark, sf_dir)
+    files = spark.createDataFrame(
+        [
+            (
+                f"binlog.{(g + 1) * 1000}",
+                build_binlog_file(
+                    "tpch", "orders", layout,
+                    [{"gno": g + 1, "ddl": ddl}], checksum=True,
+                ),
+            )
+            for g, (ddl, layout) in enumerate(gens)
+        ],
+        "path string, content binary",
+    )
+    for g, (_ddl, layout) in enumerate(gens):
+
+        def build(pdf, g=g, layout=layout) -> bytes:
+            return build_binlog_file(
+                "tpch", "orders", layout, _ddl_rows(pdf, g), checksum=True
+            )
+
+        files = files.unionByName(
+            _encode_files(
+                base.where(F.col("id") % 3 == g), build,
+                seq_base=(g + 1) * 1000 + 1,
+            )
+        )
+    stage = _stage_binlog_files(spark, files, f"{sf_dir}|ddlseries")
+    return _ddl_fixture_agg(
+        mysql_binlog_read_ddl_history(spark, stage, "tpch", "orders")
+    )
 
 
 def _ddl_fixture_agg(decoded: DataFrame) -> DataFrame:
@@ -6597,42 +6388,36 @@ def cdc_binlog_gtid_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     start_after = (mx * 2) // 5
     stop_at = (mx * 4) // 5
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            row = {"id": rid, "status": r.status}
+            if rid % 10 == 0:
+                txns.append(
+                    {"gno": rid, "op": "u", "rows": [(dict(row), row)]}
+                )
+            else:
+                txns.append({"gno": rid, "op": "w", "rows": [row]})
+        min_gno = txns[0]["gno"]  # sortWithinPartitions: gno order
+        return build_binlog_file(
+            "tpch",
+            "orders",
+            target,
+            txns,
+            checksum=True,
+            # the file-head executed-set summary MySQL writes at
+            # every rotation: all gnos below this file's first
+            # (the series' first file carries the EMPTY set, as a
+            # fresh server's binlog.000001 does)
+            previous_gtids=(
+                {b"\x11" * 16: [(1, min_gno)]}
+                if min_gno > 1
+                else {b"\x11" * 16: []}
+            ),
+        )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                row = {"id": rid, "status": r.status}
-                if rid % 10 == 0:
-                    txns.append(
-                        {"gno": rid, "op": "u", "rows": [(dict(row), row)]}
-                    )
-                else:
-                    txns.append({"gno": rid, "op": "w", "rows": [row]})
-            min_gno = txns[0]["gno"]  # sortWithinPartitions: gno order
-            blob = build_binlog_file(
-                "tpch",
-                "orders",
-                target,
-                txns,
-                checksum=True,
-                # the file-head executed-set summary MySQL writes at
-                # every rotation: all gnos below this file's first
-                # (the series' first file carries the EMPTY set, as a
-                # fresh server's binlog.000001 does)
-                previous_gtids=(
-                    {b"\x11" * 16: [(1, min_gno)]}
-                    if min_gno > 1
-                    else {b"\x11" * 16: []}
-                ),
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|gtid_resume")
     decoded = mysql_binlog_read_gtid_range(
         spark,
@@ -6715,32 +6500,27 @@ def cdc_binlog_executed_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartitionByRange(spark.sparkContext.defaultParallelism, "id")
         .sortWithinPartitions("id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.id),
-                    "op": "w",
-                    "rows": [{"id": int(r.id), "status": r.status}],
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            min_gno = txns[0]["gno"]
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, checksum=True,
-                previous_gtids=(
-                    {b"\x11" * 16: [(1, min_gno)]}
-                    if min_gno > 1
-                    else {b"\x11" * 16: []}
-                ),
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.id),
+                "op": "w",
+                "rows": [{"id": int(r.id), "status": r.status}],
+            }
+            for r in pdf.itertuples(index=False)
+        ]
+        min_gno = txns[0]["gno"]
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True,
+            previous_gtids=(
+                {b"\x11" * 16: [(1, min_gno)]}
+                if min_gno > 1
+                else {b"\x11" * 16: []}
+            ),
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|executed_set")
     return binlog_executed_gtid_set(spark, stage)
 
@@ -6809,34 +6589,28 @@ def cdc_binlog_multi_source_resume(
     bound_a = (mx * 2) // 5
     bound_b = (mx * 3) // 5
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.id),
+                "op": "w",
+                "rows": [{"id": int(r.id), "status": r.status}],
+                "sid": _SID_A if int(r.id) % 2 == 0 else _SID_B,
+            }
+            for r in pdf.itertuples(index=False)
+        ]
+        min_gno = txns[0]["gno"]
+        prev = (
+            {_SID_A: [(1, min_gno)], _SID_B: [(1, min_gno)]}
+            if min_gno > 1
+            else {_SID_A: [], _SID_B: []}
+        )
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True,
+            previous_gtids=prev,
+        )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.id),
-                    "op": "w",
-                    "rows": [{"id": int(r.id), "status": r.status}],
-                    "sid": _SID_A if int(r.id) % 2 == 0 else _SID_B,
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            min_gno = txns[0]["gno"]
-            prev = (
-                {_SID_A: [(1, min_gno)], _SID_B: [(1, min_gno)]}
-                if min_gno > 1
-                else {_SID_A: [], _SID_B: []}
-            )
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, checksum=True,
-                previous_gtids=prev,
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|multi_src_resume")
     decoded = mysql_binlog_read_gtid_sets(
         spark,
@@ -6924,27 +6698,22 @@ def cdc_binlog_txn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "bucket")
         .sortWithinPartitions("id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            by_g: dict[int, list[dict]] = {}
-            for r in pdf.itertuples(index=False):
-                by_g.setdefault(int(r.bucket), []).append(
-                    {"id": int(r.id), "status": r.status}
-                )
-            txns = [
-                {"gno": g, "op": "w", "rows": rows}
-                for g, rows in sorted(by_g.items())
-            ]
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, checksum=True
+    def build(pdf: pd.DataFrame) -> bytes:
+        by_g: dict[int, list[dict]] = {}
+        for r in pdf.itertuples(index=False):
+            by_g.setdefault(int(r.bucket), []).append(
+                {"id": int(r.id), "status": r.status}
             )
-            yield pd.DataFrame({"file_bytes": [blob]})
+        txns = [
+            {"gno": g, "op": "w", "rows": rows}
+            for g, rows in sorted(by_g.items())
+        ]
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|txn_stats")
     decoded = mysql_binlog_read_parallel(
         spark, stage, target, "tpch", "orders", split_bytes=4096
@@ -7004,39 +6773,34 @@ def cdc_binlog_ddl_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartitionByRange(spark.sparkContext.defaultParallelism, "id")
         .sortWithinPartitions("id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            txns.append(
+                {
+                    "gno": rid,
+                    "op": "w",
+                    "rows": [{"id": rid, "status": r.status}],
+                }
+            )
+            if rid % 50 == 0:
                 txns.append(
                     {
-                        "gno": rid,
-                        "op": "w",
-                        "rows": [{"id": rid, "status": r.status}],
+                        "gno": rid + 2_000_000_000,
+                        "ddl": (
+                            f"ALTER TABLE orders ADD COLUMN "
+                            f"extra_{rid % 97} INT /* migration "
+                            f"{rid} */"
+                        ),
                     }
                 )
-                if rid % 50 == 0:
-                    txns.append(
-                        {
-                            "gno": rid + 2_000_000_000,
-                            "ddl": (
-                                f"ALTER TABLE orders ADD COLUMN "
-                                f"extra_{rid % 97} INT /* migration "
-                                f"{rid} */"
-                            ),
-                        }
-                    )
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, checksum=True
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|ddl_history")
     hist = binlog_ddl_history(spark, stage)
     return hist.agg(
@@ -7106,35 +6870,25 @@ def cdc_binlog_event_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartitionByRange(spark.sparkContext.defaultParallelism, "id")
         .sortWithinPartitions("id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            txns.append(
+                {"gno": rid, "op": "w",
+                 "rows": [{"id": rid, "status": r.status}]}
+            )
+            if rid % 50 == 0:
                 txns.append(
-                    {"gno": rid, "op": "w",
-                     "rows": [{"id": rid, "status": r.status}]}
+                    {"gno": rid + 2_000_000_000,
+                     "ddl": f"ALTER TABLE orders COMMENT 'm{rid}'"}
                 )
-                if rid % 50 == 0:
-                    txns.append(
-                        {"gno": rid + 2_000_000_000,
-                         "ddl": f"ALTER TABLE orders COMMENT 'm{rid}'"}
-                    )
-            yield pd.DataFrame(
-                {
-                    "file_bytes": [
-                        build_binlog_file(
-                            "tpch", "orders", target, txns, checksum=True
-                        )
-                    ]
-                }
+        return build_binlog_file(
+                "tpch", "orders", target, txns, checksum=True
             )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|event_census")
 
     import os
@@ -7235,39 +6989,33 @@ def cdc_binlog_pitr_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     start_ts = PITR_EPOCH + (mx * 3) // 10
     stop_ts = PITR_EPOCH + (mx * 7) // 10
 
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                row = {"id": rid, "status": r.status}
-                op = "u" if rid % 10 == 0 else "w"
-                rows = [(dict(row), row)] if op == "u" else [row]
-                txns.append(
-                    {"gno": rid, "op": op, "rows": rows,
-                     "ts": PITR_EPOCH + rid}
-                )
-            min_gno = txns[0]["gno"]
-            blob = build_binlog_file(
-                "tpch",
-                "orders",
-                target,
-                txns,
-                checksum=True,
-                base_ts=txns[0]["ts"],  # FDE head ts <= every event
-                previous_gtids=(
-                    {b"\x11" * 16: [(1, min_gno)]}
-                    if min_gno > 1
-                    else {b"\x11" * 16: []}
-                ),
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            row = {"id": rid, "status": r.status}
+            op = "u" if rid % 10 == 0 else "w"
+            rows = [(dict(row), row)] if op == "u" else [row]
+            txns.append(
+                {"gno": rid, "op": op, "rows": rows,
+                 "ts": PITR_EPOCH + rid}
             )
-            yield pd.DataFrame({"file_bytes": [blob]})
+        min_gno = txns[0]["gno"]
+        return build_binlog_file(
+            "tpch",
+            "orders",
+            target,
+            txns,
+            checksum=True,
+            base_ts=txns[0]["ts"],  # FDE head ts <= every event
+            previous_gtids=(
+                {b"\x11" * 16: [(1, min_gno)]}
+                if min_gno > 1
+                else {b"\x11" * 16: []}
+            ),
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
+    files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|pitr_window")
     decoded = mysql_binlog_read_time_range(
         spark,
@@ -7352,53 +7100,37 @@ def cdc_binlog_rows_query_roundtrip(
         )
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = []
-            for r in pdf.itertuples(index=False):
-                rid = int(r.id)
-                row = {"id": rid, "status": r.status}
-                if rid % 10 == 0:
-                    q = f"UPDATE orders SET s='{r.status}' WHERE k={rid} /* t{rid % 97} */"
-                    # identical before/after images (legal on the wire)
-                    # so both land in the same status group below
-                    txns.append(
-                        {
-                            "gno": rid,
-                            "op": "u",
-                            "rows": [(dict(row), row)],
-                            "query": q,
-                        }
-                    )
-                else:
-                    q = f"INSERT INTO orders VALUES ({rid}) /* t{rid % 97} */"
-                    txns.append(
-                        {"gno": rid, "op": "w", "rows": [row], "query": q}
-                    )
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns, checksum=True
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-    out_schema = _binlog_out_schema(target, "long", capture_query=True)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                rows = decode_binlog_bytes(
-                    bytes(blob), target, "tpch", "orders", capture_query=True
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = []
+        for r in pdf.itertuples(index=False):
+            rid = int(r.id)
+            row = {"id": rid, "status": r.status}
+            if rid % 10 == 0:
+                q = f"UPDATE orders SET s='{r.status}' WHERE k={rid} /* t{rid % 97} */"
+                # identical before/after images (legal on the wire)
+                # so both land in the same status group below
+                txns.append(
+                    {
+                        "gno": rid,
+                        "op": "u",
+                        "rows": [(dict(row), row)],
+                        "query": q,
+                    }
                 )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
+            else:
+                q = f"INSERT INTO orders VALUES ({rid}) /* t{rid % 97} */"
+                txns.append(
+                    {"gno": rid, "op": "w", "rows": [row], "query": q}
                 )
+        return build_binlog_file(
+            "tpch", "orders", target, txns, checksum=True
+        )
 
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    decoded = _decode_files(
+        _encode_files(base, build), target, "tpch", "orders",
+        capture_query=True,
+    )
     return decoded.groupBy("status").agg(
         F.count("*").alias("n_rows"),
         F.count_if(F.col("__query").startswith("UPDATE")).alias("n_upd_stmt"),
@@ -7457,47 +7189,32 @@ def cdc_binlog_full_metadata_roundtrip(
         )
         .repartition(spark.sparkContext.defaultParallelism, "id")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.id),
-                    "op": "w",
-                    "rows": [
-                        {"id": int(r.id), "price": r.price, "status": r.status}
-                    ],
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            blob = build_binlog_file(
-                "tpch", "orders", target, txns,
-                row_metadata="full", checksum=True,
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.id),
+                "op": "w",
+                "rows": [
+                    {"id": int(r.id), "price": r.price, "status": r.status}
+                ],
+            }
+            for r in pdf.itertuples(index=False)
+        ]
+        return build_binlog_file(
+            "tpch", "orders", target, txns,
+            row_metadata="full", checksum=True,
+        )
 
-    files = base.mapInPandas(encode, schema=file_schema)
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                # the wire IS the schema: no DDL reaches this stage
-                inferred = mysql_binlog_infer_target(
-                    bytes(blob), "tpch", "orders"
-                )
-                rows = decode_binlog_bytes(
-                    bytes(blob), inferred, "tpch", "orders"
-                )
-                yield pd.DataFrame(
-                    {n: [r.get(n) for r in rows] for n in names}
-                )
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    # the wire IS the schema: the decode target is inferred from a file
+    # the same build frames, never declared
+    sample = pd.DataFrame(
+        {"id": [1], "price": [Decimal("0.01")], "status": ["O"]}
+    )
+    inferred = mysql_binlog_infer_target(build(sample), "tpch", "orders")
+    decoded = _decode_files(
+        _encode_files(base, build), inferred, "tpch", "orders"
+    )
     return decoded.groupBy("status").agg(
         F.count("*").alias("n_rows"),
         F.sum((F.col("price") * 100).cast("long")).alias("cents_sum"),
@@ -7588,68 +7305,39 @@ def cdc_binlog_unsigned_roundtrip(
         )
         .repartition(spark.sparkContext.defaultParallelism, "k")
     )
-    file_schema = T.StructType([T.StructField("file_bytes", T.BinaryType())])
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            txns = [
-                {
-                    "gno": int(r.k),
-                    "op": "w",
-                    "rows": [
-                        {
-                            # every value in the unsigned TOP half
-                            "id": (1 << 62) + int(r.k),
-                            "u8": 128 + int(r.k) % 128,
-                            "u16": (1 << 15) + int(r.k) % (1 << 15),
-                            "u24": (1 << 23) + int(r.k) % (1 << 23),
-                            "u32": (1 << 31) + int(r.k) % (1 << 31),
-                            "status": r.status,
-                        }
-                    ],
-                }
-                for r in pdf.itertuples(index=False)
-            ]
-            blob = build_binlog_file(
-                "tpch", "orders", wtgt, txns,
-                row_metadata="full", checksum=True,
-            )
-            yield pd.DataFrame({"file_bytes": [blob]})
-
-    files = base.mapInPandas(encode, schema=file_schema)
-    # the inferred reader schema is deterministic: each unsigned column
-    # widens to the next signed Spark type (BIGINT UNSIGNED -> LongType)
-    rtgt = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("u8", T.ShortType()),
-            T.StructField("u16", T.IntegerType()),
-            T.StructField("u24", T.IntegerType()),
-            T.StructField("u32", T.LongType()),
-            T.StructField("status", T.StringType()),
+    def build(pdf: pd.DataFrame) -> bytes:
+        txns = [
+            {
+                "gno": int(r.k),
+                "op": "w",
+                "rows": [
+                    {
+                        # every value in the unsigned TOP half
+                        "id": (1 << 62) + int(r.k),
+                        "u8": 128 + int(r.k) % 128,
+                        "u16": (1 << 15) + int(r.k) % (1 << 15),
+                        "u24": (1 << 23) + int(r.k) % (1 << 23),
+                        "u32": (1 << 31) + int(r.k) % (1 << 31),
+                        "status": r.status,
+                    }
+                ],
+            }
+            for r in pdf.itertuples(index=False)
         ]
-    )
-    out_schema = changelog_schema(rtgt)
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_pandas,
+        return build_binlog_file(
+            "tpch", "orders", wtgt, txns,
+            row_metadata="full", checksum=True,
         )
 
-        for pdf in batches:
-            for blob in pdf["file_bytes"]:
-                inferred = mysql_binlog_infer_target(
-                    bytes(blob), "tpch", "orders"
-                )
-                out = decode_binlog_pandas(
-                    bytes(blob), inferred, "tpch", "orders"
-                )
-                yield out[names]
-
-    decoded = files.mapInPandas(decode, schema=out_schema)
+    # the reader schema is inferred from a file the same build frames:
+    # each unsigned column widens to the next signed Spark type (BIGINT
+    # UNSIGNED stays LongType, range-checked)
+    sample = pd.DataFrame({"k": [1], "status": ["O"]})
+    inferred = mysql_binlog_infer_target(build(sample), "tpch", "orders")
+    decoded = _decode_files(
+        _encode_files(base, build), inferred, "tpch", "orders"
+    )
     return decoded.groupBy("status").agg(
         F.count("*").alias("n_rows"),
         F.sum(F.col("u8").cast("long")).alias("sum_u8"),
