@@ -13,6 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_cdc_table_spark.operators._util import stream_state_partitions, t
+from mysql_cdc_table_spark.streaming.cdc_stream import (
+    await_drained,
+    run_to_completion,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -64,19 +68,20 @@ def cdc_binlog_relay_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .save(src)
     )
-    q = mysql_binlog_relay(
-        spark,
-        src,
-        dst,
-        ddl,
-        "tpch",
-        "orders",
-        checkpoint=ckpt,
-        predicate=F.col("__gtid") % 2 == 0,
-        partitions=2,
-        available_now=True,
+    await_drained(
+        mysql_binlog_relay(
+            spark,
+            src,
+            dst,
+            ddl,
+            "tpch",
+            "orders",
+            checkpoint=ckpt,
+            predicate=F.col("__gtid") % 2 == 0,
+            partitions=2,
+            available_now=True,
+        )
     )
-    q.awaitTermination()
     back = mysql_binlog_read(
         spark, dst, ORDERS_TARGET_SCHEMA, "tpch", "orders"
     )
@@ -717,17 +722,14 @@ def stream_dropdup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mem = f"dropdup_{uuid.uuid4().hex[:12]}"
     with stream_state_partitions(spark):
-        q = (
+        run_to_completion(
             spark.readStream.schema(e.schema)
             .parquet(stage)
             .withWatermark("ts", "3650 days")
             .dropDuplicatesWithinWatermark(["event_id"])
             .writeStream.format("memory")
             .queryName(mem)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     return (
         spark.table(mem)
         .groupBy("event_type")
@@ -1024,7 +1026,7 @@ def stream_stream_join(
     )
     mem = f"ssjoin_{uuid.uuid4().hex[:12]}"
     with stream_state_partitions(spark):
-        q = (
+        q = run_to_completion(
             joined.select(
                 F.col("l.event_type").alias("type_a"),
                 F.col("r.event_type").alias("type_b"),
@@ -1032,10 +1034,7 @@ def stream_stream_join(
             )
             .writeStream.format("memory")
             .queryName(mem)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     if _query_out is not None:
         # test hook: the cross-batch claim is asserted, not narrated —
         # tests check >= 2 data batches ran with non-empty join state
@@ -1236,7 +1235,7 @@ def stream_stream_outer_join(
     )
     mem = f"ssouter_{uuid.uuid4().hex[:12]}"
     with stream_state_partitions(spark):
-        q = (
+        q = run_to_completion(
             joined.select(
                 F.col("l.ts").alias("lts"),
                 F.col("l.event_type").alias("type_a"),
@@ -1245,10 +1244,7 @@ def stream_stream_outer_join(
             )
             .writeStream.format("memory")
             .queryName(mem)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     if _query_out is not None:
         _query_out.append(q)
     cutoff = F.lit("2024-01-28 00:00:00").cast("timestamp")

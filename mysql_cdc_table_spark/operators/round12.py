@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from mysql_cdc_table_spark.catalog import load_table as t
 from mysql_cdc_table_spark.operators._util import stream_state_partitions
 from mysql_cdc_table_spark.sources import fs as _hfs
+from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -118,7 +119,7 @@ def stream_stream_full_outer(
     )
     mem = f"ssfull_{uuid.uuid4().hex[:12]}"
     with stream_state_partitions(spark):
-        q = (
+        q = run_to_completion(
             joined.select(
                 F.col("l.ts").alias("lts"),
                 F.col("r.ts").alias("rts"),
@@ -130,10 +131,7 @@ def stream_stream_full_outer(
             )
             .writeStream.format("memory")
             .queryName(mem)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     if _query_out is not None:
         _query_out.append(q)
     cutoff = F.lit("2024-01-28 00:00:00").cast("timestamp")
@@ -449,12 +447,9 @@ def cdc_ivm_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    q = (
+    run_to_completion(
         ivm_view_stream(stream, state_dir, ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return read_ivm_view(spark, state_dir)
 
 
@@ -1106,12 +1101,9 @@ def ann_ivf_stream_upsert_topk(
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    q = (
+    run_to_completion(
         vec_index_stream(stream, store_dir, cents, ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     e = t(spark, sf_dir, "embeddings")
     v = F.col("vec_id")
@@ -1731,14 +1723,11 @@ def cdc_ivm_view_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    q = (
+    run_to_completion(
         ivm_view_stream(
             stream, state_dir, ckpt, query_name="cdc_ivm_tt", retain=None
         )
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return read_ivm_view(spark, state_dir, version=1).withColumn(
         "as_of_version", F.lit(1).cast("int")
     )
@@ -2248,15 +2237,12 @@ def cdc_ivm_streaming_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     def body(batch_df: DataFrame, batch_id: int) -> None:
         support_apply_batch(spark, batch_df, state_dir, batch_id)
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("cdc_sup_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     support = read_support_store(spark, state_dir).filter(F.col("m") > 0)
     return (
         support.groupBy("o_orderstatus")
@@ -2781,15 +2767,12 @@ def cdc_scd2_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     def body(batch_df: DataFrame, batch_id: int) -> None:
         scd2_apply_batch(spark, batch_df, state_dir, batch_id)
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("cdc_scd2_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     vs = _ivm_versions(spark, state_dir)
     return (
         spark.read.schema(_SCD2_STORE_SCHEMA)

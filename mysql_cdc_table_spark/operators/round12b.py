@@ -81,6 +81,7 @@ from pyspark.sql import functions as F
 from mysql_cdc_table_spark.catalog import load_table as t
 from mysql_cdc_table_spark.operators._util import stream_state_partitions
 from mysql_cdc_table_spark.sources import fs as _hfs
+from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -747,7 +748,7 @@ def stream_static_enrich(
     )
     mem = f"ssenrich_{uuid.uuid4().hex[:12]}"
     with stream_state_partitions(spark):
-        q = (
+        q = run_to_completion(
             agg.select(
                 F.col("w.start").alias("win_start"), "n_name", "n_events",
                 "sum_vm",
@@ -755,10 +756,7 @@ def stream_static_enrich(
             .writeStream.format("memory")
             .queryName(mem)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     if _query_out is not None:
         _query_out.append(q)
     cutoff = F.lit("2024-01-29 00:00:00").cast("timestamp")
@@ -994,15 +992,12 @@ def cdc_binlog_streaming_evolution(
             batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("cdc_binlog_evo_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     vs = _ivm_versions(spark, state_dir)
     final = spark.read.schema(_EVO_STORE_SCHEMA).parquet(
         f"{state_dir}/v{vs[-1]}/D"
@@ -1146,7 +1141,7 @@ def stream_stream_three_way(
     # 32 partitions pay ~8x the checkpoint churn the data needs
     # (measured 48s -> 12s at sf0.01; see stream_state_partitions)
     with stream_state_partitions(spark):
-        q = (
+        q = run_to_completion(
             triple.select(
                 F.timestamp_micros(F.col("p.ltsl")).alias("lts"),
                 F.col("p.mts").alias("mts"),
@@ -1157,10 +1152,7 @@ def stream_stream_three_way(
             )
             .writeStream.format("memory")
             .queryName(mem)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     if _query_out is not None:
         _query_out.append(q)
     cutoff = F.lit("2024-01-28 00:00:00").cast("timestamp")
@@ -1634,15 +1626,12 @@ def cdc_ivm_streaming_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     def body(batch_df: DataFrame, batch_id: int) -> None:
         corr_apply_batch(spark, batch_df, state_dir, batch_id)
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("cdc_ivm_corr_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     vs = _ivm_versions(spark, state_dir)
     final = spark.read.schema(_CORR_STORE_SCHEMA).parquet(
         f"{state_dir}/v{vs[-1]}/M"

@@ -36,6 +36,7 @@ from mysql_cdc_table_spark.operators.round13 import (
     HIST_BUCKETS,
     _hist_one_column,
 )
+from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -721,15 +722,12 @@ def cdc_binlog_streaming_ddl_migration(
             hist_state["stmts"],
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("cdc_binlog_ddlmig_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     vs = _ivm_versions(spark, state_dir)
     final = spark.read.schema(_ddlmig_store_struct(gen1)).parquet(
         f"{state_dir}/v{vs[-1]}/D"

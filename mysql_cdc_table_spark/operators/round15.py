@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_cdc_table_spark.operators._util import t
+from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1278,15 +1279,12 @@ def stats_histogram_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{state_dir}/v{batch_id + 1}")
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .queryName("stats_histogram_stream")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     versions = sorted(
         int(n[1:])

@@ -295,12 +295,22 @@ def streaming_dedup(
     return stream.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def run_to_completion(writer, timeout_s: float = 120.0):
-    """Start an availableNow query and block until it drains. A query
-    still running after ``timeout_s`` is stopped and ``TimeoutError``
-    raised: a slow stream must not look drained."""
-    q = writer.trigger(availableNow=True).start()
+# sized for the registry's longest full stream at sf1 (about three
+# minutes); a hung query still fails loudly instead of blocking forever
+_DRAIN_TIMEOUT_S = 600.0
+
+
+def await_drained(q, timeout_s: float = _DRAIN_TIMEOUT_S):
+    """Block until the started query ``q`` drains. A query still
+    running after ``timeout_s`` is stopped and ``TimeoutError`` raised:
+    a slow stream must not look drained."""
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"streaming query {q.id} did not drain within {timeout_s}s")
     return q
+
+
+def run_to_completion(writer, timeout_s: float = _DRAIN_TIMEOUT_S):
+    """Start an availableNow query and block until it drains
+    (``await_drained``)."""
+    return await_drained(writer.trigger(availableNow=True).start(), timeout_s)
