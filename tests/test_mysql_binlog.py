@@ -3958,3 +3958,55 @@ def test_char_in_full_metadata_inference(tmp_path):
     for r in rows:
         assert by_id[r["id"]]["cc"] == r["cc"]
         assert by_id[r["id"]]["tk"] == r["tk"]
+
+
+def test_file_seq_rejects_rotation_numbers_past_int32():
+    """__file_seq is IntegerType: a rotation number past int32 must fail
+    loudly with the path, not wrap to a negative ordering key."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import _file_seq_of
+
+    assert _file_seq_of("/logs/binlog.000042") == 42
+    assert _file_seq_of("/logs/binlog.p7.000003") == 3
+    assert _file_seq_of("/logs/binlog.2147483647") == 2**31 - 1
+    with pytest.raises(ValueError, match=r"/logs/binlog\.2148000000"):
+        _file_seq_of("/logs/binlog.2148000000")
+
+
+def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
+    """Static guard over the package source. Registry fixtures decode
+    through the production columnar kernel: only the scalar walk's own
+    internals and the deliberate kernel-vs-walk parity keys may call
+    ``decode_binlog_bytes``. And no stream wait is unbounded: every
+    ``awaitTermination`` carries a timeout (``run_to_completion`` /
+    ``await_drained``)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "mysql_cdc_table_spark"
+    allowed = {
+        # the walk's internals: the kernel runs it for headers/state,
+        # and the split-range history decode is its only implementation
+        ("sources/mysql_binlog_vec.py", "decode_binlog_record_batches"),
+        ("sources/mysql_binlog.py", "decode_binlog_range_history"),
+        # parity keys: the walk is the reference model the kernel is
+        # held to (a `kernel` oracle column / a shared oracle)
+        ("operators/round15.py", "cdc_binlog_gbk_roundtrip"),
+        ("sources/mysql_binlog.py", "cdc_binlog_ddl_schema_decode"),
+    }
+    walk_callers, untimed = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text(), filename=str(path)).body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+                if name == "decode_binlog_bytes":
+                    walk_callers.add((rel, getattr(top, "name", "<module>")))
+                elif name == "awaitTermination" and not (
+                    node.args or node.keywords
+                ):
+                    untimed.append(f"{rel}:{node.lineno}")
+    assert walk_callers - allowed == set()
+    assert untimed == []
