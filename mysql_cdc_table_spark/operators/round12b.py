@@ -878,7 +878,8 @@ def cdc_binlog_streaming_evolution(
     generation, double-applied a replay, or mis-ordered an update pair
     against a stored row moves rows between the NULL/non-NULL planes
     and breaks the hash. Scale: per batch cost ∝ batch + touched keys
-    (anti/semi split); encode/decode are per-partition mapInPandas."""
+    (anti/semi split); encode (``_encode_files``) and decode (the
+    columnar kernel, ``_decode_files``) run per partition."""
     import hashlib
     import os
     import tempfile

@@ -2968,7 +2968,9 @@ def _encode_files(df: DataFrame, build, seq_base: int = 0) -> DataFrame:
     shape ``_decode_files`` and ``_stage_binlog_files`` read. Names are
     ``binlog.p{partition}.{seq_base + n}``: unique for any partition
     count, and only the per-partition counter reaches ``__file_seq``,
-    so it stays inside int32."""
+    so it stays inside int32 (files of different partitions may share
+    a ``__file_seq``; the fixtures' aggregates never order across
+    files)."""
     import pandas as pd
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5115,8 +5117,9 @@ def cdc_mysql_binlog_roundtrip(
     fixed-width CHAR(2) + TIME(3)), frame it as byte-exact binlog
     files (one per Arrow batch — magic, FDE, GTID/TABLE_MAP/ROWS
     events), decode the files back, and aggregate per status with
-    op-code and GTID terms in the output.
-    Both stages are distributed mapInPandas — no driver hop. The oracle
+    op-code and GTID terms in the output. The encode runs per batch
+    (``_encode_files``) and the decode through the production columnar
+    kernel (``_decode_files``) — no driver hop. The oracle
     computes the same aggregate straight from ``orders`` with integer
     arithmetic, so any framing/codec bit-rot (decimal group packing,
     enum index, date bit layout, binary-JSON tree encode/decode, update
@@ -5133,10 +5136,9 @@ def cdc_mysql_binlog_roundtrip(
     fractional bytes; both land in the value hash via order-free
     aggregates (codepoint sum, signed total-milliseconds sum).
     The ``note`` column is a latin1 TEXT: its values carry bytes
-    >= 0x80 that are NOT valid utf-8, so both the scalar decode and
-    the columnar kernel's vectorized latin1->utf-8 transcode must be
-    charset-aware or the codepoint sum (and on the vec path, Arrow's
-    utf-8 validation) breaks (round 14 — the r13 verdict's #3 ask)."""
+    >= 0x80 that are NOT valid utf-8, so the columnar kernel's
+    vectorized latin1->utf-8 transcode must be charset-aware or the
+    codepoint sum (and Arrow's utf-8 validation) breaks."""
     import pandas as pd
     from decimal import Decimal as _D
 
