@@ -447,9 +447,7 @@ def cdc_ivm_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    run_to_completion(
-        ivm_view_stream(stream, state_dir, ckpt)
-    )
+    run_to_completion(ivm_view_stream(stream, state_dir, ckpt))
     return read_ivm_view(spark, state_dir)
 
 
@@ -1101,9 +1099,7 @@ def ann_ivf_stream_upsert_topk(
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    run_to_completion(
-        vec_index_stream(stream, store_dir, cents, ckpt)
-    )
+    run_to_completion(vec_index_stream(stream, store_dir, cents, ckpt))
 
     e = t(spark, sf_dir, "embeddings")
     v = F.col("vec_id")
