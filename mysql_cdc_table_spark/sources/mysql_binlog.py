@@ -61,7 +61,10 @@ split each file into transaction-aligned byte ranges.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import mmap
+import os
 import re
 import struct
 import zlib
@@ -1869,36 +1872,41 @@ def binlog_file_rotate_target(path: str) -> str | None:
     """The next-file name from a sealed file's trailing ROTATE event
     (header walk; None when the file has no rotate — the active
     file)."""
-    import os
-
-    size = os.path.getsize(path)
     target: str | None = None
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError(f"{path}: not a binlog file")
-        pos = 4
-        checksum: bool | None = None
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break
-            body_len = esize - _HEADER_LEN
-            if tc in (EV_FORMAT_DESCRIPTION, EV_ROTATE):
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                if tc == EV_FORMAT_DESCRIPTION:
-                    checksum = _detect_checksum(hdr + rest)
-                else:
-                    body = rest[: len(rest) - (4 if checksum else 0)]
-                    target = body[8:].decode("utf-8", "replace")
-            else:
-                f.seek(body_len, 1)
-            pos += esize
+    with _mapped(path) as mm:
+        for _off, _ts, tc, _size, body, _ck in _events(mm, where=f"{path}: "):
+            if tc == EV_ROTATE:
+                target = body[8:].decode("utf-8", "replace")
     return target
+
+
+def _binlog_paths(path: str | None, index_file: str | None = None) -> list[str]:
+    """The scan set, ordered by (rotation number, name): the files
+    ``index_file`` lists (the reference's binlog.index; relative names
+    resolve against its directory), else every file of a directory but
+    ``_``/``.``-prefixed names and ``.index`` listings, else ``path``
+    itself."""
+    if index_file:
+        base = os.path.dirname(os.path.abspath(index_file))
+        with open(index_file) as fh:
+            paths = [
+                p if os.path.isabs(p) else os.path.join(base, p)
+                for p in (line.strip() for line in fh)
+                if p
+            ]
+        if not paths:
+            raise ValueError(f"binlog index {index_file} lists no files")
+    else:
+        local = _strip_file_scheme(path)
+        if os.path.isdir(local):
+            paths = [
+                os.path.join(local, n)
+                for n in os.listdir(local)
+                if not n.startswith(("_", ".")) and not n.endswith(".index")
+            ]
+        else:
+            paths = [local]
+    return sorted(paths, key=lambda p: (_file_seq_of(p), os.path.basename(p)))
 
 
 def binlog_chain_gaps(path: str) -> list[tuple[str, str]]:
@@ -1909,17 +1917,7 @@ def binlog_chain_gaps(path: str) -> list[tuple[str, str]]:
     Returns [] for an intact chain; the active (last) file may carry
     no rotate. The reference never validates the chain — it trusts
     the index file blindly (binlog_table_reader.cc:39-57)."""
-    import os
-
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = _binlog_paths(path)
     gaps: list[tuple[str, str]] = []
     for i, p in enumerate(paths[:-1]):
         want = binlog_file_rotate_target(p)
@@ -1941,6 +1939,119 @@ def _detect_checksum(ev: bytes) -> bool:
         (crc,) = struct.unpack("<I", ev[-4:])
         return zlib.crc32(ev[:-4]) == crc
     return False
+
+
+def _events(
+    buf,
+    start: int = 4,
+    end: int | None = None,
+    base: int = 0,
+    checksum: bool | None = None,
+    *,
+    strict: bool = False,
+    verify: bool = False,
+    where: str = "",
+) -> Iterator[tuple]:
+    """The one binlog event walk: frames the events of ``buf[start:end]``
+    (any bytes-like buffer, an mmap included) and yields ``(offset, ts,
+    type, size, body, checksum)`` per event. ``offset`` is absolute
+    (``base`` is the file offset of ``buf[0]``), ``body`` is the event
+    minus its 19-byte header and CRC32 trailer, and ``checksum`` is the
+    flag in effect, folded from each FORMAT_DESCRIPTION event (the
+    ``checksum`` argument carries it into a mid-file walk). A walk that
+    starts at offset 4 of a whole file checks the magic first;
+    ``verify`` checks each event's CRC32.
+
+    End of data: the walk stops at the first event whose header does
+    not fit or whose size runs past ``end`` — the torn tail of an
+    active file. That event's header ``log_pos`` must then be 0 (events
+    embedded in a transaction payload) or its absolute end offset,
+    which is what a writer stamps; anything else is a corrupt size
+    field and raises instead of silently truncating the read. A torn
+    tail stops quietly unless ``strict``, which raises on it and on a
+    partial trailing header. ``where`` prefixes every error (the file
+    path, when the caller opened the file)."""
+    if end is None:
+        end = len(buf)
+    if start == 4 and base == 0 and buf[:4] != BINLOG_MAGIC:
+        raise ValueError(f"{where}not a binlog file (bad magic)")
+    unpack = _HEADER.unpack_from
+    pos = start
+    while pos + _HEADER_LEN <= end:
+        ts, tc, _sid, size, log_pos, _flags = unpack(buf, pos)
+        stop = pos + size
+        if size < _HEADER_LEN or stop > end:
+            if log_pos and log_pos != base + stop:
+                raise ValueError(
+                    f"{where}corrupt event size {size} at offset "
+                    f"{base + pos}: it would end at {base + stop}, but "
+                    f"the header's log_pos is {log_pos}"
+                )
+            if strict:
+                raise ValueError(
+                    f"{where}truncated/corrupt event at offset "
+                    f"{base + pos} (size {size}, {end - pos} bytes left)"
+                )
+            return
+        if tc == EV_FORMAT_DESCRIPTION:
+            checksum = _detect_checksum(buf[pos:stop])
+        elif checksum and verify:
+            (want,) = struct.unpack_from("<I", buf, stop - 4)
+            got = zlib.crc32(buf[pos : stop - 4])
+            if got != want:
+                raise ValueError(
+                    f"{where}CRC32 mismatch on event at offset "
+                    f"{base + pos} (type {tc}): stored {want:#010x}, "
+                    f"computed {got:#010x} — corrupt or truncated binlog"
+                )
+        yield (
+            base + pos, ts, tc, size,
+            buf[pos + _HEADER_LEN : stop - 4 if checksum else stop],
+            checksum,
+        )
+        pos = stop
+    if strict and pos != end:
+        raise ValueError(
+            f"{where}{end - pos} trailing bytes after offset {base + pos} "
+            "(partial event header)"
+        )
+
+
+@contextlib.contextmanager
+def _mapped(path: str):
+    """``path`` mapped read-only for an event walk (b"" when the file
+    is empty, which mmap refuses)."""
+    with open(path, "rb") as f:
+        if os.fstat(f.fileno()).st_size == 0:
+            yield b""
+            return
+        with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+            yield mm
+
+
+def _payload_events(body: bytes, event_seq: int):
+    """The events embedded in a TRANSACTION_PAYLOAD body: checksum-free
+    per the format, framed strictly (a payload holds no torn tail)."""
+    return _events(
+        _unwrap_transaction_payload(body, event_seq), 0, checksum=False,
+        strict=True, where=f"transaction payload at offset {event_seq}: ",
+    )
+
+
+def _query_statement(body: bytes, offset: int) -> tuple[str, str] | None:
+    """A QUERY event body -> (session database, statement), or None for
+    transaction framing (BEGIN/COMMIT, empty). Public wire layout:
+    thread_id u32, exec_time u32, db_len u8, error_code u16,
+    status_vars_len u16, status vars, db + NUL, statement."""
+    if len(body) < 13:
+        raise ValueError(f"truncated QUERY event at offset {offset}")
+    _tid, _ex, db_len, _err, sv_len = struct.unpack_from("<IIBHH", body, 0)
+    p = 13 + sv_len
+    db = body[p : p + db_len].decode("utf-8", "replace")
+    stmt = body[p + db_len + 1 :].decode("utf-8", "replace")
+    if stmt.strip().upper() in ("BEGIN", "COMMIT", ""):
+        return None
+    return db, stmt
 
 
 class _TableDef:
@@ -2137,48 +2248,23 @@ def mysql_binlog_infer_target(
     until the first TABLE_MAP for (database, table); raises if that map
     carries no COLUMN_NAME metadata (binlog_row_metadata=MINIMAL — the
     server default — genuinely does not record names)."""
-    if blob[:4] != BINLOG_MAGIC:
-        raise ValueError("not a binlog file (bad magic)")
-    pos, checksum = 4, False
-    queue: list[tuple[int, bytes]] = []  # (type, body) pending inspect
-    while pos + _HEADER_LEN <= len(blob):
-        _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack_from(blob, pos)
-        if esize < _HEADER_LEN or pos + esize > len(blob):
-            break
-        ev = blob[pos : pos + esize]
-        pos += esize
-        if tc == EV_FORMAT_DESCRIPTION:
-            checksum = _detect_checksum(ev)
-            continue
+    for off, _ts, tc, _size, body, _ck in _events(blob):
         if tc == EV_TRANSACTION_PAYLOAD:
             # binlog_transaction_compression=ON wraps every TABLE_MAP
-            # inside type-40 carriers (checksum-free embedded events) —
-            # unwrap, as the decode walk does (review finding, r07)
-            inner = _unwrap_transaction_payload(
-                ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)],
-                pos - esize,
-            )
-            ipos = 0
-            while ipos + _HEADER_LEN <= len(inner):
-                _i1, itc, _i2, iesize, _i3, _i4 = _HEADER.unpack_from(
-                    inner, ipos
-                )
-                if iesize < _HEADER_LEN or ipos + iesize > len(inner):
-                    break
-                if itc == EV_TABLE_MAP:
-                    queue.append(
-                        (itc, inner[ipos + _HEADER_LEN : ipos + iesize])
-                    )
-                ipos += iesize
+            # inside type-40 carriers — unwrap, as the decode walk does
+            maps = [
+                ibody
+                for _o, _t, itc, _s, ibody, _c in _payload_events(body, off)
+                if itc == EV_TABLE_MAP
+            ]
         elif tc == EV_TABLE_MAP:
-            queue.append(
-                (tc, ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)])
-            )
-        for _tc2, body in queue:
-            result = _infer_from_table_map(body, database, table)
+            maps = [body]
+        else:
+            continue
+        for map_body in maps:
+            result = _infer_from_table_map(map_body, database, table)
             if result is not None:
                 return result
-        queue.clear()
     raise ValueError(
         f"no TABLE_MAP for {database}.{table} found in the file"
     )
@@ -2514,8 +2600,6 @@ def decode_binlog_bytes(
     values vectorized later). PARTIAL_UPDATE_ROWS events are never
     offered — their JSON diff vectors need the running before-image, so
     they stay on this scalar walk and come back in the returned list."""
-    if init_state is None and blob[:4] != BINLOG_MAGIC:
-        raise ValueError("not a binlog file (bad magic)")
     if mode not in ("permissive", "strict"):
         raise ValueError(f"mode must be permissive|strict, got {mode!r}")
     if gtid_format not in ("long", "uuid_gno"):
@@ -2545,7 +2629,6 @@ def decode_binlog_bytes(
     # (end_idx into out, names, ids) of each CLOSED schema generation —
     # remapped to the latest names after the walk
     gen_segments: list[tuple[int, tuple, tuple]] = []
-    pos = 0 if init_state is not None else 4
     checksum: bool | None = None
     gtid: int | None = None
     gtid_src: str | None = None
@@ -2713,43 +2796,19 @@ def decode_binlog_bytes(
                 img_seq += 1
                 out.append(row)
         elif tc == EV_QUERY and schema_history is not None:
-            # public wire layout (same walk as binlog_bytes_ddl):
-            # thread_id u32, exec_time u32, db_len u8, error u16,
-            # status_vars_len u16 | status vars | db + NUL | statement
-            if len(body) < 13:
-                raise ValueError(
-                    f"truncated QUERY event at offset {event_seq}"
-                )
-            _tid, _ex, db_len, _err, sv_len = struct.unpack_from(
-                "<IIBHH", body, 0
-            )
-            qp = 13 + sv_len
-            qdb = body[qp : qp + db_len].decode("utf-8", "replace")
-            qp += db_len + 1  # NUL
-            stmt = body[qp:].decode("utf-8", "replace")
-            if stmt.strip().upper() not in ("BEGIN", "COMMIT", ""):
-                if schema_history.apply(stmt, default_db=qdb or None):
-                    _begin_generation()
+            q = _query_statement(body, event_seq)
+            if q is not None and schema_history.apply(
+                q[1], default_db=q[0] or None
+            ):
+                _begin_generation()
         elif tc == EV_TRANSACTION_PAYLOAD:
-            inner = _unwrap_transaction_payload(body, event_seq)
             # embedded events carry their own 19-byte headers but NO
             # checksums (MySQL strips them when compressing); offsets
             # inside the payload sub-order under the carrier's offset
-            ipos = 0
-            sub = 0
-            while ipos + _HEADER_LEN <= len(inner):
-                iets, itc, _isid, iesize, _ilpos, _iflags = _HEADER.unpack_from(
-                    inner, ipos
-                )
-                if iesize < _HEADER_LEN or ipos + iesize > len(inner):
-                    raise ValueError(
-                        f"corrupt embedded event inside transaction "
-                        f"payload at offset {event_seq}+{ipos}"
-                    )
-                ibody = inner[ipos + _HEADER_LEN : ipos + iesize]
+            for sub, (_o, iets, itc, _s, ibody, _c) in enumerate(
+                _payload_events(body, event_seq)
+            ):
                 handle(itc, ibody, iets, event_seq + 1 + sub)
-                ipos += iesize
-                sub += 1
         elif tc in _UNSUPPORTED_PAYLOAD_EVENTS:
             # unlike the reference's default-skip (:427-428), a payload-
             # bearing event we can't decode is DATA LOSS, not noise
@@ -2787,42 +2846,17 @@ def decode_binlog_bytes(
             else:
                 handle(EV_TABLE_MAP, map_body, 0, seq_base)
 
-    while pos + _HEADER_LEN <= len(blob):
-        ets, tc, _sid, esize, _lpos, _flags = _HEADER.unpack_from(blob, pos)
-        if esize < _HEADER_LEN or pos + esize > len(blob):
-            if mode == "strict":
-                raise ValueError(
-                    f"truncated/corrupt event at offset {pos} "
-                    f"(size {esize}, file has {len(blob) - pos} bytes left)"
-                )
-            break  # partial trailing event: consumed on the next rotation
-        ev = blob[pos : pos + esize]
-        event_seq = seq_base + pos
-        pos += esize
-        if tc == EV_FORMAT_DESCRIPTION:
-            checksum = _detect_checksum(ev)
-            continue
-        if checksum:
-            # VERIFY, don't just strip: MySQL 8 defaults to
-            # binlog_checksum=CRC32, so a flipped bit in a copied/tailed
-            # file is a real-user path — decoding past it would emit
-            # silently wrong rows. zlib.crc32 is C-speed; negligible
-            # next to the per-event decode.
-            (want,) = struct.unpack_from("<I", ev, len(ev) - 4)
-            got = zlib.crc32(ev[:-4])
-            if got != want:
-                raise ValueError(
-                    f"CRC32 mismatch on event at offset {event_seq} "
-                    f"(type {tc}): stored {want:#010x}, computed "
-                    f"{got:#010x} — corrupt or truncated binlog"
-                )
-        body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
-        handle(tc, body, ets, event_seq)
-    if mode == "strict" and pos != len(blob):
-        raise ValueError(
-            f"{len(blob) - pos} trailing bytes after offset {pos} "
-            "(partial event header)"
-        )
+    # VERIFY each CRC, don't just strip it: MySQL 8 defaults to
+    # binlog_checksum=CRC32, so a flipped bit in a copied/tailed file is
+    # a real-user path — decoding past it would emit silently wrong
+    # rows. A partial trailing event (the active file's torn tail) ends
+    # a permissive walk; it is consumed on the next rotation.
+    for event_seq, ets, tc, _size, body, _ck in _events(
+        blob, 0 if init_state is not None else 4, base=seq_base,
+        checksum=checksum, strict=mode == "strict", verify=True,
+    ):
+        if tc != EV_FORMAT_DESCRIPTION:
+            handle(tc, body, ets, event_seq)
     if schema_history is not None and gen_segments:
         # surface every closed generation's rows under the LATEST
         # names: join old positions to latest positions on column
@@ -3016,18 +3050,9 @@ def mysql_binlog_read(
     if (path is None) == (index_file is None):
         raise ValueError("pass exactly one of path or index_file")
     if index_file is not None:
-        import os
-
-        base = os.path.dirname(os.path.abspath(index_file))
-        with open(index_file) as fh:
-            paths = [
-                p if os.path.isabs(p) else os.path.join(base, p)
-                for p in (line.strip() for line in fh)
-                if p
-            ]
-        if not paths:
-            raise ValueError(f"binlog index {index_file} lists no files")
-        files = spark.read.format("binaryFile").load(paths)
+        files = spark.read.format("binaryFile").load(
+            _binlog_paths(None, index_file)
+        )
     else:
         # a co-located binlog.index (the reference's listing file) is
         # never a data file; Spark's listing already skips . and _
@@ -3112,89 +3137,84 @@ def scan_binlog_splits(
     per-uuid sets instead. The reference has no positioned reads at
     all — every scan re-decodes from each file's first event
     (binlog_table_reader.cc:75-96)."""
-    if blob[:4] != BINLOG_MAGIC:
-        raise ValueError("not a binlog file (bad magic)")
-    pos = 4
-    checksum: bool | None = None
+    return _split_walk(
+        blob, target_split_bytes, start_after_gno, stop_at_gno, None,
+        _track_ddl,
+    )
+
+
+def _split_walk(
+    buf,
+    target_split_bytes: int,
+    start_after_gno: int | None,
+    stop_at_gno: int | None,
+    start_after_sets: dict[bytes, int] | None,
+    track_ddl: bool,
+    where: str = "",
+):
+    """The planner walk behind ``scan_binlog_splits`` (a buffer) and
+    ``scan_binlog_splits_file`` (a mapped file)."""
+    if start_after_sets is not None and start_after_gno is not None:
+        raise ValueError(
+            "start_after_gno and start_after_sets are mutually exclusive"
+        )
     gtid: int | None = None
     sid: bytes | None = None
     maps: dict[int, bytes] = {}
     ddl: list[tuple[str, str]] = []
     splits: list[dict] = []
-    in_window = start_after_gno is None
-    unbounded = start_after_gno is None and stop_at_gno is None
+    in_window = start_after_gno is None and start_after_sets is None
+    unbounded = in_window and stop_at_gno is None
     saw_window_txn = False
-    cur_start = 4
-    cur_state: dict = {
-        "checksum": None, "gtid": None, "sid": None, "table_maps": [],
-    }
-    if _track_ddl:
-        cur_state["ddl"] = []
-    end_at = len(blob)
-    while pos + _HEADER_LEN <= len(blob):
-        _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack_from(blob, pos)
-        if esize < _HEADER_LEN or pos + esize > len(blob):
-            break  # truncated active tail: stays in the final range
-        ev = blob[pos : pos + esize]
+    end_at = len(buf)
+
+    def carried(checksum: bool | None) -> dict:
+        st = {
+            "checksum": checksum,
+            "gtid": gtid,
+            "sid": sid,
+            "table_maps": list(maps.values()),
+        }
+        if track_ddl:
+            st["ddl"] = list(ddl)
+        return st
+
+    cur_start, cur_state = 4, carried(None)
+    for pos, _ts, tc, _size, body, checksum in _events(buf, where=where):
         if tc == EV_GTID:
-            body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
             g = struct.unpack_from("<q", body, 17)[0]
             if stop_at_gno is not None and g > stop_at_gno:
                 end_at = pos
                 break
-            if not in_window and g > start_after_gno:
+            if not in_window and (
+                g > start_after_gno
+                if start_after_gno is not None
+                else g > start_after_sets.get(bytes(body[1:17]), 0)
+            ):
                 in_window = True
-                cur_start = pos
-                cur_state = {
-                    "checksum": checksum,
-                    "gtid": gtid,
-                    "sid": sid,
-                    "table_maps": list(maps.values()),
-                }
-                if _track_ddl:
-                    cur_state["ddl"] = list(ddl)
+                cur_start, cur_state = pos, carried(checksum)
             elif in_window and pos - cur_start >= target_split_bytes:
                 splits.append({"start": cur_start, "end": pos, **cur_state})
-                cur_start = pos
-                cur_state = {
-                    "checksum": checksum,
-                    "gtid": gtid,
-                    "sid": sid,
-                    "table_maps": list(maps.values()),
-                }
-                if _track_ddl:
-                    cur_state["ddl"] = list(ddl)
+                cur_start, cur_state = pos, carried(checksum)
             saw_window_txn = saw_window_txn or in_window
             gtid = g
             sid = bytes(body[1:17])
-        elif tc == EV_FORMAT_DESCRIPTION:
-            checksum = _detect_checksum(ev)
         elif tc == EV_TABLE_MAP:
-            body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
-            tid = int.from_bytes(body[0:6], "little")
-            maps[tid] = bytes(body)
-        elif tc == EV_QUERY and _track_ddl:
-            body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
-            if len(body) >= 13:
-                _tid, _ex, db_len, _err, sv_len = struct.unpack_from(
-                    "<IIBHH", body, 0
-                )
-                qp = 13 + sv_len
-                qdb = body[qp : qp + db_len].decode("utf-8", "replace")
-                stmt = body[qp + db_len + 1 :].decode("utf-8", "replace")
-                if stmt.strip().upper() not in ("BEGIN", "COMMIT", ""):
-                    ddl.append((qdb, stmt))
+            maps[int.from_bytes(body[0:6], "little")] = bytes(body)
+        elif tc == EV_QUERY and track_ddl:
+            q = _query_statement(body, pos)
+            if q is not None:
+                ddl.append(q)
         elif tc == EV_PREVIOUS_GTIDS and stop_at_gno is not None:
-            body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
             sets = _parse_gtid_set(body)
             if sets and min(
                 _smallest_uncovered_gno(ivs) for ivs in sets.values()
             ) > stop_at_gno:
                 return []  # every gno this file can contain is past stop
-        pos += esize
+    # a truncated active tail stays attached to the last range
     if unbounded or (saw_window_txn and end_at > cur_start):
         splits.append({"start": cur_start, "end": end_at, **cur_state})
-    if _track_ddl:
+    if track_ddl:
         return splits, ddl
     return splits
 
@@ -3217,31 +3237,18 @@ def mysql_binlog_read_ddl_history(
     schema per handler, binlog_table_reader.cc:427-428).
 
     Driver-side: ``binlog_file_ddl`` header-walks each file IN
-    ROTATION ORDER (seek-based — bodies read only for QUERY/GTID, so a
-    100 GB series scans in seconds) to build each file's DDL PREFIX
-    and the series-final layout. Executor-side: one file = one decode
-    task (the usual per-file parallelism), each seeding a
-    ``SchemaHistory`` from its prefix; in-file DDL keeps folding
+    ROTATION ORDER (the file mapped read-only, no row decode) to build
+    each file's DDL PREFIX and the series-final layout. Executor-side:
+    one file = one decode task (the usual per-file parallelism), each
+    seeding a ``SchemaHistory`` from its prefix; in-file DDL keeps folding
     mid-walk; rows remap from the FILE-final onto the SERIES-final
     generation by column identity. Values decode through the Arrow
     kernel (per-generation batch groups, identity placement + casts at
     flush), then the file-final batches are renamed/cast onto the
     series-final schema."""
-    import os
-
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
-    if os.path.isdir(path):
-        paths = sorted(
-            (
-                os.path.join(path, n)
-                for n in os.listdir(path)
-                if not n.startswith(("_", ".")) and not n.endswith(".index")
-            ),
-            key=_file_seq_of,
-        )
-    else:
-        paths = [path]
+    paths = _binlog_paths(path)
     if not paths:
         raise ValueError(f"{path}: no binlog files")
     prefixes: dict[int, list] = {}
@@ -3403,38 +3410,11 @@ def binlog_prev_gtids_uncovered(path: str) -> int | None:
     fixture, foreign file): callers must then fall back to walking.
     This is the primitive behind series-level resume pruning — the
     same file-selection scan a replica's START REPLICA does."""
-    with open(path, "rb") as f:
-        if f.read(4) != BINLOG_MAGIC:
-            return None
-        checksum: bool | None = None
-        for _ in range(2):
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                return None
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            body_len = esize - _HEADER_LEN
-            if body_len < 0:
-                return None
-            rest = f.read(body_len)
-            if len(rest) < body_len:
-                return None
-            if tc == EV_FORMAT_DESCRIPTION:
-                checksum = _detect_checksum(hdr + rest)
-            elif tc == EV_PREVIOUS_GTIDS:
-                body = rest[: len(rest) - (4 if checksum else 0)]
-                try:
-                    sets = _parse_gtid_set(body)
-                except ValueError:
-                    return None
-                if not sets:
-                    return 1  # empty set: nothing executed before
-                                # (MySQL's FIRST file writes exactly this)
-                return min(
-                    _smallest_uncovered_gno(ivs) for ivs in sets.values()
-                )
-            else:
-                return None
-    return None
+    sets = binlog_prev_gtids_sets(path)
+    if sets is None:
+        return None
+    # an empty set: nothing executed before (MySQL's FIRST file)
+    return min(sets.values(), default=1)
 
 
 def prune_binlog_series_by_gtid(
@@ -3474,40 +3454,15 @@ def prune_binlog_series_by_gtid(
 
 
 def binlog_file_gnos(path: str) -> list[int]:
-    """All transaction gnos in one file, from a header-only walk (GTID
-    event headers + bodies; every other event seeks past) — no row
+    """All transaction gnos in one file, from its GTID events — no row
     decode anywhere. The per-file primitive under the executed-set
     API."""
-    import os
-
-    size = os.path.getsize(path)
-    out: list[int] = []
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError(f"{path}: not a binlog file")
-        pos = 4
-        checksum: bool | None = None
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break
-            body_len = esize - _HEADER_LEN
-            if tc in (EV_FORMAT_DESCRIPTION, EV_GTID):
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                if tc == EV_FORMAT_DESCRIPTION:
-                    checksum = _detect_checksum(hdr + rest)
-                else:
-                    body = rest[: len(rest) - (4 if checksum else 0)]
-                    out.append(int(struct.unpack_from("<q", body, 17)[0]))
-            else:
-                f.seek(body_len, 1)
-            pos += esize
-    return out
+    with _mapped(path) as mm:
+        return [
+            int(struct.unpack_from("<q", body, 17)[0])
+            for _o, _t, tc, _s, body, _c in _events(mm, where=f"{path}: ")
+            if tc == EV_GTID
+        ]
 
 
 def binlog_executed_gtid_set(spark: SparkSession, path: str) -> DataFrame:
@@ -3526,26 +3481,12 @@ def binlog_executed_gtid_set(spark: SparkSession, path: str) -> DataFrame:
     header I/O plus two self-anti-joins on gno. Single-source view
     (gnos only); a multi-source series would group the same
     computation by sid."""
-    import os
-
     import pandas as pd
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://") :]
-    elif local.startswith("file:"):
-        local = local[len("file:") :]
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = _binlog_paths(path)
     if not paths:
         return spark.createDataFrame(
             [], "start_gno long, end_gno long, n_gnos long"
@@ -3586,35 +3527,18 @@ def binlog_prev_gtids_sets(path: str) -> dict[bytes, int] | None:
     head ({} for an empty set = nothing executed before); None when
     the head is absent/unparseable. The per-source refinement of
     binlog_prev_gtids_uncovered for multi-source pruning."""
-    with open(path, "rb") as f:
-        if f.read(4) != BINLOG_MAGIC:
-            return None
-        checksum: bool | None = None
-        for _ in range(2):
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                return None
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            body_len = esize - _HEADER_LEN
-            if body_len < 0:
-                return None
-            rest = f.read(body_len)
-            if len(rest) < body_len:
-                return None
-            if tc == EV_FORMAT_DESCRIPTION:
-                checksum = _detect_checksum(hdr + rest)
-            elif tc == EV_PREVIOUS_GTIDS:
-                body = rest[: len(rest) - (4 if checksum else 0)]
-                try:
-                    sets = _parse_gtid_set(body)
-                except ValueError:
+    try:
+        with _mapped(path) as mm:
+            for i, (_o, _t, tc, _s, body, _c) in enumerate(_events(mm)):
+                if tc == EV_PREVIOUS_GTIDS:
+                    return {
+                        sid: _smallest_uncovered_gno(ivs)
+                        for sid, ivs in _parse_gtid_set(body).items()
+                    }
+                if i or tc != EV_FORMAT_DESCRIPTION:
                     return None
-                return {
-                    sid: _smallest_uncovered_gno(ivs)
-                    for sid, ivs in sets.items()
-                }
-            else:
-                return None
+    except ValueError:
+        pass
     return None
 
 
@@ -3654,117 +3578,39 @@ def prune_binlog_series_by_gtid_sets(
 
 def binlog_bytes_ddl(blob: bytes) -> list[dict]:
     """binlog_file_ddl's walk over an in-memory blob (the mapInPandas
-    decode path holds whole files as bytes): Query_log_events ->
-    ordered DDL records ({gno, offset, ts, database, statement}),
-    BEGIN/COMMIT framing filtered."""
-    size = len(blob)
-    if blob[:4] != BINLOG_MAGIC:
-        raise ValueError("not a binlog blob")
+    decode path holds whole files as bytes)."""
+    return _ddl_walk(blob)
+
+
+def _ddl_walk(buf, where: str = "") -> list[dict]:
     out: list[dict] = []
-    pos = 4
-    checksum: bool | None = None
     gno: int | None = None
-    while pos + _HEADER_LEN <= size:
-        ets, tc, _s, esize, _lp, _fl = _HEADER.unpack_from(blob, pos)
-        if esize < _HEADER_LEN or pos + esize > size:
-            break
-        if tc in (EV_FORMAT_DESCRIPTION, EV_GTID, EV_QUERY):
-            ev = blob[pos : pos + esize]
-            if tc == EV_FORMAT_DESCRIPTION:
-                checksum = _detect_checksum(ev)
-            else:
-                body = ev[_HEADER_LEN : len(ev) - (4 if checksum else 0)]
-                if tc == EV_GTID:
-                    gno = int(struct.unpack_from("<q", body, 17)[0])
-                else:
-                    if len(body) < 13:
-                        raise ValueError(f"truncated QUERY event at {pos}")
-                    _tid, _ex, db_len, _err, sv_len = struct.unpack_from(
-                        "<IIBHH", body, 0
-                    )
-                    p = 13 + sv_len
-                    database = body[p : p + db_len].decode("utf-8", "replace")
-                    p += db_len + 1  # NUL
-                    stmt = body[p:].decode("utf-8", "replace")
-                    if stmt.strip().upper() not in ("BEGIN", "COMMIT"):
-                        out.append(
-                            {
-                                "gno": gno,
-                                "offset": pos,
-                                "ts": int(ets),
-                                "database": database,
-                                "statement": stmt,
-                            }
-                        )
-        pos += esize
+    for off, ts, tc, _size, body, _ck in _events(buf, where=where):
+        if tc == EV_GTID:
+            gno = int(struct.unpack_from("<q", body, 17)[0])
+        elif tc == EV_QUERY:
+            q = _query_statement(body, off)
+            if q is not None:
+                out.append(
+                    {
+                        "gno": gno,
+                        "offset": off,
+                        "ts": int(ts),
+                        "database": q[0],
+                        "statement": q[1],
+                    }
+                )
     return out
 
 
 def binlog_file_ddl(path: str) -> list[dict]:
     """Parse a file's Query_log_events into DDL history records
-    ({gno, offset, ts, database, statement}) with a header-only walk —
-    QUERY and GTID bodies read, everything else seeks. BEGIN/COMMIT
-    markers (row-transaction framing some servers write as QUERY
-    events) are filtered; the statement text is what a schema-history
-    consumer stores. Public wire format: thread_id u32, exec_time u32,
-    db_len u8, error_code u16, status_vars_len u16, status vars, db +
-    NUL, statement."""
-    import os
-
-    size = os.path.getsize(path)
-    out: list[dict] = []
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError(f"{path}: not a binlog file")
-        pos = 4
-        checksum: bool | None = None
-        gno: int | None = None
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break
-            body_len = esize - _HEADER_LEN
-            if tc in (EV_FORMAT_DESCRIPTION, EV_GTID, EV_QUERY):
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                if tc == EV_FORMAT_DESCRIPTION:
-                    checksum = _detect_checksum(hdr + rest)
-                else:
-                    body = rest[: len(rest) - (4 if checksum else 0)]
-                    if tc == EV_GTID:
-                        gno = int(struct.unpack_from("<q", body, 17)[0])
-                    else:
-                        if len(body) < 13:
-                            raise ValueError(
-                                f"{path}: truncated QUERY event at {pos}"
-                            )
-                        _tid, _ex, db_len, _err, sv_len = struct.unpack_from(
-                            "<IIBHH", body, 0
-                        )
-                        p = 13 + sv_len
-                        database = body[p : p + db_len].decode(
-                            "utf-8", "replace"
-                        )
-                        p += db_len + 1  # NUL
-                        stmt = body[p:].decode("utf-8", "replace")
-                        if stmt.strip().upper() not in ("BEGIN", "COMMIT"):
-                            out.append(
-                                {
-                                    "gno": gno,
-                                    "offset": pos,
-                                    "ts": int(ets),
-                                    "database": database,
-                                    "statement": stmt,
-                                }
-                            )
-            else:
-                f.seek(body_len, 1)
-            pos += esize
-    return out
+    ({gno, offset, ts, database, statement}) with a walk over the file
+    mapped read-only. BEGIN/COMMIT markers (row-transaction framing some
+    servers write as QUERY events) are filtered; the statement text is
+    what a schema-history consumer stores."""
+    with _mapped(path) as mm:
+        return _ddl_walk(mm, where=f"{path}: ")
 
 
 def binlog_ddl_history(spark: SparkSession, path: str) -> DataFrame:
@@ -3775,19 +3621,9 @@ def binlog_ddl_history(spark: SparkSession, path: str) -> DataFrame:
     row decode anywhere. The reference default-skips QUERY events
     entirely (binlog_table_reader.cc:427-428), so DDL provenance is
     invisible to it."""
-    import os
-
     import pandas as pd
 
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = _binlog_paths(path)
     schema = (
         "gno long, file_seq int, offset long, commit_ts long, "
         "database string, statement string"
@@ -3817,29 +3653,14 @@ def binlog_ddl_history(spark: SparkSession, path: str) -> DataFrame:
 
 
 def binlog_file_event_census(path: str) -> dict[int, tuple[int, int]]:
-    """{event_type: (count, bytes)} for one file from a headers-only
-    walk (every body seeks) — the `mysqlbinlog | grep`-style census an
-    operator runs to see what a series is made of, without decoding a
-    row."""
-    import os
-
-    size = os.path.getsize(path)
+    """{event_type: (count, bytes)} for one file from its event headers
+    — the `mysqlbinlog | grep`-style census an operator runs to see
+    what a series is made of, without decoding a row."""
     out: dict[int, tuple[int, int]] = {}
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError(f"{path}: not a binlog file")
-        pos = 4
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break
+    with _mapped(path) as mm:
+        for _o, _t, tc, size, _b, _c in _events(mm, where=f"{path}: "):
             c, b = out.get(tc, (0, 0))
-            out[tc] = (c + 1, b + esize)
-            f.seek(esize - _HEADER_LEN, 1)
-            pos += esize
+            out[tc] = (c + 1, b + size)
     return out
 
 
@@ -3857,40 +3678,11 @@ def binlog_head_timestamp(path: str) -> int:
 
 def _first_gno_at_or_after_ts(path: str, ts_bound: int) -> int | None:
     """Header-walk one file for the FIRST transaction whose GTID event
-    timestamp is >= ts_bound; None if every transaction predates it.
-    Seek-based like scan_binlog_splits_file — headers plus GTID bodies
-    only."""
-    import os
-
-    size = os.path.getsize(path)
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError(f"{path}: not a binlog file")
-        pos = 4
-        checksum: bool | None = None
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break
-            body_len = esize - _HEADER_LEN
-            if tc == EV_FORMAT_DESCRIPTION:
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                checksum = _detect_checksum(hdr + rest)
-            elif tc == EV_GTID:
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                if ets >= ts_bound:
-                    body = rest[: len(rest) - (4 if checksum else 0)]
-                    return int(struct.unpack_from("<q", body, 17)[0])
-            else:
-                f.seek(body_len, 1)
-            pos += esize
+    timestamp is >= ts_bound; None if every transaction predates it."""
+    with _mapped(path) as mm:
+        for _o, ts, tc, _s, body, _c in _events(mm, where=f"{path}: "):
+            if tc == EV_GTID and ts >= ts_bound:
+                return int(struct.unpack_from("<q", body, 17)[0])
     return None
 
 
@@ -3974,21 +3766,7 @@ def mysql_binlog_read_time_range(
     window exactly. The reference has no time surface at all — its
     users re-scan everything and filter __tm after decoding the full
     history."""
-    import os
-
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://") :]
-    elif local.startswith("file:"):
-        local = local[len("file:") :]
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = _binlog_paths(path)
     start_after, stop_at = binlog_time_to_gno_bounds(
         paths, start_ts, stop_ts
     )
@@ -4021,12 +3799,10 @@ def scan_binlog_splits_file(
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
 ) -> list[dict]:
-    """Streaming twin of scan_binlog_splits: IDENTICAL split specs, but
-    O(read-buffer) memory — reads the 19-byte event headers plus only
-    FDE/GTID/TABLE_MAP bodies (plus the PREVIOUS_GTIDS head when a stop
-    bound is set) and seeks across everything else, so a 50 GB file
-    header-walks without ever materializing (the bytes-based variant
-    serves tests and already-loaded buffers). GTID bounds behave as in
+    """File twin of scan_binlog_splits: the same walk over the file
+    mapped read-only, so IDENTICAL split specs without ever reading the
+    file into memory (the bytes-based variant serves tests and
+    already-loaded buffers). GTID bounds behave as in
     scan_binlog_splits, including the O(1)-read whole-file skip off the
     PREVIOUS_GTIDS head and the early exit at the stop bound.
 
@@ -4040,101 +3816,11 @@ def scan_binlog_splits_file(
     consumed transactions AFTER the window opens still decode; the
     caller's per-sid residual filter (mysql_binlog_read_gtid_sets)
     keeps output exact."""
-    import os
-
-    if start_after_sets is not None and start_after_gno is not None:
-        raise ValueError(
-            "start_after_gno and start_after_sets are mutually exclusive"
+    with _mapped(path) as mm:
+        return _split_walk(
+            mm, target_split_bytes, start_after_gno, stop_at_gno,
+            start_after_sets, False, where=f"{path}: ",
         )
-    size = os.path.getsize(path)
-    splits: list[dict] = []
-    in_window = start_after_gno is None and start_after_sets is None
-    unbounded = in_window and stop_at_gno is None
-    saw_window_txn = False
-    end_at = size
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            raise ValueError("not a binlog file (bad magic)")
-        pos = 4
-        checksum: bool | None = None
-        gtid: int | None = None
-        sid: bytes | None = None
-        maps: dict[int, bytes] = {}
-        cur_start = 4
-        cur_state: dict = {
-            "checksum": None, "gtid": None, "sid": None, "table_maps": [],
-        }
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break  # truncated active tail: stays in the final range
-            body_len = esize - _HEADER_LEN
-            want_body = tc in (
-                EV_FORMAT_DESCRIPTION, EV_GTID, EV_TABLE_MAP
-            ) or (tc == EV_PREVIOUS_GTIDS and stop_at_gno is not None)
-            if want_body:
-                rest = f.read(body_len)
-                if len(rest) < body_len:
-                    break
-                if tc == EV_FORMAT_DESCRIPTION:
-                    checksum = _detect_checksum(hdr + rest)
-                else:
-                    body = rest[: len(rest) - (4 if checksum else 0)]
-                    if tc == EV_GTID:
-                        g = struct.unpack_from("<q", body, 17)[0]
-                        if stop_at_gno is not None and g > stop_at_gno:
-                            end_at = pos
-                            break
-                        if not in_window and (
-                            g > start_after_gno
-                            if start_after_gno is not None
-                            else g
-                            > start_after_sets.get(bytes(body[1:17]), 0)
-                        ):
-                            in_window = True
-                            cur_start = pos
-                            cur_state = {
-                                "checksum": checksum,
-                                "gtid": gtid,
-                                "sid": sid,
-                                "table_maps": list(maps.values()),
-                            }
-                        elif (
-                            in_window
-                            and pos - cur_start >= target_split_bytes
-                        ):
-                            splits.append(
-                                {"start": cur_start, "end": pos, **cur_state}
-                            )
-                            cur_start = pos
-                            cur_state = {
-                                "checksum": checksum,
-                                "gtid": gtid,
-                                "sid": sid,
-                                "table_maps": list(maps.values()),
-                            }
-                        saw_window_txn = saw_window_txn or in_window
-                        gtid = g
-                        sid = bytes(body[1:17])
-                    elif tc == EV_TABLE_MAP:
-                        tid = int.from_bytes(body[0:6], "little")
-                        maps[tid] = bytes(body)
-                    else:  # PREVIOUS_GTIDS head, stop bound set
-                        sets = _parse_gtid_set(body)
-                        if sets and min(
-                            _smallest_uncovered_gno(ivs)
-                            for ivs in sets.values()
-                        ) > stop_at_gno:
-                            return []
-            else:
-                f.seek(body_len, 1)
-            pos += esize
-    if unbounded or (saw_window_txn and end_at > cur_start):
-        splits.append({"start": cur_start, "end": end_at, **cur_state})
-    return splits
 
 
 # In-memory split-spec cache: bounded LRU, not a plain dict — a
@@ -4174,7 +3860,6 @@ def scan_binlog_splits_cached(
     import base64
     import hashlib
     import json
-    import os
     import tempfile
 
     ap = os.path.abspath(path)
@@ -4364,8 +4049,6 @@ def mysql_binlog_read_parallel(
     with the caller's per-sid filter (mysql_binlog_read_gtid_sets),
     since interleaved consumed transactions can follow the window
     open."""
-    import os
-
     import pandas as pd
 
     # driver-side listing only (the reference's binlog.index contract);
@@ -4376,15 +4059,7 @@ def mysql_binlog_read_parallel(
     if isinstance(path, (list, tuple)):
         paths = [_strip_file_scheme(p) for p in path]
     else:
-        local = _strip_file_scheme(path)
-        if os.path.isdir(local):
-            paths = sorted(
-                os.path.join(local, n)
-                for n in os.listdir(local)
-                if not n.startswith(("_", ".")) and not n.endswith(".index")
-            )
-        else:
-            paths = [local]
+        paths = _binlog_paths(path)
     # series-level GTID pruning off the PREVIOUS_GTIDS heads: resuming
     # near the tail of a long retained history must not even SCHEDULE
     # header walks for the pre-window files (one tiny head read per
@@ -4533,19 +4208,9 @@ def mysql_binlog_read_gtid_sets(
     files decode fully — at scale that is 1-2 files per source against
     a pruned history. Closes the single-source-only caveat of
     mysql_binlog_read_gtid_range."""
-    import os
-
     from pyspark.sql import functions as F
 
-    local = _strip_file_scheme(path)
-    if os.path.isdir(local):
-        paths = sorted(
-            os.path.join(local, n)
-            for n in os.listdir(local)
-            if not n.startswith(("_", ".")) and not n.endswith(".index")
-        )
-    else:
-        paths = [local]
+    paths = _binlog_paths(path)
     keep = prune_binlog_series_by_gtid_sets(paths, start_after)
     out_schema = _binlog_out_schema(target, "uuid_gno", capture_query)
     if not keep:
@@ -4612,16 +4277,18 @@ def mysql_binlog_read_stream(
 # --- sub-rotation streaming tail (custom DataSource) -------------------------
 
 
-def _event_boundary_walk(buf: bytes, start: int) -> int:
-    """Advance ``start`` (an event boundary within ``buf``) past every
-    complete event; no magic assumptions — serves mid-file resumes
-    where the caller seek-read from a known boundary."""
+def _event_boundary_walk(
+    buf: bytes, start: int, base: int = 0, where: str = ""
+) -> int:
+    """Advance ``start`` (an event boundary within ``buf``, whose first
+    byte sits at file offset ``base``) past every complete event —
+    serves mid-file resumes where the caller seek-read from a known
+    boundary."""
     pos = start
-    while pos + _HEADER_LEN <= len(buf):
-        esize = struct.unpack_from("<I", buf, pos + 9)[0]
-        if esize < _HEADER_LEN or pos + esize > len(buf):
-            break
-        pos += esize
+    for off, _t, _tc, size, _b, _c in _events(
+        buf, start, base=base, where=where
+    ):
+        pos = off - base + size
     return pos
 
 
@@ -4631,72 +4298,49 @@ def _complete_prefix_len_path(path: str) -> int:
     ``os.path.getsize()`` can fall mid-event (torn tail write); every
     cursor in this reader means an event boundary, and a mid-event pos
     would make later micro-batches read garbage event sizes (permanent
-    stall or CRC kill). Header-walk with seeks — O(#events) 19-byte
-    reads, no body materialization."""
-    import os
-
-    size = os.path.getsize(path)
-    with open(path, "rb", buffering=1 << 20) as f:
-        if f.read(4) != BINLOG_MAGIC:
-            return 0
-        pos = 4
-        while pos + _HEADER_LEN <= size:
-            hdr = f.read(_HEADER_LEN)
-            if len(hdr) < _HEADER_LEN:
-                break
-            _ets, _tc, _s, esize, _lp, _fl = _HEADER.unpack(hdr)
-            if esize < _HEADER_LEN or pos + esize > size:
-                break  # truncated active tail: park before it
-            f.seek(esize - _HEADER_LEN, 1)
-            pos += esize
-    return pos
+    stall or CRC kill)."""
+    with _mapped(path) as mm:
+        return _complete_prefix_len(mm, where=f"{path}: ")
 
 
-def _complete_prefix_len(blob: bytes, start: int = 4) -> int:
+def _complete_prefix_len(blob: bytes, start: int = 4, where: str = "") -> int:
     """Byte length of the longest whole-event prefix (magic included):
     the safe read horizon of the ACTIVE, still-growing binlog file.
     ``start`` (an event boundary ≥4) resumes the walk mid-file so a
     tail micro-batch only walks bytes it hasn't seen."""
     if blob[:4] != BINLOG_MAGIC:
         return 0
-    return _event_boundary_walk(blob, max(start, 4))
+    return _event_boundary_walk(blob, max(start, 4), where=where)
 
 
-def _carry_walk(blob: bytes, frm: int, upto: int, state: dict) -> None:
-    """Header walk of blob[frm:upto] (event boundaries), folding decoder
-    state into ``state`` = {"checksum", "gtid", "sid", "maps": {tid:
-    body}} — the same replayable state the parallel split scan carries
+def _carry_walk(
+    blob: bytes, frm: int, upto: int, state: dict, base: int = 0
+) -> None:
+    """Walk of blob[frm:upto] (event boundaries; ``blob`` starts at file
+    offset ``base``), folding decoder state into ``state`` =
+    {"checksum", "gtid", "sid", "maps": {tid: body}} — the same
+    replayable state the parallel split scan carries
     (scan_binlog_splits), but resumable so the streaming tail pays only
     the NEW bytes each micro-batch instead of re-decoding the whole
-    active-file prefix. Touches only 19-byte headers plus FDE/GTID/
-    TABLE_MAP bodies."""
-    pos = frm
-    while pos + _HEADER_LEN <= upto:
-        _ets, tc, _s, esize, _lp, _fl = _HEADER.unpack_from(blob, pos)
-        if esize < _HEADER_LEN or pos + esize > upto:
-            break
+    active-file prefix."""
+    for _o, _t, tc, _s, body, checksum in _events(
+        blob, frm, upto, base, state["checksum"]
+    ):
         if tc == EV_FORMAT_DESCRIPTION:
-            state["checksum"] = _detect_checksum(blob[pos : pos + esize])
-        elif tc in (EV_GTID, EV_TABLE_MAP, EV_ROWS_QUERY):
-            end = pos + esize - (4 if state["checksum"] else 0)
-            body = blob[pos + _HEADER_LEN : end]
-            if tc == EV_GTID:
-                state["gtid"] = struct.unpack_from("<q", body, 17)[0]
-                state["sid"] = bytes(body[1:17])
-                # statement scope is one transaction (mirrors the
-                # decode walk): a cursor can sit between ROWS_QUERY
-                # and its rows event, so the carry must fold it
-                state["rows_query"] = None
-            elif tc == EV_ROWS_QUERY:
-                # lossy for the same reason as the decode walk: the
-                # statement charset is the connection's, not UTF-8
-                state["rows_query"] = body[1:].decode(
-                    "utf-8", errors="replace"
-                )
-            else:
-                tid = int.from_bytes(body[0:6], "little")
-                state["maps"][tid] = bytes(body)
-        pos += esize
+            state["checksum"] = checksum
+        elif tc == EV_GTID:
+            state["gtid"] = struct.unpack_from("<q", body, 17)[0]
+            state["sid"] = bytes(body[1:17])
+            # statement scope is one transaction (mirrors the decode
+            # walk): a cursor can sit between ROWS_QUERY and its rows
+            # event, so the carry must fold it
+            state["rows_query"] = None
+        elif tc == EV_ROWS_QUERY:
+            # lossy for the same reason as the decode walk: the
+            # statement charset is the connection's, not UTF-8
+            state["rows_query"] = body[1:].decode("utf-8", errors="replace")
+        elif tc == EV_TABLE_MAP:
+            state["maps"][int.from_bytes(body[0:6], "little")] = bytes(body)
 
 
 def _tail_target(options: dict) -> T.StructType:
@@ -4843,16 +4487,7 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
         return {"seq": last_seq, "pos": _complete_prefix_len_path(last_path)}
 
     def _files(self) -> list[tuple[int, str]]:
-        import os
-
-        if os.path.isdir(self.path):
-            pairs = [
-                (_file_seq_of(n), os.path.join(self.path, n))
-                for n in os.listdir(self.path)
-                if not n.startswith((".", "_")) and not n.endswith(".index")
-            ]
-            return sorted(pairs)
-        return [(_file_seq_of(self.path), self.path)]
+        return [(_file_seq_of(p), p) for p in _binlog_paths(self.path)]
 
     def _delta(self, start: dict, upto: dict | None = None):
         from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
@@ -4887,7 +4522,9 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
                     fh.seek(base)
                 blob = fh.read()
             if base == 0:
-                prefix = _complete_prefix_len(blob, start=max(lo, 4))
+                prefix = _complete_prefix_len(
+                    blob, max(lo, 4), where=f"{path}: "
+                )
                 if prefix < 4:
                     # Not (yet) a binlog file: a just-rotated file whose
                     # 4-byte magic isn't on disk, or a foreign file in
@@ -4897,7 +4534,9 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
                     # the query.
                     continue
             else:
-                prefix = base + _event_boundary_walk(blob, lo - base)
+                prefix = base + _event_boundary_walk(
+                    blob, lo - base, base, where=f"{path}: "
+                )
             if upto is not None and seq == upto["seq"]:
                 prefix = min(prefix, upto["pos"])
             if prefix <= lo and seq == start["seq"]:
@@ -4913,7 +4552,7 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
                         "checksum": None, "gtid": None, "sid": None,
                         "maps": {},
                     }
-                _carry_walk(blob, walk_from - base, lo - base, state)
+                _carry_walk(blob, walk_from - base, lo - base, state, base)
                 if seq not in self._carry or lo >= self._carry[seq][0]:
                     self._carry[seq] = (lo, state)
                 batches = decode_binlog_record_batches(
@@ -5320,7 +4959,6 @@ def _stage_binlog_files(
     hook removes it when the driver exits."""
     import atexit
     import hashlib
-    import os
     import shutil
     import tempfile
 
@@ -6219,7 +5857,7 @@ def cdc_binlog_ddl_series_decode(
     parallel while rotation order puts each generation's DDL before
     every file of rows it governs, and the data files carry no DDL of
     their own. The read is the zero-declaration entry point
-    ``mysql_binlog_read_ddl_history``: a seek-based driver pre-walk
+    ``mysql_binlog_read_ddl_history``: a driver-side header pre-walk
     builds each file's DDL prefix and the series-final layout, each
     file decodes in its own task through the COLUMNAR kernel seeded
     with its prefix, and rows remap onto the series-final names by
@@ -6893,8 +6531,6 @@ def cdc_binlog_event_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = _encode_files(base, build)
     stage = _stage_binlog_files(spark, files, f"{sf_dir}|event_census")
 
-    import os
-
     paths = sorted(
         os.path.join(stage, n)
         for n in os.listdir(stage)
@@ -7535,7 +7171,6 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
         return names, rows()
 
     def write(self, batches) -> "_WriterCommitMessage":
-        import os
         import uuid
 
         from pyspark import TaskContext
@@ -7572,8 +7207,6 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
         # series (a task cannot know its successor's name: empty input
         # partitions leave numbering gaps, so the chain is only known
         # here, after every task reported what it wrote)
-        import os
-
         names = sorted(m.name for m in messages if getattr(m, "name", None))
         # honor the overwrite contract: a re-save that yields fewer
         # non-empty partitions (or different task numbering) must not
@@ -7601,8 +7234,6 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
                 )
 
     def abort(self, messages) -> None:
-        import os
-
         if os.path.isdir(self.path):
             for f in os.listdir(self.path):
                 if f.startswith(".binlog.") and f.endswith(".tmp"):
@@ -7635,7 +7266,6 @@ class MysqlBinlogStreamWriter(_DataSourceStreamArrowWriter):
         self.path = self._inner.path
 
     def write(self, iterator) -> "_WriterCommitMessage":
-        import os
         import uuid
 
         from pyspark import TaskContext
@@ -7658,8 +7288,6 @@ class MysqlBinlogStreamWriter(_DataSourceStreamArrowWriter):
         return _BinlogWriteMsg(tmp)
 
     def commit(self, messages, batchId: int) -> None:
-        import os
-
         tmps = sorted(
             m.name for m in messages if getattr(m, "name", None)
         )
@@ -7700,8 +7328,6 @@ class MysqlBinlogStreamWriter(_DataSourceStreamArrowWriter):
                 )
 
     def abort(self, messages, batchId: int) -> None:
-        import os
-
         for m in messages:
             name = getattr(m, "name", None)
             if name and os.path.exists(os.path.join(self.path, name)):
@@ -7747,7 +7373,6 @@ def cdc_binlog_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touches the wire (the changelog CTE twin). The reference's
     write path silently discards rows (binlogdb.cc:283-292)."""
     import hashlib
-    import os
     import tempfile
 
     from pyspark.sql import functions as F
@@ -7878,34 +7503,9 @@ class MysqlBinlogReader(_DataSourceReader):
                 self.start_after_sets[u.lower()] = int(g)
 
     def partitions(self):
-        import os
-
         # the reference's binlog.index entry point, on the format
-        # surface too: option("index_file", ...) reads the listed
-        # files (relative names resolve against the index's dir)
-        index_file = self.options_index_file
-        if index_file:
-            base = os.path.dirname(os.path.abspath(index_file))
-            with open(index_file) as fh:
-                paths = [
-                    p if os.path.isabs(p) else os.path.join(base, p)
-                    for p in (line.strip() for line in fh)
-                    if p
-                ]
-            if not paths:
-                raise ValueError(
-                    f"binlog index {index_file} lists no files"
-                )
-        else:
-            local = _strip_file_scheme(self.path)
-            if os.path.isdir(local):
-                paths = sorted(
-                    os.path.join(local, n)
-                    for n in os.listdir(local)
-                    if not n.startswith(("_", ".")) and not n.endswith(".index")
-                )
-            else:
-                paths = [local]
+        # surface too: option("index_file", ...) reads the listed files
+        paths = _binlog_paths(self.path, self.options_index_file)
         sets_bytes = None
         if self.start_after_sets is not None:
             sets_bytes = {
@@ -7930,6 +7530,10 @@ class MysqlBinlogReader(_DataSourceReader):
         return parts
 
     def read(self, partition: "_BinlogSplit"):
+        # nothing left to read (an empty listing, or every file pruned):
+        # Spark plans one partition anyway and hands it in as None
+        if partition is None:
+            return
         import pyarrow.compute as pc
 
         from mysql_cdc_table_spark.sources.mysql_binlog_vec import (

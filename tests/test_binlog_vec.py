@@ -882,12 +882,11 @@ def test_rows_query_tail_carry_mid_transaction_cursor(tmp_path):
     event must still stamp the statement on the rows decoded next
     batch — the carry walk folds rows_query like gtid."""
     from mysql_cdc_table_spark.sources.mysql_binlog import (
-        _HEADER,
-        _HEADER_LEN,
+        EV_ROWS_QUERY,
         MysqlBinlogTailStreamReader,
+        _events,
         build_binlog_file,
     )
-    import struct as _s
 
     tgt_ddl = "id bigint, v string"
     tgt = T.StructType(
@@ -900,20 +899,13 @@ def test_rows_query_tail_carry_mid_transaction_cursor(tmp_path):
         {"gno": 2, "op": "w", "rows": [{"id": 2, "v": "b"}], "query": "Q2"},
     ]
     full = build_binlog_file("d", "t", tgt, txns)
-    # find the byte offset of txn 2's TABLE_MAP (the event AFTER its
-    # ROWS_QUERY): walk headers, note the boundary right after the
-    # second ROWS_QUERY event
-    pos, cut = 4, None
-    seen_rq = 0
-    while pos + _HEADER_LEN <= len(full):
-        _ts, tc, _sid, esize, _lp, _fl = _HEADER.unpack_from(full, pos)
-        pos += esize
-        if tc == 29:  # EV_ROWS_QUERY
-            seen_rq += 1
-            if seen_rq == 2:
-                cut = pos  # boundary between ROWS_QUERY and TABLE_MAP
-                break
-    assert cut is not None
+    # the byte offset of txn 2's TABLE_MAP: the boundary right after
+    # the second ROWS_QUERY event
+    cut = [
+        off + size
+        for off, _ts, tc, size, _b, _c in _events(full)
+        if tc == EV_ROWS_QUERY
+    ][1]
     (d / "binlog.000001").write_bytes(full[:cut])
     r = MysqlBinlogTailStreamReader(
         {"path": str(d), "schema_ddl": tgt_ddl, "database": "d",
@@ -1102,10 +1094,9 @@ def test_tail_initial_offset_parks_at_event_boundary_not_getsize(tmp_path):
     kill). It must park at the last COMPLETE-event boundary, and the
     torn transaction must surface cleanly once its bytes land."""
     from mysql_cdc_table_spark.sources.mysql_binlog import (
-        _HEADER,
-        _HEADER_LEN,
         EV_GTID,
         MysqlBinlogTailStreamReader,
+        _events,
     )
 
     tgt = T.StructType(
@@ -1115,16 +1106,7 @@ def test_tail_initial_offset_parks_at_event_boundary_not_getsize(tmp_path):
     full = build_binlog_file("d", "t", tgt, [txn(g) for g in range(1, 5)])
 
     # boundary where txn 4's GTID event starts
-    pos, cut, n_gtid = 4, None, 0
-    while pos + _HEADER_LEN <= len(full):
-        _ts, tc, _sid, esize, _lp, _fl = _HEADER.unpack_from(full, pos)
-        if tc == EV_GTID:
-            n_gtid += 1
-            if n_gtid == 4:
-                cut = pos
-                break
-        pos += esize
-    assert cut is not None
+    cut = [off for off, _ts, tc, *_ in _events(full) if tc == EV_GTID][3]
 
     d = tmp_path / "logs"
     d.mkdir()

@@ -22,6 +22,10 @@ from mysql_cdc_table_spark.sources.mysql_binlog import (
     decode_binlog_bytes,
     mysql_binlog_read,
 )
+from mysql_cdc_table_spark.streaming.cdc_stream import (
+    await_drained,
+    run_to_completion,
+)
 
 TARGET = T.StructType(
     [
@@ -887,17 +891,14 @@ def test_tail_stream_sub_rotation_latency(spark, tmp_path):
     def run_once():
         got: list = []
 
-        q = (
+        run_to_completion(
             mysql_binlog_tail_stream(spark, str(d), ddl, "d", "t")
             .writeStream.foreachBatch(
                 lambda df, _eid: got.extend(df.collect())
             )
             .outputMode("append")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return got
 
     batch1 = sorted(run_once(), key=lambda r: (r["__event_seq"], r["__image_seq"]))
@@ -2339,17 +2340,14 @@ def test_tail_stream_gtid_start_position(spark, tmp_path):
 
     def run_once(**kw):
         got: list = []
-        q = (
+        run_to_completion(
             mysql_binlog_tail_stream(spark, str(d), ddl, "d", "t", **kw)
             .writeStream.foreachBatch(
                 lambda df, _eid: got.extend(df.collect())
             )
             .outputMode("append")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return got
 
     batch1 = run_once(start_after_gno=45)
@@ -2364,7 +2362,7 @@ def test_tail_stream_gtid_start_position(spark, tmp_path):
 
     # a bound past everything parks at the tail: first batch is empty
     ckpt2_rows: list = []
-    q = (
+    run_to_completion(
         mysql_binlog_tail_stream(
             spark, str(d), ddl, "d", "t", start_after_gno=10_000
         )
@@ -2373,10 +2371,7 @@ def test_tail_stream_gtid_start_position(spark, tmp_path):
         )
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     assert ckpt2_rows == []
 
 
@@ -2802,7 +2797,7 @@ def test_tail_stream_e2e_multi_source_sets(spark, tmp_path):
 
     def run_once():
         got: list = []
-        q = (
+        run_to_completion(
             mysql_binlog_tail_stream(
                 spark, str(d), ddl, "d", "t", start_after_sets=bounds
             )
@@ -2811,10 +2806,7 @@ def test_tail_stream_e2e_multi_source_sets(spark, tmp_path):
             )
             .outputMode("append")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return got
 
     batch1 = run_once()
@@ -3265,7 +3257,7 @@ def test_mysql_binlog_stream_writer_sink_e2e(spark, tmp_path):
         ).repartition(2, "__gtid")
 
     def run_once():
-        q = (
+        run_to_completion(
             changelog(
                 spark.readStream.schema(in_schema)
                 .option("maxFilesPerTrigger", 1)
@@ -3276,10 +3268,8 @@ def test_mysql_binlog_stream_writer_sink_e2e(spark, tmp_path):
             .option("database", "d")
             .option("table", "t")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start(out)
+            .option("path", out)
         )
-        q.awaitTermination()
 
     run_once()
     files1 = sorted(os.listdir(out))
@@ -3788,7 +3778,7 @@ def test_mysql_binlog_relay_filters_and_rechains(spark, tmp_path):
             compression="zstd",
             available_now=True,
         )
-        q.awaitTermination()
+        await_drained(q)
 
     relay_once()
     got = mysql_binlog_read(spark, dst, tgt, "d", "t")
@@ -3972,17 +3962,160 @@ def test_file_seq_rejects_rotation_numbers_past_int32():
         _file_seq_of("/logs/binlog.2148000000")
 
 
+@pytest.mark.parametrize("checksum", [True, False])
+def test_corrupt_event_size_raises_instead_of_truncating(tmp_path, checksum):
+    """A bit flip in a mid-file event's size field used to read as the
+    active file's torn tail, so every walk stopped there and returned a
+    silent prefix. The header's log_pos (the writer's end offset)
+    disagrees with such a size: the kernel, the planner plus range
+    decode, the DDL walk and the census all raise, naming the offset
+    (and the path where they opened the file)."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        binlog_file_ddl,
+        binlog_file_event_census,
+        scan_binlog_splits_file,
+    )
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
+
+    r = lambda i: {"id": i, "v": "v" * (i % 30), "amt": Decimal(i)}
+    txns = [_txn(i, "w", [r(i)]) for i in range(1, 201)]
+    blob = build_binlog_file("d", "t", TARGET, txns, checksum=checksum)
+    # the first 100 transactions frame a byte prefix of the file, so its
+    # length is the offset of transaction 101's GTID event
+    off = len(build_binlog_file("d", "t", TARGET, txns[:100], checksum=checksum))
+    bad = bytearray(blob)
+    bad[off + 12] ^= 0x80  # size u32 after ts u32, type u8, server_id u32
+    bad = bytes(bad)
+    path = tmp_path / "binlog.000001"
+    path.write_bytes(bad)
+    msg = f"corrupt event size .* at offset {off}"
+    with pytest.raises(ValueError, match=msg):
+        list(decode_binlog_record_batches(bad, TARGET, "d", "t"))
+    with pytest.raises(ValueError, match=f"{path}: {msg}"):
+        for s in scan_binlog_splits_file(str(path), 1024):
+            list(
+                decode_binlog_record_batches(
+                    bad[s["start"] : s["end"]], TARGET, "d", "t",
+                    init_state=s, seq_base=s["start"],
+                )
+            )
+    for walk in (binlog_file_ddl, binlog_file_event_census):
+        with pytest.raises(ValueError, match=f"{path}: {msg}"):
+            walk(str(path))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_truncated_file_decodes_exactly_its_complete_events(data):
+    """Cutting a writer-made file anywhere past its magic decodes
+    exactly the rows of the events wholly before the cut, through the
+    kernel and through the planner's ranges; strict mode raises unless
+    the cut lands on an event boundary."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _events,
+        scan_binlog_splits,
+    )
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
+
+    r = lambda i: {"id": i, "v": "v" * (i % 7), "amt": Decimal(i)}
+    checksum = data.draw(st.booleans())
+    blob = build_binlog_file(
+        "d", "t", TARGET,
+        [
+            _txn(i, "u", [(r(i), r(i + 1))]) if i % 3 == 0
+            else _txn(i, "w", [r(i)])
+            for i in range(1, 16)
+        ],
+        checksum=checksum,
+    )
+    ends = {off: off + size for off, _t, _tc, size, _b, _c in _events(blob)}
+    cut = data.draw(st.integers(4, len(blob)))
+    head = blob[:cut]
+
+    def rows(batches):  # in file order: batches group rows by kind
+        return sorted(
+            (row for b in batches for row in b.to_pylist()),
+            key=lambda row: (row["__event_seq"], row["__image_seq"]),
+        )
+
+    full = rows(decode_binlog_record_batches(blob, TARGET, "d", "t"))
+    want = [row for row in full if ends[row["__event_seq"]] <= cut]
+    assert rows(decode_binlog_record_batches(head, TARGET, "d", "t")) == want
+    ranged = []
+    for s in scan_binlog_splits(head, 256):
+        ranged += rows(
+            decode_binlog_record_batches(
+                head[s["start"] : s["end"]], TARGET, "d", "t",
+                init_state=s, seq_base=s["start"],
+            )
+        )
+    assert ranged == want
+    if cut == 4 or cut in ends.values():
+        rows(decode_binlog_record_batches(head, TARGET, "d", "t", mode="strict"))
+    else:
+        with pytest.raises(ValueError, match="truncated|trailing"):
+            rows(
+                decode_binlog_record_batches(
+                    head, TARGET, "d", "t", mode="strict"
+                )
+            )
+
+
+def test_format_reader_with_nothing_to_read_returns_no_rows(spark, tmp_path):
+    """format("mysql_binlog") over an empty directory, or with a
+    start_after_gno past the series' last transaction, plans no
+    partition; Spark then reads one None partition, which yields zero
+    rows under the declared schema."""
+    from mysql_cdc_table_spark.sources.datasource import register
+
+    register(spark)
+    ddl = "id bigint, v string, amt decimal(10,2)"
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    d = tmp_path / "logs"
+    d.mkdir()
+    r = lambda i: {"id": i, "v": f"v{i}", "amt": Decimal(i)}
+    (d / "binlog.000001").write_bytes(
+        build_binlog_file(
+            "d", "t", TARGET, [_txn(i, "w", [r(i)]) for i in range(1, 6)],
+            previous_gtids={},
+        )
+    )
+
+    def fmt(path, **opts):
+        rd = (
+            spark.read.format("mysql_binlog")
+            .option("schema_ddl", ddl)
+            .option("database", "d")
+            .option("table", "t")
+        )
+        for k, v in opts.items():
+            rd = rd.option(k, str(v))
+        return rd.load(str(path))
+
+    assert fmt(d).count() == 5
+    for df in (fmt(empty), fmt(d, start_after_gno=99)):
+        assert df.collect() == []
+        assert df.columns[:3] == ["id", "v", "amt"]
+
+
 def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
-    """Static guard over the package source. Registry fixtures decode
-    through the production columnar kernel: only the scalar walk's own
-    internals and the deliberate kernel-vs-walk parity keys may call
-    ``decode_binlog_bytes``. And no stream wait is unbounded: every
-    ``awaitTermination`` carries a timeout (``run_to_completion`` /
-    ``await_drained``)."""
+    """Static guard over the package source and the tests. Registry
+    fixtures decode through the production columnar kernel: only the
+    scalar walk's own internals and the deliberate kernel-vs-walk
+    parity keys may call ``decode_binlog_bytes``. Only the one event
+    walk, ``_events``, reads the 19-byte event header. And no stream
+    wait is unbounded: every ``awaitTermination`` carries a timeout
+    (``run_to_completion`` / ``await_drained``)."""
     import ast
     import pathlib
 
-    root = pathlib.Path(__file__).resolve().parents[1] / "mysql_cdc_table_spark"
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    root = repo / "mysql_cdc_table_spark"
     allowed = {
         # the walk's internals: the kernel runs it for headers/state,
         # and the split-range history decode is its only implementation
@@ -3993,20 +4126,29 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
         ("operators/round15.py", "cdc_binlog_gbk_roundtrip"),
         ("sources/mysql_binlog.py", "cdc_binlog_ddl_schema_decode"),
     }
-    walk_callers, untimed = set(), []
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
+    walk_callers, header_readers, untimed = set(), set(), []
+    files = sorted(root.rglob("*.py")) + sorted((repo / "tests").glob("*.py"))
+    for path in files:
+        rel = path.relative_to(root if root in path.parents else repo)
+        rel = rel.as_posix()
         for top in ast.parse(path.read_text(), filename=str(path)).body:
             for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("unpack", "unpack_from")
+                    and getattr(node.value, "id", None) == "_HEADER"
+                ):
+                    header_readers.add((rel, getattr(top, "name", "<module>")))
                 if not isinstance(node, ast.Call):
                     continue
                 fn = node.func
                 name = getattr(fn, "id", None) or getattr(fn, "attr", None)
-                if name == "decode_binlog_bytes":
+                if name == "decode_binlog_bytes" and root in path.parents:
                     walk_callers.add((rel, getattr(top, "name", "<module>")))
                 elif name == "awaitTermination" and not (
                     node.args or node.keywords
                 ):
                     untimed.append(f"{rel}:{node.lineno}")
     assert walk_callers - allowed == set()
+    assert header_readers == {("sources/mysql_binlog.py", "_events")}
     assert untimed == []

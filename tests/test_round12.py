@@ -15,6 +15,7 @@ from mysql_cdc_table_spark.plans.audit import (
     assert_no_cartesian,
     formatted_plan,
 )
+from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
 
 # --- full-outer stream-stream join -------------------------------------------
@@ -144,10 +145,7 @@ def test_ivm_streaming_restart_resumes_from_checkpoint(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
         )
-        q = ivm_view_stream(stream, state_dir, ckpt).trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination()
+        run_to_completion(ivm_view_stream(stream, state_dir, ckpt))
 
     run(parts[:2])  # stream #1 sees only half the feed, then terminates
     after_first = _ivm_versions(spark, state_dir)
@@ -1062,15 +1060,12 @@ def _run_tt_stream(spark, sf_dir, root, retain):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{root}/feed")
     )
-    q = (
+    run_to_completion(
         ivm_view_stream(
             stream, f"{root}/state", f"{root}/ckpt",
             query_name=f"tt_{uuid.uuid4().hex[:8]}", retain=retain,
         )
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return f"{root}/state"
 
 
@@ -1787,15 +1782,12 @@ def test_scd2_streaming_restart_resumes_from_checkpoint(spark, sf_dir):
         def body(batch_df, batch_id):
             scd2_apply_batch(spark, batch_df, state_dir, batch_id)
 
-        q = (
+        run_to_completion(
             stream.writeStream.foreachBatch(body)
             .option("checkpointLocation", ckpt)
             .outputMode("update")
             .queryName(f"scd2_restart_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     run(parts[:2])
     assert max(_ivm_versions(spark, state_dir)) == 1
