@@ -3529,13 +3529,13 @@ def binlog_prev_gtids_sets(path: str) -> dict[bytes, int] | None:
     binlog_prev_gtids_uncovered for multi-source pruning."""
     try:
         with _mapped(path) as mm:
-            for i, (_o, _t, tc, _s, body, _c) in enumerate(_events(mm)):
+            for _o, _t, tc, _s, body, _c in _events(mm):
                 if tc == EV_PREVIOUS_GTIDS:
                     return {
                         sid: _smallest_uncovered_gno(ivs)
                         for sid, ivs in _parse_gtid_set(body).items()
                     }
-                if i or tc != EV_FORMAT_DESCRIPTION:
+                if tc != EV_FORMAT_DESCRIPTION:
                     return None
     except ValueError:
         pass
