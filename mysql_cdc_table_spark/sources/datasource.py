@@ -14,6 +14,7 @@ this module keeps the worker-safe DDL parser they share.
 
 from __future__ import annotations
 
+import json
 import re
 
 from pyspark.sql import types as T
@@ -47,7 +48,13 @@ def _parse_ddl(ddl: str) -> T.StructType:
         flags set(a,b,c)             -> string + {"mysql_type": "set"}
         b bit                        -> bigint + {"mysql_type": "bit"}
         doc json                     -> string + {"mysql_type": "json"}
+
+    A ``StructType.json()`` string is accepted too (parsed with the
+    pure-Python ``StructType.fromJson``); it carries the field metadata
+    the DDL cannot say (charset, unsigned kinds, fsp, ...).
     """
+    if ddl.lstrip().startswith("{"):
+        return T.StructType.fromJson(json.loads(ddl))
     fields = []
     for part in re.split(r",(?![^()]*\))", ddl):  # commas outside parens only
         # split on the FIRST whitespace run only: 'price decimal(10, 2)'

@@ -51,12 +51,13 @@ Json_diff_vector to the before-image. Payload-bearing events the
 reader can't decode (pre-5.6 rows-v1, ZSTD with no backend at all)
 raise instead of silently skipping.
 
-Scale: one binlog file is one sequential decode unit — the format is
-stateful (GTID and TABLE_MAP apply to subsequent events), exactly the
-reference's scan model (A2/A8). ``mysql_binlog_read`` parallelizes
-across files (MySQL rotates ~1 GiB) with no shuffle; for single-file
-parallelism ``mysql_binlog_read_parallel`` and ``format("mysql_binlog")``
-split each file into transaction-aligned byte ranges.
+Scale: the format is stateful (GTID and TABLE_MAP apply to subsequent
+events), so the reference walks each file sequentially (A2/A8). The one
+batch scan, ``format("mysql_binlog")`` (``MysqlBinlogReader``; every
+``mysql_binlog_read*`` function builds it), header-walks each file on
+the driver into transaction-aligned byte ranges that carry that state,
+packs small files' ranges into shared partitions the way Spark's file
+sources pack files, and range-decodes with no shuffle.
 """
 
 from __future__ import annotations
@@ -2980,16 +2981,22 @@ def _decode_files(
             paths = batch.column("path")
             contents = batch.column("content")
             for i in range(batch.num_rows):
-                yield from decode_binlog_record_batches(
-                    contents[i].as_py(),
-                    target,
-                    database,
-                    table,
-                    file_seq=_file_seq_of(str(paths[i].as_py())),
-                    gtid_format=gtid_format,
-                    capture_query=capture_query,
-                    schema_history=copy.deepcopy(schema_history),
-                )
+                path = str(paths[i].as_py())
+                blob = contents[i].as_py()
+                try:
+                    yield from decode_binlog_record_batches(
+                        blob,
+                        target,
+                        database,
+                        table,
+                        file_seq=_file_seq_of(path),
+                        gtid_format=gtid_format,
+                        capture_query=capture_query,
+                        schema_history=copy.deepcopy(schema_history),
+                    )
+                except Exception as e:
+                    e.add_note(f"{path}: bytes 0..{len(blob)}")
+                    raise
 
     return files.select("path", "content").mapInArrow(
         walk_arrow, schema=out_schema
@@ -3022,6 +3029,33 @@ def _encode_files(df: DataFrame, build, seq_base: int = 0) -> DataFrame:
     return df.mapInPandas(run, schema="path string, content binary")
 
 
+def _format_read(
+    spark: SparkSession,
+    path: str | None,
+    target: T.StructType,
+    database: str,
+    table: str,
+    **options,
+) -> DataFrame:
+    """``spark.read.format("mysql_binlog")`` with ``options`` (None
+    values left out) — the one batch scan every function reader builds.
+    ``target`` travels as ``StructType.json()``, which keeps the field
+    metadata (charset, unsigned kinds, fsp, ...) the DDL cannot say."""
+    from mysql_cdc_table_spark.sources.datasource import register
+
+    register(spark)
+    r = (
+        spark.read.format("mysql_binlog")
+        .option("schema_ddl", target.json())
+        .option("database", database)
+        .option("table", table)
+    )
+    for k, v in options.items():
+        if v is not None:
+            r = r.option(k, str(v))
+    return r.load() if path is None else r.load(path)
+
+
 def mysql_binlog_read(
     spark: SparkSession,
     path: str | None,
@@ -3034,11 +3068,11 @@ def mysql_binlog_read(
     capture_query: bool = False,
 ) -> DataFrame:
     """Batch-read real binlog files into the standard changelog
-    DataFrame. One file = one decode task (the format is stateful per
-    file); files are ordered by their rotation number like the
-    reference's index-file order (A1/A2). Values decode through the
-    columnar kernel; ``decode_binlog_bytes`` is the driver-side scalar
-    reference it is tested against.
+    DataFrame through ``format("mysql_binlog")``; files are ordered by
+    their rotation number like the reference's index-file order
+    (A1/A2). Values decode through the columnar kernel;
+    ``decode_binlog_bytes`` is the driver-side scalar reference it is
+    tested against.
 
     ``index_file`` mirrors the reference's entry point exactly
     (``set_binlog_index_file`` — binlog_table_reader.cc:39-57, wired
@@ -3049,20 +3083,9 @@ def mysql_binlog_read(
     opened."""
     if (path is None) == (index_file is None):
         raise ValueError("pass exactly one of path or index_file")
-    if index_file is not None:
-        files = spark.read.format("binaryFile").load(
-            _binlog_paths(None, index_file)
-        )
-    else:
-        # a co-located binlog.index (the reference's listing file) is
-        # never a data file; Spark's listing already skips . and _
-        # prefixes but not this suffix
-        files = (
-            spark.read.format("binaryFile").load(path)
-            .where(~F.col("path").endswith(".index"))
-        )
-    return _decode_files(
-        files, target, database, table, gtid_format,
+    return _format_read(
+        spark, path, target, database, table,
+        index_file=index_file, gtid_format=gtid_format,
         capture_query=capture_query,
     )
 
@@ -3967,36 +3990,6 @@ def scan_binlog_splits_cached(
     return splits
 
 
-_SPLIT_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("file_seq", T.IntegerType()),
-        T.StructField("start", T.LongType()),
-        T.StructField("end", T.LongType()),
-        T.StructField("checksum", T.IntegerType()),  # -1 unknown, 0, 1
-        T.StructField("gtid", T.LongType()),
-        T.StructField("sid", T.BinaryType()),
-        T.StructField("maps", T.BinaryType()),  # 4-byte-LE length-prefixed
-    ]
-)
-
-
-def _pack_maps(bodies: list[bytes]) -> bytes:
-    out = bytearray()
-    for b in bodies:
-        out += len(b).to_bytes(4, "little") + b
-    return bytes(out)
-
-
-def _unpack_maps(blob: bytes) -> list[bytes]:
-    out, pos = [], 0
-    while pos < len(blob):
-        ln = int.from_bytes(blob[pos : pos + 4], "little")
-        out.append(blob[pos + 4 : pos + 4 + ln])
-        pos += 4 + ln
-    return out
-
-
 def mysql_binlog_read_parallel(
     spark: SparkSession,
     path: str,
@@ -4011,23 +4004,16 @@ def mysql_binlog_read_parallel(
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
 ) -> DataFrame:
-    """Parallel decode of LARGE binlog files — the scan the reference
-    cannot express (its unit is one file walked sequentially,
-    binlog_table_reader.cc:75-96; ours usually is too, because MySQL
-    rotates at max_binlog_size — but a 50 GB relay/restore file is one
-    task under both). Two stages, both distributed:
-
-    1. header-walk each file in parallel (scan_binlog_splits — IO-bound,
-       no row decode) emitting small split specs with carried state;
-    2. re-open each file at its range offsets and decode ranges in
-       parallel (decode_binlog_bytes with init_state/seq_base).
-
-    Equality with mysql_binlog_read is structural: ranges cut only at
-    transaction starts, carried TABLE_MAP/GTID/checksum state replays
-    first, and __event_seq stays the ABSOLUTE file offset — byte-
-    identical rows, any split size. Stage 2 reopens paths with plain
-    ``open``, so paths must be executor-local; on object stores mount
-    them first.
+    """``format("mysql_binlog")`` with explicit split and GTID options.
+    The reader cuts each file into transaction-aligned byte ranges of
+    about ``split_bytes`` — the scan the reference cannot express (its
+    unit is one file walked sequentially,
+    binlog_table_reader.cc:75-96), so even a 50 GB relay/restore file
+    decodes in parallel. Ranges cut only at transaction starts, carried
+    TABLE_MAP/GTID/checksum state replays first, and __event_seq stays
+    the ABSOLUTE file offset — byte-identical rows to a whole-file
+    decode, any split size. Tasks reopen paths with plain ``open``, so
+    paths must be executor-local; on object stores mount them first.
 
     ``capture_query=True`` surfaces ROWS_QUERY statements as __query —
     no extra carried state: ranges cut at GTID boundaries, exactly
@@ -4042,106 +4028,21 @@ def mysql_binlog_read_parallel(
     range (single-source contract; multi-source resume needs per-uuid
     sets).
 
-    ``start_after_sets`` is the MULTI-SOURCE start bound: the header
-    walk opens each boundary file's window at the first transaction
-    unconsumed for its OWN sid, so the consumed prefix is never
-    range-decoded (round-8, watch item 3); per-row exactness stays
-    with the caller's per-sid filter (mysql_binlog_read_gtid_sets),
-    since interleaved consumed transactions can follow the window
-    open."""
-    import pandas as pd
-
-    # driver-side listing only (the reference's binlog.index contract);
-    # file CONTENT is never loaded whole anywhere — stage 1 streams the
-    # header walk, so files beyond binaryFile's 2 GB cap work. A list
-    # of explicit file paths skips the listing (the pre-pruned entry
-    # points hand one in).
-    if isinstance(path, (list, tuple)):
-        paths = [_strip_file_scheme(p) for p in path]
-    else:
-        paths = _binlog_paths(path)
-    # series-level GTID pruning off the PREVIOUS_GTIDS heads: resuming
-    # near the tail of a long retained history must not even SCHEDULE
-    # header walks for the pre-window files (one tiny head read per
-    # file here, vs a full header walk per file without it)
-    paths = prune_binlog_series_by_gtid(paths, start_after_gno, stop_at_gno)
-    out_schema0 = _binlog_out_schema(target, gtid_format, capture_query)
-    if not paths:  # empty/hidden-only dir: zero rows, not repartition(0)
-        return spark.createDataFrame([], out_schema0)
-    files = spark.createDataFrame(
-        [(p, _file_seq_of(p)) for p in paths], "path string, file_seq int"
-    ).repartition(min(len(paths), spark.sparkContext.defaultParallelism))
-
-    def make_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, fseq in zip(pdf["path"], pdf["file_seq"]):
-                for s in scan_binlog_splits_cached(
-                    str(fpath),
-                    split_bytes,
-                    start_after_gno=start_after_gno,
-                    stop_at_gno=stop_at_gno,
-                    start_after_sets=start_after_sets,
-                ):
-                    yield pd.DataFrame(
-                        {
-                            "path": [str(fpath)],
-                            "file_seq": [int(fseq)],
-                            "start": [s["start"]],
-                            "end": [s["end"]],
-                            "checksum": [
-                                -1 if s["checksum"] is None
-                                else int(s["checksum"])
-                            ],
-                            "gtid": pd.Series([s["gtid"]], dtype="object"),
-                            "sid": pd.Series([s["sid"]], dtype="object"),
-                            "maps": [_pack_maps(s["table_maps"])],
-                        }
-                    )
-
-    splits = files.mapInPandas(make_splits, schema=_SPLIT_SCHEMA)
-    splits = splits.repartition(spark.sparkContext.defaultParallelism)
-
-    out_schema = _binlog_out_schema(target, gtid_format, capture_query)
-
-    def decode_range(batches):
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
+    ``start_after_sets`` ({sid: last-consumed gno}) is the MULTI-SOURCE
+    start bound (see mysql_binlog_read_gtid_sets); it needs
+    ``gtid_format="uuid_gno"``."""
+    sets = None
+    if start_after_sets:
+        sets = ",".join(
+            f"{_sid_to_uuid(sid)}:{int(g)}"
+            for sid, g in start_after_sets.items()
         )
-
-        for batch in batches:
-            for row in batch.to_pylist():  # split specs are tiny
-                with open(row["path"], "rb") as fh:
-                    fh.seek(row["start"])
-                    blob = fh.read(row["end"] - row["start"])
-                state = {
-                    "checksum": (
-                        None if row["checksum"] < 0 else bool(row["checksum"])
-                    ),
-                    "gtid": row["gtid"],
-                    "sid": None if row["sid"] is None else bytes(row["sid"]),
-                    "table_maps": _unpack_maps(bytes(row["maps"])),
-                }
-                yield from decode_binlog_record_batches(
-                    blob,
-                    target,
-                    database,
-                    table,
-                    file_seq=int(row["file_seq"]),
-                    gtid_format=gtid_format,
-                    init_state=state,
-                    seq_base=int(row["start"]),
-                    capture_query=capture_query,
-                )
-
-    out = splits.mapInArrow(decode_range, schema=out_schema)
-    if start_after_gno is not None or stop_at_gno is not None:
-        from pyspark.sql import functions as F
-
-        if start_after_gno is not None:
-            out = out.filter(F.col("__gtid") > start_after_gno)
-        if stop_at_gno is not None:
-            out = out.filter(F.col("__gtid") <= stop_at_gno)
-    return out
+    return _format_read(
+        spark, path, target, database, table,
+        split_bytes=split_bytes, gtid_format=gtid_format,
+        capture_query=capture_query, start_after_gno=start_after_gno,
+        stop_at_gno=stop_at_gno, start_after_sets=sets,
+    )
 
 
 def mysql_binlog_read_gtid_range(
@@ -4168,16 +4069,10 @@ def mysql_binlog_read_gtid_range(
     O(history). The reference re-decodes every file from its first
     event on every scan (binlog_table_reader.cc:75-96) and has no
     position surface at all."""
-    return mysql_binlog_read_parallel(
-        spark,
-        path,
-        target,
-        database,
-        table,
-        split_bytes=split_bytes,
-        gtid_format=gtid_format,
-        capture_query=capture_query,
-        start_after_gno=start_after_gno,
+    return _format_read(
+        spark, path, target, database, table,
+        split_bytes=split_bytes, gtid_format=gtid_format,
+        capture_query=capture_query, start_after_gno=start_after_gno,
         stop_at_gno=stop_at_gno,
     )
 
@@ -4205,43 +4100,13 @@ def mysql_binlog_read_gtid_sets(
     (prune_binlog_series_by_gtid_sets); (2) ROW level — output is
     ``gtid_format="uuid_gno"`` (the filter needs the source UUID) and
     each row keeps iff its gno exceeds its OWN sid's bound. Boundary
-    files decode fully — at scale that is 1-2 files per source against
-    a pruned history. Closes the single-source-only caveat of
+    files skip their consumed prefix at the header walk — at scale that
+    is 1-2 files per source against a pruned history. Closes the single-source-only caveat of
     mysql_binlog_read_gtid_range."""
-    from pyspark.sql import functions as F
-
-    paths = _binlog_paths(path)
-    keep = prune_binlog_series_by_gtid_sets(paths, start_after)
-    out_schema = _binlog_out_schema(target, "uuid_gno", capture_query)
-    if not keep:
-        return spark.createDataFrame([], out_schema)
-    out = mysql_binlog_read_parallel(
-        spark,
-        keep,
-        target,
-        database,
-        table,
-        split_bytes=split_bytes,
-        gtid_format="uuid_gno",
-        capture_query=capture_query,
-        # boundary-file trim (round-8): the header walk skips each
-        # kept file's consumed prefix (every txn before the first one
-        # unconsumed for its own sid) instead of range-decoding it;
-        # the per-sid residual filter below still guarantees exactness
-        start_after_sets=start_after or None,
-    )
-    if not start_after:
-        return out  # no bounds: a plain uuid_gno read
-    bound_map = F.create_map(
-        *[
-            lit
-            for sid, gno in start_after.items()
-            for lit in (F.lit(_sid_to_uuid(sid)), F.lit(int(gno)))
-        ]
-    )
-    return out.filter(
-        F.col("__gtid")
-        > F.coalesce(bound_map[F.col("__gtid_src")], F.lit(0))
+    return mysql_binlog_read_parallel(
+        spark, path, target, database, table,
+        split_bytes=split_bytes, gtid_format="uuid_gno",
+        capture_query=capture_query, start_after_sets=start_after,
     )
 
 
@@ -7437,26 +7302,57 @@ from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
 )
 
 
-class _BinlogSplit(_InputPartition):
-    __slots__ = ("path", "file_seq", "spec")
+_OPEN_COST = 4 << 20  # Spark's spark.sql.files.openCostInBytes default
 
-    def __init__(self, path: str, file_seq: int, spec: dict):
-        self.path, self.file_seq, self.spec = path, file_seq, spec
+
+class _BinlogSplit(_InputPartition):
+    """One Spark partition: ``(path, file_seq, spec)`` byte ranges in
+    rotation order, decoded one after another."""
+
+    __slots__ = ("ranges",)
+
+    def __init__(self, ranges: list[tuple[str, int, dict]]):
+        self.ranges = ranges
+
+
+def _pack_ranges(
+    ranges: list[tuple[str, int, dict]], split_bytes: int, cpus: int
+) -> list[list[tuple[str, int, dict]]]:
+    """Pack ranges into partitions the way Spark's file sources pack
+    files (``FilePartition.getFilePartitions``): a range costs its
+    length plus ``_OPEN_COST``, the cap is ``min(split_bytes,
+    max(_OPEN_COST, total_cost / cpus))``, and partitions fill greedily
+    in order — many small files share a task, a few large ones still
+    spread over every core."""
+    costs = [s["end"] - s["start"] + _OPEN_COST for _p, _q, s in ranges]
+    cap = min(split_bytes, max(_OPEN_COST, sum(costs) / max(cpus, 1)))
+    parts: list[list[tuple[str, int, dict]]] = []
+    cur: list[tuple[str, int, dict]] = []
+    cur_cost = 0
+    for r, c in zip(ranges, costs):
+        if cur and cur_cost + c > cap:
+            parts.append(cur)
+            cur, cur_cost = [], 0
+        cur.append(r)
+        cur_cost += c
+    if cur:
+        parts.append(cur)
+    return parts
 
 
 class MysqlBinlogReader(_DataSourceReader):
-    """``spark.read.format("mysql_binlog")`` — the idiomatic scan
-    surface over real binlog v4 files, same machinery as
-    ``mysql_binlog_read_parallel``: planning header-walks each file
-    into transaction-aligned byte ranges with carried
-    TABLE_MAP/GTID/checksum state (cached via
-    ``scan_binlog_splits_cached``; GTID bounds prune whole files off
-    their PREVIOUS_GTIDS heads and skip out-of-window prefixes), and
-    each task range-decodes through the columnar kernel, yielding
-    Arrow RecordBatches — no Python row objects on the scan path.
-    Planning runs on the driver (the reference's binlog.index listing
-    contract); histories with very many files can prefer the
-    function API, whose stage-1 header walk is itself distributed."""
+    """``spark.read.format("mysql_binlog")`` — the one batch scan over
+    real binlog v4 files; every ``mysql_binlog_read*`` function builds
+    it. Planning runs on the driver (the reference's binlog.index
+    listing contract): it header-walks each file into
+    transaction-aligned byte ranges with carried TABLE_MAP/GTID/checksum
+    state (cached via ``scan_binlog_splits_cached``; GTID bounds prune
+    whole files off their PREVIOUS_GTIDS heads and skip out-of-window
+    prefixes), then packs the ranges into partitions
+    (``_pack_ranges``). Each task range-decodes through the columnar
+    kernel, yielding Arrow RecordBatches — no Python row objects on the
+    scan path. Tasks reopen files with plain ``open``, so paths must be
+    executor-local."""
 
     def __init__(self, options: dict):
         self.options_index_file = options.get("index_file")
@@ -7475,9 +7371,8 @@ class MysqlBinlogReader(_DataSourceReader):
             None if raw_start in (None, "") else int(raw_start)
         )
         self.stop_at_gno = None if raw_stop in (None, "") else int(raw_stop)
-        # MULTI-SOURCE bounds ("uuid:gno,uuid:gno"): the batch-format
-        # twin of mysql_binlog_read_gtid_sets / the tail's
-        # start_after_sets — file pruning off PREVIOUS_GTIDS heads,
+        # MULTI-SOURCE bounds ("uuid:gno,uuid:gno"), as the tail's
+        # start_after_sets: file pruning off PREVIOUS_GTIDS heads,
         # consumed-prefix skip at the header walk, per-sid residual
         # row filter
         raw_sets = options.get("start_after_sets")
@@ -7517,31 +7412,44 @@ class MysqlBinlogReader(_DataSourceReader):
             paths = prune_binlog_series_by_gtid(
                 paths, self.start_after_gno, self.stop_at_gno
             )
-        parts = []
-        for p in paths:
+        ranges = [
+            (p, _file_seq_of(p), spec)
+            for p in paths
             for spec in scan_binlog_splits_cached(
                 p,
                 self.split_bytes,
                 start_after_gno=self.start_after_gno,
                 stop_at_gno=self.stop_at_gno,
                 start_after_sets=sets_bytes,
-            ):
-                parts.append(_BinlogSplit(p, _file_seq_of(p), spec))
-        return parts
+            )
+        ]
+        return [
+            _BinlogSplit(part)
+            for part in _pack_ranges(
+                ranges, self.split_bytes, len(os.sched_getaffinity(0))
+            )
+        ]
 
     def read(self, partition: "_BinlogSplit"):
         # nothing left to read (an empty listing, or every file pruned):
         # Spark plans one partition anyway and hands it in as None
         if partition is None:
             return
+        for path, file_seq, s in partition.ranges:
+            try:
+                yield from self._read_range(path, file_seq, s)
+            except Exception as e:
+                e.add_note(f"{path}: bytes {s['start']}..{s['end']}")
+                raise
+
+    def _read_range(self, path: str, file_seq: int, s: dict):
         import pyarrow.compute as pc
 
         from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
             decode_binlog_record_batches,
         )
 
-        s = partition.spec
-        with open(partition.path, "rb") as fh:
+        with open(path, "rb") as fh:
             fh.seek(s["start"])
             blob = fh.read(s["end"] - s["start"])
         for batch in decode_binlog_record_batches(
@@ -7549,7 +7457,7 @@ class MysqlBinlogReader(_DataSourceReader):
             self.target,
             self.database,
             self.table,
-            file_seq=partition.file_seq,
+            file_seq=file_seq,
             gtid_format=self.gtid_format,
             capture_query=self.capture_query,
             init_state={
@@ -7560,8 +7468,8 @@ class MysqlBinlogReader(_DataSourceReader):
             },
             seq_base=s["start"],
         ):
-            # residual GTID filters (same exactness contract as the
-            # function API: header pruning is a superset cut)
+            # the one residual GTID filter: header pruning is a
+            # superset cut, this pins the window exactly
             if self.start_after_gno is not None:
                 batch = batch.filter(
                     pc.greater(batch["__gtid"], self.start_after_gno)
@@ -7577,8 +7485,8 @@ class MysqlBinlogReader(_DataSourceReader):
                 srcs = batch["__gtid_src"].to_pylist()
                 bounds = np.fromiter(
                     (
-                        self.start_after_sets.get((s or "").lower(), 0)
-                        for s in srcs
+                        self.start_after_sets.get((u or "").lower(), 0)
+                        for u in srcs
                     ),
                     dtype=np.int64,
                     count=len(srcs),
@@ -7588,5 +7496,3 @@ class MysqlBinlogReader(_DataSourceReader):
                 )
             if batch.num_rows:
                 yield batch
-
-

@@ -34,9 +34,10 @@ scalar walk and merge back in as trailing record batches.
 
 Reference: binlog_table_reader.cc:75-96 walks one event at a time and
 unpacks values via MySQL's own Field::unpack — single-threaded, scalar.
-This kernel exists so a 1 GB binlog file decodes at numpy speed inside
-one Spark task, while ``mysql_binlog_read_parallel`` spreads
-transaction-aligned ranges of the same file across tasks.
+This kernel exists so each byte range a ``format("mysql_binlog")`` task
+holds decodes at numpy speed; the reader cuts files into
+transaction-aligned ranges and packs small files' ranges together, so
+one large file spreads across tasks and many small ones share a task.
 """
 
 from __future__ import annotations

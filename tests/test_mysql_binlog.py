@@ -40,6 +40,15 @@ def _txn(gno, op, rows):
     return {"gno": gno, "op": op, "rows": rows}
 
 
+def _whole_file_read(spark, d, target, **kw):
+    """The reference the range reader is checked against: every file
+    of ``d`` decoded whole, binaryFile + ``_decode_files``."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import _decode_files
+
+    files = spark.read.format("binaryFile").load(str(d))
+    return _decode_files(files, target, "d", "t", **kw)
+
+
 def test_file_read_orders_gtid_and_ops(spark, tmp_path):
     """Two rotated files through the binaryFile reader: file order from
     rotation numbers, GTID stamped per transaction, op codes per event
@@ -1230,14 +1239,13 @@ def test_tail_stream_latest_state_across_alter_boundary(spark, tmp_path):
 
 def test_parallel_split_read_equals_whole_file(spark, tmp_path):
     """mysql_binlog_read_parallel must emit BYTE-IDENTICAL rows to the
-    sequential whole-file read, for any split size: boundaries cut only
+    whole-file decode (binaryFile + _decode_files), for any split size: boundaries cut only
     at transaction starts, carried TABLE_MAP/GTID/checksum state
     replays, and __event_seq stays the absolute file offset. The
     fixture stacks the hard cases: CRC32 checksums, a zstd-compressed
     section, a mid-file ALTER TABLE ADD COLUMN, and a second rotated
     file — with split_bytes tiny enough to force many ranges."""
     from mysql_cdc_table_spark.sources.mysql_binlog import (
-        mysql_binlog_read,
         mysql_binlog_read_parallel,
         scan_binlog_splits,
     )
@@ -1273,8 +1281,8 @@ def test_parallel_split_read_equals_whole_file(spark, tmp_path):
 
     key = lambda row: (row["__file_seq"], row["__event_seq"], row["__image_seq"])
     seq = sorted(
-        (row.asDict() for row in mysql_binlog_read(
-            spark, str(tmp_path), new_target, "d", "t").collect()),
+        (row.asDict() for row in _whole_file_read(
+            spark, tmp_path, new_target).collect()),
         key=key,
     )
     par = sorted(
@@ -1427,6 +1435,107 @@ def test_parallel_read_empty_and_uri_paths(spark, tmp_path):
     )
     out = mysql_binlog_read_parallel(spark, f"file://{d}", TARGET, "d", "t")
     assert out.count() == 1
+
+
+def _ranges(sizes):
+    return [
+        (f"binlog.{i:06d}", i, {"start": 4, "end": 4 + n})
+        for i, n in enumerate(sizes, start=1)
+    ]
+
+
+def test_pack_ranges_follows_spark_file_packing():
+    """Range packing (Spark's file-source rule): every range lands in
+    exactly one partition, in rotation order; a partition holds more
+    than one range only when their summed cost (length + open cost)
+    fits the cap; a few MB-sized files still spread over every core,
+    while many small files share tasks."""
+    import random
+
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _OPEN_COST,
+        _pack_ranges,
+    )
+
+    rng = random.Random(7)
+    split = 64 << 20
+    cases = [
+        (_ranges([1_270_000] * 4), 4),
+        (_ranges([100_000] * 64), 4),
+        (_ranges([1_240_000] * 8), 4),
+        (_ranges([rng.randrange(1, 30 << 20) for _ in range(40)]), 3),
+        (_ranges([70 << 20, 10, 70 << 20]), 8),
+        (_ranges([]), 4),
+    ]
+    for ranges, cpus in cases:
+        parts = _pack_ranges(ranges, split, cpus)
+        assert [r for p in parts for r in p] == ranges
+        assert all(parts)
+        cost = lambda r: r[2]["end"] - r[2]["start"] + _OPEN_COST  # noqa: E731
+        cap = min(split, max(_OPEN_COST, sum(map(cost, ranges)) / cpus))
+        for p in parts:
+            assert len(p) == 1 or sum(map(cost, p)) <= cap, (cpus, p)
+    assert len(_pack_ranges(_ranges([1_270_000] * 4), split, 4)) == 4
+    assert len(_pack_ranges(_ranges([100_000] * 64), split, 4)) <= 8
+    # a split size under the open cost keeps every range on its own
+    assert len(_pack_ranges(_ranges([100_000] * 5), 4096, 4)) == 5
+
+
+def test_format_reader_packs_many_small_files(spark, tmp_path):
+    """64 small files read through format("mysql_binlog") plan far
+    fewer than 64 partitions and return exactly the rows of the
+    per-file whole-file decode."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import mysql_binlog_read
+
+    for f in range(64):
+        txns = [
+            _txn(f * 10 + g, "w", [
+                {"id": f * 10 + g, "v": f"v{g}", "amt": Decimal(g) / 4}
+            ])
+            for g in range(1, 11)
+        ]
+        (tmp_path / f"binlog.{f + 1:06d}").write_bytes(
+            build_binlog_file("d", "t", TARGET, txns, checksum=True)
+        )
+    df = mysql_binlog_read(spark, str(tmp_path), TARGET, "d", "t")
+    assert df.rdd.getNumPartitions() < 64
+    key = lambda r: tuple(str(x) for x in r)  # noqa: E731
+    got = sorted(map(key, df.collect()))
+    assert len(got) == 640
+    assert got == sorted(
+        map(key, _whole_file_read(spark, tmp_path, TARGET).collect())
+    )
+
+
+def test_decode_error_names_file_and_offset(spark, tmp_path):
+    """A flipped byte inside a mid-file rows event of a CRC32 file fails
+    both batch decodes — the range reader behind format("mysql_binlog")
+    and the whole-file _decode_files — with an error that names the
+    file and the event offset."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        EV_WRITE_ROWS_V2,
+        _events,
+    )
+
+    txns = [
+        _txn(g, "w", [{"id": g, "v": f"v{g}", "amt": Decimal(g)}])
+        for g in range(1, 41)
+    ]
+    blob = bytearray(build_binlog_file("d", "t", TARGET, txns, checksum=True))
+    rows_at = [off for off, _ts, tc, *_ in _events(bytes(blob))
+               if tc == EV_WRITE_ROWS_V2]
+    off = rows_at[len(rows_at) // 2]
+    blob[off + 19 + 12] ^= 0xFF  # inside the event body
+    path = tmp_path / "binlog.000001"
+    path.write_bytes(bytes(blob))
+    for df in (
+        mysql_binlog_read(spark, str(tmp_path), TARGET, "d", "t"),
+        _whole_file_read(spark, tmp_path, TARGET),
+    ):
+        with pytest.raises(Exception) as ei:
+            df.collect()
+        msg = str(ei.value)
+        assert str(path) in msg and f"offset {off}" in msg, msg
 
 
 def test_split_cache_roundtrip_and_invalidation(tmp_path):
@@ -2966,10 +3075,10 @@ def test_mysql_binlog_format_reader_mysql_kinds(spark, tmp_path):
 
 
 def test_mysql_binlog_format_reader_equals_function_api(spark, tmp_path):
-    """spark.read.format('mysql_binlog') (round 8) must produce the
-    exact frame of mysql_binlog_read_parallel — same split machinery,
-    same columnar kernel, Arrow batches end-to-end — including under
-    GTID bounds (file pruning + prefix skip + residual filters)."""
+    """spark.read.format('mysql_binlog') and the function API that
+    builds it must produce the exact frame of the whole-file decode
+    (binaryFile + _decode_files), including under GTID bounds (file
+    pruning + prefix skip + residual filters)."""
     from mysql_cdc_table_spark.sources.datasource import register
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         mysql_binlog_read_parallel,
@@ -3000,17 +3109,19 @@ def test_mysql_binlog_format_reader_equals_function_api(spark, tmp_path):
         return r.load(str(d))
 
     key = lambda r: tuple(str(x) for x in r)  # noqa: E731
-    full_fn = mysql_binlog_read_parallel(spark, str(d), TARGET, "d", "t")
-    assert sorted(map(key, fmt().collect())) == sorted(
-        map(key, full_fn.collect())
-    )
+    whole = _whole_file_read(spark, d, TARGET).collect()
+    assert sorted(map(key, fmt().collect())) == sorted(map(key, whole))
+    fn = mysql_binlog_read_parallel(spark, str(d), TARGET, "d", "t")
+    assert sorted(map(key, fn.collect())) == sorted(map(key, whole))
 
     bounded_fn = mysql_binlog_read_parallel(
         spark, str(d), TARGET, "d", "t",
         start_after_gno=70, stop_at_gno=100,
     )
+    want = sorted(key(r) for r in whole if 70 < r["__gtid"] <= 100)
     got = fmt(start_after_gno=70, stop_at_gno=100).collect()
-    assert sorted(map(key, got)) == sorted(map(key, bounded_fn.collect()))
+    assert sorted(map(key, got)) == want
+    assert sorted(map(key, bounded_fn.collect())) == want
     assert sorted(r["__gtid"] for r in got) == list(range(71, 101))
 
     # full circle: the sink's output reads back through the format
