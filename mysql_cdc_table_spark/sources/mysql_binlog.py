@@ -7303,6 +7303,7 @@ from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
 
 
 _OPEN_COST = 4 << 20  # Spark's spark.sql.files.openCostInBytes default
+_PACK_BYTES = 64 << 20  # the default split_bytes: the least partition cap
 
 
 class _BinlogSplit(_InputPartition):
@@ -7319,22 +7320,33 @@ def _pack_ranges(
     ranges: list[tuple[str, int, dict]], split_bytes: int, cpus: int
 ) -> list[list[tuple[str, int, dict]]]:
     """Pack ranges into partitions the way Spark's file sources pack
-    files (``FilePartition.getFilePartitions``): a range costs its
-    length plus ``_OPEN_COST``, the cap is ``min(split_bytes,
-    max(_OPEN_COST, total_cost / cpus))``, and partitions fill greedily
-    in order — many small files share a task, a few large ones still
-    spread over every core."""
-    costs = [s["end"] - s["start"] + _OPEN_COST for _p, _q, s in ranges]
-    cap = min(split_bytes, max(_OPEN_COST, sum(costs) / max(cpus, 1)))
+    files (``FilePartition.getFilePartitions``), filling greedily in
+    order. A partition's cost is its ranges' bytes plus ``_OPEN_COST``
+    per file it opens; consecutive ranges of one file share an open,
+    and, as in Spark, a file's open cost is added after the file, so
+    the next range starts a new partition when the cost so far plus its
+    bytes passes the cap. The cap is ``min(max(split_bytes,
+    _PACK_BYTES), max(_OPEN_COST, total_cost / cpus))``: many small
+    files share a task, a few large ones still spread over every core,
+    and a split size below the default cuts smaller ranges without
+    multiplying tasks."""
+    total = sum(s["end"] - s["start"] for _p, _q, s in ranges)
+    total += _OPEN_COST * len({p for p, _q, _s in ranges})
+    cap = min(
+        max(split_bytes, _PACK_BYTES), max(_OPEN_COST, total / max(cpus, 1))
+    )
     parts: list[list[tuple[str, int, dict]]] = []
     cur: list[tuple[str, int, dict]] = []
     cur_cost = 0
-    for r, c in zip(ranges, costs):
-        if cur and cur_cost + c > cap:
+    for r in ranges:
+        size = r[2]["end"] - r[2]["start"]
+        if cur and cur[-1][0] != r[0]:
+            cur_cost += _OPEN_COST  # the file just finished
+        if cur and cur_cost + size > cap:
             parts.append(cur)
             cur, cur_cost = [], 0
         cur.append(r)
-        cur_cost += c
+        cur_cost += size
     if cur:
         parts.append(cur)
     return parts
@@ -7435,23 +7447,27 @@ class MysqlBinlogReader(_DataSourceReader):
         # Spark plans one partition anyway and hands it in as None
         if partition is None:
             return
-        for path, file_seq, s in partition.ranges:
-            try:
-                yield from self._read_range(path, file_seq, s)
-            except Exception as e:
-                e.add_note(f"{path}: bytes {s['start']}..{s['end']}")
-                raise
+        import itertools
 
-    def _read_range(self, path: str, file_seq: int, s: dict):
+        # one open per run of same-file ranges, as _pack_ranges costs it
+        for path, run in itertools.groupby(partition.ranges, lambda r: r[0]):
+            with open(path, "rb") as fh:
+                for _p, file_seq, s in run:
+                    try:
+                        fh.seek(s["start"])
+                        blob = fh.read(s["end"] - s["start"])
+                        yield from self._decode_range(blob, file_seq, s)
+                    except Exception as e:
+                        e.add_note(f"{path}: bytes {s['start']}..{s['end']}")
+                        raise
+
+    def _decode_range(self, blob: bytes, file_seq: int, s: dict):
         import pyarrow.compute as pc
 
         from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
             decode_binlog_record_batches,
         )
 
-        with open(path, "rb") as fh:
-            fh.seek(s["start"])
-            blob = fh.read(s["end"] - s["start"])
         for batch in decode_binlog_record_batches(
             blob,
             self.target,

@@ -1437,48 +1437,66 @@ def test_parallel_read_empty_and_uri_paths(spark, tmp_path):
     assert out.count() == 1
 
 
-def _ranges(sizes):
+def _ranges(sizes, ranges_per_file=1):
     return [
-        (f"binlog.{i:06d}", i, {"start": 4, "end": 4 + n})
-        for i, n in enumerate(sizes, start=1)
+        (f"binlog.{i // ranges_per_file + 1:06d}", i // ranges_per_file + 1,
+         {"start": 4 + n * (i % ranges_per_file),
+          "end": 4 + n * (i % ranges_per_file + 1)})
+        for i, n in enumerate(sizes)
     ]
 
 
 def test_pack_ranges_follows_spark_file_packing():
     """Range packing (Spark's file-source rule): every range lands in
     exactly one partition, in rotation order; a partition holds more
-    than one range only when their summed cost (length + open cost)
-    fits the cap; a few MB-sized files still spread over every core,
-    while many small files share tasks."""
+    than one range only when its bytes plus one open cost per file
+    before its last fit the cap; a few MB-sized files still spread
+    over every core, while many small files — or many tiny ranges of a
+    few files — share tasks."""
+    import itertools
     import random
 
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         _OPEN_COST,
+        _PACK_BYTES,
         _pack_ranges,
     )
 
+    def n_files(rs):
+        return len([k for k, _g in itertools.groupby(r[0] for r in rs)])
+
+    def size(rs):
+        return sum(s["end"] - s["start"] for _p, _q, s in rs)
+
     rng = random.Random(7)
-    split = 64 << 20
     cases = [
-        (_ranges([1_270_000] * 4), 4),
-        (_ranges([100_000] * 64), 4),
-        (_ranges([1_240_000] * 8), 4),
-        (_ranges([rng.randrange(1, 30 << 20) for _ in range(40)]), 3),
-        (_ranges([70 << 20, 10, 70 << 20]), 8),
-        (_ranges([]), 4),
+        (_ranges([1_270_000] * 4), 64 << 20, 4),
+        (_ranges([100_000] * 64), 64 << 20, 4),
+        (_ranges([1_240_000] * 8), 64 << 20, 4),
+        (_ranges([rng.randrange(1, 30 << 20) for _ in range(40)]), 64 << 20, 3),
+        (_ranges([70 << 20, 10, 70 << 20]), 64 << 20, 8),
+        (_ranges([64 << 20] * 16, ranges_per_file=16), 64 << 20, 4),
+        (_ranges([256 << 20] * 4, ranges_per_file=2), 256 << 20, 4),
+        (_ranges([4096] * 800, ranges_per_file=100), 4096, 4),
+        (_ranges([]), 64 << 20, 4),
     ]
-    for ranges, cpus in cases:
+    for ranges, split, cpus in cases:
         parts = _pack_ranges(ranges, split, cpus)
         assert [r for p in parts for r in p] == ranges
         assert all(parts)
-        cost = lambda r: r[2]["end"] - r[2]["start"] + _OPEN_COST  # noqa: E731
-        cap = min(split, max(_OPEN_COST, sum(map(cost, ranges)) / cpus))
+        total = size(ranges) + _OPEN_COST * n_files(ranges)
+        cap = min(max(split, _PACK_BYTES), max(_OPEN_COST, total / cpus))
         for p in parts:
-            assert len(p) == 1 or sum(map(cost, p)) <= cap, (cpus, p)
-    assert len(_pack_ranges(_ranges([1_270_000] * 4), split, 4)) == 4
-    assert len(_pack_ranges(_ranges([100_000] * 64), split, 4)) <= 8
-    # a split size under the open cost keeps every range on its own
-    assert len(_pack_ranges(_ranges([100_000] * 5), 4096, 4)) == 5
+            packed = size(p) + _OPEN_COST * (n_files(p) - 1)
+            assert len(p) == 1 or packed <= cap, (split, cpus, len(p))
+    n = lambda ranges, split=64 << 20: len(_pack_ranges(ranges, split, 4))  # noqa: E731
+    assert n(_ranges([1_270_000] * 4)) == 4
+    assert n(_ranges([100_000] * 64)) <= 8
+    # a 1 GiB file at the default split: one 64 MiB range per task
+    assert n(_ranges([64 << 20] * 16, ranges_per_file=16)) == 16
+    # a tiny split size cuts small ranges, not small tasks
+    assert n(_ranges([4096] * 800, ranges_per_file=100), 4096) <= 8
+    assert n(_ranges([4096] * 210, ranges_per_file=70), 4096) <= 3
 
 
 def test_format_reader_packs_many_small_files(spark, tmp_path):
