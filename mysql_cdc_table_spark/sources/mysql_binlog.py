@@ -4101,8 +4101,8 @@ def mysql_binlog_read_gtid_sets(
     ``gtid_format="uuid_gno"`` (the filter needs the source UUID) and
     each row keeps iff its gno exceeds its OWN sid's bound. Boundary
     files skip their consumed prefix at the header walk — at scale that
-    is 1-2 files per source against a pruned history. Closes the single-source-only caveat of
-    mysql_binlog_read_gtid_range."""
+    is 1-2 files per source against a pruned history. Closes the
+    single-source-only caveat of mysql_binlog_read_gtid_range."""
     return mysql_binlog_read_parallel(
         spark, path, target, database, table,
         split_bytes=split_bytes, gtid_format="uuid_gno",
@@ -7303,7 +7303,7 @@ from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
 
 
 _OPEN_COST = 4 << 20  # Spark's spark.sql.files.openCostInBytes default
-_PACK_BYTES = 64 << 20  # the default split_bytes: the least partition cap
+_PACK_BYTES = 64 << 20  # the default split_bytes; smaller splits pack to it
 
 
 class _BinlogSplit(_InputPartition):
@@ -7332,9 +7332,7 @@ def _pack_ranges(
     multiplying tasks."""
     total = sum(s["end"] - s["start"] for _p, _q, s in ranges)
     total += _OPEN_COST * len({p for p, _q, _s in ranges})
-    cap = min(
-        max(split_bytes, _PACK_BYTES), max(_OPEN_COST, total / max(cpus, 1))
-    )
+    cap = min(max(split_bytes, _PACK_BYTES), max(_OPEN_COST, total / cpus))
     parts: list[list[tuple[str, int, dict]]] = []
     cur: list[tuple[str, int, dict]] = []
     cur_cost = 0
