@@ -1084,9 +1084,11 @@ def cdc_binlog_gno_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_present"),
     )
     succ = present.select((F.col("gno") + 1).alias("gno"))
-    run_starts = present.join(succ, "gno", "left_anti").agg(
-        F.count("*").alias("run_ends")
-    )
+    # a hash join whatever the size estimate: the binlog scan reports
+    # none, so the planner would otherwise pick a sort-merge join
+    run_starts = present.join(
+        succ.hint("shuffle_hash"), "gno", "left_anti"
+    ).agg(F.count("*").alias("run_ends"))
     return stats.crossJoin(F.broadcast(run_starts)).select(
         "min_gno",
         "max_gno",

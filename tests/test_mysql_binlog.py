@@ -50,7 +50,7 @@ def _whole_file_read(spark, d, target, **kw):
 
 
 def test_file_read_orders_gtid_and_ops(spark, tmp_path):
-    """Two rotated files through the binaryFile reader: file order from
+    """Two rotated files through mysql_binlog_read: file order from
     rotation numbers, GTID stamped per transaction, op codes per event
     type, update before/after adjacent via (__event_seq, __image_seq)."""
     r1 = {"id": 1, "v": "a", "amt": Decimal("1.50")}
@@ -1239,9 +1239,10 @@ def test_tail_stream_latest_state_across_alter_boundary(spark, tmp_path):
 
 def test_parallel_split_read_equals_whole_file(spark, tmp_path):
     """mysql_binlog_read_parallel must emit BYTE-IDENTICAL rows to the
-    whole-file decode (binaryFile + _decode_files), for any split size: boundaries cut only
-    at transaction starts, carried TABLE_MAP/GTID/checksum state
-    replays, and __event_seq stays the absolute file offset. The
+    whole-file decode (binaryFile + _decode_files), for any split size:
+    boundaries cut only at transaction starts, carried
+    TABLE_MAP/GTID/checksum state replays, and __event_seq stays the
+    absolute file offset. The
     fixture stacks the hard cases: CRC32 checksums, a zstd-compressed
     section, a mid-file ALTER TABLE ADD COLUMN, and a second rotated
     file — with split_bytes tiny enough to force many ranges."""
