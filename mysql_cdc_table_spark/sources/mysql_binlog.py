@@ -71,6 +71,7 @@ import struct
 import zlib
 from collections.abc import Iterator
 from decimal import Context, Decimal
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -4214,6 +4215,165 @@ def _tail_target(options: dict) -> T.StructType:
     return _parse_ddl(options["schema_ddl"])
 
 
+# --- the GTID window and range decode both binlog readers share --------------
+
+
+class _BinlogWindow(NamedTuple):
+    """The read options of ``format("mysql_binlog")`` and
+    ``format("mysql_binlog_tail")``: what to decode, the output columns
+    and the GTID window."""
+
+    target: T.StructType
+    database: str
+    table: str
+    gtid_format: str
+    capture_query: bool
+    start_after_gno: int | None
+    stop_at_gno: int | None
+    start_after_sets: dict[str, int] | None  # {origin uuid: last gno}
+
+    @property
+    def out_schema(self) -> T.StructType:
+        return _binlog_out_schema(
+            self.target, self.gtid_format, self.capture_query
+        )
+
+
+def _binlog_window(options: dict) -> _BinlogWindow:
+    """Parse the shared read options. ``start_after_gno`` and
+    ``stop_at_gno`` bound one source's gnos; ``start_after_sets``
+    ("uuid:gno,uuid:gno", the gtid_executed a replica hands each source)
+    bounds every origin on its own, because a multi-source relay
+    interleaves per-sid gno sequences without a global order (an absent
+    sid reads from its first transaction)."""
+
+    def bound(key: str) -> int | None:
+        raw = options.get(key)
+        return None if raw in (None, "") else int(raw)
+
+    gtid_format = options.get("gtid_format", "long")
+    start_after_gno = bound("start_after_gno")
+    raw_sets = options.get("start_after_sets")
+    sets: dict[str, int] | None = None
+    if raw_sets not in (None, ""):
+        if start_after_gno is not None:
+            raise ValueError(
+                "start_after_gno and start_after_sets are mutually "
+                "exclusive — per-sid bounds subsume the single bound"
+            )
+        if gtid_format != "uuid_gno":
+            raise ValueError(
+                "start_after_sets needs gtid_format=uuid_gno — the "
+                "per-row filter keys on each row's origin UUID"
+            )
+        sets = {}
+        for part in str(raw_sets).split(","):
+            u, _, g = part.strip().partition(":")
+            if not g:
+                raise ValueError(
+                    f"start_after_sets entry {part!r} is not uuid:gno"
+                )
+            sets[u.lower()] = int(g)
+    return _BinlogWindow(
+        _tail_target(options),
+        options["database"],
+        options["table"],
+        gtid_format,
+        str(options.get("capture_query", "false")).lower() == "true",
+        start_after_gno,
+        bound("stop_at_gno"),
+        sets,
+    )
+
+
+def _window_ranges(
+    paths: list[str],
+    w: _BinlogWindow,
+    split_bytes: int,
+    scan=scan_binlog_splits_cached,
+) -> Iterator[tuple[str, dict]]:
+    """``(path, spec)`` for every in-window byte range of ``paths``,
+    lazily and in rotation order: files wholly outside the window are
+    pruned off their PREVIOUS_GTIDS heads unwalked, then ``scan``
+    header-walks each kept file with the same bounds, which skips its
+    out-of-window prefix. A spec's ``start`` is an event boundary."""
+    bounds = None  # start_after_sets keyed by the 16-byte sid
+    if w.start_after_sets is not None:
+        bounds = {
+            bytes.fromhex(u.replace("-", "")): g
+            for u, g in w.start_after_sets.items()
+        }
+        paths = prune_binlog_series_by_gtid_sets(paths, bounds)
+    else:
+        paths = prune_binlog_series_by_gtid(
+            paths, w.start_after_gno, w.stop_at_gno
+        )
+    for p in paths:
+        for spec in scan(
+            p,
+            split_bytes,
+            start_after_gno=w.start_after_gno,
+            stop_at_gno=w.stop_at_gno,
+            start_after_sets=bounds,
+        ):
+            yield p, spec
+
+
+def _gtid_window_filter(batch, w: _BinlogWindow):
+    """The one residual GTID filter: file pruning and the header walk
+    cut a superset, this pins the window exactly. Start bounds let a row
+    with a null ``__gtid`` (a transaction with no GTID event) through;
+    the stop bound drops it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    gtid = batch["__gtid"]
+    keep = None
+    if w.start_after_gno is not None:
+        keep = pc.fill_null(pc.greater(gtid, w.start_after_gno), True)
+    elif w.start_after_sets is not None:
+        # each row's bound is its own origin's; an absent sid's is 0
+        at = pc.index_in(
+            pc.utf8_lower(batch["__gtid_src"]),
+            value_set=pa.array(list(w.start_after_sets), pa.string()),
+        )
+        bound = pc.take(
+            pa.array(list(w.start_after_sets.values()), pa.int64()), at
+        )
+        keep = pc.fill_null(pc.greater(gtid, pc.fill_null(bound, 0)), True)
+    if w.stop_at_gno is not None:
+        stop = pc.less_equal(gtid, w.stop_at_gno)
+        keep = stop if keep is None else pc.and_kleene(keep, stop)
+    return batch if keep is None else batch.filter(keep)
+
+
+def _decode_binlog_range(blob, file_seq: int, spec: dict, w: _BinlogWindow):
+    """The one range decode of both binlog readers. ``blob`` holds the
+    file's bytes ``[spec["start"], spec["end"])``, both event boundaries,
+    and the spec carries the decoder state that precedes the range (FDE
+    checksum flag, pending GTID and sid, ROWS_QUERY statement, TABLE_MAP
+    bodies). Yields the columnar kernel's non-empty Arrow batches, cut to
+    the GTID window."""
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
+
+    for batch in decode_binlog_record_batches(
+        blob,
+        w.target,
+        w.database,
+        w.table,
+        file_seq=file_seq,
+        gtid_format=w.gtid_format,
+        capture_query=w.capture_query,
+        init_state=spec,
+        seq_base=spec["start"],
+    ):
+        batch = _gtid_window_filter(batch, w)
+        if batch.num_rows:
+            yield batch
+
+
 from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
     DataSource as _DataSource,
     SimpleDataSourceStreamReader as _SimpleStreamReader,
@@ -4221,7 +4381,11 @@ from pyspark.sql.datasource import (  # noqa: E402  (public DataSource API)
 
 
 class MysqlBinlogTailStreamReader(_SimpleStreamReader):
-    """SimpleDataSourceStreamReader over a live binlog directory.
+    """SimpleDataSourceStreamReader over a live binlog directory. It
+    shares the GTID window (``_binlog_window``, ``_window_ranges``) and
+    the range decode (``_decode_binlog_range``) with the batch reader,
+    ``MysqlBinlogReader``, and adds only what a live tail needs: the
+    cursor and the carried decoder state.
 
     Offset = ``{"seq": <highest file seq seen>, "pos": <bytes of that
     file's consumed whole-event prefix>}``. Per micro-batch: rotated
@@ -4232,122 +4396,51 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
     resumable HEADER-ONLY walk cached across batches, and only
     [cursor, new-prefix) value-decodes, through the columnar kernel —
     O(delta) events-to-visible latency (round 6; measured flat
-    0.12–0.23s from 1 to 64 MiB active files, SCALE.md). The reference
-    re-reads EVERY file on EVERY query (binlog_table_reader.cc:75-96).
-    Files are append-only and seqs strictly increase (MySQL rotation),
-    which makes readBetweenOffsets deterministic for replay (a replay
-    older than the carry cache walks fresh, without touching the
-    cache)."""
+    0.12–0.23s from 1 to 64 MiB active files, SCALE.md). ``read``
+    returns the kernel's Arrow batches, cast to Spark's Arrow schema.
+    The reference re-reads EVERY file on EVERY query
+    (binlog_table_reader.cc:75-96). Files are append-only and seqs
+    strictly increase (MySQL rotation), which makes readBetweenOffsets
+    deterministic for replay (a replay older than the carry cache walks
+    fresh, without touching the cache).
+
+    GTID-positioned start: ``start_after_gno`` or ``start_after_sets``
+    shape only the FIRST offset (the first in-window range) and then
+    stay as the residual row filter; after that the (seq, pos) cursor
+    owns progress."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.database = options["database"]
-        self.table = options["table"]
-        self.target = _tail_target(options)
-        self.gtid_format = options.get("gtid_format", "long")
-        self.capture_query = (
-            str(options.get("capture_query", "false")).lower() == "true"
-        )
-        # GTID-positioned stream start: the checkpointed-consumer
-        # handoff (option "start_after_gno"). Only affects the FIRST
-        # offset — after that the (seq, pos) cursor owns progress.
-        raw = options.get("start_after_gno")
-        self.start_after_gno = None if raw in (None, "") else int(raw)
-        # MULTI-SOURCE handoff (option "start_after_sets"): per-origin
-        # bounds "uuid:gno,uuid:gno" — the gtid_executed a replica
-        # hands each source (MASTER_AUTO_POSITION), mirroring the
-        # batch side's mysql_binlog_read_gtid_sets. A multi-source
-        # relay interleaves per-sid monotone gno sequences that are
-        # NOT globally ordered, so the single-bound option would
-        # drop/duplicate rows; here every row keeps iff its gno
-        # exceeds its OWN sid's bound (absent sid = from its first
-        # transaction). Like start_after_gno, the bounds also shape
-        # the FIRST offset (file-level pruning) and then stay as the
-        # residual per-row filter for boundary files.
-        raw_sets = options.get("start_after_sets")
-        self.start_after_sets: dict[str, int] | None = None
-        if raw_sets not in (None, ""):
-            if self.start_after_gno is not None:
-                raise ValueError(
-                    "start_after_gno and start_after_sets are mutually "
-                    "exclusive — per-sid bounds subsume the single bound"
-                )
-            if options.get("gtid_format", "long") != "uuid_gno":
-                raise ValueError(
-                    "start_after_sets needs gtid_format=uuid_gno — the "
-                    "per-row filter keys on each row's origin UUID"
-                )
-            self.start_after_sets = {}
-            for part in str(raw_sets).split(","):
-                u, _, g = part.strip().partition(":")
-                if not g:
-                    raise ValueError(
-                        f"start_after_sets entry {part!r} is not uuid:gno"
-                    )
-                self.start_after_sets[u.lower()] = int(g)
+        # a live tail has no end: stop_at_gno is the batch reader's
+        self.window = _binlog_window(options)._replace(stop_at_gno=None)
         # round 6: per-file carried decoder state, so each micro-batch
         # header-walks and value-decodes only bytes past the cursor —
         # events-to-visible latency becomes O(delta), not O(active file)
         self._carry: dict[int, tuple[int, dict]] = {}
 
     def initialOffset(self):
-        if self.start_after_sets is not None:
-            # file-level pruning off PREVIOUS_GTIDS heads (the batch
-            # path's prune_binlog_series_by_gtid_sets), then the first
-            # kept file's header walk opens the window at the first
-            # transaction unconsumed for its OWN sid (the round-8
-            # boundary trim) — the consumed prefix is never decoded;
-            # the per-sid row filter keeps interleaved boundary files
-            # exact. If everything is consumed, park at the newest
-            # file's last complete-event boundary.
-            files = self._files()
-            if not files:
-                return {"seq": -1, "pos": 0}
-            by_path = {p: seq for seq, p in files}
-            bounds = {
-                bytes.fromhex(u.replace("-", "")): g
-                for u, g in self.start_after_sets.items()
-            }
-            kept = prune_binlog_series_by_gtid_sets(
-                [p for _seq, p in files], bounds
-            )
-            for p in kept:
-                splits = scan_binlog_splits_file(
-                    p, 1 << 62, start_after_sets=bounds
-                )
-                if splits:
-                    return {"seq": by_path[p], "pos": splits[0]["start"]}
-            last_seq, last_path = files[-1]
-            return {
-                "seq": last_seq,
-                "pos": _complete_prefix_len_path(last_path),
-            }
-        if self.start_after_gno is None:
-            return {"seq": -1, "pos": 0}
-        # Seek the first transaction past the bound: head-based series
-        # pruning drops wholly-consumed files unwalked, then the first
-        # surviving file's bounded header walk yields the byte offset
-        # of the first in-window GTID event — an event boundary, which
-        # is exactly what the (seq, pos) cursor means. If everything
-        # is consumed, park at the newest file's last COMPLETE-event
-        # boundary (not raw getsize(): on the active, still-growing
-        # file that can fall mid-event on a torn tail write, and a
-        # mid-event cursor makes every later micro-batch read garbage
-        # event sizes — permanent stall or CRC kill) so only new
-        # events surface.
+        w = self.window
         files = self._files()
-        if not files:
+        if not files or (
+            w.start_after_gno is None and w.start_after_sets is None
+        ):
             return {"seq": -1, "pos": 0}
-        by_path = {p: seq for seq, p in files}
-        kept = prune_binlog_series_by_gtid(
-            [p for _seq, p in files], self.start_after_gno, None
+        # the first in-window range opens the stream at an event
+        # boundary, which is what the (seq, pos) cursor means
+        first = next(
+            _window_ranges(
+                [p for _seq, p in files], w, 1 << 62, scan_binlog_splits_file
+            ),
+            None,
         )
-        for p in kept:
-            splits = scan_binlog_splits_file(
-                p, 1 << 62, start_after_gno=self.start_after_gno
-            )
-            if splits:
-                return {"seq": by_path[p], "pos": splits[0]["start"]}
+        if first is not None:
+            return {"seq": _file_seq_of(first[0]), "pos": first[1]["start"]}
+        # Everything is consumed: park at the newest file's last
+        # COMPLETE-event boundary (not raw getsize(): on the active,
+        # still-growing file that can fall mid-event on a torn tail
+        # write, and a mid-event cursor makes every later micro-batch
+        # read garbage event sizes — permanent stall or CRC kill) so
+        # only new events surface.
         last_seq, last_path = files[-1]
         return {"seq": last_seq, "pos": _complete_prefix_len_path(last_path)}
 
@@ -4355,17 +4448,13 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
         return [(_file_seq_of(p), p) for p in _binlog_paths(self.path)]
 
     def _delta(self, start: dict, upto: dict | None = None):
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
-        )
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        rows: list[tuple] = []
-        names = [
-            f.name
-            for f in _binlog_out_schema(
-                self.target, self.gtid_format, self.capture_query
-            ).fields
-        ]
+        # the streaming source requires Spark's own Arrow schema (__tm
+        # in UTC, the key columns not null); the batch scan skips this
+        # cast, which costs its JVM side about a tenth of a replay
+        schema = to_arrow_schema(self.window.out_schema)
+        batches: list = []
         end = {"seq": start["seq"], "pos": start["pos"]}
         for seq, path in self._files():
             if seq < start["seq"]:
@@ -4406,75 +4495,50 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
                 prefix = min(prefix, upto["pos"])
             if prefix <= lo and seq == start["seq"]:
                 continue  # no new complete events in the active file
+            state = {
+                "checksum": None, "gtid": None, "sid": None,
+                "rows_query": None, "maps": {},
+            }
             if lo > 4:
                 # fold decoder state over the consumed prefix (cached
-                # across batches — only NEW bytes walk), then
-                # value-decode just [lo, prefix)
+                # across batches — only NEW bytes walk)
+                walk_from = 4
                 if cached is not None:
                     walk_from, state = cached
-                else:
-                    walk_from, state = 4, {
-                        "checksum": None, "gtid": None, "sid": None,
-                        "maps": {},
-                    }
                 _carry_walk(blob, walk_from - base, lo - base, state, base)
                 if seq not in self._carry or lo >= self._carry[seq][0]:
                     self._carry[seq] = (lo, state)
-                batches = decode_binlog_record_batches(
-                    blob[lo - base : prefix - base],
-                    self.target, self.database, self.table,
-                    file_seq=seq, gtid_format=self.gtid_format,
-                    capture_query=self.capture_query,
-                    init_state={
-                        "checksum": state["checksum"],
-                        "gtid": state["gtid"],
-                        "sid": state["sid"],
-                        "rows_query": state.get("rows_query"),
-                        "table_maps": list(state["maps"].values()),
-                    },
-                    seq_base=lo,
+            # then value-decode just [lo, prefix); a read from the file
+            # head is the range [4, prefix) with nothing carried, the
+            # magic already checked by _complete_prefix_len
+            lo = max(lo, 4)
+            spec = {
+                "start": lo, "end": prefix,
+                "checksum": state["checksum"], "gtid": state["gtid"],
+                "sid": state["sid"], "rows_query": state["rows_query"],
+                "table_maps": list(state["maps"].values()),
+            }
+            try:
+                batches.extend(
+                    b.cast(schema)
+                    for b in _decode_binlog_range(
+                        blob[lo - base : prefix - base], seq, spec,
+                        self.window,
+                    )
                 )
-            else:
-                batches = decode_binlog_record_batches(
-                    blob[:prefix], self.target, self.database, self.table,
-                    file_seq=seq, gtid_format=self.gtid_format,
-                    capture_query=self.capture_query,
-                )
-            for batch in batches:
-                for r in batch.to_pylist():
-                    # residual GTID-start filter (belt-and-braces for
-                    # non-monotone streams; GTID-less rows pass)
-                    if (
-                        self.start_after_gno is not None
-                        and r.get("__gtid") is not None
-                        and r["__gtid"] <= self.start_after_gno
-                    ):
-                        continue
-                    # multi-source: each row keeps iff its gno exceeds
-                    # its OWN sid's bound (absent sid -> 0, i.e. from
-                    # its first transaction) — the batch side's
-                    # coalesce(bound_map[__gtid_src], 0) semantics
-                    if (
-                        self.start_after_sets is not None
-                        and r.get("__gtid") is not None
-                        and r["__gtid"]
-                        <= self.start_after_sets.get(
-                            (r.get("__gtid_src") or "").lower(), 0
-                        )
-                    ):
-                        continue
-                    rows.append(tuple(r[n] for n in names))
+            except Exception as e:
+                e.add_note(f"{path}: bytes {lo}..{prefix}")
+                raise
             if seq > end["seq"] or (seq == end["seq"] and prefix > end["pos"]):
                 end = {"seq": seq, "pos": prefix}
-        return rows, end
+        return batches, end
 
     def read(self, start):
-        rows, end = self._delta(start)
-        return iter(rows), end
+        batches, end = self._delta(start)
+        return iter(batches), end
 
     def readBetweenOffsets(self, start, end):
-        rows, _ = self._delta(start, upto=end)
-        return iter(rows)
+        return iter(self._delta(start, upto=end)[0])
 
     def commit(self, end):
         # rotated-away files never become active again: drop their
@@ -4495,12 +4559,7 @@ class MysqlBinlogTailDataSource(_DataSource):
         return "mysql_binlog_tail"
 
     def schema(self):
-        opts = dict(self.options)
-        return _binlog_out_schema(
-            _tail_target(opts),
-            opts.get("gtid_format", "long"),
-            str(opts.get("capture_query", "false")).lower() == "true",
-        )
+        return _binlog_window(dict(self.options)).out_schema
 
     def simpleStreamReader(self, schema):
         return MysqlBinlogTailStreamReader(dict(self.options))
@@ -7209,12 +7268,7 @@ class MysqlBinlogDataSource(_DataSource):
         return "mysql_binlog"
 
     def schema(self):
-        opts = dict(self.options)
-        return _binlog_out_schema(
-            _tail_target(opts),
-            opts.get("gtid_format", "long"),
-            str(opts.get("capture_query", "false")).lower() == "true",
-        )
+        return _binlog_window(dict(self.options)).out_schema
 
     def reader(self, schema):
         return MysqlBinlogReader(dict(self.options))
@@ -7353,85 +7407,32 @@ def _pack_ranges(
 class MysqlBinlogReader(_DataSourceReader):
     """``spark.read.format("mysql_binlog")`` — the one batch scan over
     real binlog v4 files; every ``mysql_binlog_read*`` function builds
-    it. Planning runs on the driver (the reference's binlog.index
-    listing contract): it header-walks each file into
-    transaction-aligned byte ranges with carried TABLE_MAP/GTID/checksum
-    state (cached via ``scan_binlog_splits_cached``; GTID bounds prune
-    whole files off their PREVIOUS_GTIDS heads and skip out-of-window
-    prefixes), then packs the ranges into partitions
-    (``_pack_ranges``). Each task range-decodes through the columnar
-    kernel, yielding Arrow RecordBatches — no Python row objects on the
-    scan path. Tasks reopen files with plain ``open``, so paths must be
-    executor-local."""
+    it. It shares the GTID window (``_binlog_window``,
+    ``_window_ranges``) and the range decode (``_decode_binlog_range``)
+    with the streaming tail, ``MysqlBinlogTailStreamReader``. Planning
+    runs on the driver (the reference's binlog.index listing contract):
+    it header-walks each file into transaction-aligned byte ranges with
+    carried TABLE_MAP/GTID/checksum state (cached via
+    ``scan_binlog_splits_cached``; GTID bounds prune whole files off
+    their PREVIOUS_GTIDS heads and skip out-of-window prefixes), then
+    packs the ranges into partitions (``_pack_ranges``). Each task
+    range-decodes through the columnar kernel, yielding Arrow
+    RecordBatches — no Python row objects on the scan path. Tasks
+    reopen files with plain ``open``, so paths must be executor-local."""
 
     def __init__(self, options: dict):
         self.options_index_file = options.get("index_file")
         self.path = options.get("path") if self.options_index_file else options["path"]
-        self.database = options["database"]
-        self.table = options["table"]
-        self.target = _tail_target(options)
         self.split_bytes = int(options.get("split_bytes", 64 << 20))
-        self.gtid_format = options.get("gtid_format", "long")
-        self.capture_query = (
-            str(options.get("capture_query", "false")).lower() == "true"
-        )
-        raw_start = options.get("start_after_gno")
-        raw_stop = options.get("stop_at_gno")
-        self.start_after_gno = (
-            None if raw_start in (None, "") else int(raw_start)
-        )
-        self.stop_at_gno = None if raw_stop in (None, "") else int(raw_stop)
-        # MULTI-SOURCE bounds ("uuid:gno,uuid:gno"), as the tail's
-        # start_after_sets: file pruning off PREVIOUS_GTIDS heads,
-        # consumed-prefix skip at the header walk, per-sid residual
-        # row filter
-        raw_sets = options.get("start_after_sets")
-        self.start_after_sets: dict[str, int] | None = None
-        if raw_sets not in (None, ""):
-            if self.start_after_gno is not None:
-                raise ValueError(
-                    "start_after_gno and start_after_sets are mutually "
-                    "exclusive"
-                )
-            if self.gtid_format != "uuid_gno":
-                raise ValueError(
-                    "start_after_sets needs gtid_format=uuid_gno — the "
-                    "per-row filter keys on each row's origin UUID"
-                )
-            self.start_after_sets = {}
-            for part in str(raw_sets).split(","):
-                u, _, g = part.strip().partition(":")
-                if not g:
-                    raise ValueError(
-                        f"start_after_sets entry {part!r} is not uuid:gno"
-                    )
-                self.start_after_sets[u.lower()] = int(g)
+        self.window = _binlog_window(options)
 
     def partitions(self):
         # the reference's binlog.index entry point, on the format
         # surface too: option("index_file", ...) reads the listed files
         paths = _binlog_paths(self.path, self.options_index_file)
-        sets_bytes = None
-        if self.start_after_sets is not None:
-            sets_bytes = {
-                bytes.fromhex(u.replace("-", "")): g
-                for u, g in self.start_after_sets.items()
-            }
-            paths = prune_binlog_series_by_gtid_sets(paths, sets_bytes)
-        else:
-            paths = prune_binlog_series_by_gtid(
-                paths, self.start_after_gno, self.stop_at_gno
-            )
         ranges = [
             (p, _file_seq_of(p), spec)
-            for p in paths
-            for spec in scan_binlog_splits_cached(
-                p,
-                self.split_bytes,
-                start_after_gno=self.start_after_gno,
-                stop_at_gno=self.stop_at_gno,
-                start_after_sets=sets_bytes,
-            )
+            for p, spec in _window_ranges(paths, self.window, self.split_bytes)
         ]
         return [
             _BinlogSplit(part)
@@ -7454,59 +7455,9 @@ class MysqlBinlogReader(_DataSourceReader):
                     try:
                         fh.seek(s["start"])
                         blob = fh.read(s["end"] - s["start"])
-                        yield from self._decode_range(blob, file_seq, s)
+                        yield from _decode_binlog_range(
+                            blob, file_seq, s, self.window
+                        )
                     except Exception as e:
                         e.add_note(f"{path}: bytes {s['start']}..{s['end']}")
                         raise
-
-    def _decode_range(self, blob: bytes, file_seq: int, s: dict):
-        import pyarrow.compute as pc
-
-        from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-            decode_binlog_record_batches,
-        )
-
-        for batch in decode_binlog_record_batches(
-            blob,
-            self.target,
-            self.database,
-            self.table,
-            file_seq=file_seq,
-            gtid_format=self.gtid_format,
-            capture_query=self.capture_query,
-            init_state={
-                "checksum": s["checksum"],
-                "gtid": s["gtid"],
-                "sid": s["sid"],
-                "table_maps": list(s["table_maps"]),
-            },
-            seq_base=s["start"],
-        ):
-            # the one residual GTID filter: header pruning is a
-            # superset cut, this pins the window exactly
-            if self.start_after_gno is not None:
-                batch = batch.filter(
-                    pc.greater(batch["__gtid"], self.start_after_gno)
-                )
-            if self.stop_at_gno is not None:
-                batch = batch.filter(
-                    pc.less_equal(batch["__gtid"], self.stop_at_gno)
-                )
-            if self.start_after_sets is not None and batch.num_rows:
-                import numpy as np
-                import pyarrow as pa
-
-                srcs = batch["__gtid_src"].to_pylist()
-                bounds = np.fromiter(
-                    (
-                        self.start_after_sets.get((u or "").lower(), 0)
-                        for u in srcs
-                    ),
-                    dtype=np.int64,
-                    count=len(srcs),
-                )
-                batch = batch.filter(
-                    pc.greater(batch["__gtid"], pa.array(bounds))
-                )
-            if batch.num_rows:
-                yield batch

@@ -12,7 +12,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as e
 from mysql_cdc_table_spark.session import get_spark

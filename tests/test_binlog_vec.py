@@ -30,6 +30,7 @@ from mysql_cdc_table_spark.sources.mysql_binlog import (
 from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
     decode_binlog_pandas,
 )
+from tests._tail_rows import tail_rows
 
 RICH = T.StructType(
     [
@@ -471,17 +472,19 @@ def test_tail_reader_carry_state_incremental_and_pruned(tmp_path):
     r = MysqlBinlogTailStreamReader(
         {"path": str(d), "schema_ddl": tgt_ddl, "database": "d", "table": "t"}
     )
-    rows1, off1 = r._delta(r.initialOffset())
+    b1, off1 = r._delta(r.initialOffset())
+    rows1 = tail_rows(b1)
     assert [t_[0] for t_ in rows1] == [1, 2, 3]
     assert r._carry == {}  # first read starts at file head, no carry yet
 
     (d / "binlog.000001").write_bytes(full)
-    rows2, off2 = r._delta(off1)
+    b2, off2 = r._delta(off1)
+    rows2 = tail_rows(b2)
     assert [t_[0] for t_ in rows2] == [4, 5]  # only the delta
     assert 1 in r._carry and r._carry[1][0] == off1["pos"]
 
     # replay between offsets must equal the live read (determinism)
-    replay = list(r.readBetweenOffsets(off1, off2))
+    replay = tail_rows(r.readBetweenOffsets(off1, off2))
     assert [t_[0] for t_ in replay] == [4, 5]
 
     # rotation: new file appears; after commit the old carry is pruned
@@ -490,7 +493,8 @@ def test_tail_reader_carry_state_incremental_and_pruned(tmp_path):
             "d", "t", tgt, [{"gno": 9, "op": "w", "rows": [{"id": 9, "v": "z"}]}]
         )
     )
-    rows3, off3 = r._delta(off2)
+    b3, off3 = r._delta(off2)
+    rows3 = tail_rows(b3)
     assert [t_[0] for t_ in rows3] == [9]
     r.commit(off3)
     assert 1 not in r._carry
@@ -754,7 +758,8 @@ def test_tail_reader_rotation_race_no_loss_no_double(tmp_path):
     r = MysqlBinlogTailStreamReader(
         {"path": str(d), "schema_ddl": tgt_ddl, "database": "d", "table": "t"}
     )
-    rows1, off1 = r._delta(r.initialOffset())
+    b1, off1 = r._delta(r.initialOffset())
+    rows1 = tail_rows(b1)
     assert [t_[0] for t_ in rows1] == [1, 2, 3]
 
     # the race, all within one batch window: file 1 sealed with txns
@@ -763,17 +768,19 @@ def test_tail_reader_rotation_race_no_loss_no_double(tmp_path):
     (d / "binlog.000001").write_bytes(f1_full)
     (d / "binlog.000002").write_bytes(f2_full[:-10])
 
-    rows2, off2 = r._delta(off1)
+    b2, off2 = r._delta(off1)
+    rows2 = tail_rows(b2)
     assert [t_[0] for t_ in rows2] == [4, 5, 6, 7]  # seam intact, no dup
     assert off2["seq"] == 2
 
     # replay of the race batch is deterministic
-    replay = list(r.readBetweenOffsets(off1, off2))
+    replay = tail_rows(r.readBetweenOffsets(off1, off2))
     assert [t_[0] for t_ in replay] == [4, 5, 6, 7]
 
     # the torn transaction lands; only IT is emitted next batch
     (d / "binlog.000002").write_bytes(f2_full)
-    rows3, off3 = r._delta(off2)
+    b3, off3 = r._delta(off2)
+    rows3 = tail_rows(b3)
     assert [t_[0] for t_ in rows3] == [8]
 
     # conservation across the whole history: each id exactly once
@@ -911,12 +918,14 @@ def test_rows_query_tail_carry_mid_transaction_cursor(tmp_path):
         {"path": str(d), "schema_ddl": tgt_ddl, "database": "d",
          "table": "t", "capture_query": "true"}
     )
-    rows1, off1 = r._delta(r.initialOffset())
+    b1, off1 = r._delta(r.initialOffset())
+    rows1 = tail_rows(b1)
     assert [t_[0] for t_ in rows1] == [1]  # txn 2 still incomplete
     assert off1["pos"] == cut  # cursor parked mid-transaction
 
     (d / "binlog.000001").write_bytes(full)
-    rows2, off2 = r._delta(off1)
+    b2, off2 = r._delta(off1)
+    rows2 = tail_rows(b2)
     # schema order: id, v, __op, __query, __gtid, ... — find __query by
     # name for robustness
     from mysql_cdc_table_spark.sources.mysql_binlog import _binlog_out_schema
@@ -1121,12 +1130,14 @@ def test_tail_initial_offset_parks_at_event_boundary_not_getsize(tmp_path):
     assert off0["pos"] == cut  # boundary, NOT cut + 5 (raw getsize)
 
     # nothing new yet: an empty batch, cursor stays put
-    rows0, off0b = r._delta(off0)
+    b0, off0b = r._delta(off0)
+    rows0 = tail_rows(b0)
     assert rows0 == [] and off0b["pos"] == cut
 
     # the torn bytes land: exactly txn 4 surfaces
     (d / "binlog.000001").write_bytes(full)
-    rows1, off1 = r._delta(off0b)
+    b1, off1 = r._delta(off0b)
+    rows1 = tail_rows(b1)
     assert [t_[0] for t_ in rows1] == [4]
     assert off1["pos"] == len(full)
 

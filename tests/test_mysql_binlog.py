@@ -26,6 +26,7 @@ from mysql_cdc_table_spark.streaming.cdc_stream import (
     await_drained,
     run_to_completion,
 )
+from tests._tail_rows import tail_rows
 
 TARGET = T.StructType(
     [
@@ -993,14 +994,16 @@ def test_tail_reader_replay_is_deterministic(tmp_path):
         }
     )
     start = reader.initialOffset()
-    rows1, end = reader._delta(start)
+    b1, end = reader._delta(start)
+    rows1 = tail_rows(b1)
     assert [r[0] for r in rows1] == [1]  # only txn 10 is complete
 
     # the active file grows: txn 11 completes
     (d / "binlog.000001").write_bytes(full)
-    replay = list(reader.readBetweenOffsets(start, end))
+    replay = tail_rows(reader.readBetweenOffsets(start, end))
     assert replay == rows1  # replay ignores post-offset growth
-    rows2, end2 = reader._delta(end)
+    b2, end2 = reader._delta(end)
+    rows2 = tail_rows(b2)
     assert [r[0] for r in rows2] == [2]  # next batch gets only the delta
     assert end2["pos"] == len(full)
 
@@ -1031,7 +1034,8 @@ def test_tail_reader_skips_foreign_and_magicless_files(tmp_path):
             "table": "t",
         }
     )
-    rows, end = reader._delta(reader.initialOffset())
+    b, end = reader._delta(reader.initialOffset())
+    rows = tail_rows(b)
     assert [r[0] for r in rows] == [1]
 
     # the rotated file's magic + events land: next batch consumes it
@@ -1039,7 +1043,8 @@ def test_tail_reader_skips_foreign_and_magicless_files(tmp_path):
         "d", "t", TARGET, [_txn(11, "w", [{"id": 2, "v": "b", "amt": Decimal("2.00")}])]
     )
     (d / "binlog.000002").write_bytes(blob2)
-    rows2, _ = reader._delta(end)
+    b2, _ = reader._delta(end)
+    rows2 = tail_rows(b2)
     assert [r[0] for r in rows2] == [2]
 
 
@@ -1528,11 +1533,12 @@ def test_format_reader_packs_many_small_files(spark, tmp_path):
 
 def test_decode_error_names_file_and_offset(spark, tmp_path):
     """A flipped byte inside a mid-file rows event of a CRC32 file fails
-    both batch decodes — the range reader behind format("mysql_binlog")
-    and the whole-file _decode_files — with an error that names the
-    file and the event offset."""
+    every decode — the range reader behind format("mysql_binlog"), the
+    whole-file _decode_files and the streaming tail — with an error
+    that names the file and the event offset."""
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         EV_WRITE_ROWS_V2,
+        MysqlBinlogTailStreamReader,
         _events,
     )
 
@@ -1547,13 +1553,20 @@ def test_decode_error_names_file_and_offset(spark, tmp_path):
     blob[off + 19 + 12] ^= 0xFF  # inside the event body
     path = tmp_path / "binlog.000001"
     path.write_bytes(bytes(blob))
-    for df in (
-        mysql_binlog_read(spark, str(tmp_path), TARGET, "d", "t"),
-        _whole_file_read(spark, tmp_path, TARGET),
+    tail = MysqlBinlogTailStreamReader(
+        {"path": str(tmp_path), "database": "d", "table": "t",
+         "schema_ddl": "id bigint, v string, amt decimal(10,2)"}
+    )
+    for read in (
+        mysql_binlog_read(spark, str(tmp_path), TARGET, "d", "t").collect,
+        _whole_file_read(spark, tmp_path, TARGET).collect,
+        lambda: tail._delta(tail.initialOffset()),
     ):
         with pytest.raises(Exception) as ei:
-            df.collect()
-        msg = str(ei.value)
+            read()
+        # Spark's error carries the worker's traceback, notes included;
+        # the tail raises in this process, so its note is on the error
+        msg = "\n".join([str(ei.value), *getattr(ei.value, "__notes__", ())])
         assert str(path) in msg and f"offset {off}" in msg, msg
 
 
@@ -2777,12 +2790,13 @@ def test_tail_multi_source_resume_no_loss_no_double(tmp_path):
 
     names = [
         f.name for f in _binlog_out_schema(
-            r.target, "uuid_gno", False
+            r.window.target, "uuid_gno", False
         ).fields
     ]
     gi, si = names.index("__gtid"), names.index("__gtid_src")
 
-    rows1, off1 = r._delta(off0)
+    b1, off1 = r._delta(off0)
+    rows1 = tail_rows(b1)
     got1 = {(t_[si], t_[gi]) for t_ in rows1}
     want1 = {(uuid_a, g) for g in range(62, 80, 2)} | {
         (uuid_b, g) for g in range(47, 80, 2)
@@ -2797,7 +2811,8 @@ def test_tail_multi_source_resume_no_loss_no_double(tmp_path):
         )
     )
     r2 = MysqlBinlogTailStreamReader(opts)
-    rows2, off2 = r2._delta(off1)
+    b2, off2 = r2._delta(off1)
+    rows2 = tail_rows(b2)
     got2 = {(t_[si], t_[gi]) for t_ in rows2}
     want2 = {
         (_sid_to_uuid(SID_A if g % 2 == 0 else SID_B), g)
@@ -2808,7 +2823,85 @@ def test_tail_multi_source_resume_no_loss_no_double(tmp_path):
     assert off2["seq"] == 3
 
     # replay determinism across the restart boundary
-    assert {(t_[si], t_[gi]) for t_ in r2.readBetweenOffsets(off1, off2)} == want2
+    assert {(t_[si], t_[gi]) for t_ in tail_rows(r2.readBetweenOffsets(off1, off2))} == want2
+
+
+def test_tail_and_batch_reader_share_the_gtid_window(tmp_path):
+    """The tail (``_delta`` from ``initialOffset()``) and the batch
+    reader (``partitions()`` then ``read()``, here over 2 KiB ranges
+    with carried state) return the same rows over one multi-file series
+    under both start bounds, because both run one GTID window and one
+    range decode; the tail's batches only differ in carrying Spark's
+    Arrow schema. A transaction with no GTID event decodes with a null
+    ``__gtid``, and the tail's start bounds let its rows through."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from mysql_cdc_table_spark.sources import mysql_binlog as mb
+
+    d = tmp_path / "logs"
+    d.mkdir()
+    for n, (lo, hi) in enumerate([(1, 40), (40, 80), (80, 120)], start=1):
+        seen = {SID_A: [(1, lo)], SID_B: [(1, lo)]} if lo > 1 else {}
+        (d / f"binlog.00000{n}").write_bytes(
+            _two_source_blob(lo, hi, previous_gtids=seen)
+        )
+    uuid_a, uuid_b = mb._sid_to_uuid(SID_A), mb._sid_to_uuid(SID_B)
+    base = {
+        "path": str(d), "database": "d", "table": "t",
+        "schema_ddl": "id bigint, v string, amt decimal(10,2)",
+        "gtid_format": "uuid_gno",
+    }
+    out = mb._binlog_out_schema(TARGET, "uuid_gno")
+    spark_schema = to_arrow_schema(out)
+    names = [f.name for f in out.fields]
+    gi, si = names.index("__gtid"), names.index("__gtid_src")
+    windows = [
+        ({"start_after_gno": "57"}, {g for g in range(58, 120)}),
+        (
+            {"start_after_sets": f"{uuid_a}:60,{uuid_b}:45"},
+            {g for g in range(61, 120) if g % 2 == 0}
+            | {g for g in range(46, 120) if g % 2},
+        ),
+    ]
+    tails = []
+    for bound, want in windows:
+        batch = mb.MysqlBinlogReader({**base, **bound, "split_bytes": "2048"})
+        parts = batch.partitions()
+        assert sum(len(p.ranges) for p in parts) > 3  # mid-file ranges
+        batch_rows = tail_rows(
+            b.cast(spark_schema) for p in parts for b in batch.read(p)
+        )
+        tail = mb.MysqlBinlogTailStreamReader({**base, **bound})
+        batches, end = tail._delta(tail.initialOffset())
+        assert all(b.schema == spark_schema for b in batches)
+        got = tail_rows(batches)
+        assert sorted(got) == sorted(batch_rows)
+        assert {t_[gi] for t_ in got} == want and len(got) == len(want)
+        for t_ in got:
+            assert t_[si] == (uuid_a if t_[gi] % 2 == 0 else uuid_b)
+        tails.append((tail, end))
+
+    # a rotated-in file whose one transaction has no GTID event
+    out = bytearray(mb.BINLOG_MAGIC)
+
+    def emit(tc, body):
+        out.extend(mb._event(1_700_000_500, tc, 1, body, len(out), True))
+
+    cols = mb._cols_from_schema(TARGET)
+    emit(mb.EV_FORMAT_DESCRIPTION, mb._fde_body(True))
+    emit(mb.EV_TABLE_MAP, mb._table_map_body(23, "d", "t", cols))
+    emit(
+        mb.EV_WRITE_ROWS_V2,
+        mb._rows_body(
+            mb.EV_WRITE_ROWS_V2, 23, cols,
+            [{"id": 500, "v": "no gtid", "amt": Decimal(5)}],
+        ),
+    )
+    (d / "binlog.000004").write_bytes(bytes(out))
+    for tail, end in tails:
+        batches, _ = tail._delta(end)
+        got = tail_rows(batches)
+        assert [(t_[0], t_[gi], t_[si]) for t_ in got] == [(500, None, None)]
 
 
 def test_tail_start_after_sets_option_validation(tmp_path):
