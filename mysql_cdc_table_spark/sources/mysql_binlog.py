@@ -2586,13 +2586,14 @@ def decode_binlog_bytes(
     columns inherit the old identities — pre-cut-over rows surface
     under the migrated layout (mysql_ddl.SchemaHistory).
     ``target`` may be None in this mode — the layout comes from the
-    log itself. Mutually exclusive with ``init_state`` (a mid-file
-    range cannot see the history that precedes it). Composes with
-    ``_rows_sink`` since round 15: the columnar kernel keys its batch
-    groups per generation (tdefs are rebuilt at every layout change,
-    so a group never mixes generations) and remaps each group onto
-    the final layout at flush — see
-    ``mysql_binlog_vec.decode_binlog_record_batches(schema_history=)``.
+    log itself. A mid-file range (``init_state``) must carry the DDL
+    prefix that precedes it as ``init_state["ddl"]``
+    (``scan_binlog_splits_ddl``); its rows surface under the range's
+    own final generation. Composes with ``_rows_sink``: the columnar
+    kernel keys its batch groups per generation (tdefs are rebuilt at
+    every layout change, so a group never mixes generations) and
+    places each group onto the final layout at flush — see
+    ``mysql_binlog_vec.decode_binlog_record_batches(final_history=)``.
 
     ``_rows_sink`` is the columnar kernel's hook (mysql_binlog_vec):
     called with the parsed rows-event header
@@ -3113,15 +3114,13 @@ def scan_binlog_splits_ddl(
     file-COMPLETE list (what a caller needs to compute the final
     generation every range's rows remap onto). This is what lets a
     multi-generation binlog decode as parallel transaction-aligned
-    ranges: seed a SchemaHistory per range by replaying its prefix,
-    decode the range (in-range DDL keeps folding), then join
-    range-final names to file-final names on column identity.
+    ranges (``_decode_history_range``): seed a SchemaHistory per range
+    by replaying its prefix, decode the range (in-range DDL keeps
+    folding) onto the file-final layout by column identity.
     Statement lists are statement-count-bounded — DDL is rare next to
     rows — so carrying the prefix per split costs O(splits x
     statements)."""
-    return scan_binlog_splits(
-        blob, target_split_bytes, _track_ddl=True
-    )
+    return _split_walk(blob, target_split_bytes, None, None, None, True)
 
 
 def scan_binlog_splits(
@@ -3130,8 +3129,7 @@ def scan_binlog_splits(
     *,
     start_after_gno: int | None = None,
     stop_at_gno: int | None = None,
-    _track_ddl: bool = False,
-):
+) -> list[dict]:
     """Sequential HEADER walk of one binlog file (no row decode — just
     the 19-byte headers plus GTID/TABLE_MAP bodies), emitting split
     specs for parallel range decode. Boundaries are placed ONLY at GTID
@@ -3162,8 +3160,7 @@ def scan_binlog_splits(
     all — every scan re-decodes from each file's first event
     (binlog_table_reader.cc:75-96)."""
     return _split_walk(
-        blob, target_split_bytes, start_after_gno, stop_at_gno, None,
-        _track_ddl,
+        blob, target_split_bytes, start_after_gno, stop_at_gno, None, False
     )
 
 
@@ -3264,12 +3261,11 @@ def mysql_binlog_read_ddl_history(
     ROTATION ORDER (the file mapped read-only, no row decode) to build
     each file's DDL PREFIX and the series-final layout. Executor-side:
     one file = one decode task (the usual per-file parallelism), each
-    seeding a ``SchemaHistory`` from its prefix; in-file DDL keeps folding
-    mid-walk; rows remap from the FILE-final onto the SERIES-final
-    generation by column identity. Values decode through the Arrow
-    kernel (per-generation batch groups, identity placement + casts at
-    flush), then the file-final batches are renamed/cast onto the
-    series-final schema."""
+    file decoding as the range ``[4, len)`` through
+    ``_decode_history_range``: its prefix seeds the history, in-file
+    DDL keeps folding mid-walk, and the columnar kernel places every
+    generation's columns onto the SERIES-final layout by column
+    identity."""
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
     paths = _binlog_paths(path)
@@ -3281,149 +3277,83 @@ def mysql_binlog_read_ddl_history(
         prefixes[_file_seq_of(p)] = list(acc)
         for rec in binlog_file_ddl(p):
             acc.append((rec["database"], rec["statement"]))
-    fin = SchemaHistory(table, database=database)
+    final = SchemaHistory(table, database=database)
     for db0, stmt in acc:
-        fin.apply(stmt, default_db=db0 or None)
-    if fin.schema is None:
+        final.apply(stmt, default_db=db0 or None)
+    if final.schema is None:
         raise ValueError(
             f"no CREATE TABLE for {database}.{table} in the series' "
             "DDL history — declare a schema (mysql_binlog_read) or "
             "seed the history"
         )
-    target = fin.schema
-    fin_names = list(fin.names)
-    fin_ids = list(fin.ids)
-    out_schema = _binlog_out_schema(target, gtid_format, False)
-    meta_names = [
-        f.name for f in out_schema.fields if f.name not in fin_names
-    ]
-
     files = (
         spark.read.format("binaryFile")
         .load([p if "://" in p else "file://" + os.path.abspath(p)
                for p in paths])
     )
 
-    def seed(fseq: int) -> SchemaHistory:
-        h = SchemaHistory(table, database=database)
-        for db0, stmt in prefixes.get(fseq, []):
-            h.apply(stmt, default_db=db0 or None)
-        return h
-
-    import pyarrow as pa
-
-    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-        _pa_type,
-        arrow_schema,
-        decode_binlog_record_batches,
-    )
-
-    pa_out = arrow_schema(out_schema)
-
     def walk_arrow(batches):
         for batch in batches:
             bpaths = batch.column("path")
             contents = batch.column("content")
             for i in range(batch.num_rows):
-                fseq = _file_seq_of(str(bpaths[i].as_py()))
-                hist = seed(fseq)
-                rbs = list(
-                    decode_binlog_record_batches(
-                        contents[i].as_py(), None, database, table,
-                        file_seq=fseq, gtid_format=gtid_format,
-                        schema_history=hist,
+                fpath = str(bpaths[i].as_py())
+                fseq = _file_seq_of(fpath)
+                buf = contents[i].as_buffer()
+                spec = {"start": 4, "end": buf.size, "ddl": prefixes[fseq]}
+                try:
+                    yield from _decode_history_range(
+                        buf[4:].to_pybytes(), fseq, spec, final, database,
+                        table, gtid_format,
                     )
-                )  # bounded: one file's batches (file-at-a-time
-                # memory is this reader's standing contract)
-                fmap = {
-                    i_: n_ for n_, i_ in zip(hist.names, hist.ids)
-                }
-                for rb in rbs:
-                    arrays = []
-                    for n_, i_ in zip(fin_names, fin_ids):
-                        src = fmap.get(i_)
-                        t_pa = _pa_type(
-                            target[n_].dataType  # noqa: B023
-                        )
-                        if src is not None and src in rb.schema.names:
-                            arr = rb.column(src)
-                            if arr.type != t_pa:
-                                arr = arr.cast(t_pa)
-                            arrays.append(arr)
-                        else:
-                            arrays.append(
-                                pa.nulls(rb.num_rows, type=t_pa)
-                            )
-                    for mn in meta_names:
-                        arrays.append(rb.column(mn))
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, schema=pa_out
-                    )
+                except Exception as e:
+                    e.add_note(f"{fpath}: bytes 4..{buf.size}")
+                    raise
 
     return files.select("path", "content").mapInArrow(
-        walk_arrow, schema=out_schema
+        walk_arrow,
+        schema=_binlog_out_schema(final.schema, gtid_format, False),
     )
 
 
-def decode_binlog_range_history(
+def _decode_history_range(
     blob: bytes,
-    split: dict,
-    ddl_all: list,
+    file_seq: int,
+    spec: dict,
+    final,
     database: str,
     table: str,
-    *,
-    file_seq: int = 1,
     gtid_format: str = "long",
-    capture_query: bool = False,
-) -> list[dict]:
-    """Decode ONE transaction-aligned byte range of a MULTI-GENERATION
-    binlog independently — the split-parallel path for schema-history
-    decode (round 15; previously multi-generation logs were pinned to
-    whole-file walks). The split spec comes from
-    ``scan_binlog_splits_ddl``: its ``ddl`` prefix replays into a
-    fresh ``SchemaHistory`` before the walk (so the range opens in the
-    generation in effect at its first transaction), in-range DDL keeps
-    folding as usual, and afterwards the rows remap from the RANGE's
-    final generation onto the FILE's final generation (``ddl_all``) by
-    column identity — so the union of all ranges is byte-identical to
-    the whole-file walk, regardless of which generation each range
-    starts or ends in. Identity determinism: a prefix replay followed
-    by the in-range fold allocates exactly the ids the whole-file fold
-    does (same statements, same order, same counter)."""
+):
+    """The one schema-history range decode. ``blob`` holds a file's
+    bytes ``[spec["start"], spec["end"])``, a transaction-aligned range,
+    and the spec carries the decoder state and the ``ddl`` prefix
+    ([(session_db, statement), ...]) that precede the range
+    (``scan_binlog_splits_ddl``). A fresh
+    ``SchemaHistory`` replays the prefix, so the range opens in the
+    generation in effect at its first transaction; in-range DDL keeps
+    folding; and the columnar kernel surfaces every row under
+    ``final``, a history folded to the generation all ranges share.
+    Identity determinism: a prefix replay followed by the in-range fold
+    allocates exactly the ids a fold over the whole log does (same
+    statements, same order, same counter)."""
+    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
+        decode_binlog_record_batches,
+    )
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
-    hist = SchemaHistory(table, database=database)
-    state = {
-        k: split[k]
-        for k in ("checksum", "gtid", "sid", "table_maps", "ddl")
-    }
-    rows = decode_binlog_bytes(
-        blob[split["start"] : split["end"]],
+    return decode_binlog_record_batches(
+        blob,
         None,
         database,
         table,
         file_seq=file_seq,
         gtid_format=gtid_format,
-        init_state=state,
-        seq_base=split["start"],
-        capture_query=capture_query,
-        schema_history=hist,
+        init_state=spec,
+        seq_base=spec["start"],
+        schema_history=SchemaHistory(table, database=database),
+        final_history=final,
     )
-    fin = SchemaHistory(table, database=database)
-    for db0, stmt in ddl_all:
-        fin.apply(stmt, default_db=db0 or None)
-    latest = dict(zip(fin.ids, fin.names))
-    ren = {n: latest.get(i) for n, i in zip(hist.names, hist.ids)}
-    if any(k != v for k, v in ren.items()):
-        for r in rows:
-            moved = {}
-            for n, nn in ren.items():
-                if n in r:
-                    v = r.pop(n)
-                    if nn is not None:
-                        moved[nn] = v
-            r.update(moved)
-    return rows
 
 
 def binlog_prev_gtids_uncovered(path: str) -> int | None:
@@ -5728,43 +5658,48 @@ def cdc_binlog_ddl_split_decode(
     """The SAME three-generation fixture decoded as PARALLEL
     transaction-aligned byte ranges: every file header-walks into ~tens
     of small ranges (``scan_binlog_splits_ddl`` carries the DDL prefix
-    per range), each range decodes INDEPENDENTLY
-    (``decode_binlog_range_history``) — a fresh ``SchemaHistory``
+    per range), each range decodes INDEPENDENTLY through the columnar
+    kernel (``_decode_history_range``) — a fresh ``SchemaHistory``
     seeded from its prefix, in-range DDL folding as it streams past,
-    rows remapped from the range-final onto the FILE-final generation
-    by column identity — and the union must aggregate identically to
-    the whole-file walk (the oracle is shared verbatim). A 100 GB
-    multi-generation binlog spreads across executors exactly like the
-    fixed-schema parallel scan, DDL and all."""
-    import pandas as pd
+    columns placed onto the FILE-final generation by column identity —
+    and the union must aggregate identically to the whole-file walk
+    (the oracle is shared verbatim). A 100 GB multi-generation binlog
+    spreads across executors exactly like the fixed-schema parallel
+    scan, DDL and all."""
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
     files, target = _ddl_fixture(spark, sf_dir)
-    out_schema = changelog_schema(target)
-    names = [f.name for f in out_schema.fields]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["content"]:
-                b = bytes(blob)
+    def decode(batches):
+        for batch in batches:
+            for path, blob in zip(
+                batch.column("path").to_pylist(),
+                batch.column("content").to_pylist(),
+            ):
                 # target ~64 ranges per file regardless of scale:
                 # plenty of range starts inside every generation,
-                # while per-range overhead (history seed + final
-                # remap) stays amortized — a FIXED byte size would
-                # grow range count linearly with data and measured
-                # 5.0x at 10x; production uses 64 MB ranges where
-                # the overhead vanishes entirely
+                # while per-range overhead (history seed) stays
+                # amortized — a FIXED byte size would grow range count
+                # linearly with data and measured 5.0x at 10x;
+                # production uses 64 MB ranges where the overhead
+                # vanishes entirely
                 splits, ddl_all = scan_binlog_splits_ddl(
-                    b, max(8192, len(b) >> 6)
+                    blob, max(8192, len(blob) >> 6)
                 )
+                final = SchemaHistory("orders", database="tpch")
+                for db0, stmt in ddl_all:
+                    final.apply(stmt, default_db=db0 or None)
                 for sp in splits:  # each range fully independent
-                    rows = decode_binlog_range_history(
-                        b, sp, ddl_all, "tpch", "orders"
-                    )
-                    yield pd.DataFrame(
-                        {n: [r.get(n) for r in rows] for n in names}
+                    yield from _decode_history_range(
+                        blob[sp["start"] : sp["end"]], _file_seq_of(path),
+                        sp, final, "tpch", "orders",
                     )
 
-    return _ddl_fixture_agg(files.mapInPandas(decode, schema=out_schema))
+    return _ddl_fixture_agg(
+        files.select("path", "content").mapInArrow(
+            decode, schema=changelog_schema(target)
+        )
+    )
 
 
 def cdc_binlog_ddl_series_decode(
@@ -6987,7 +6922,10 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
             "zstd" if comp == "zstd" else bool(comp == "none")
         )
 
-    def _build_txns(self, rows, names_in: list | None = None) -> list:
+    def _build_txns(self, rows, names_in: list | None) -> list:
+        """Plain tuples positionally matching ``names_in`` (the record
+        batch's column order, ``_arrow_rows``) -> the transactions
+        ``build_binlog_file`` writes."""
         import calendar
         from itertools import chain
 
@@ -6997,28 +6935,7 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
             first = next(it)
         except StopIteration:
             return []
-        # positional access: Row.__getitem__ by NAME is a list.index()
-        # scan per cell (measured ~18% of single-thread encode on a
-        # 6-column changelog); resolve each field to its position once
-        # per partition and index by int thereafter. Plain-mapping rows
-        # (tests, foreachBatch dicts) keep name keys — both row[int]
-        # and dict[str] are O(1).
-        if names_in is not None:
-            # Arrow path (r15): rows are plain tuples positionally
-            # matching names_in (the record-batch column order)
-            pos = names_in.index
-            mat = lambda r: r  # noqa: E731 - already plain tuples
-        elif hasattr(first, "__fields__"):
-            fields = list(first.__fields__)
-            pos = fields.index
-            # materialize each Row as a PLAIN tuple once (C-speed copy
-            # of a tuple subclass): every later cell access is then
-            # tuple.__getitem__ instead of the Row override (~15% of
-            # single-thread encode at 6 columns)
-            mat = tuple
-        else:
-            pos = lambda n: n  # noqa: E731 - identity key for mappings
-            mat = lambda r: r  # noqa: E731 - mappings index by name
+        pos = names_in.index
         gi = pos("__gtid")
         esi = pos("__event_seq")
         isi = pos("__image_seq")
@@ -7026,8 +6943,7 @@ class MysqlBinlogWriter(_DataSourceArrowWriter):
         tmi = pos("__tm")
         nidx = [(n, pos(n)) for n in names]
         by_gno: dict[int, list] = {}
-        for row in chain((first,), it):
-            tup = mat(row)
+        for tup in chain((first,), it):
             by_gno.setdefault(int(tup[gi]), []).append(tup)
         txns = []
         for gno in sorted(by_gno):

@@ -1295,17 +1295,16 @@ def _flush_group(
         )
 
 
-def _rows_to_batches(rows, out_schema, pa_out_schema, chunk=200_000):
-    """Scalar-walk remainder rows (PARTIAL_UPDATE_ROWS) -> batches."""
+def _rows_to_batches(rows, keys, pa_out_schema, chunk=200_000):
+    """Scalar-walk remainder rows (PARTIAL_UPDATE_ROWS) -> batches; each
+    output column reads its row-dict key in ``keys`` (None: all NULL)."""
     import pyarrow as pa
 
     for i in range(0, len(rows), chunk):
         part = rows[i : i + chunk]
         arrays = [
-            pa.array(
-                [r.get(f.name) for r in part], type=_pa_type(f.dataType)
-            )
-            for f in out_schema.fields
+            pa.array([r.get(k) for r in part], type=f.type)
+            for k, f in zip(keys, pa_out_schema)
         ]
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_out_schema)
 
@@ -1323,6 +1322,7 @@ def decode_binlog_record_batches(
     seq_base: int = 0,
     capture_query: bool = False,
     schema_history=None,
+    final_history=None,
 ) -> Iterator:
     """Columnar twin of ``decode_binlog_bytes``: same walk (shared code
     — headers, CRC32, GTID, TABLE_MAP, payload unwrap all run in the
@@ -1334,43 +1334,49 @@ def decode_binlog_record_batches(
 
     ``schema_history`` (a ``mysql_ddl.SchemaHistory``) runs the
     Debezium-style multi-generation decode VECTORIZED (``target`` may
-    be None): a header-only pre-walk (``binlog_bytes_ddl``) folds a
-    clone of the history to learn the FINAL generation up front, each
-    batch group is generation-pure by construction (the walk rebuilds
-    tdefs at every layout change), and the flush places each decoded
-    generation column at its final position by column identity,
-    casting rewritten types — so batches stream out in ONE fixed
-    Arrow schema without buffering the file. DDL must arrive as plain
-    Query events (MySQL never wraps DDL in TRANSACTION_PAYLOAD); the
-    end-of-walk generation cross-check raises if the pre-walk and the
-    live fold ever diverge."""
+    be None): rows surface under ``final_history``'s generation (a
+    history folded past the decoded bytes). Each batch group is
+    generation-pure by construction (the walk rebuilds tdefs at every
+    layout change), and the flush places each decoded generation
+    column at its final position by column identity, casting
+    rewritten types — so batches stream out in ONE fixed Arrow schema
+    without buffering the file. Without ``final_history`` a
+    header-only pre-walk (``binlog_bytes_ddl``) folds a clone of the
+    history through the whole file, and the end-of-walk cross-check
+    raises if the pre-walk and the live fold ever diverge (DDL must
+    arrive as plain Query events; MySQL never wraps DDL in
+    TRANSACTION_PAYLOAD). A mid-file range (``init_state`` with its
+    ``ddl`` prefix) cannot see the DDL after it, so it needs
+    ``final_history``."""
     final_ids: list | None = None
-    final_hist = None
+    prewalk = final_history is None
     if schema_history is not None:
-        import copy
+        if prewalk:
+            if init_state is not None:
+                raise ValueError(
+                    "schema_history decode of a mid-file range needs "
+                    "final_history: the range cannot see the DDL that "
+                    "follows it"
+                )
+            import copy
 
-        from mysql_cdc_table_spark.sources.mysql_binlog import (
-            binlog_bytes_ddl,
-        )
+            from mysql_cdc_table_spark.sources.mysql_binlog import (
+                binlog_bytes_ddl,
+            )
 
-        if init_state is not None:
-            raise ValueError(
-                "schema_history decode needs the whole file: a mid-file "
-                "range cannot see the DDL history that precedes it"
-            )
-        final_hist = copy.deepcopy(schema_history)
-        for rec in binlog_bytes_ddl(blob):
-            final_hist.apply(
-                rec["statement"], default_db=rec.get("database") or None
-            )
-        if final_hist.schema is None:
+            final_history = copy.deepcopy(schema_history)
+            for rec in binlog_bytes_ddl(blob):
+                final_history.apply(
+                    rec["statement"], default_db=rec.get("database") or None
+                )
+        if final_history.schema is None:
             raise ValueError(
                 "no CREATE TABLE for the tracked table in the DDL "
                 "history — seed the SchemaHistory or decode a log that "
                 "opens with the table's DDL"
             )
-        target = final_hist.schema
-        final_ids = list(final_hist.ids)
+        target = final_history.schema
+        final_ids = list(final_history.ids)
     out_schema = _binlog_out_schema(target, gtid_format, capture_query)
     pa_out_schema = arrow_schema(out_schema)
     want_src = gtid_format == "uuid_gno"
@@ -1427,59 +1433,49 @@ def decode_binlog_record_batches(
         schema_history=schema_history,
         _rows_sink=sink,
     )
-    if schema_history is not None and (
-        schema_history.generation != final_hist.generation
-        or list(schema_history.ids) != final_ids
-    ):
-        raise ValueError(
-            "schema-history pre-walk diverged from the live fold "
-            f"(pre-walk generation {final_hist.generation}, live "
-            f"{schema_history.generation}) — DDL reached the row walk "
-            "through a path the header-only DDL scan cannot see"
-        )
+    keys = [f.name for f in out_schema.fields]
+    if schema_history is not None:
+        if prewalk and (
+            schema_history.generation != final_history.generation
+            or list(schema_history.ids) != final_ids
+        ):
+            raise ValueError(
+                "schema-history pre-walk diverged from the live fold "
+                f"(pre-walk generation {final_history.generation}, live "
+                f"{schema_history.generation}) — DDL reached the row "
+                "walk through a path the header-only DDL scan cannot see"
+            )
+        if schema_history.schema is not None:
+            # the walk's remainder rows (PARTIAL_UPDATE_ROWS) come back
+            # under the live fold's final names: read each final column
+            # from the name its identity has there
+            live = dict(zip(schema_history.ids, schema_history.names))
+            keys[: len(final_ids)] = [live.get(i) for i in final_ids]
     yield from done
     for g in groups.values():
         yield from _flush_group(
             g, target, pa_out_schema, want_src, file_seq, capture_query
         )
     if scalar_rows:
-        yield from _rows_to_batches(scalar_rows, out_schema, pa_out_schema)
+        yield from _rows_to_batches(scalar_rows, keys, pa_out_schema)
 
 
 def decode_binlog_pandas(blob, target, database, table, **kw):
     """Convenience: columnar decode -> one pandas DataFrame (tests)."""
     import pyarrow as pa
 
-    if target is None and kw.get("schema_history") is not None:
-        # the final layout comes from the log: pre-fold a CLONE (the
-        # real decode below folds the caller's live history)
-        import copy
-
-        from mysql_cdc_table_spark.sources.mysql_binlog import (
-            binlog_bytes_ddl,
-        )
-
-        fh = copy.deepcopy(kw["schema_history"])
-        for rec in binlog_bytes_ddl(blob):
-            fh.apply(rec["statement"], default_db=rec.get("database") or None)
-        target_out = fh.schema
-        if target_out is None:
-            raise ValueError(
-                "no CREATE TABLE for the tracked table in the DDL "
-                "history — seed the SchemaHistory or decode a log that "
-                "opens with the table's DDL"
-            )
-    else:
-        target_out = target
-    out_schema = _binlog_out_schema(
-        target_out,
-        kw.get("gtid_format", "long"),
-        kw.get("capture_query", False),
-    )
     batches = list(
         decode_binlog_record_batches(blob, target, database, table, **kw)
     )
-    if not batches:
-        schema = arrow_schema(out_schema)
-        return schema.empty_table().to_pandas()
-    return pa.Table.from_batches(batches).to_pandas()
+    if batches:
+        return pa.Table.from_batches(batches).to_pandas()
+    # no rows: the empty frame takes the layout the decode surfaces
+    # rows under (a history-less decode's target, else the final fold;
+    # the caller's live history has folded to it)
+    hist = kw.get("final_history") or kw.get("schema_history")
+    out_schema = _binlog_out_schema(
+        target if hist is None else hist.schema,
+        kw.get("gtid_format", "long"),
+        kw.get("capture_query", False),
+    )
+    return arrow_schema(out_schema).empty_table().to_pandas()

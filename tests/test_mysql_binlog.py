@@ -3531,8 +3531,12 @@ def test_writer_txn_rebuild_roundtrip_property(checksum, txspec):
     """Hypothesis: the sink's transaction rebuilding (_build_txns — op
     grouping, update-pair re-pairing, gno ordering, __tm commit ts)
     write->decodes to exactly the changelog rows it was given, for any
-    mix of multi-image write/delete/update transactions."""
+    mix of multi-image write/delete/update transactions. The rows reach
+    it the way the sink's tasks hand them over: one Arrow batch through
+    _arrow_rows."""
     import datetime as dtm
+
+    import pyarrow as pa
 
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         MysqlBinlogWriter,
@@ -3570,7 +3574,8 @@ def test_writer_txn_rebuild_roundtrip_property(checksum, txspec):
     import random
 
     random.Random(42).shuffle(rows)  # grouping must not rely on order
-    txns = w._build_txns(rows)
+    names_in, tuples = w._arrow_rows([pa.RecordBatch.from_pylist(rows)])
+    txns = w._build_txns(tuples, names_in)
     assert [t_["gno"] for t_ in txns] == sorted({r["__gtid"] for r in rows})
     blob = build_binlog_file("d", "t", w.target, txns, checksum=checksum)
     got = decode_binlog_bytes(blob, w.target, "d", "t")
@@ -4340,10 +4345,8 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
     repo = pathlib.Path(__file__).resolve().parents[1]
     root = repo / "mysql_cdc_table_spark"
     allowed = {
-        # the walk's internals: the kernel runs it for headers/state,
-        # and the split-range history decode is its only implementation
+        # the walk's internals: the kernel runs it for headers/state
         ("sources/mysql_binlog_vec.py", "decode_binlog_record_batches"),
-        ("sources/mysql_binlog.py", "decode_binlog_range_history"),
         # parity keys: the walk is the reference model the kernel is
         # held to (a `kernel` oracle column / a shared oracle)
         ("operators/round15.py", "cdc_binlog_gbk_roundtrip"),

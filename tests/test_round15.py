@@ -840,36 +840,137 @@ def test_zorder_rowgroup_probe_matches_direct_and_pushes_zkey(
 # --- split-parallel schema-history decode -------------------------------------
 
 
-def test_split_history_ranges_union_equals_whole_file_walk():
-    """Tiny target ranges force split starts inside every generation;
-    each range decodes independently (prefix-seeded history,
-    file-final identity remap) and the union is byte-identical to the
-    whole-file walk."""
+def _folded(ddl, table="t", db="d"):
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+
+    h = SchemaHistory(table, database=db)
+    for db0, stmt in ddl:
+        h.apply(stmt, default_db=db0 or None)
+    return h
+
+
+def _history_ranges(blob, split_bytes, table="t", db="d"):
+    """Every range of ``blob`` decoded on its own through the columnar
+    kernel onto the file-final layout, as row dicts."""
     from mysql_cdc_table_spark.sources.mysql_binlog import (
-        decode_binlog_range_history,
+        _decode_history_range,
         scan_binlog_splits_ddl,
     )
+
+    splits, ddl_all = scan_binlog_splits_ddl(blob, split_bytes)
+    final = _folded(ddl_all, table, db)
+    rows = [
+        r
+        for sp in splits
+        for b in _decode_history_range(
+            blob[sp["start"] : sp["end"]], 1, sp, final, db, table
+        )
+        for r in b.to_pylist()
+    ]
+    return splits, ddl_all, rows
+
+
+def _assert_rows_match_walk(got, want):
+    """Kernel rows vs the scalar walk's: the same (event, image) keys,
+    every scalar value equal, and every column the scalar row lacks
+    (added after its generation) NULL."""
+    key = lambda r: (r["__event_seq"], r["__image_seq"])  # noqa: E731
+    got_by = {key(r): r for r in got}
+    want_by = {key(r): r for r in want}
+    assert len(got_by) == len(got)
+    assert got_by.keys() == want_by.keys()
+    for k, w in want_by.items():
+        g = got_by[k]
+        for c, v in w.items():
+            assert g[c] == v, (k, c, g[c], v)
+        assert all(g[c] is None for c in g.keys() - w.keys()), (k, g, w)
+
+
+def test_split_history_ranges_union_equals_whole_file_walk():
+    """Tiny target ranges force split starts inside every generation;
+    each range decodes independently through the columnar kernel
+    (prefix-seeded history, file-final identity placement) and the
+    union equals the whole-file walk."""
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
     blob = _three_gen_blob()
-    splits, ddl_all = scan_binlog_splits_ddl(blob, 64)
+    splits, ddl_all, got = _history_ranges(blob, 64)
     assert len(splits) >= 4, "fixture must split into several ranges"
     assert len(ddl_all) == 3
     # at least one range starts past the first DDL (non-empty prefix)
     assert any(sp["ddl"] for sp in splits)
-    got = []
-    for sp in splits:
-        got.extend(
-            decode_binlog_range_history(blob, sp, ddl_all, "d", "t")
-        )
     hist = SchemaHistory("t", database="d")
     want = decode_binlog_bytes(blob, None, "d", "t", schema_history=hist)
-    key = lambda r: (r["__event_seq"], r["__image_seq"])  # noqa: E731
-    got_by = {key(r): r for r in got}
-    want_by = {key(r): r for r in want}
-    assert got_by.keys() == want_by.keys()
-    for k, w in want_by.items():
-        assert got_by[k] == w, (k, got_by[k], w)
+    _assert_rows_match_walk(got, want)
+
+
+def _partial_json_then_rename():
+    """A PARTIAL_JSON update (PARTIAL_UPDATE_ROWS, decoded on the scalar
+    walk) under ``flag``, then ``RENAME COLUMN flag TO cflag``: the
+    update's range, or its file, ends before the rename."""
+    from mysql_cdc_table_spark.sources.mysql_ddl import (
+        schema_from_ddl_history,
+    )
+
+    create = (
+        "CREATE TABLE `d`.`t` (`id` BIGINT, `flag` CHAR(2), `doc` JSON)"
+    )
+    rename = "ALTER TABLE `d`.`t` RENAME COLUMN `flag` TO `cflag`"
+    g0 = schema_from_ddl_history([create], "d.t")
+    g1 = schema_from_ddl_history([create, rename], "d.t")
+    r1 = {"id": 1, "flag": "AA", "doc": '{"a": 1}'}
+    r1b = {"id": 1, "flag": "AB", "doc": '{"a": 2}'}
+    head = build_binlog_file(
+        "d", "t", g0,
+        [
+            {"gno": 1, "ddl": create},
+            {"gno": 10, "op": "w", "rows": [r1]},
+            {"gno": 11, "op": "pu",
+             "rows": [(r1, r1b, {"doc": [("replace", "$.a", 2)]})]},
+        ],
+        checksum=True,
+    )
+    tail = build_binlog_file(
+        "d", "t", g1,
+        [
+            {"gno": 2, "ddl": rename},
+            {"gno": 12, "op": "w",
+             "rows": [{"id": 2, "cflag": "BB", "doc": '{"a": 3}'}]},
+        ],
+        checksum=True,
+    )
+    return head, tail
+
+
+def test_partial_json_rows_surface_under_final_layout(spark, tmp_path):
+    """PARTIAL_UPDATE_ROWS images stay on the scalar walk, which names
+    them after the range's (or file's) own final generation; the
+    kernel must still place them onto the final layout by identity,
+    through the split ranges and through the rotated-series reader."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        mysql_binlog_read_ddl_history,
+    )
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+
+    head, tail = _partial_json_then_rename()
+    blob = head + tail[4:]
+    want = decode_binlog_bytes(
+        blob, None, "d", "t", schema_history=SchemaHistory("t", database="d")
+    )
+    flags = {(r["id"], r["__op"]): r["cflag"] for r in want}
+    assert flags == {(1, 1): "AA", (1, 2): "AA", (1, 3): "AB", (2, 1): "BB"}
+
+    splits, _, got = _history_ranges(blob, 32)
+    assert len(splits) >= 3
+    _assert_rows_match_walk(got, want)
+
+    series = tmp_path / "series"
+    series.mkdir()
+    (series / "binlog.000001").write_bytes(head)
+    (series / "binlog.000002").write_bytes(tail)
+    df = mysql_binlog_read_ddl_history(spark, str(series), "d", "t")
+    got = {(r["id"], r["__op"]): r["cflag"] for r in df.collect()}
+    assert got == flags
 
 
 def test_split_history_without_prefix_still_raises():
