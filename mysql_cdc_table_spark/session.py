@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from mysql_cdc_table_spark.worker_imports import BOOT_DIR
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -56,4 +58,18 @@ def get_spark(app_name: str = "spark-cdc-table", cpus: str | None = None) -> Spa
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _add_worker_boot_dir(spark.sparkContext)
+    return spark
+
+
+def _add_worker_boot_dir(sc) -> None:
+    """Append ``worker_imports.BOOT_DIR`` to the workers' PYTHONPATH, after
+    any value the user set. ``sc.environment`` is the driver's copy of
+    ``spark.executorEnv.*``; every Python function and data source
+    registered from now on carries it to the processes it starts,
+    streaming source runners included. Its ``sitecustomize`` makes those
+    processes import pyspark's zip modules as cached compiled code."""
+    paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if BOOT_DIR not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join(paths + [BOOT_DIR])

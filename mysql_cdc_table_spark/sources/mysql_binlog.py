@@ -84,6 +84,7 @@ from mysql_cdc_table_spark.cdc.schema import (
     CDC_UPDATE_BEFORE,
     changelog_schema,
 )
+from mysql_cdc_table_spark.worker_imports import private_cache_dir
 
 BINLOG_MAGIC = b"\xfebin"
 
@@ -3807,14 +3808,14 @@ def scan_binlog_splits_cached(
     the same box also starts warm. A sealed binlog file never changes
     in place; if it somehow does, size/mtime_ns rotate the key and the
     stale entry is simply never read again. The spill lives in a
-    per-UID mode-0700 directory (ownership verified on every use —
-    a pre-planted or permission-loosened dir bypasses the disk tier),
-    and is JSON (base64 for the binary TABLE_MAP bodies), not pickle,
-    so even a compromised entry cannot execute code."""
+    per-UID mode-0700 directory (``private_cache_dir``: ownership
+    verified on every use — a pre-planted or permission-loosened dir
+    bypasses the disk tier), and is JSON (base64 for the binary
+    TABLE_MAP bodies), not pickle, so even a compromised entry cannot
+    execute code."""
     import base64
     import hashlib
     import json
-    import tempfile
 
     ap = os.path.abspath(path)
     st = os.stat(ap)
@@ -3834,31 +3835,11 @@ def scan_binlog_splits_cached(
         _SPLIT_MEM_CACHE.move_to_end(key)
         return hit
     tag = hashlib.sha256(repr(key).encode()).hexdigest()[:32]
-    # per-UID dir, mode 0700: the default tempdir is world-writable and
-    # the cache name is predictable, so a shared dir would let another
-    # local user plant split specs that silently change decoded output
-    # (review finding, round 7). A dir that exists but is not ours (or
-    # is group/world-writable) bypasses the disk cache entirely.
-    cdir = cache_dir or os.path.join(
-        tempfile.gettempdir(), f"binlog_split_cache_{os.getuid()}"
-    )
-    disk_ok = True
-    try:
-        os.makedirs(cdir, mode=0o700, exist_ok=True)
-        dst = os.stat(cdir, follow_symlinks=False)
-        import stat as _stat
-
-        disk_ok = (
-            _stat.S_ISDIR(dst.st_mode)
-            and dst.st_uid == os.getuid()
-            and not (dst.st_mode & 0o022)
-        )
-    except OSError:
-        disk_ok = False
-    fpath = os.path.join(cdir, tag + ".json")
+    cdir = private_cache_dir("binlog_split_cache", cache_dir)
+    fpath = None if cdir is None else os.path.join(cdir, tag + ".json")
     splits: list[dict] | None = None
     try:
-        if not disk_ok:
+        if fpath is None:
             raise OSError("cache dir unusable")
         with open(fpath) as fh:
             raw = json.load(fh)
@@ -3886,7 +3867,7 @@ def scan_binlog_splits_cached(
             start_after_sets=start_after_sets,
         )
         try:
-            if not disk_ok:
+            if fpath is None:
                 raise OSError("cache dir unusable")
             payload = json.dumps(
                 [
