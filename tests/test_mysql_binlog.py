@@ -3673,8 +3673,13 @@ def test_format_reader_dir_listing_skips_index_file(spark, tmp_path):
 def test_python_workers_use_stamped_zip_importer(spark, tmp_path):
     """A worker that ran a format read and imports the package resolves
     pyspark.zip through the stamped importer, so its per-call
-    importlib.invalidate_caches() does not re-read the archive."""
+    importlib.invalidate_caches() does not re-read the archive. A
+    streaming source runner, a fresh process per query, loaded pyspark
+    itself through it: the boot hook installed it at interpreter start."""
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
     from mysql_cdc_table_spark.sources.datasource import register
+    from mysql_cdc_table_spark.streaming.cdc_stream import run_to_completion
 
     register(spark)
     (tmp_path / "binlog.000001").write_bytes(_two_source_blob(1, 5))
@@ -3708,6 +3713,45 @@ def test_python_workers_use_stamped_zip_importer(spark, tmp_path):
     assert {r["importer"] for r in seen} == {
         "mysql_cdc_table_spark.worker_imports.StampedZipImporter"
     }
+
+    class LoaderReader(SimpleDataSourceStreamReader):
+        """One row, read in the runner: the loader of its pyspark."""
+
+        def initialOffset(self):
+            return {"n": 0}
+
+        def read(self, start):
+            import sys
+
+            if start["n"]:
+                return iter([]), start
+            kind = type(sys.modules["pyspark"].__loader__)
+            return iter([(f"{kind.__module__}.{kind.__qualname__}",)]), {"n": 1}
+
+        def readBetweenOffsets(self, start, end):
+            return self.read(start)[0]
+
+    class LoaderSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "pyspark_loader_probe"
+
+        def schema(self):
+            return "importer string"
+
+        def simpleStreamReader(self, schema):
+            return LoaderReader()
+
+    spark.dataSource.register(LoaderSource)
+    run_to_completion(
+        spark.readStream.format("pyspark_loader_probe").load()
+        .writeStream.format("memory").queryName("pyspark_loader_probe")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    seen = spark.table("pyspark_loader_probe").collect()
+    assert [r["importer"] for r in seen] == [
+        "mysql_cdc_table_spark.worker_imports.StampedZipImporter"
+    ]
 
 
 def test_sink_abort_paths_clean_partial_output(tmp_path):
