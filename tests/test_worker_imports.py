@@ -14,6 +14,7 @@ import json
 import os
 import subprocess
 import sys
+import types
 import uuid
 import zipfile
 import zipimport
@@ -269,3 +270,12 @@ assert zip_hooks == [booted.StampedZipImporter]
         env=env, cwd=tmp_path, capture_output=True, text=True, timeout=120,
     )
     assert out.returncode == 0, out.stderr
+
+
+def test_boot_dir_follows_the_users_worker_path():
+    from mysql_cdc_table_spark.session import _add_worker_boot_dir
+
+    sc = types.SimpleNamespace(environment={"PYTHONPATH": "/user/lib"})
+    _add_worker_boot_dir(sc)
+    _add_worker_boot_dir(sc)  # a second get_spark on the same context
+    assert sc.environment["PYTHONPATH"] == os.pathsep.join(["/user/lib", BOOT_DIR])
