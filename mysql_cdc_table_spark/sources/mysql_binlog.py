@@ -84,7 +84,6 @@ from mysql_cdc_table_spark.cdc.schema import (
     CDC_UPDATE_BEFORE,
     changelog_schema,
 )
-from mysql_cdc_table_spark.worker_imports import private_cache_dir
 
 BINLOG_MAGIC = b"\xfebin"
 
@@ -3778,11 +3777,10 @@ def scan_binlog_splits_file(
         )
 
 
-# In-memory split-spec cache: bounded LRU, not a plain dict — a
-# long-lived Spark Python worker scanning many files/windows would
-# otherwise pin every (path, size, mtime, bounds) combination's full
-# split list (including TABLE_MAP bodies) for the process lifetime.
-# Evictions stay cheap: the disk JSON tier below re-warms a miss.
+# In-memory split-spec cache: a bounded LRU, not a plain dict, so a
+# long-lived planner process scanning many files and windows does not
+# pin every (path, size, mtime, bounds) combination's split list
+# (TABLE_MAP bodies included) for its lifetime.
 import collections as _collections
 
 _SPLIT_MEM_CACHE: "_collections.OrderedDict" = _collections.OrderedDict()
@@ -3792,31 +3790,19 @@ _SPLIT_MEM_CACHE_MAX = 64
 def scan_binlog_splits_cached(
     path: str,
     target_split_bytes: int = 64 << 20,
-    cache_dir: str | None = None,
     *,
     start_after_gno: int | None = None,
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
 ) -> list[dict]:
-    """``scan_binlog_splits_file`` behind a cache keyed on (abs path,
-    size, mtime_ns, split_bytes). The serial header walk is the
-    parallel single-file scan's floor (SCALE.md: 2.2 s at 28 ranges on
-    an 85 MiB file), and a restore/relay file is typically scanned many
-    times — so warm re-scans skip straight to range decode. In-memory
-    per process (Spark reuses Python workers within a session) plus a
-    best-effort JSON spill under the system tempdir so a NEW session on
-    the same box also starts warm. A sealed binlog file never changes
-    in place; if it somehow does, size/mtime_ns rotate the key and the
-    stale entry is simply never read again. The spill lives in a
-    per-UID mode-0700 directory (``private_cache_dir``: ownership
-    verified on every use — a pre-planted or permission-loosened dir
-    bypasses the disk tier), and is JSON (base64 for the binary
-    TABLE_MAP bodies), not pickle, so even a compromised entry cannot
-    execute code."""
-    import base64
-    import hashlib
-    import json
-
+    """``scan_binlog_splits_file`` behind an in-process LRU keyed on
+    (abs path, size, mtime_ns, split_bytes, GTID bounds). The planner
+    walks only files that must be cut or that a GTID bound must locate
+    (``_window_ranges``), and Spark plans a session's reads in one
+    reused Python worker, so a re-plan of the same file and window
+    skips its header walk. A sealed binlog never changes in place; if
+    one does, its size or mtime rotates the key and the stale entry
+    ages out."""
     ap = os.path.abspath(path)
     st = os.stat(ap)
     sets_key = (
@@ -3830,34 +3816,7 @@ def scan_binlog_splits_cached(
         ap, st.st_size, st.st_mtime_ns, target_split_bytes,
         start_after_gno, stop_at_gno, sets_key,
     )
-    hit = _SPLIT_MEM_CACHE.get(key)
-    if hit is not None:
-        _SPLIT_MEM_CACHE.move_to_end(key)
-        return hit
-    tag = hashlib.sha256(repr(key).encode()).hexdigest()[:32]
-    cdir = private_cache_dir("binlog_split_cache", cache_dir)
-    fpath = None if cdir is None else os.path.join(cdir, tag + ".json")
-    splits: list[dict] | None = None
-    try:
-        if fpath is None:
-            raise OSError("cache dir unusable")
-        with open(fpath) as fh:
-            raw = json.load(fh)
-        splits = [
-            {
-                "start": int(s["start"]),
-                "end": int(s["end"]),
-                "checksum": s["checksum"],
-                "gtid": s["gtid"],
-                "sid": (
-                    None if s["sid"] is None else base64.b64decode(s["sid"])
-                ),
-                "table_maps": [base64.b64decode(m) for m in s["maps"]],
-            }
-            for s in raw
-        ]
-    except (OSError, ValueError, KeyError, TypeError):
-        splits = None
+    splits = _SPLIT_MEM_CACHE.get(key)
     if splits is None:
         splits = scan_binlog_splits_file(
             ap,
@@ -3866,36 +3825,7 @@ def scan_binlog_splits_cached(
             stop_at_gno=stop_at_gno,
             start_after_sets=start_after_sets,
         )
-        try:
-            if fpath is None:
-                raise OSError("cache dir unusable")
-            payload = json.dumps(
-                [
-                    {
-                        "start": s["start"],
-                        "end": s["end"],
-                        "checksum": s["checksum"],
-                        "gtid": s["gtid"],
-                        "sid": (
-                            None
-                            if s["sid"] is None
-                            else base64.b64encode(s["sid"]).decode()
-                        ),
-                        "maps": [
-                            base64.b64encode(m).decode()
-                            for m in s["table_maps"]
-                        ],
-                    }
-                    for s in splits
-                ]
-            )
-            tmp = f"{fpath}.tmp{os.getpid()}"
-            with open(tmp, "w") as fh:
-                fh.write(payload)
-            os.replace(tmp, fpath)  # atomic: concurrent walkers race safely
-        except OSError:
-            pass  # cache is best-effort; the walk already succeeded
-    _SPLIT_MEM_CACHE[key] = splits
+        _SPLIT_MEM_CACHE[key] = splits
     _SPLIT_MEM_CACHE.move_to_end(key)
     while len(_SPLIT_MEM_CACHE) > _SPLIT_MEM_CACHE_MAX:
         _SPLIT_MEM_CACHE.popitem(last=False)
@@ -4198,16 +4128,21 @@ def _binlog_window(options: dict) -> _BinlogWindow:
 
 
 def _window_ranges(
-    paths: list[str],
-    w: _BinlogWindow,
-    split_bytes: int,
-    scan=scan_binlog_splits_cached,
+    paths: list[str], w: _BinlogWindow, split_bytes: int
 ) -> Iterator[tuple[str, dict]]:
     """``(path, spec)`` for every in-window byte range of ``paths``,
-    lazily and in rotation order: files wholly outside the window are
-    pruned off their PREVIOUS_GTIDS heads unwalked, then ``scan``
-    header-walks each kept file with the same bounds, which skips its
-    out-of-window prefix. A spec's ``start`` is an event boundary."""
+    lazily and in rotation order. A spec's ``start`` is an event
+    boundary.
+
+    With no GTID bound, a file no larger than ``split_bytes`` is one
+    range, ``[4, size)`` with no carried state: its header walk could
+    return nothing else, since it starts at 4 with nothing carried and
+    keeps a torn tail on the last range. So stat plans it, and only its
+    magic is read; a corrupt event in it raises when the range decodes.
+    Every other file is header-walked (``scan_binlog_splits_cached``)
+    with the window's bounds, which cuts it and skips its out-of-window
+    prefix, after files wholly outside the window are pruned off their
+    PREVIOUS_GTIDS heads unwalked."""
     bounds = None  # start_after_sets keyed by the 16-byte sid
     if w.start_after_sets is not None:
         bounds = {
@@ -4219,8 +4154,23 @@ def _window_ranges(
         paths = prune_binlog_series_by_gtid(
             paths, w.start_after_gno, w.stop_at_gno
         )
+    unbounded = (
+        bounds is None and w.start_after_gno is None and w.stop_at_gno is None
+    )
     for p in paths:
-        for spec in scan(
+        if unbounded:
+            with open(p, "rb") as fh:
+                size = os.fstat(fh.fileno()).st_size
+                magic = fh.read(4)
+            if size <= split_bytes:
+                if magic != BINLOG_MAGIC:
+                    raise ValueError(f"{p}: not a binlog file (bad magic)")
+                yield p, {
+                    "start": 4, "end": size, "checksum": None,
+                    "gtid": None, "sid": None, "table_maps": [],
+                }
+                continue
+        for spec in scan_binlog_splits_cached(
             p,
             split_bytes,
             start_after_gno=w.start_after_gno,
@@ -4339,9 +4289,7 @@ class MysqlBinlogTailStreamReader(_SimpleStreamReader):
         # the first in-window range opens the stream at an event
         # boundary, which is what the (seq, pos) cursor means
         first = next(
-            _window_ranges(
-                [p for _seq, p in files], w, 1 << 62, scan_binlog_splits_file
-            ),
+            _window_ranges([p for _seq, p in files], w, 1 << 62),
             None,
         )
         if first is not None:
@@ -7307,12 +7255,15 @@ class MysqlBinlogReader(_DataSourceReader):
     it. It shares the GTID window (``_binlog_window``,
     ``_window_ranges``) and the range decode (``_decode_binlog_range``)
     with the streaming tail, ``MysqlBinlogTailStreamReader``. Planning
-    runs on the driver (the reference's binlog.index listing contract):
-    it header-walks each file into transaction-aligned byte ranges with
-    carried TABLE_MAP/GTID/checksum state (cached via
-    ``scan_binlog_splits_cached``; GTID bounds prune whole files off
-    their PREVIOUS_GTIDS heads and skip out-of-window prefixes), then
-    packs the ranges into partitions (``_pack_ranges``). Each task
+    runs on the driver over the listing (the reference's binlog.index
+    contract). With no GTID bound, a file up to ``split_bytes`` is one
+    range from a stat and a magic check, as the reference decodes each
+    file from its first event. Larger files, and every file of a
+    bounded read, are header-walked into transaction-aligned byte
+    ranges with carried TABLE_MAP/GTID/checksum state
+    (``scan_binlog_splits_cached``; GTID bounds prune whole files off
+    their PREVIOUS_GTIDS heads and skip out-of-window prefixes). The
+    ranges then pack into partitions (``_pack_ranges``). Each task
     range-decodes through the columnar kernel, yielding Arrow
     RecordBatches — no Python row objects on the scan path. Tasks
     reopen files with plain ``open``, so paths must be executor-local."""

@@ -56,19 +56,18 @@ def _stamp(archive: str) -> tuple | None:
     return st.st_mtime_ns, st.st_size, st.st_ino
 
 
-def private_cache_dir(name: str, path: str | None = None) -> str | None:
-    """Return ``path`` (default ``<tempdir>/<name>_<uid>``), made with
-    mode 0700 if missing, when it is a real directory that this user
-    owns and no one else can write. Otherwise return None: the caller
-    skips its disk cache.
+def private_cache_dir(name: str) -> str | None:
+    """Return ``<tempdir>/<name>_<uid>``, made with mode 0700 if
+    missing, when it is a real directory that this user owns and no one
+    else can write. Otherwise return None: the caller skips its disk
+    cache.
 
-    The default tempdir is world-writable and cache names are
+    The tempdir is world-writable and cache names are
     predictable, so a shared directory would let another local user
     plant entries that change what the caller computes, or, for
     marshalled code, what it runs. The check runs on every call, so a
     directory loosened or swapped after it was made is bypassed too."""
-    if not path:
-        path = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
+    path = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
     try:
         os.makedirs(path, mode=0o700, exist_ok=True)
         st = os.stat(path, follow_symlinks=False)

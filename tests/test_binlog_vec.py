@@ -1071,29 +1071,6 @@ def test_wire_field_time_fsp_and_legacy_temporals():
     assert f.metadata["mysql_type"] == "time_v1"
 
 
-def test_split_cache_bypasses_untrusted_dir(tmp_path):
-    """Review fix: a cache dir that is not ours / is group-writable is
-    never read or written — results stay correct, just uncached."""
-    import os
-
-    from mysql_cdc_table_spark.sources import mysql_binlog as mbm
-
-    tgt = T.StructType([T.StructField("id", T.LongType())])
-    blob = build_binlog_file(
-        "d", "t", tgt, [{"gno": g, "op": "w", "rows": [{"id": g}]}
-                        for g in range(1, 20)]
-    )
-    path = tmp_path / "binlog.000001"
-    path.write_bytes(blob)
-    loose = tmp_path / "loose"
-    loose.mkdir()
-    os.chmod(loose, 0o777)  # group/world-writable -> untrusted
-    mbm._SPLIT_MEM_CACHE.clear()
-    got = mbm.scan_binlog_splits_cached(str(path), 256, cache_dir=str(loose))
-    assert got == mbm.scan_binlog_splits_file(str(path), 256)
-    assert os.listdir(loose) == []  # nothing written into it
-
-
 def test_tail_initial_offset_parks_at_event_boundary_not_getsize(tmp_path):
     """Advisor fix (round 7): with start_after_gno fully consumed, the
     initial cursor parked at os.path.getsize() of the active file —

@@ -1572,11 +1572,8 @@ def test_decode_error_names_file_and_offset(spark, tmp_path):
 
 def test_split_cache_roundtrip_and_invalidation(tmp_path):
     """scan_binlog_splits_cached returns IDENTICAL specs to the direct
-    walk (JSON/base64 roundtrip included), serves warm hits from disk
-    across fresh processes (memory cache cleared here to simulate one),
-    and rotates the key when the file changes size or mtime."""
-    import os
-
+    walk, serves warm hits from memory, and rotates the key when the
+    file changes size or mtime."""
     from mysql_cdc_table_spark.sources import mysql_binlog as mbm
     from mysql_cdc_table_spark.sources.mysql_binlog import (
         scan_binlog_splits_cached,
@@ -1591,22 +1588,22 @@ def test_split_cache_roundtrip_and_invalidation(tmp_path):
     )
     path = tmp_path / "binlog.000001"
     path.write_bytes(blob)
-    cdir = str(tmp_path / "cache")
 
-    direct = scan_binlog_splits_file(str(path), 400)
-    cold = scan_binlog_splits_cached(str(path), 400, cache_dir=cdir)
-    assert cold == direct
-    assert len(os.listdir(cdir)) == 1
-
-    # warm from DISK: clear the process cache so the JSON path serves
     mbm._SPLIT_MEM_CACHE.clear()
-    warm = scan_binlog_splits_cached(str(path), 400, cache_dir=cdir)
-    assert warm == direct
+    direct = scan_binlog_splits_file(str(path), 400)
+    cold = scan_binlog_splits_cached(str(path), 400)
+    assert cold == direct
+    assert len(mbm._SPLIT_MEM_CACHE) == 1
+
+    # warm: the same entry, no new key
+    warm = scan_binlog_splits_cached(str(path), 400)
+    assert warm is cold
+    assert len(mbm._SPLIT_MEM_CACHE) == 1
 
     # a different split size is a different key
-    other = scan_binlog_splits_cached(str(path), 4096, cache_dir=cdir)
+    other = scan_binlog_splits_cached(str(path), 4096)
     assert other == scan_binlog_splits_file(str(path), 4096)
-    assert len(os.listdir(cdir)) == 2
+    assert len(mbm._SPLIT_MEM_CACHE) == 2
 
     # file growth (size + mtime change) must invalidate, not serve stale
     blob2 = build_binlog_file(
@@ -1615,17 +1612,10 @@ def test_split_cache_roundtrip_and_invalidation(tmp_path):
         checksum=True,
     )
     path.write_bytes(blob2)
-    mbm._SPLIT_MEM_CACHE.clear()
-    fresh = scan_binlog_splits_cached(str(path), 400, cache_dir=cdir)
+    fresh = scan_binlog_splits_cached(str(path), 400)
     assert fresh == scan_binlog_splits_file(str(path), 400)
     assert fresh != direct
-
-    # corrupt cache entry: best-effort fallback to the real walk
     mbm._SPLIT_MEM_CACHE.clear()
-    for name in os.listdir(cdir):
-        (tmp_path / "cache" / name).write_text("{not json")
-    again = scan_binlog_splits_cached(str(path), 400, cache_dir=cdir)
-    assert again == fresh
 
 
 def _full_meta_target():
@@ -2711,7 +2701,7 @@ def test_split_mem_cache_is_a_bounded_lru(tmp_path):
     bound in long-lived Spark Python workers (every (path, size,
     mtime, bounds) combination pinned its full split list — TABLE_MAP
     bodies included — for the process lifetime). It is now a small
-    LRU; evictions stay cheap because the disk JSON tier re-warms."""
+    LRU; an evicted key just walks again."""
     from mysql_cdc_table_spark.sources import mysql_binlog as mbm
 
     tgt = T.StructType(
@@ -2724,22 +2714,21 @@ def test_split_mem_cache_is_a_bounded_lru(tmp_path):
     )
     p = tmp_path / "binlog.000001"
     p.write_bytes(blob)
-    cdir = tmp_path / "cache"
 
     mbm._SPLIT_MEM_CACHE.clear()
     # distinct split_bytes -> distinct keys, far past the cap
     for i in range(mbm._SPLIT_MEM_CACHE_MAX + 16):
-        mbm.scan_binlog_splits_cached(str(p), 1024 + i, cache_dir=str(cdir))
+        mbm.scan_binlog_splits_cached(str(p), 1024 + i)
     assert len(mbm._SPLIT_MEM_CACHE) == mbm._SPLIT_MEM_CACHE_MAX
 
     # LRU, not FIFO: touching the oldest surviving key keeps it alive
     # through the next insertion
     oldest = next(iter(mbm._SPLIT_MEM_CACHE))
-    mbm.scan_binlog_splits_cached(str(p), oldest[3], cache_dir=str(cdir))
-    mbm.scan_binlog_splits_cached(str(p), 999_999, cache_dir=str(cdir))
+    mbm.scan_binlog_splits_cached(str(p), oldest[3])
+    mbm.scan_binlog_splits_cached(str(p), 999_999)
     assert oldest in mbm._SPLIT_MEM_CACHE
-    # and an evicted key still round-trips via the disk tier
-    got = mbm.scan_binlog_splits_cached(str(p), 1024, cache_dir=str(cdir))
+    # and an evicted key walks again to the same specs
+    got = mbm.scan_binlog_splits_cached(str(p), 1024)
     assert got == mbm.scan_binlog_splits_file(str(p), 1024)
     mbm._SPLIT_MEM_CACHE.clear()
 
@@ -3590,36 +3579,29 @@ def test_writer_txn_rebuild_roundtrip_property(checksum, txspec):
 
 def test_split_cache_keys_on_per_sid_bounds(tmp_path):
     """Different start_after_sets maps must never share a cache entry
-    (memory OR disk tier) — a stale hit would silently decode the
-    wrong window."""
+    — a stale hit would silently decode the wrong window."""
     from mysql_cdc_table_spark.sources import mysql_binlog as mbm
 
     p = tmp_path / "binlog.000001"
     p.write_bytes(_two_source_blob(1, 100))
-    cdir = str(tmp_path / "cache")
 
     mbm._SPLIT_MEM_CACHE.clear()
-    full = mbm.scan_binlog_splits_cached(str(p), 1 << 62, cache_dir=cdir)
+    full = mbm.scan_binlog_splits_cached(str(p), 1 << 62)
     t1 = mbm.scan_binlog_splits_cached(
-        str(p), 1 << 62, cache_dir=cdir,
-        start_after_sets={SID_A: 90, SID_B: 89},
+        str(p), 1 << 62, start_after_sets={SID_A: 90, SID_B: 89},
     )
     t2 = mbm.scan_binlog_splits_cached(
-        str(p), 1 << 62, cache_dir=cdir,
-        start_after_sets={SID_A: 50, SID_B: 49},
+        str(p), 1 << 62, start_after_sets={SID_A: 50, SID_B: 49},
     )
     assert full[0]["start"] < t2[0]["start"] < t1[0]["start"]
+    assert len(mbm._SPLIT_MEM_CACHE) == 3
     # warm re-reads return their own entries
     assert mbm.scan_binlog_splits_cached(
-        str(p), 1 << 62, cache_dir=cdir,
-        start_after_sets={SID_A: 90, SID_B: 89},
-    ) == t1
-    # disk tier round-trips the sets-keyed entry after a mem wipe
-    mbm._SPLIT_MEM_CACHE.clear()
+        str(p), 1 << 62, start_after_sets={SID_A: 90, SID_B: 89},
+    ) is t1
     assert mbm.scan_binlog_splits_cached(
-        str(p), 1 << 62, cache_dir=cdir,
-        start_after_sets={SID_A: 50, SID_B: 49},
-    ) == t2
+        str(p), 1 << 62, start_after_sets={SID_A: 50, SID_B: 49},
+    ) is t2
     mbm._SPLIT_MEM_CACHE.clear()
 
 
@@ -4335,6 +4317,109 @@ def test_truncated_file_decodes_exactly_its_complete_events(data):
                     head, TARGET, "d", "t", mode="strict"
                 )
             )
+
+
+_TARGET_DDL = "id bigint, v string, amt decimal(10,2)"
+
+
+def _stat_plan_blob(checksum):
+    r = lambda i: {"id": i, "v": "v" * (i % 7), "amt": Decimal(i)}
+    return build_binlog_file(
+        "d", "t", TARGET, [_txn(i, "w", [r(i)]) for i in range(1, 16)],
+        checksum=checksum,
+    )
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.data())
+def test_stat_planned_file_gets_the_walks_one_spec(tmp_path_factory, data):
+    """With no GTID bound and split_bytes >= size, the planner yields
+    the one spec the header walk would, from a stat: whole files and
+    files cut anywhere past the magic, CRC on and off."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        _binlog_window,
+        _window_ranges,
+        scan_binlog_splits_file,
+    )
+
+    blob = _stat_plan_blob(data.draw(st.booleans()))
+    cut = data.draw(st.one_of(st.just(len(blob)), st.integers(4, len(blob))))
+    path = tmp_path_factory.mktemp("stat") / "binlog.000001"
+    path.write_bytes(blob[:cut])
+    split_bytes = data.draw(st.integers(cut, 4 * len(blob)))
+    w = _binlog_window(
+        {"database": "d", "table": "t", "schema_ddl": _TARGET_DDL}
+    )
+    got = list(_window_ranges([str(path)], w, split_bytes))
+    assert got == [
+        (str(path), s) for s in scan_binlog_splits_file(str(path), split_bytes)
+    ]
+
+
+def test_format_reader_walks_only_files_it_must_cut_or_bound(
+    tmp_path, monkeypatch
+):
+    """format("mysql_binlog")'s planner header-walks no file of an
+    unbounded read that fits in split_bytes; a larger file, or any file
+    of a GTID-bounded read, still walks."""
+    from mysql_cdc_table_spark.sources import mysql_binlog as mbm
+
+    sizes = []
+    for seq, checksum in ((1, True), (2, False)):
+        blob = _stat_plan_blob(checksum)
+        (tmp_path / f"binlog.{seq:06d}").write_bytes(blob)
+        sizes.append(len(blob))
+
+    walked = []
+
+    def no_walk(path, *a, **kw):
+        walked.append(path)
+        raise AssertionError(f"header walk of {path}")
+
+    monkeypatch.setattr(mbm, "scan_binlog_splits_file", no_walk)
+    mbm._SPLIT_MEM_CACHE.clear()
+    opts = {
+        "path": str(tmp_path), "database": "d", "table": "t",
+        "schema_ddl": _TARGET_DDL, "split_bytes": str(max(sizes)),
+    }
+    parts = mbm.MysqlBinlogReader(opts).partitions()
+    ranges = [(p, s["start"], s["end"]) for part in parts for p, _q, s in part.ranges]
+    assert ranges == [
+        (str(tmp_path / f"binlog.{i + 1:06d}"), 4, size)
+        for i, size in enumerate(sizes)
+    ]
+    assert walked == []
+    for bounded in (
+        {"split_bytes": str(min(sizes) - 1)},
+        {"stop_at_gno": "8"},
+        {"start_after_gno": "3"},
+    ):
+        with pytest.raises(AssertionError, match="header walk"):
+            mbm.MysqlBinlogReader({**opts, **bounded}).partitions()
+
+
+@pytest.mark.parametrize("fault", ["magic", "size"])
+def test_stat_planned_file_fails_naming_path(spark, tmp_path, fault):
+    """A stat-planned file is still checked: bad magic fails at
+    planning, a corrupt event size when its range decodes, and both
+    errors name the file (the size error also the event offset)."""
+    r = lambda i: {"id": i, "v": "v" * (i % 30), "amt": Decimal(i)}
+    txns = [_txn(i, "w", [r(i)]) for i in range(1, 201)]
+    blob = bytearray(build_binlog_file("d", "t", TARGET, txns, checksum=True))
+    path = tmp_path / "binlog.000001"
+    if fault == "magic":
+        blob[:4] = b"\xfebim"
+        wants = [f"{path}: not a binlog file (bad magic)"]
+    else:
+        off = len(build_binlog_file("d", "t", TARGET, txns[:100], checksum=True))
+        blob[off + 12] ^= 0x80  # as in the corrupt event size test
+        # the kernel names the offset, the reader's note the range
+        wants = [f"offset {off}", f"{path}: bytes 4..{len(blob)}"]
+    path.write_bytes(bytes(blob))
+    with pytest.raises(Exception) as ei:
+        mysql_binlog_read(spark, str(tmp_path), TARGET, "d", "t").collect()
+    msg = "\n".join([str(ei.value), *getattr(ei.value, "__notes__", ())])
+    assert all(want in msg for want in wants), msg
 
 
 def test_format_reader_with_nothing_to_read_returns_no_rows(spark, tmp_path):
