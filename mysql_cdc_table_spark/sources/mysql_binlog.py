@@ -4158,18 +4158,15 @@ def _window_ranges(
         bounds is None and w.start_after_gno is None and w.stop_at_gno is None
     )
     for p in paths:
-        if unbounded:
+        if unbounded and (size := os.path.getsize(p)) <= split_bytes:
             with open(p, "rb") as fh:
-                size = os.fstat(fh.fileno()).st_size
-                magic = fh.read(4)
-            if size <= split_bytes:
-                if magic != BINLOG_MAGIC:
+                if fh.read(4) != BINLOG_MAGIC:
                     raise ValueError(f"{p}: not a binlog file (bad magic)")
-                yield p, {
-                    "start": 4, "end": size, "checksum": None,
-                    "gtid": None, "sid": None, "table_maps": [],
-                }
-                continue
+            yield p, {
+                "start": 4, "end": size, "checksum": None,
+                "gtid": None, "sid": None, "table_maps": [],
+            }
+            continue
         for spec in scan_binlog_splits_cached(
             p,
             split_bytes,

@@ -4383,7 +4383,9 @@ def test_format_reader_walks_only_files_it_must_cut_or_bound(
         "schema_ddl": _TARGET_DDL, "split_bytes": str(max(sizes)),
     }
     parts = mbm.MysqlBinlogReader(opts).partitions()
-    ranges = [(p, s["start"], s["end"]) for part in parts for p, _q, s in part.ranges]
+    ranges = [
+        (p, s["start"], s["end"]) for part in parts for p, _q, s in part.ranges
+    ]
     assert ranges == [
         (str(tmp_path / f"binlog.{i + 1:06d}"), 4, size)
         for i, size in enumerate(sizes)
@@ -4411,7 +4413,9 @@ def test_stat_planned_file_fails_naming_path(spark, tmp_path, fault):
         blob[:4] = b"\xfebim"
         wants = [f"{path}: not a binlog file (bad magic)"]
     else:
-        off = len(build_binlog_file("d", "t", TARGET, txns[:100], checksum=True))
+        off = len(
+            build_binlog_file("d", "t", TARGET, txns[:100], checksum=True)
+        )
         blob[off + 12] ^= 0x80  # as in the corrupt event size test
         # the kernel names the offset, the reader's note the range
         wants = [f"offset {off}", f"{path}: bytes 4..{len(blob)}"]
