@@ -2587,9 +2587,9 @@ def decode_binlog_bytes(
     under the migrated layout (mysql_ddl.SchemaHistory).
     ``target`` may be None in this mode — the layout comes from the
     log itself. A mid-file range (``init_state``) must carry the DDL
-    prefix that precedes it as ``init_state["ddl"]``
-    (``scan_binlog_splits_ddl``); its rows surface under the range's
-    own final generation. Composes with ``_rows_sink``: the columnar
+    prefix that precedes it as ``init_state["ddl"]`` (the history
+    planner's specs, ``_history_plan``); its rows surface under the
+    range's own final generation. Composes with ``_rows_sink``: the columnar
     kernel keys its batch groups per generation (tdefs are rebuilt at
     every layout change, so a group never mixes generations) and
     places each group onto the final layout at flush — see
@@ -2613,7 +2613,7 @@ def decode_binlog_bytes(
                 raise ValueError(
                     "schema_history decode of a mid-file range needs "
                     "the DDL prefix that precedes it: carry "
-                    "init_state['ddl'] from scan_binlog_splits_ddl "
+                    "init_state['ddl'] from the history planner "
                     "(a range cannot otherwise see earlier history)"
                 )
             # replay the prefix BEFORE resolving the opening layout —
@@ -3034,7 +3034,7 @@ def _encode_files(df: DataFrame, build, seq_base: int = 0) -> DataFrame:
 def _format_read(
     spark: SparkSession,
     path: str | None,
-    target: T.StructType,
+    target: T.StructType | None,
     database: str,
     table: str,
     **options,
@@ -3042,16 +3042,18 @@ def _format_read(
     """``spark.read.format("mysql_binlog")`` with ``options`` (None
     values left out) — the one batch scan every function reader builds.
     ``target`` travels as ``StructType.json()``, which keeps the field
-    metadata (charset, unsigned kinds, fsp, ...) the DDL cannot say."""
+    metadata (charset, unsigned kinds, fsp, ...) the DDL cannot say;
+    with no ``target`` the reader learns the layout from the series'
+    own DDL."""
     from mysql_cdc_table_spark.sources.datasource import register
 
     register(spark)
     r = (
         spark.read.format("mysql_binlog")
-        .option("schema_ddl", target.json())
         .option("database", database)
         .option("table", table)
     )
+    options["schema_ddl"] = None if target is None else target.json()
     for k, v in options.items():
         if v is not None:
             r = r.option(k, str(v))
@@ -3102,25 +3104,6 @@ def _smallest_uncovered_gno(intervals: list[tuple[int, int]]) -> int:
             break
         nxt = max(nxt, end)
     return nxt
-
-
-def scan_binlog_splits_ddl(
-    blob: bytes, target_split_bytes: int = 64 << 20
-) -> tuple[list[dict], list[tuple[str, str]]]:
-    """``scan_binlog_splits`` with the schema-history prefix: each
-    split spec additionally carries ``ddl`` — the ordered
-    [(session_db, statement), ...] list of every Query-event DDL seen
-    BEFORE the range start — and the second return value is the
-    file-COMPLETE list (what a caller needs to compute the final
-    generation every range's rows remap onto). This is what lets a
-    multi-generation binlog decode as parallel transaction-aligned
-    ranges (``_decode_history_range``): seed a SchemaHistory per range
-    by replaying its prefix, decode the range (in-range DDL keeps
-    folding) onto the file-final layout by column identity.
-    Statement lists are statement-count-bounded — DDL is rare next to
-    rows — so carrying the prefix per split costs O(splits x
-    statements)."""
-    return _split_walk(blob, target_split_bytes, None, None, None, True)
 
 
 def scan_binlog_splits(
@@ -3257,102 +3240,15 @@ def mysql_binlog_read_ddl_history(
     at all: it default-skips QUERY events and re-reads its declared
     schema per handler, binlog_table_reader.cc:427-428).
 
-    Driver-side: ``binlog_file_ddl`` header-walks each file IN
-    ROTATION ORDER (the file mapped read-only, no row decode) to build
-    each file's DDL PREFIX and the series-final layout. Executor-side:
-    one file = one decode task (the usual per-file parallelism), each
-    file decoding as the range ``[4, len)`` through
-    ``_decode_history_range``: its prefix seeds the history, in-file
-    DDL keeps folding mid-walk, and the columnar kernel places every
-    generation's columns onto the SERIES-final layout by column
-    identity."""
-    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
-
-    paths = _binlog_paths(path)
-    if not paths:
-        raise ValueError(f"{path}: no binlog files")
-    prefixes: dict[int, list] = {}
-    acc: list[tuple[str, str]] = []
-    for p in paths:
-        prefixes[_file_seq_of(p)] = list(acc)
-        for rec in binlog_file_ddl(p):
-            acc.append((rec["database"], rec["statement"]))
-    final = SchemaHistory(table, database=database)
-    for db0, stmt in acc:
-        final.apply(stmt, default_db=db0 or None)
-    if final.schema is None:
-        raise ValueError(
-            f"no CREATE TABLE for {database}.{table} in the series' "
-            "DDL history — declare a schema (mysql_binlog_read) or "
-            "seed the history"
-        )
-    files = (
-        spark.read.format("binaryFile")
-        .load([p if "://" in p else "file://" + os.path.abspath(p)
-               for p in paths])
-    )
-
-    def walk_arrow(batches):
-        for batch in batches:
-            bpaths = batch.column("path")
-            contents = batch.column("content")
-            for i in range(batch.num_rows):
-                fpath = str(bpaths[i].as_py())
-                fseq = _file_seq_of(fpath)
-                buf = contents[i].as_buffer()
-                spec = {"start": 4, "end": buf.size, "ddl": prefixes[fseq]}
-                try:
-                    yield from _decode_history_range(
-                        buf[4:].to_pybytes(), fseq, spec, final, database,
-                        table, gtid_format,
-                    )
-                except Exception as e:
-                    e.add_note(f"{fpath}: bytes 4..{buf.size}")
-                    raise
-
-    return files.select("path", "content").mapInArrow(
-        walk_arrow,
-        schema=_binlog_out_schema(final.schema, gtid_format, False),
-    )
-
-
-def _decode_history_range(
-    blob: bytes,
-    file_seq: int,
-    spec: dict,
-    final,
-    database: str,
-    table: str,
-    gtid_format: str = "long",
-):
-    """The one schema-history range decode. ``blob`` holds a file's
-    bytes ``[spec["start"], spec["end"])``, a transaction-aligned range,
-    and the spec carries the decoder state and the ``ddl`` prefix
-    ([(session_db, statement), ...]) that precede the range
-    (``scan_binlog_splits_ddl``). A fresh
-    ``SchemaHistory`` replays the prefix, so the range opens in the
-    generation in effect at its first transaction; in-range DDL keeps
-    folding; and the columnar kernel surfaces every row under
-    ``final``, a history folded to the generation all ranges share.
-    Identity determinism: a prefix replay followed by the in-range fold
-    allocates exactly the ids a fold over the whole log does (same
-    statements, same order, same counter)."""
-    from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
-        decode_binlog_record_batches,
-    )
-    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
-
-    return decode_binlog_record_batches(
-        blob,
-        None,
-        database,
-        table,
-        file_seq=file_seq,
-        gtid_format=gtid_format,
-        init_state=spec,
-        seq_base=spec["start"],
-        schema_history=SchemaHistory(table, database=database),
-        final_history=final,
+    This is ``format("mysql_binlog")`` without ``schema_ddl``: the
+    planner header-walks the series in rotation order, gives every
+    transaction-aligned range the DDL that precedes it, and folds all
+    of it into the series-final layout (``_history_plan``); each range
+    decodes on the columnar kernel onto that layout by column
+    identity. A file larger than ``split_bytes`` splits like any other
+    read."""
+    return _format_read(
+        spark, path, None, database, table, gtid_format=gtid_format
     )
 
 
@@ -3752,6 +3648,7 @@ def scan_binlog_splits_file(
     start_after_gno: int | None = None,
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
+    track_ddl: bool = False,
 ) -> list[dict]:
     """File twin of scan_binlog_splits: the same walk over the file
     mapped read-only, so IDENTICAL split specs without ever reading the
@@ -3769,11 +3666,16 @@ def scan_binlog_splits_file(
     instead of being range-decoded and row-filtered. Interleaved
     consumed transactions AFTER the window opens still decode; the
     caller's per-sid residual filter (mysql_binlog_read_gtid_sets)
-    keeps output exact."""
+    keeps output exact.
+
+    ``track_ddl=True`` (the schema-history planner, ``_history_plan``)
+    also gives each spec ``ddl``, the file's DDL statements
+    ([(session_db, statement), ...]) before the range, and returns
+    ``(specs, every statement of the file)``."""
     with _mapped(path) as mm:
         return _split_walk(
             mm, target_split_bytes, start_after_gno, stop_at_gno,
-            start_after_sets, False, where=f"{path}: ",
+            start_after_sets, track_ddl, where=f"{path}: ",
         )
 
 
@@ -3794,9 +3696,11 @@ def scan_binlog_splits_cached(
     start_after_gno: int | None = None,
     stop_at_gno: int | None = None,
     start_after_sets: dict[bytes, int] | None = None,
+    track_ddl: bool = False,
 ) -> list[dict]:
     """``scan_binlog_splits_file`` behind an in-process LRU keyed on
-    (abs path, size, mtime_ns, split_bytes, GTID bounds). The planner
+    (abs path, size, mtime_ns, split_bytes, GTID bounds, track_ddl).
+    Callers must not mutate what it returns. The planner
     walks only files that must be cut or that a GTID bound must locate
     (``_window_ranges``), and Spark plans a session's reads in one
     reused Python worker, so a re-plan of the same file and window
@@ -3814,7 +3718,7 @@ def scan_binlog_splits_cached(
     )
     key = (
         ap, st.st_size, st.st_mtime_ns, target_split_bytes,
-        start_after_gno, stop_at_gno, sets_key,
+        start_after_gno, stop_at_gno, sets_key, track_ddl,
     )
     splits = _SPLIT_MEM_CACHE.get(key)
     if splits is None:
@@ -3824,6 +3728,7 @@ def scan_binlog_splits_cached(
             start_after_gno=start_after_gno,
             stop_at_gno=stop_at_gno,
             start_after_sets=start_after_sets,
+            track_ddl=track_ddl,
         )
         _SPLIT_MEM_CACHE[key] = splits
     _SPLIT_MEM_CACHE.move_to_end(key)
@@ -4053,6 +3958,11 @@ def _carry_walk(
 def _tail_target(options: dict) -> T.StructType:
     from mysql_cdc_table_spark.sources.datasource import _parse_ddl
 
+    if options.get("schema_ddl") in (None, ""):
+        raise ValueError(
+            "option schema_ddl is required: the table layout to decode "
+            "or write (extended DDL or StructType JSON)"
+        )
     return _parse_ddl(options["schema_ddl"])
 
 
@@ -4062,7 +3972,9 @@ def _tail_target(options: dict) -> T.StructType:
 class _BinlogWindow(NamedTuple):
     """The read options of ``format("mysql_binlog")`` and
     ``format("mysql_binlog_tail")``: what to decode, the output columns
-    and the GTID window."""
+    and the GTID window. ``history`` is the series-final
+    ``SchemaHistory`` of a read without ``schema_ddl`` (``target`` is
+    then its layout)."""
 
     target: T.StructType
     database: str
@@ -4072,6 +3984,7 @@ class _BinlogWindow(NamedTuple):
     start_after_gno: int | None
     stop_at_gno: int | None
     start_after_sets: dict[str, int] | None  # {origin uuid: last gno}
+    history: object = None
 
     @property
     def out_schema(self) -> T.StructType:
@@ -4080,8 +3993,9 @@ class _BinlogWindow(NamedTuple):
         )
 
 
-def _binlog_window(options: dict) -> _BinlogWindow:
-    """Parse the shared read options. ``start_after_gno`` and
+def _binlog_window(options: dict, history=None) -> _BinlogWindow:
+    """Parse the shared read options; the layout is ``schema_ddl``'s, or
+    ``history``'s when the caller learned it from the log. ``start_after_gno`` and
     ``stop_at_gno`` bound one source's gnos; ``start_after_sets``
     ("uuid:gno,uuid:gno", the gtid_executed a replica hands each source)
     bounds every origin on its own, because a multi-source relay
@@ -4116,7 +4030,7 @@ def _binlog_window(options: dict) -> _BinlogWindow:
                 )
             sets[u.lower()] = int(g)
     return _BinlogWindow(
-        _tail_target(options),
+        _tail_target(options) if history is None else history.schema,
         options["database"],
         options["table"],
         gtid_format,
@@ -4124,6 +4038,7 @@ def _binlog_window(options: dict) -> _BinlogWindow:
         start_after_gno,
         bound("stop_at_gno"),
         sets,
+        history,
     )
 
 
@@ -4177,6 +4092,39 @@ def _window_ranges(
             yield p, spec
 
 
+def _history_plan(
+    paths: list[str], database: str, table: str, split_bytes: int
+) -> tuple[list[tuple[str, dict]], object]:
+    """Plan a read whose layout comes from the series' own DDL. Every
+    file is header-walked in rotation order with DDL tracking
+    (``scan_binlog_splits_cached``, no stat plan: a stat cannot see a
+    file's DDL). Each range's ``ddl`` becomes the earlier files'
+    statements plus its in-file prefix, so the range opens in the
+    generation in effect at its first transaction, and every statement
+    folds into the series-final ``SchemaHistory``, the layout all
+    ranges' rows surface under. Returns ``([(path, spec), ...],
+    final)``."""
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+
+    ranges: list[tuple[str, dict]] = []
+    acc: list[tuple[str, str]] = []
+    for p in paths:
+        specs, ddl = scan_binlog_splits_cached(p, split_bytes, track_ddl=True)
+        # fresh dicts: the cached specs stay as the walk left them
+        ranges += [(p, {**s, "ddl": acc + s["ddl"]}) for s in specs]
+        acc = acc + ddl
+    final = SchemaHistory(table, database=database)
+    for db0, stmt in acc:
+        final.apply(stmt, default_db=db0 or None)
+    if final.schema is None:
+        raise ValueError(
+            f"no CREATE TABLE for {database}.{table} in the series' "
+            "DDL history — declare a schema (option schema_ddl) or "
+            "read a series that opens with the table's DDL"
+        )
+    return ranges, final
+
+
 def _gtid_window_filter(batch, w: _BinlogWindow):
     """The one residual GTID filter: file pruning and the header walk
     cut a superset, this pins the window exactly. Start bounds let a row
@@ -4210,12 +4158,20 @@ def _decode_binlog_range(blob, file_seq: int, spec: dict, w: _BinlogWindow):
     file's bytes ``[spec["start"], spec["end"])``, both event boundaries,
     and the spec carries the decoder state that precedes the range (FDE
     checksum flag, pending GTID and sid, ROWS_QUERY statement, TABLE_MAP
-    bodies). Yields the columnar kernel's non-empty Arrow batches, cut to
-    the GTID window."""
+    bodies). In a schema-history read (``w.history``) the spec's ``ddl``
+    prefix seeds a fresh ``SchemaHistory``, in-range DDL keeps folding,
+    and rows surface under ``w.history`` by column identity: a prefix
+    replay plus the in-range fold allocates exactly the ids a fold over
+    the whole series does. Yields the columnar kernel's non-empty Arrow
+    batches, cut to the GTID window."""
     from mysql_cdc_table_spark.sources.mysql_binlog_vec import (
         decode_binlog_record_batches,
     )
+    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
+    live = None
+    if w.history is not None:
+        live = SchemaHistory(w.table, database=w.database)
     for batch in decode_binlog_record_batches(
         blob,
         w.target,
@@ -4226,6 +4182,8 @@ def _decode_binlog_range(blob, file_seq: int, spec: dict, w: _BinlogWindow):
         capture_query=w.capture_query,
         init_state=spec,
         seq_base=spec["start"],
+        schema_history=live,
+        final_history=w.history,
     ):
         batch = _gtid_window_filter(batch, w)
         if batch.num_rows:
@@ -5581,73 +5539,39 @@ def cdc_binlog_ddl_vec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_binlog_ddl_split_decode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The SAME three-generation fixture decoded as PARALLEL
-    transaction-aligned byte ranges: every file header-walks into ~tens
-    of small ranges (``scan_binlog_splits_ddl`` carries the DDL prefix
-    per range), each range decodes INDEPENDENTLY through the columnar
-    kernel (``_decode_history_range``) — a fresh ``SchemaHistory``
-    seeded from its prefix, in-range DDL folding as it streams past,
-    columns placed onto the FILE-final generation by column identity —
-    and the union must aggregate identically to the whole-file walk
-    (the oracle is shared verbatim). A 100 GB multi-generation binlog
-    spreads across executors exactly like the fixed-schema parallel
-    scan, DDL and all."""
-    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+    """The series fixture (``_ddl_series_stage``) decoded as PARALLEL
+    transaction-aligned byte ranges: ``format("mysql_binlog")`` without
+    a schema, with ``split_bytes`` an eighth of the smallest staged data
+    file, so every data file cuts into several ranges at any scale.
+    Each range decodes INDEPENDENTLY through the columnar kernel: a
+    fresh ``SchemaHistory`` seeded from the DDL that precedes it (here
+    all in earlier files), columns placed onto the series-final
+    generation by column identity. The union must aggregate identically
+    to the whole-file walk (the oracle is shared verbatim). The
+    per-file ``_ddl_fixture`` cannot be read as one series: each of
+    its files re-states CREATE TABLE after its ALTERs, which opens a
+    new generation and would null the renamed columns."""
+    import glob
 
-    files, target = _ddl_fixture(spark, sf_dir)
-
-    def decode(batches):
-        for batch in batches:
-            for path, blob in zip(
-                batch.column("path").to_pylist(),
-                batch.column("content").to_pylist(),
-            ):
-                # target ~64 ranges per file regardless of scale:
-                # plenty of range starts inside every generation,
-                # while per-range overhead (history seed) stays
-                # amortized — a FIXED byte size would grow range count
-                # linearly with data and measured 5.0x at 10x;
-                # production uses 64 MB ranges where the overhead
-                # vanishes entirely
-                splits, ddl_all = scan_binlog_splits_ddl(
-                    blob, max(8192, len(blob) >> 6)
-                )
-                final = SchemaHistory("orders", database="tpch")
-                for db0, stmt in ddl_all:
-                    final.apply(stmt, default_db=db0 or None)
-                for sp in splits:  # each range fully independent
-                    yield from _decode_history_range(
-                        blob[sp["start"] : sp["end"]], _file_seq_of(path),
-                        sp, final, "tpch", "orders",
-                    )
-
+    stage = _ddl_series_stage(spark, sf_dir, "ddlsplit")
+    data = glob.glob(os.path.join(stage, "binlog.p*"))
+    split = max(1, min(os.path.getsize(p) for p in data) // 8)
     return _ddl_fixture_agg(
-        files.select("path", "content").mapInArrow(
-            decode, schema=changelog_schema(target)
-        )
+        _format_read(spark, stage, None, "tpch", "orders", split_bytes=split)
     )
 
 
-def cdc_binlog_ddl_series_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The SAME three generations spread across a ROTATED series, so
-    the layout governing a file's rows was declared in an EARLIER
-    file — the cross-file half of Debezium's schema-history contract.
-    Each generation's DDL rides its own tiny DDL-only rotation file
+def _ddl_series_stage(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Stage the three generations as a ROTATED series, so the layout
+    governing a file's rows was declared in an EARLIER file. Each
+    generation's DDL rides its own tiny DDL-only rotation file
     (binlog.1000/2000/3000, built driver-side — MySQL logs DDL as its
     own transaction anyway), and every partition writes its DATA files
-    per generation numbered just after that generation's DDL file
-    (``_encode_files(seq_base=...)``), so the encode stays fully
-    parallel while rotation order puts each generation's DDL before
-    every file of rows it governs, and the data files carry no DDL of
-    their own. The read is the zero-declaration entry point
-    ``mysql_binlog_read_ddl_history``: a driver-side header pre-walk
-    builds each file's DDL prefix and the series-final layout, each
-    file decodes in its own task through the COLUMNAR kernel seeded
-    with its prefix, and rows remap onto the series-final names by
-    column identity. Oracle shared verbatim with the other three
-    siblings."""
+    (``binlog.p*``) per generation numbered just after that
+    generation's DDL file (``_encode_files(seq_base=...)``), so the
+    encode stays fully parallel while rotation order puts each
+    generation's DDL before every file of rows it governs, and the data
+    files carry no DDL of their own. Returns the staging dir."""
     gens = _ddl_generations()
     base = _ddl_base(spark, sf_dir)
     files = spark.createDataFrame(
@@ -5676,7 +5600,22 @@ def cdc_binlog_ddl_series_decode(
                 seq_base=(g + 1) * 1000 + 1,
             )
         )
-    stage = _stage_binlog_files(spark, files, f"{sf_dir}|ddlseries")
+    return _stage_binlog_files(spark, files, f"{sf_dir}|{tag}")
+
+
+def cdc_binlog_ddl_series_decode(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The SAME three generations spread across a ROTATED series
+    (``_ddl_series_stage``): the cross-file half of Debezium's
+    schema-history contract. The read is the zero-declaration entry
+    point ``mysql_binlog_read_ddl_history`` (``format("mysql_binlog")``
+    without a schema): the planner header-walks the series for each
+    range's DDL prefix and the series-final layout, each range decodes
+    through the COLUMNAR kernel seeded with its prefix, and rows remap
+    onto the series-final names by column identity. Oracle shared
+    verbatim with the other three siblings."""
+    stage = _ddl_series_stage(spark, sf_dir, "ddlseries")
     return _ddl_fixture_agg(
         mysql_binlog_read_ddl_history(spark, stage, "tpch", "orders")
     )
@@ -7101,16 +7040,28 @@ class MysqlBinlogStreamWriter(_DataSourceStreamArrowWriter):
 
 
 class MysqlBinlogDataSource(_DataSource):
-    """``df.write.format("mysql_binlog")`` — the binlog v4 file sink.
-    Options: path, schema_ddl (extended DDL, see datasource._parse_ddl),
-    database, table, table_id, checksum."""
+    """``format("mysql_binlog")``: the batch reader of binlog v4 files
+    (``MysqlBinlogReader``) and the file sink (``MysqlBinlogWriter``,
+    ``MysqlBinlogStreamWriter``).
+
+    Read options: path (a directory or one file) or index_file,
+    database, table, schema_ddl (extended DDL, see
+    datasource._parse_ddl, or ``StructType.json()``), split_bytes,
+    gtid_format (long|uuid_gno), capture_query, start_after_gno,
+    stop_at_gno, start_after_sets. Without schema_ddl the layout is
+    learned from the series' own DDL (CREATE/ALTER/RENAME Query
+    events), and ``schema()`` is the series-final layout; such a read
+    takes no GTID bound, since pruning files would drop their DDL.
+
+    Write options: path, schema_ddl, database, table, table_id,
+    checksum, compression."""
 
     @classmethod
     def name(cls) -> str:
         return "mysql_binlog"
 
     def schema(self):
-        return _binlog_window(dict(self.options)).out_schema
+        return MysqlBinlogReader(dict(self.options)).window.out_schema
 
     def reader(self, schema):
         return MysqlBinlogReader(dict(self.options))
@@ -7263,22 +7214,47 @@ class MysqlBinlogReader(_DataSourceReader):
     ranges then pack into partitions (``_pack_ranges``). Each task
     range-decodes through the columnar kernel, yielding Arrow
     RecordBatches — no Python row objects on the scan path. Tasks
-    reopen files with plain ``open``, so paths must be executor-local."""
+    reopen files with plain ``open``, so paths must be executor-local.
+
+    Without ``schema_ddl`` the reader learns the layout from the
+    series' DDL: ``__init__`` header-walks every file and builds the
+    ranges, each with its DDL prefix, and the series-final fold
+    (``_history_plan``). It must run there, not in ``partitions()``:
+    pyspark pickles the reader for the tasks before it calls
+    ``partitions()``, so the fold must already be on it."""
 
     def __init__(self, options: dict):
         self.options_index_file = options.get("index_file")
         self.path = options.get("path") if self.options_index_file else options["path"]
         self.split_bytes = int(options.get("split_bytes", 64 << 20))
-        self.window = _binlog_window(options)
+        self.ranges = None  # planned in partitions() unless learned here
+        history = None
+        if options.get("schema_ddl") in (None, ""):
+            for k in ("start_after_gno", "stop_at_gno", "start_after_sets"):
+                if options.get(k) not in (None, ""):
+                    raise ValueError(
+                        f"{k} needs schema_ddl: a read that learns its "
+                        "layout from the series' DDL cannot prune files, "
+                        "which would drop their DDL with them"
+                    )
+            self.ranges, history = _history_plan(
+                self._paths(), options["database"], options["table"],
+                self.split_bytes,
+            )
+        self.window = _binlog_window(options, history)
 
-    def partitions(self):
+    def _paths(self) -> list[str]:
         # the reference's binlog.index entry point, on the format
         # surface too: option("index_file", ...) reads the listed files
-        paths = _binlog_paths(self.path, self.options_index_file)
-        ranges = [
-            (p, _file_seq_of(p), spec)
-            for p, spec in _window_ranges(paths, self.window, self.split_bytes)
-        ]
+        return _binlog_paths(self.path, self.options_index_file)
+
+    def partitions(self):
+        ranges = self.ranges
+        if ranges is None:
+            ranges = _window_ranges(
+                self._paths(), self.window, self.split_bytes
+            )
+        ranges = [(p, _file_seq_of(p), spec) for p, spec in ranges]
         return [
             _BinlogSplit(part)
             for part in _pack_ranges(

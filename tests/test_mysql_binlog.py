@@ -4400,6 +4400,49 @@ def test_format_reader_walks_only_files_it_must_cut_or_bound(
             mbm.MysqlBinlogReader({**opts, **bounded}).partitions()
 
 
+def test_history_read_refuses_gtid_bounds(tmp_path):
+    """A read without schema_ddl learns its layout from the series'
+    DDL, so it takes no GTID bound: series pruning drops whole files,
+    and their DDL with them. The planner raises instead of decoding
+    under a layout it could not see."""
+    from mysql_cdc_table_spark.sources import mysql_binlog as mbm
+
+    create = (
+        "CREATE TABLE `d`.`t` (`id` BIGINT, `v` VARCHAR(32),"
+        " `amt` DECIMAL(10,2))"
+    )
+    r = lambda i: {"id": i, "v": f"v{i}", "amt": Decimal(i)}
+    txns = [{"gno": 1, "ddl": create}] + [
+        _txn(i, "w", [r(i)]) for i in range(2, 12)
+    ]
+    blob = build_binlog_file("d", "t", TARGET, txns, checksum=True)
+    (tmp_path / "binlog.000001").write_bytes(blob)
+    opts = {"path": str(tmp_path), "database": "d", "table": "t"}
+    assert mbm.MysqlBinlogReader(opts).partitions()
+    uuid = "11111111-1111-1111-1111-111111111111"
+    for bound in (
+        {"start_after_gno": "3"},
+        {"stop_at_gno": "8"},
+        {"start_after_sets": f"{uuid}:3", "gtid_format": "uuid_gno"},
+    ):
+        key = next(iter(bound))
+        with pytest.raises(ValueError, match=f"{key} needs schema_ddl"):
+            mbm.MysqlBinlogReader({**opts, **bound}).partitions()
+
+
+def test_tail_without_schema_ddl_names_the_option(tmp_path):
+    """format("mysql_binlog_tail") has no schema-history mode: without
+    schema_ddl it raises a ValueError naming the option, not a bare
+    KeyError."""
+    from mysql_cdc_table_spark.sources.mysql_binlog import (
+        MysqlBinlogTailStreamReader,
+    )
+
+    opts = {"path": str(tmp_path), "database": "d", "table": "t"}
+    with pytest.raises(ValueError, match="option schema_ddl is required"):
+        MysqlBinlogTailStreamReader(opts)
+
+
 @pytest.mark.parametrize("fault", ["magic", "size"])
 def test_stat_planned_file_fails_naming_path(spark, tmp_path, fault):
     """A stat-planned file is still checked: bad magic fails at
@@ -4471,7 +4514,11 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
     parity keys may call ``decode_binlog_bytes``. Only the one event
     walk, ``_events``, reads the 19-byte event header. And no stream
     wait is unbounded: every ``awaitTermination`` carries a timeout
-    (``run_to_completion`` / ``await_drained``)."""
+    (``run_to_completion`` / ``await_drained``). Every batch binlog
+    read goes through ``format("mysql_binlog")``: the package has no
+    batch ``spark.read.format("binaryFile")`` (the streaming file
+    source stays), and only the one range decode,
+    ``_decode_binlog_range``, hands the kernel a ``final_history``."""
     import ast
     import pathlib
 
@@ -4486,6 +4533,7 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
         ("sources/mysql_binlog.py", "cdc_binlog_ddl_schema_decode"),
     }
     walk_callers, header_readers, untimed = set(), set(), []
+    batch_binary_reads, final_history_callers = [], set()
     files = sorted(root.rglob("*.py")) + sorted((repo / "tests").glob("*.py"))
     for path in files:
         rel = path.relative_to(root if root in path.parents else repo)
@@ -4502,8 +4550,27 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
                     continue
                 fn = node.func
                 name = getattr(fn, "id", None) or getattr(fn, "attr", None)
-                if name == "decode_binlog_bytes" and root in path.parents:
+                in_package = root in path.parents
+                if name == "decode_binlog_bytes" and in_package:
                     walk_callers.add((rel, getattr(top, "name", "<module>")))
+                elif (
+                    name == "format"
+                    and in_package
+                    and getattr(fn.value, "attr", None) == "read"
+                    and any(
+                        getattr(a, "value", None) == "binaryFile"
+                        for a in node.args
+                    )
+                ):
+                    batch_binary_reads.append(f"{rel}:{node.lineno}")
+                elif (
+                    name == "decode_binlog_record_batches"
+                    and in_package
+                    and any(k.arg == "final_history" for k in node.keywords)
+                ):
+                    final_history_callers.add(
+                        (rel, getattr(top, "name", "<module>"))
+                    )
                 elif name == "awaitTermination" and not (
                     node.args or node.keywords
                 ):
@@ -4511,3 +4578,7 @@ def test_fixtures_decode_on_kernel_and_streams_wait_bounded():
     assert walk_callers - allowed == set()
     assert header_readers == {("sources/mysql_binlog.py", "_events")}
     assert untimed == []
+    assert batch_binary_reads == []
+    assert final_history_callers == {
+        ("sources/mysql_binlog.py", "_decode_binlog_range")
+    }

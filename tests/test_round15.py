@@ -840,34 +840,31 @@ def test_zorder_rowgroup_probe_matches_direct_and_pushes_zkey(
 # --- split-parallel schema-history decode -------------------------------------
 
 
-def _folded(ddl, table="t", db="d"):
-    from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
+def _history_ranges(spark, tmp_path, blob, split_bytes):
+    """``blob`` as a one-file directory read through
+    ``format("mysql_binlog")`` without a schema and with a tiny
+    ``split_bytes``: the planner's range specs
+    (``MysqlBinlogReader(opts).partitions()``) and the read's rows as
+    dicts, every range decoded on its own through the columnar kernel
+    onto the file-final layout."""
+    from mysql_cdc_table_spark.sources.datasource import register
+    from mysql_cdc_table_spark.sources.mysql_binlog import MysqlBinlogReader
 
-    h = SchemaHistory(table, database=db)
-    for db0, stmt in ddl:
-        h.apply(stmt, default_db=db0 or None)
-    return h
-
-
-def _history_ranges(blob, split_bytes, table="t", db="d"):
-    """Every range of ``blob`` decoded on its own through the columnar
-    kernel onto the file-final layout, as row dicts."""
-    from mysql_cdc_table_spark.sources.mysql_binlog import (
-        _decode_history_range,
-        scan_binlog_splits_ddl,
-    )
-
-    splits, ddl_all = scan_binlog_splits_ddl(blob, split_bytes)
-    final = _folded(ddl_all, table, db)
-    rows = [
-        r
-        for sp in splits
-        for b in _decode_history_range(
-            blob[sp["start"] : sp["end"]], 1, sp, final, db, table
-        )
-        for r in b.to_pylist()
+    d = tmp_path / f"one_{split_bytes}"
+    d.mkdir()
+    (d / "binlog.000001").write_bytes(blob)
+    opts = {
+        "path": str(d), "database": "d", "table": "t",
+        "split_bytes": str(split_bytes),
+    }
+    splits = [
+        s
+        for part in MysqlBinlogReader(opts).partitions()
+        for _p, _q, s in part.ranges
     ]
-    return splits, ddl_all, rows
+    register(spark)
+    df = spark.read.format("mysql_binlog").options(**opts).load()
+    return splits, [r.asDict() for r in df.collect()]
 
 
 def _assert_rows_match_walk(got, want):
@@ -886,7 +883,7 @@ def _assert_rows_match_walk(got, want):
         assert all(g[c] is None for c in g.keys() - w.keys()), (k, g, w)
 
 
-def test_split_history_ranges_union_equals_whole_file_walk():
+def test_split_history_ranges_union_equals_whole_file_walk(spark, tmp_path):
     """Tiny target ranges force split starts inside every generation;
     each range decodes independently through the columnar kernel
     (prefix-seeded history, file-final identity placement) and the
@@ -894,9 +891,10 @@ def test_split_history_ranges_union_equals_whole_file_walk():
     from mysql_cdc_table_spark.sources.mysql_ddl import SchemaHistory
 
     blob = _three_gen_blob()
-    splits, ddl_all, got = _history_ranges(blob, 64)
+    splits, got = _history_ranges(spark, tmp_path, blob, 64)
     assert len(splits) >= 4, "fixture must split into several ranges"
-    assert len(ddl_all) == 3
+    # the last range opens past all three statements of the file
+    assert max(len(sp["ddl"]) for sp in splits) == 3
     # at least one range starts past the first DDL (non-empty prefix)
     assert any(sp["ddl"] for sp in splits)
     hist = SchemaHistory("t", database="d")
@@ -960,7 +958,7 @@ def test_partial_json_rows_surface_under_final_layout(spark, tmp_path):
     flags = {(r["id"], r["__op"]): r["cflag"] for r in want}
     assert flags == {(1, 1): "AA", (1, 2): "AA", (1, 3): "AB", (2, 1): "BB"}
 
-    splits, _, got = _history_ranges(blob, 32)
+    splits, got = _history_ranges(spark, tmp_path, blob, 32)
     assert len(splits) >= 3
     _assert_rows_match_walk(got, want)
 
@@ -1099,6 +1097,7 @@ def test_read_ddl_history_series_both_kernels(spark, tmp_path):
 def test_read_ddl_history_no_create_raises(spark, tmp_path):
     import os
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import types as T
 
     from mysql_cdc_table_spark.sources.mysql_binlog import (
@@ -1114,7 +1113,8 @@ def test_read_ddl_history_no_create_raises(spark, tmp_path):
     )
     with open(os.path.join(series, "binlog.000001"), "wb") as fh:
         fh.write(blob)
-    with pytest.raises(ValueError, match="no CREATE TABLE"):
+    # schema() raises in the Python worker; Spark wraps it
+    with pytest.raises(AnalysisException, match="no CREATE TABLE"):
         mysql_binlog_read_ddl_history(spark, series, "d", "t")
 
 
