@@ -127,12 +127,12 @@ ROUND15_LATE_KEYS: tuple[str, ...] = (
     # cross-table bleed test for the multi-table schema history
     "cdc_binlog_ddl_multi_table_decode",
     # the split-parallel schema-history decode: transaction-aligned
-    # ranges carrying their DDL prefix, file-final identity remap —
+    # ranges carrying their DDL prefix, series-final identity remap —
     # multi-generation logs now spread across executors too
     "cdc_binlog_ddl_split_decode",
-    # cross-FILE schema history: a rotated three-file series read by
-    # the zero-declaration entry point (driver DDL pre-walk, per-file
-    # prefix-seeded vec decode, series-final identity remap)
+    # cross-FILE schema history: a rotated series read by the
+    # zero-declaration entry point (format("mysql_binlog") without a
+    # schema: prefix-seeded ranges, series-final identity remap)
     "cdc_binlog_ddl_series_decode",
     # CONVERT TO CHARACTER SET mid-stream: a latin1 generation and a
     # gbk generation in one log, vec-decoded with per-generation

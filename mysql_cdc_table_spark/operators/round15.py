@@ -16,8 +16,9 @@
   table-level renames; the swap inherits column identities by name).
 - ``cdc_binlog_ddl_vec_decode`` / ``cdc_binlog_ddl_split_decode``:
   the three-generation schema-history fixture through the COLUMNAR
-  kernel and as PARALLEL transaction-aligned ranges — the scalar
-  key's oracle shared verbatim by all three siblings.
+  kernel, and as a rotated series read in PARALLEL
+  transaction-aligned ranges — the scalar key's oracle shared
+  verbatim by every sibling.
 - ``stats_histogram_maintained``: equi-height histogram counts
   maintained under CDC delta batches without rescanning the table.
 - ``zorder_rowgroup_probe``: the within-bucket half of the Z-order
@@ -433,9 +434,9 @@ def _ddl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["cdc_binlog_ddl_vec_decode"] = _ddl_vec
 ORACLES["cdc_binlog_ddl_vec_decode"] = _ddl_vec_sql()
 
-# the split-parallel triplet sibling: the same fixture decoded as
+# the split-parallel sibling: the same three generations decoded as
 # independent transaction-aligned ranges, prefix-seeded histories,
-# file-final identity remap — oracle shared verbatim again
+# series-final identity remap — oracle shared verbatim again
 QUERIES["cdc_binlog_ddl_split_decode"] = _ddl_split
 ORACLES["cdc_binlog_ddl_split_decode"] = _ddl_vec_sql()
 
@@ -449,7 +450,7 @@ def _ddl_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # the fourth sibling: the three generations spread across a ROTATED
-# three-file series, read by the zero-declaration entry point
+# series, read by the zero-declaration entry point
 # (mysql_binlog_read_ddl_history) — cross-FILE schema history
 QUERIES["cdc_binlog_ddl_series_decode"] = _ddl_series
 ORACLES["cdc_binlog_ddl_series_decode"] = _ddl_vec_sql()

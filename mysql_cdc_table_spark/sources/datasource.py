@@ -7,9 +7,13 @@ handlerton wiring binlogdb.cc:857-900): register once, then
          .option("schema_ddl", "id bigint, v string, ...")
          .load("/path/dir")
 
-yields the standard changelog DataFrame (``format("mysql_binlog_tail")``
-is the streaming twin). Both sources live in sources/mysql_binlog.py;
-this module keeps the worker-safe DDL parser they share.
+yields the standard changelog DataFrame. Without ``schema_ddl`` the
+batch read learns the layout from the series' own DDL statements and
+returns the series-final layout (``MysqlBinlogReader``). The same
+format writes v4 files (``df.write.format("mysql_binlog")``), and
+``format("mysql_binlog_tail")`` is the streaming twin, which needs
+``schema_ddl``. Both sources live in sources/mysql_binlog.py; this
+module keeps the worker-safe DDL parser they share.
 """
 
 from __future__ import annotations

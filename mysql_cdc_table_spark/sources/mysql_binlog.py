@@ -3994,13 +3994,13 @@ class _BinlogWindow(NamedTuple):
 
 
 def _binlog_window(options: dict, history=None) -> _BinlogWindow:
-    """Parse the shared read options; the layout is ``schema_ddl``'s, or
-    ``history``'s when the caller learned it from the log. ``start_after_gno`` and
-    ``stop_at_gno`` bound one source's gnos; ``start_after_sets``
-    ("uuid:gno,uuid:gno", the gtid_executed a replica hands each source)
-    bounds every origin on its own, because a multi-source relay
-    interleaves per-sid gno sequences without a global order (an absent
-    sid reads from its first transaction)."""
+    """Parse the shared read options. The layout is ``schema_ddl``'s,
+    or ``history``'s when the caller learned it from the log.
+    ``start_after_gno`` and ``stop_at_gno`` bound one source's gnos;
+    ``start_after_sets`` ("uuid:gno,uuid:gno", the gtid_executed a
+    replica hands each source) bounds every origin on its own, because
+    a multi-source relay interleaves per-sid gno sequences without a
+    global order (an absent sid reads from its first transaction)."""
 
     def bound(key: str) -> int | None:
         raw = options.get(key)
